@@ -70,12 +70,14 @@ def allowed_col(rules_col, path_col):
     """Pure-JVM longest-prefix-match decision Column over a compiled rule
     array: filter the rules to prefix matches of the path, array_max the
     (plen, allow) struct — longest match wins, Allow wins a length tie by
-    struct ordering — and default to allowed on no match. Zero Python,
-    zero shuffle; pair with a broadcast join of the host-cardinality rule
-    table."""
+    struct ordering — and default to allowed on no match. A NULL rule
+    array (no robots row for the host) is allow-all, like an empty one.
+    Zero Python, zero shuffle; pair with a broadcast join of the
+    host-cardinality rule table."""
     from pyspark.sql import functions as F
 
     rules_col = F.col(rules_col) if isinstance(rules_col, str) else rules_col
+    rules_col = F.coalesce(rules_col, F.array().cast(RULE_TYPE))
     path_col = F.col(path_col) if isinstance(path_col, str) else path_col
     matches = F.filter(rules_col, lambda r: path_col.startswith(r["prefix"]))
     best = F.array_max(

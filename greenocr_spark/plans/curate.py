@@ -39,7 +39,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.errors import AnalysisException
 
 from greenocr_spark.battery_ml import (
     _bigram_array,
@@ -48,25 +47,13 @@ from greenocr_spark.battery_ml import (
     _spark_gram3_hashes,
     _spark_words,
 )
+from greenocr_spark.sources.pages import read_parquet_or_none
 
 CURATE_MANIFEST_COLS = ["stage", "idx", "rows_in", "rows_out", "run_id"]
 
 
 def _stage_dir(out_dir: str, name: str) -> str:
     return os.path.join(out_dir, "stages", name)
-
-
-def _read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    """None ONLY for a missing path (stage not yet committed); any other
-    read failure propagates — treating a transient FS error as 'not done'
-    would silently recompute a stage whose committed survivors downstream
-    stages already consumed."""
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return None
-        raise
 
 
 def _quality_gate(cur: DataFrame, min_tokens: int, max_frac: float) -> DataFrame:
@@ -191,7 +178,7 @@ def run_curate_job(
         sort_keys=True,
     )
     params_dir = os.path.join(out_dir, "params")
-    committed = _read_parquet_or_none(spark, params_dir)
+    committed = read_parquet_or_none(spark, params_dir)
     if committed is not None and resume:
         stored = committed.first()["params"]
         if stored != params:
@@ -260,7 +247,7 @@ def run_curate_job(
     any_fresh = False
     for idx, (name, compute) in enumerate(stages):
         sdir = _stage_dir(out_dir, name)
-        ids = _read_parquet_or_none(spark, sdir) if resume else None
+        ids = read_parquet_or_none(spark, sdir) if resume else None
         if ids is None:
             any_fresh = True
             if rows_in is None:
@@ -293,4 +280,4 @@ def run_curate_job(
 
 
 def read_curate_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    return _read_parquet_or_none(spark, os.path.join(out_dir, "manifest"))
+    return read_parquet_or_none(spark, os.path.join(out_dir, "manifest"))

@@ -39,6 +39,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from greenocr_spark.functions.sqlfns import host_expr
+from greenocr_spark.sources.pages import read_parquet_or_none
+
+FRONTIER_DDL = "host string, url string"
 
 
 def _params_path(out_dir: str) -> str:
@@ -79,10 +82,8 @@ def run_frontier_job(
                 )
             # crashed before commit: safe to adopt the new params
         elif resume and os.path.exists(success):
-            try:
-                return spark.read.parquet(fdir)
-            except Exception:
-                pass  # committed-but-empty frontier: recompute is free
+            # the known schema also reads a committed-but-empty frontier
+            return read_parquet_or_none(spark, fdir, FRONTIER_DDL)
 
     candidates = (
         extracted.select(F.explode("outlinks").alias("url"))
@@ -94,13 +95,12 @@ def run_frontier_job(
     rules = compile_robots(robots, agent, host_col="host")
     how = "inner" if require_robots else "left"
     joined = candidates.join(F.broadcast(rules), "host", how)
-    # missing robots (left join) -> empty rule array -> allow-all
-    eff_rules = F.coalesce(
-        F.col("rules"),
-        F.array().cast("array<struct<plen:int,allow:boolean,prefix:string>>"),
+    # missing robots (left join) -> NULL rules -> allow-all (allowed_col);
+    # a bare-host url's path is "/", so `Disallow: /` blocks the root too
+    path = F.concat(
+        F.lit("/"), F.regexp_extract(F.col("url"), r"^[a-zA-Z]+://[^/?#]+/?(.*)$", 1)
     )
-    path = F.regexp_extract(F.col("url"), r"^[a-zA-Z]+://[^/]+(/.*)?$", 1)
-    allowed = joined.where(allowed_col(eff_rules, path))
+    allowed = joined.where(allowed_col("rules", path))
     seen = extracted.select("url").distinct()
     frontier = allowed.join(seen, "url", "left_anti").select("host", "url")
 
@@ -108,12 +108,6 @@ def run_frontier_job(
     with open(ppath, "w") as f:
         json.dump(params, f)
     frontier.write.mode("overwrite").parquet(fdir)
-    try:
-        return spark.read.parquet(fdir)
-    except Exception:
-        # a fully-crawled corpus yields an EMPTY frontier: the overwrite
-        # then leaves only _SUCCESS and the parquet reader cannot infer a
-        # schema from zero files — hand back the (empty) plan's frame with
-        # the correct schema instead of crashing (the plans/job.py
-        # empty-path convention)
-        return spark.createDataFrame([], frontier.schema)
+    # a fully-crawled corpus yields an EMPTY frontier, which may commit no
+    # data files: the known schema reads it back without inference
+    return read_parquet_or_none(spark, fdir, FRONTIER_DDL)

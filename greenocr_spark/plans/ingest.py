@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from greenocr_spark.functions.sqlfns import salted_part_id
+from greenocr_spark.sources.pages import read_parquet_or_none
 
 
 def normalize_payloads(df: DataFrame) -> DataFrame:
@@ -52,11 +53,11 @@ def ingest_pages(
     pages = normalize_payloads(payloads).withColumn(
         "part_id", salted_part_id(F.col("url"), n_parts, n_salts)
     )
-    try:
-        existing = spark.read.parquet(target_dir).select("url")
-        pages = pages.join(existing, "url", "left_anti")
-    except Exception:
-        pass  # first ingest: nothing to dedup against
+    # None only on the first ingest (nothing to dedup against); an
+    # unreadable store raises rather than pass for empty and re-append
+    existing = read_parquet_or_none(spark, target_dir, "url string")
+    if existing is not None:
+        pages = pages.join(existing.select("url"), "url", "left_anti")
     # Persist before count-then-append: the count() fully materializes the
     # anti-joined frame, so (a) the appended rows are exactly the counted
     # rows even for nondeterministic inputs, and (b) the append never

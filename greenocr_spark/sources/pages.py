@@ -10,7 +10,9 @@ the backend touches nothing else.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 PAGES_DDL = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -34,6 +36,24 @@ def read_pages(spark: SparkSession, source: str) -> DataFrame:
     if source.startswith(PATH_PREFIXES):
         return spark.read.parquet(source)
     return spark.read.table(source)
+
+
+def read_parquet_or_none(
+    spark: SparkSession, path: str, schema: StructType | str | None = None
+) -> DataFrame | None:
+    """Read a parquet dir that may not exist yet. None ONLY for a missing
+    path; any other failure (corrupt file, transient FS error) propagates:
+    callers read None as "first run", and taking an unreadable store for
+    a first run silently restarts or duplicates committed work. A known
+    `schema` skips inference, so an empty committed dir reads as an empty
+    frame instead of failing."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    try:
+        return reader.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
 def write_pages(df: DataFrame, target: str, mode: str = "append") -> None:

@@ -108,9 +108,10 @@ def test_extract_pipeline_is_narrow(spark, tmp_path):
     assert "MapInPandas" in p
 
 
-def test_resume_anti_join_broadcasts_manifest(spark, tmp_path):
-    # pending_pages: the manifest side (≤ n_parts rows) must broadcast;
-    # the 10^12-row pages side must not shuffle for the anti-join
+def test_resume_filter_never_shuffles_pages(spark, tmp_path):
+    # pending_pages: the done set (≤ n_parts part_ids) drops done rows on
+    # the pages side itself — the 10^12-row side must not shuffle (no
+    # Exchange, no SortMergeJoin) to skip done partitions
     from greenocr_spark.fixtures import write_pages_parquet
     from greenocr_spark.plans.job import pending_pages, run_extract_job
 
@@ -119,10 +120,15 @@ def test_resume_anti_join_broadcasts_manifest(spark, tmp_path):
     pages = spark.read.parquet(path)
     out = str(tmp_path / "out")
     run_extract_job(spark, pages, out, n_parts=4, n_salts=2)
+    # lose one partition's manifest row so the resume filter has work
+    man = spark.read.parquet(f"{out}/manifest")
+    kept = [tuple(r) for r in man.where(F.col("part_id") != 0).collect()]
+    spark.createDataFrame(kept, man.schema).write.mode("overwrite").parquet(f"{out}/manifest")
     pend = pending_pages(spark, pages, out, n_parts=4, n_salts=2)
     p = plan_of(pend)
-    assert "BroadcastHashJoin" in p and "LeftAnti" in p
-    assert "SortMergeJoin" not in p
+    assert "Exchange" not in p and "SortMergeJoin" not in p
+    assert "Filter" in p
+    assert {r["part_id"] for r in pend.select("part_id").distinct().collect()} == {0}
 
 
 def test_ann_brute_force_no_corpus_shuffle(spark):

@@ -215,6 +215,45 @@ def test_frontier_job_empty_frontier(spark, tmp_path):
     assert fr2.count() == 0
 
 
+def test_allowed_col_null_rules_allow_all(spark):
+    # a host with no robots row carries NULL rules: the documented default
+    # is allow-all, the same as an empty rule array
+    from greenocr_spark.operators.robots import RULE_TYPE, allowed_col
+
+    df = spark.createDataFrame(
+        [(None, "/a"), ([], "/a"), ([(2, False, "/a")], "/a/x"), ([(2, False, "/a")], "/b")],
+        f"rules {RULE_TYPE.simpleString()}, path string",
+    )
+    got = [r[0] for r in df.select(allowed_col("rules", "path")).collect()]
+    assert got == [True, True, False, True]
+
+
+def test_frontier_disallow_root_blocks_bare_host(spark, tmp_path):
+    # a bare-host url's robots path is "/", so `Disallow: /` blocks it (and
+    # every other url of the host); a host with no robots row stays allowed
+    from greenocr_spark.plans.frontier import run_frontier_job
+
+    links = [
+        "https://h.example",
+        "https://h.example/",
+        "https://h.example?q=1",
+        "https://h.example/a",
+        "https://free.example",
+        "https://free.example/b",
+    ]
+    extracted = spark.createDataFrame(
+        [("https://seen.example/", links)], "url string, outlinks array<string>"
+    )
+    robots = spark.createDataFrame(
+        [("h.example", "User-agent: *\nDisallow: /\n")], "host string, robots_txt string"
+    )
+    fr = run_frontier_job(spark, extracted, robots, str(tmp_path / "f"))
+    assert sorted(r["url"] for r in fr.collect()) == [
+        "https://free.example",
+        "https://free.example/b",
+    ]
+
+
 def test_robots_and_sitemap_fuzz_never_raise_and_deterministic():
     # adversarial text through both crawl-face parsers: never raise,
     # always deterministic, output shape always well-formed

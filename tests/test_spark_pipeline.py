@@ -245,6 +245,37 @@ def test_ingest_dedup_append(spark, tmp_path):
     assert set(stored.columns) >= {"url", "warc_ts", "html", "text", "lang", "part_id"}
 
 
+def test_ingest_unreadable_store_raises(spark, tmp_path):
+    # a corrupt pages store is not a first ingest: skipping dedup would
+    # re-append every row already stored
+    from greenocr_spark.plans.ingest import ingest_pages
+
+    df = spark.createDataFrame(
+        [("https://a.example.com/1", b"<p>one</p>")], "url string, payload binary"
+    ).withColumn("warc_ts", F.current_timestamp())
+    tgt = str(tmp_path / "pages_store")
+    assert ingest_pages(spark, df, tgt, n_parts=4) == 1
+    (stored,) = glob.glob(f"{tgt}/part_id=*/*.parquet")
+    with open(stored, "wb") as f:
+        f.write(b"not a parquet file" * 8)
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        ingest_pages(spark, df, tgt, n_parts=4)
+    assert glob.glob(f"{tgt}/part_id=*/*.parquet") == [stored]  # nothing appended
+
+
+def test_read_parquet_or_none(spark, tmp_path):
+    # None only for a missing path; a known schema reads an empty dir
+    from greenocr_spark.sources.pages import read_parquet_or_none
+
+    assert read_parquet_or_none(spark, str(tmp_path / "missing")) is None
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    got = read_parquet_or_none(spark, str(empty), "url string")
+    assert got.columns == ["url"] and got.count() == 0
+    with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
+        read_parquet_or_none(spark, str(empty))
+
+
 def test_adaptive_salting(spark, pages_path):
     # hot hosts (>5% of rows) get salted across many partitions; cold hosts
     # stay on a single partition (locality preserved)
