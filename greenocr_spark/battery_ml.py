@@ -4435,8 +4435,8 @@ _ANCH1_N = 11636
 )
 def anch1_anchor_hash(spark, sf_dir):
     # Anchor-text harvest over the 1500-page seed-42 fixture corpus through
-    # the Arrow-batched stage (operators/links.extract_anchors_df — href
-    # resolution shared verbatim with the outlink spec via _resolve_href),
+    # the Arrow-batched stage (operators/links.extract_anchors_df — one
+    # link pass resolves each href for the outlink and anchor faces alike),
     # reduced with the order-insensitive sha256-prefix xor over
     # (src, seq, dst, anchor) rows. The literal is computed by the pure-
     # Python path and pinned with it in tests/test_links.py, so a green row

@@ -216,7 +216,12 @@ def tokenize_blocks(markup: str) -> list:
     texts_append = seg_texts.append
     links_append = seg_links.append
     block_tags, void_tags = BLOCK_TAGS, VOID_TAGS
-    parts = _TAG_RE.split(markup)
+    # no tag can start after the last '>', but each '<' there would rescan
+    # to the end: split up to it and give the tail to the last text run
+    # (the same parts, in linear time)
+    k = markup.rfind(">") + 1
+    parts = _TAG_RE.split(markup[:k])
+    parts[-1] += markup[k:]
     if parts[0]:
         texts_append(parts[0])
     i, n = 1, len(parts)

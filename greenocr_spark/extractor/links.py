@@ -1,13 +1,45 @@
-"""Outlink extraction — the web-graph construction face of the pipeline.
+"""Outlink and anchor-text extraction — the web-graph faces of the pipeline.
 
 `tokenize_blocks` deliberately discards tag attributes (its hot path is
 the frozen byte-identity spec for TEXT), so link harvesting is its own
-single pass over the same decoded markup: every <a href> of a page,
-entity-decoded, resolved against the page url (RFC 3986 via urljoin) and
-filtered to http(s). Deterministic pure Python — the Spark operator
-(`operators/links.extract_links`) is a thin Arrow-batched wrapper, and
-the edges feed the host-graph workloads (pr1 host rank, gr1 triangles,
-crawl-frontier prioritization).
+pass over the same decoded markup. Deterministic pure Python — the Spark
+operators (`operators/links`, and the fused `operators/extract` stage)
+are thin Arrow-batched wrappers, and the edges feed the host-graph
+workloads (pr1 host rank, gr1 triangles, crawl-frontier prioritization).
+
+One left-to-right pass yields both faces (`extract_link_faces`):
+
+- an `<a` start tag (`<a` then a non-word character, any case) runs to
+  its first `>`. Its href is the first `href=` name inside it (after a
+  non-word character, any case, spaces allowed around `=`) whose value is
+  "double-quoted", 'single-quoted' or bare (up to whitespace or `>`); a
+  quote with no closing quote is read as the first character of a bare
+  value, and a quoted value may run past the tag's `>`;
+- outlinks: tags are taken in document order, and the next one searched
+  starts after the previous href value. Unique urls, first-seen order;
+- anchors: a start tag with a `>` whose body ends at the first
+  `</a\\s*>` after it; the next one searched starts after that closer.
+  Duplicates are kept; an anchor's target must be one of the page's
+  outlinks.
+
+The tag's `>`, the href names and the quote closers are each found once,
+with cached forward searches, so the pass is linear in the page length:
+no markup shape can make one page cost quadratic time.
+
+Resolution: each distinct href of a page is resolved once. It is entity-
+decoded and stripped; empty, fragment-only and javascript:/mailto:/tel:/
+data:/about: hrefs drop; the rest resolve against the page's base url
+(RFC 3986 via urljoin) and must come out http(s). The first `<base href>`
+overrides the page url (`urljoin(page url, base href)`). Two href shapes
+skip urljoin because its result is known: a strict absolute http(s) url
+with a plain host and path is its own result, and a plain rooted path
+(`/…`, not `//…`, no dot segment) under an http(s) base with a host is
+that base's `scheme://netloc` plus the path.
+
+Crash rule (urljoin raises ValueError on malformed IPv6 hosts and on some
+non-ASCII netlocs): an href whose resolution raises is dropped; a
+`<base href>` that cannot be resolved is ignored; a page url that cannot
+be parsed drops every href, because urljoin raises on all of them.
 
 The reference repo has no web-graph stage; this is an engine addition in
 the same class as the dedup/ANN battery (task brief: large-scale
@@ -17,99 +49,286 @@ training-data pipeline operations).
 from __future__ import annotations
 
 import re
+from bisect import bisect_left
 from html import unescape
-from urllib.parse import urljoin
+from urllib.parse import urljoin, urlsplit
 
 from greenocr_spark.extractor.core import decode_bytes
 
 _PDF_MAGIC = b"%PDF-"  # same router predicate as functions/sqlfns.pdf_magic_expr
 
-# href value of an <a> tag: double-quoted, single-quoted, or bare.
-# The [^>]*? prefix keeps the scan inside the tag; DOTALL lets attribute
-# lists span newlines (seen in pretty-printed markup).
-_A_HREF_RE = re.compile(
-    r"<a\b[^>]*?\bhref\s*=\s*(?:\"([^\"]*)\"|'([^']*)'|([^\s>]+))",
-    re.IGNORECASE | re.DOTALL,
-)
-
 _SKIP_SCHEMES = ("javascript:", "mailto:", "tel:", "data:", "about:")
 
-# first <base href> of the page, same quoting forms as _A_HREF_RE
-_BASE_HREF_RE = re.compile(
-    r"<base\b[^>]*?\bhref\s*=\s*(?:\"([^\"]*)\"|'([^']*)'|([^\s>]+))",
-    re.IGNORECASE | re.DOTALL,
-)
+# One scan finds every token the pass needs, in document order: `<a`
+# openers (group 1: the href name, when it is the tag's first attribute),
+# `</a\s*>` closers (group 2) and `<base` openers (group 3). Tokens cannot
+# overlap (none holds a second '<'), so the scan misses none.
+_TOKEN_RE = re.compile(r"<(?:a\b(\s+href\s*=\s*)?|(/a\s*>)|(base)\b)", re.IGNORECASE)
+_HREF_NAME_RE = re.compile(r"\bhref\s*=\s*", re.IGNORECASE)
+_BARE_VALUE_RE = re.compile(r"[^\s>]+")
+_TAG_RE = re.compile(r"<[^>]*>")
+
+# hrefs whose urljoin result is known without calling it (see the module
+# docstring). No whitespace, non-ASCII, '?', '#', ';', '[' or ']': urlsplit
+# passes them through untouched, and the host has no userinfo or port.
+_PATH_CHARS = r"[A-Za-z0-9._~!$&'()*+,=:@%/-]"
+_ABSOLUTE_RE = re.compile(rf"https?://[A-Za-z0-9.-]+(?:/{_PATH_CHARS}*)?")
+_ROOTED_RE = re.compile(r"(?!//)(?:/(?!\.)[A-Za-z0-9._~!$&'()*+,=:@%-]*)+")
+
+
+def _markup(raw) -> str | None:
+    """The page as a string, or None when it has no markup (None, PDF).
+
+    bytes decode through the extractor's own decode_bytes (BOM → declared
+    charset → utf-8 → latin-1), so charset quirks resolve identically to
+    the text path."""
+    if raw is None:
+        return None
+    if isinstance(raw, (bytes, bytearray, memoryview)):
+        b = bytes(raw)
+        if b[: len(_PDF_MAGIC)] == _PDF_MAGIC:
+            return None
+        return decode_bytes(b)
+    return raw
+
+
+class _StartTags:
+    """href values of start tags, found left to right in linear time.
+
+    `href(a)` must be called with non-decreasing `a`: the forward searches
+    for `>`, href names and closing quotes are cached and never rescan."""
+
+    def __init__(self, s: str):
+        self.s = s
+        self.n = len(s)
+        # (lo, at): the first '>' at or after lo is at `at` (len(s): none);
+        # (1, 0) holds no offset, so the first query searches
+        self._gt_lo, self._gt = 1, 0
+        self._quote = {'"': (1, 0), "'": (1, 0)}  # the same per quote, -1: none
+        self._names: list[int] = []  # href name starts, ascending
+        self._values: list[int] = []  # where each name's value starts
+        self._scanned = 0  # names are known in every tag ending at or before
+
+    def end(self, i: int) -> int:
+        """The first '>' at or after i, else len(s)."""
+        if not self._gt_lo <= i <= self._gt:
+            g = self.s.find(">", i)
+            self._gt_lo, self._gt = i, (g if g >= 0 else self.n)
+        return self._gt
+
+    def _close(self, q: str, i: int) -> int:
+        lo, at = self._quote[q]
+        if not (lo <= i and (at < 0 or i <= at)):
+            lo, at = i, self.s.find(q, i)
+            self._quote[q] = (lo, at)
+        return at
+
+    def value(self, v: int) -> tuple[str, int] | None:
+        """(value, end of value) of the href name ending at v, or None when
+        the tag (or the page) ends there."""
+        s = self.s
+        if v == self.n:
+            return None
+        c = s[v]
+        if c == '"' or c == "'":
+            e = self._close(c, v + 1)
+            if e >= 0:
+                return s[v + 1 : e], e + 1
+        elif c == ">":
+            return None
+        m = _BARE_VALUE_RE.match(s, v)
+        return m.group(), m.end()
+
+    def href(self, a: int) -> tuple[str, int] | None:
+        """value() of the first href name of the start tag whose name ends
+        at a, or None."""
+        g = self.end(a)
+        if self._scanned < g:
+            # every earlier scan stopped at a '>' before a, so this tag's
+            # names are all new
+            for m in _HREF_NAME_RE.finditer(self.s, a, g):
+                self._names.append(m.start())
+                self._values.append(m.end())
+            self._scanned = g
+        # only a tag's last name can lack a value (its value would start at
+        # the tag's '>'), so the first name decides
+        j = bisect_left(self._names, a)
+        if j < len(self._names) and self._names[j] < g:
+            return self.value(self._values[j])
+        return None
+
+
+def _page_base(s: str, base_url: str | None, bases: list[int]) -> str | None:
+    """The base the page's hrefs resolve against: the first <base href>
+    (`bases`: where each `<base` name ends) joined to the page url, or the
+    page url when there is none or it cannot be resolved."""
+    tags = _StartTags(s)
+    for a in bases:
+        h = tags.href(a)
+        if h is None:
+            continue
+        declared = unescape(h[0]).strip()
+        if declared:
+            try:
+                base = urljoin(base_url, declared) if base_url else declared
+                urlsplit(base)
+            except ValueError:
+                return base_url
+            return base
+        return base_url
+    return base_url
+
+
+class _Base:
+    """A page's effective base url, parsed once for the fast joins."""
+
+    __slots__ = ("url", "ok", "root")
+
+    def __init__(self, url: str):
+        self.url = url
+        self.ok = True  # False when urlsplit (so every urljoin) raises on it
+        self.root = None  # "scheme://netloc" of an http(s) base with a host
+        try:
+            parts = urlsplit(url)
+        except ValueError:
+            self.ok = False
+        else:
+            if parts.scheme in ("http", "https") and parts.netloc:
+                self.root = f"{parts.scheme}://{parts.netloc}"
+
+
+def _join(base: _Base, href: str) -> str | None:
+    """urljoin(base.url, href) for a non-empty href, or None where urljoin
+    raises; the two fast shapes skip urljoin with the same result."""
+    if not base.ok:
+        return None
+    if _ABSOLUTE_RE.fullmatch(href):
+        return href
+    if base.root is not None and _ROOTED_RE.fullmatch(href):
+        return base.root + href
+    try:
+        return urljoin(base.url, href)
+    except ValueError:
+        return None
+
+
+def _resolve(href: str, base: _Base | None) -> str | None:
+    """The href→url rule (decode/skip/resolve/scheme-filter) against the
+    page's effective base. Returns None for dropped hrefs."""
+    href = unescape(href).strip()
+    if not href or href[0] == "#":
+        return None
+    if href.lower().startswith(_SKIP_SCHEMES):
+        return None
+    url = href if base is None else _join(base, href)
+    if url is None or not url.lower().startswith(("http://", "https://")):
+        return None
+    return url
+
+
+def _link_pass(s: str, base_url: str | None):
+    """(outlinks, elements): the page's unique outlinks in first-seen
+    order, and (url, body start, body end) of every closed <a> element
+    whose href resolves."""
+    openers: list[tuple[int, int]] = []  # (tag start, value start or 0)
+    closers: list[int] = []
+    closer_ends: list[int] = []
+    bases: list[int] = []
+    for m in _TOKEN_RE.finditer(s):
+        k = m.lastindex
+        if k == 2:
+            closers.append(m.start())
+            closer_ends.append(m.end())
+        elif k == 3:
+            bases.append(m.end())
+        else:
+            openers.append((m.start(), m.end() if k else 0))
+    if bases:
+        base_url = _page_base(s, base_url, bases)
+    base = _Base(base_url) if base_url else None
+    resolved: dict[str, str | None] = {}
+    tags = _StartTags(s)
+    n = len(s)
+    outlinks: list[str] = []
+    seen: set[str] = set()
+    elements: list[tuple[str, int, int]] = []
+    out_pos = anchor_pos = 0
+    for p, v in openers:
+        body = None
+        if p >= anchor_pos and closers:
+            g = tags.end(p + 2)
+            if g < n:
+                k = bisect_left(closers, g + 1)
+                if k < len(closers):
+                    body = (g + 1, closers[k])
+                    anchor_pos = closer_ends[k]
+        want_out = p >= out_pos
+        if not want_out and body is None:
+            continue
+        h = tags.value(v) if v else tags.href(p + 2)
+        if h is None:
+            continue
+        value, end = h
+        try:
+            url = resolved[value]
+        except KeyError:
+            url = resolved[value] = _resolve(value, base)
+        if want_out:
+            out_pos = end
+            if url is not None and url not in seen:
+                seen.add(url)
+                outlinks.append(url)
+        if body is not None and url is not None:
+            elements.append((url, *body))
+    return outlinks, elements
+
+
+def _anchors(s: str, elements, valid) -> list[tuple[str, str]]:
+    out = []
+    for url, i, j in elements:
+        if url not in valid:
+            continue
+        inner = s[i:j]
+        # a '<' after the body's last '>' opens no tag; leaving that tail
+        # out of the regex keeps it from rescanning the tail per '<'
+        k = inner.rfind(">") + 1
+        if k:
+            inner = _TAG_RE.sub(" ", inner[:k]) + inner[k:]
+        out.append((url, " ".join(unescape(inner).split())))
+    return out
+
+
+def extract_link_faces(
+    raw, base_url: str | None = None
+) -> tuple[list[str], list[tuple[str, str]]]:
+    """(extract_outlinks(raw, base_url), extract_anchors(raw, base_url))
+    from one pass over the page."""
+    s = _markup(raw)
+    if s is None:
+        return [], []
+    outlinks, elements = _link_pass(s, base_url)
+    return outlinks, _anchors(s, elements, set(outlinks))
 
 
 def extract_outlinks(raw, base_url: str | None = None) -> list[str]:
     """All unique http(s) outlinks of a page, in first-seen order.
 
-    - bytes decode through the extractor's own decode_bytes (BOM → declared
-      charset → utf-8 → latin-1), so charset quirks resolve identically to
-      the text path;
     - entity-decoded once (``&amp;`` → ``&``), matching the text spec's
       single-pass decode;
-    - relative hrefs resolve against base_url with urljoin (rooted,
-      protocol-relative and path-relative forms all covered); without a
-      base_url only absolute http(s) hrefs survive;
+    - relative hrefs resolve against base_url (rooted, protocol-relative
+      and path-relative forms all covered); without a base_url only
+      absolute http(s) hrefs survive;
     - a declared <base href> overrides the page url per HTML semantics:
       the effective base is urljoin(base_url, first base href), so both
       absolute and relative base declarations resolve (ADVICE r04);
-    - fragments-only, javascript:/mailto:/tel:/data: and empty hrefs drop;
+    - fragments-only, javascript:/mailto:/tel:/data: and empty hrefs drop,
+      and so do hrefs urljoin cannot resolve;
     - PDF payloads have no markup → [] (the layout branch owns them).
     """
-    if raw is None:
+    s = _markup(raw)
+    if s is None:
         return []
-    if isinstance(raw, (bytes, bytearray, memoryview)):
-        b = bytes(raw)
-        if b[: len(_PDF_MAGIC)] == _PDF_MAGIC:
-            return []
-        s = decode_bytes(b)
-    else:
-        s = raw
-    bm = _BASE_HREF_RE.search(s)
-    if bm:
-        declared = unescape(bm.group(1) or bm.group(2) or bm.group(3) or "").strip()
-        if declared:
-            base_url = urljoin(base_url, declared) if base_url else declared
-    out: list[str] = []
-    seen: set[str] = set()
-    for m in _A_HREF_RE.finditer(s):
-        url = _resolve_href(m.group(1) or m.group(2) or m.group(3) or "", base_url)
-        if url is None:
-            continue
-        if url not in seen:
-            seen.add(url)
-            out.append(url)
-    return out
-
-
-# a whole <a> ELEMENT (attrs + inner markup up to the first close tag) —
-# the anchor-TEXT face needs the element body, not just the href attribute.
-# HTML forbids nested <a>, so the non-greedy body is the right boundary;
-# an unclosed <a> has no harvestable anchor text and is skipped here
-# (its href still counts as an outlink above). The href itself is NOT
-# re-parsed from the attrs capture: it comes from matching _A_HREF_RE at
-# the element's own start offset, so href tokenization (including its
-# behavior on pathological unterminated quotes) is bit-identical to the
-# outlink face by construction.
-_A_ELEM_RE = re.compile(r"<a\b([^>]*)>(.*?)</a\s*>", re.IGNORECASE | re.DOTALL)
-_TAG_RE = re.compile(r"<[^>]*>")
-
-
-def _resolve_href(href: str, base_url: str | None) -> str | None:
-    """The outlink spec's href→url rule (decode/skip/resolve/scheme-filter),
-    shared verbatim by the outlink and anchor-text faces so the two can
-    never drift. Returns None for dropped hrefs."""
-    href = unescape(href).strip()
-    if not href or href.startswith("#"):
-        return None
-    if href.lower().startswith(_SKIP_SCHEMES):
-        return None
-    url = urljoin(base_url, href) if base_url else href
-    if not url.lower().startswith(("http://", "https://")):
-        return None
-    return url
+    return _link_pass(s, base_url)[0]
 
 
 def extract_anchors(
@@ -119,8 +338,8 @@ def extract_anchors(
     duplicates KEPT (anchor-text aggregation needs multiplicity).
 
     - href decoding / base-href override / scheme filtering are the exact
-      outlink-spec rules (shared `_resolve_href`), so an anchor's target
-      always equals what extract_outlinks would emit for that href;
+      outlink-spec rules, and a target must be one of the page's outlinks,
+      so an anchor's target is always a url extract_outlinks emits;
     - only CLOSED <a …>…</a> elements yield anchors (an unclosed <a> has
       no delimitable text); nested markup inside the element is stripped
       to spaces, entities decoded once, whitespace canonicalized — the
@@ -128,44 +347,10 @@ def extract_anchors(
       image-only anchors;
     - PDF / empty / None payloads → [] (no markup);
     - `valid`, when given, MUST be extract_outlinks(raw, base_url) for the
-      same payload — the fused extraction path (operators/extract.py,
-      with_links + with_anchors) passes its already-computed outlink list
-      so the gate below doesn't re-scan; semantics are identical.
+      same payload; it replaces the pass's own outlink set as the gate.
     """
-    if raw is None:
+    s = _markup(raw)
+    if s is None:
         return []
-    if isinstance(raw, (bytes, bytearray, memoryview)):
-        b = bytes(raw)
-        if b[: len(_PDF_MAGIC)] == _PDF_MAGIC:
-            return []
-        s = decode_bytes(b)
-    else:
-        s = raw
-    # anchor targets are a SUBSET of the outlink face's urls by contract:
-    # on pathological markup (unterminated quotes) the two regex scans can
-    # tokenize differently, so gate every candidate against the outlink
-    # set — a no-op on well-formed markup, and it pins the invariant the
-    # fuzz test asserts. Computed BEFORE the base-href override with the
-    # page's original base_url (extract_outlinks applies the identical
-    # override itself; applying it twice is not idempotent for path-
-    # relative <base href> values).
-    valid = set(
-        extract_outlinks(s, base_url=base_url) if valid is None else valid
-    )
-    bm = _BASE_HREF_RE.search(s)
-    if bm:
-        declared = unescape(bm.group(1) or bm.group(2) or bm.group(3) or "").strip()
-        if declared:
-            base_url = urljoin(base_url, declared) if base_url else declared
-    out: list[tuple[str, str]] = []
-    for m in _A_ELEM_RE.finditer(s):
-        inner = m.group(2)
-        hm = _A_HREF_RE.match(s, m.start())
-        if not hm:
-            continue
-        url = _resolve_href(hm.group(1) or hm.group(2) or hm.group(3) or "", base_url)
-        if url is None or url not in valid:
-            continue
-        text = " ".join(unescape(_TAG_RE.sub(" ", inner)).split())
-        out.append((url, text))
-    return out
+    outlinks, elements = _link_pass(s, base_url)
+    return _anchors(s, elements, set(outlinks if valid is None else valid))

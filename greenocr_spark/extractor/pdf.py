@@ -21,6 +21,12 @@ _STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\nendstream", re.DOTALL)
 _DICT_STREAM_RE = re.compile(rb"<<([^>]*(?:>(?!>)[^>]*)*)>>\s*stream\r?\n", re.DOTALL)
 _LENGTH_RE = re.compile(rb"/Length\s+(\d+)")
 
+# Inflated bytes one document may parse, over all its Flate streams: a
+# stream that would pass the cap is cut at it, and later ones inflate to
+# nothing. A deflate bomb (~1000:1) then costs seconds and tens of MB, not
+# minutes and gigabytes.
+MAX_INFLATE_BYTES = 4 << 20
+
 
 def iter_streams(raw: bytes):
     """Yield content-stream bodies in document order.
@@ -245,6 +251,19 @@ def _parse_stream(data: bytes):
     return spans
 
 
+def _inflate(body: bytes, room: int) -> bytes | None:
+    """A Flate stream's bytes cut at `room`, or None when `body` is not a
+    complete zlib stream (then it is parsed as a plain content stream)."""
+    d = zlib.decompressobj()
+    try:
+        out = d.decompress(body, room + 1)  # max_length 0 would mean no cap
+    except zlib.error:
+        return None
+    if d.eof or len(out) > room:
+        return out[:room]
+    return None  # truncated: zlib.decompress would raise
+
+
 def extract_pdf(raw: bytes):
     """Extract reading-order text spans from a minimal PDF byte stream.
 
@@ -254,11 +273,12 @@ def extract_pdf(raw: bytes):
     spans_out = []
     off = 0
     idx = 0
-    for page_no, body in enumerate(iter_streams(raw)):
-        try:
-            body = zlib.decompress(body)
-        except zlib.error:
-            pass
+    room = MAX_INFLATE_BYTES
+    for body in iter_streams(raw):
+        inflated = _inflate(body, room)
+        if inflated is not None:
+            body = inflated
+            room -= len(body)
         page_spans = _parse_stream(body)
         page_spans.sort(key=lambda s: (-s[1], s[0]))
         for _x, _y, text in page_spans:

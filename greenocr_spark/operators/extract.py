@@ -105,20 +105,16 @@ def extract_pages(
     payload scan dominates both faces, so fusing them halves the I/O vs
     running operators/links.extract_links as a second pass. Default off:
     the text-only schema and every frozen byte-identity surface are
-    untouched. (The link pass re-decodes the payload — a bounded C-speed
-    .decode(); sharing the decoded string would couple the frozen text
-    path to the link spec for ~nothing.)
+    untouched.
 
-    with_anchors=True likewise fuses the anchor-text harvest
-    (extractor/links.extract_anchors — (dst, anchor) per closed <a>
-    element, duplicates kept) into the same batch loop, for the same
-    one-payload-scan reason; composes freely with with_links."""
+    with_anchors=True likewise fuses the anchor-text harvest ((dst, anchor)
+    per closed <a> element, duplicates kept); composes freely with
+    with_links. Either face flag runs extractor/links' one link pass per
+    page, which yields the outlinks and the anchors together."""
     schema = extract_schema(list(passthrough), df.schema, with_links, with_anchors)
     keep = ["url", "html", *passthrough]
-    if with_links:
-        from greenocr_spark.extractor.links import extract_outlinks
-    if with_anchors:
-        from greenocr_spark.extractor.links import extract_anchors
+    if with_links or with_anchors:
+        from greenocr_spark.extractor.links import extract_link_faces, extract_outlinks
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -155,21 +151,17 @@ def extract_pages(
                 out["bytes_in"][i] = len(raw) if raw is not None else 0
                 out["bytes_out"][i] = len(r["text"].encode("utf-8"))
                 out["kind"][i] = r["kind"]
-                links = None
-                if with_links:
-                    links = extract_outlinks(raw, base_url=out["url"][i])
-                    out["outlinks"][i] = links
-                    out["n_links"][i] = len(links)
                 if with_anchors:
                     # (dst, anchor) tuples pass positionally to the Arrow
-                    # struct array, same zero-re-boxing path as spans;
-                    # the already-computed outlink list feeds the anchor
-                    # face's subset gate so it doesn't re-scan the payload
-                    anchors = extract_anchors(
-                        raw, base_url=out["url"][i], valid=links
-                    )
+                    # struct array, same zero-re-boxing path as spans
+                    links, anchors = extract_link_faces(raw, base_url=out["url"][i])
                     out["anchors"][i] = anchors
                     out["n_anchors"][i] = len(anchors)
+                elif with_links:
+                    links = extract_outlinks(raw, base_url=out["url"][i])
+                if with_links:
+                    out["outlinks"][i] = links
+                    out["n_links"][i] = len(links)
             res = pd.DataFrame(out)
             for name in passthrough:
                 res[name] = pdf[name].values

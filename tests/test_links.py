@@ -3,10 +3,17 @@ spec, Spark≡pure-Python string identity, and the host-graph shape."""
 
 from __future__ import annotations
 
+import gc
 import hashlib
+import random
+import re
+import time
+from html import unescape
+from urllib.parse import urljoin
 
 from pyspark.sql import functions as F
 
+from greenocr_spark.extractor.core import decode_bytes
 from greenocr_spark.extractor.links import extract_outlinks
 from greenocr_spark.fixtures import make_pages
 
@@ -367,21 +374,23 @@ def test_anchor_stage_is_narrow(spark, tmp_path):
     assert "MapInPandas" in p
 
 
+ANCHOR_FUZZ_FRAGMENTS = [
+    "<a href=", '"', "'", ">", "</a>", "<a>", "text", "&amp;", "&#x41;",
+    "<b>", "</b>", "<base href='/b/'>", "javascript:x", "https://f.ex/p",
+    "//rel.ex/q", "#f", "mailto:a@b", "<img src=x>", "\n", "\t", "<",
+    ">>", "<a href='/ok'>k</a>", "</A >", "<A HREF=x>", "<a data-href=/d x>",
+    "<abbr href=/no>", "<a", "</a",
+]
+
+
 def test_anchor_fuzz_never_raises_and_matches_outlink_targets():
     # adversarial markup: the anchor extractor must never raise, must be
     # deterministic, and every target it emits must be a url the outlink
-    # spec would also emit for the same page (shared _resolve_href)
-    import random as _random
-
+    # spec would also emit for the same page (one pass resolves both)
     from greenocr_spark.extractor.links import extract_anchors, extract_outlinks
 
-    rng = _random.Random(7)
-    frags = [
-        "<a href=", '"', "'", ">", "</a>", "<a>", "text", "&amp;", "&#x41;",
-        "<b>", "</b>", "<base href='/b/'>", "javascript:x", "https://f.ex/p",
-        "//rel.ex/q", "#f", "mailto:a@b", "<img src=x>", "\n", "\t", "<",
-        ">>", "<a href='/ok'>k</a>",
-    ]
+    rng = random.Random(7)
+    frags = ANCHOR_FUZZ_FRAGMENTS
     for _ in range(300):
         doc = "".join(rng.choice(frags) for _ in range(rng.randrange(0, 40)))
         raw = doc.encode("utf-8", errors="replace")
@@ -451,3 +460,319 @@ def test_extract_job_with_anchors_schema_guard(spark, tmp_path):
     # and the links guard is independent of the anchors guard
     with _pt.raises(ValueError, match="with_links"):
         run_extract_job(spark, pages, out, n_parts=4, with_links=True, with_anchors=True)
+
+
+# ---------------------------------------------------------------------------
+# One-pass link faces against the two regex faces they replaced
+# ---------------------------------------------------------------------------
+
+# The previous outlink and anchor faces, kept verbatim (names prefixed) as
+# the reference the one-pass scanner must reproduce byte for byte. They run
+# in quadratic time on some markup and raise where urljoin raises, so the
+# comparisons below skip inputs on which they raise.
+_REF_A_HREF_RE = re.compile(
+    r"<a\b[^>]*?\bhref\s*=\s*(?:\"([^\"]*)\"|'([^']*)'|([^\s>]+))",
+    re.IGNORECASE | re.DOTALL,
+)
+_REF_SKIP_SCHEMES = ("javascript:", "mailto:", "tel:", "data:", "about:")
+_REF_BASE_HREF_RE = re.compile(
+    r"<base\b[^>]*?\bhref\s*=\s*(?:\"([^\"]*)\"|'([^']*)'|([^\s>]+))",
+    re.IGNORECASE | re.DOTALL,
+)
+_REF_A_ELEM_RE = re.compile(r"<a\b([^>]*)>(.*?)</a\s*>", re.IGNORECASE | re.DOTALL)
+_REF_TAG_RE = re.compile(r"<[^>]*>")
+
+
+def ref_extract_outlinks(raw, base_url=None):
+    if raw is None:
+        return []
+    if isinstance(raw, (bytes, bytearray, memoryview)):
+        b = bytes(raw)
+        if b[: len(b"%PDF-")] == b"%PDF-":
+            return []
+        s = decode_bytes(b)
+    else:
+        s = raw
+    bm = _REF_BASE_HREF_RE.search(s)
+    if bm:
+        declared = unescape(bm.group(1) or bm.group(2) or bm.group(3) or "").strip()
+        if declared:
+            base_url = urljoin(base_url, declared) if base_url else declared
+    out = []
+    seen = set()
+    for m in _REF_A_HREF_RE.finditer(s):
+        url = _ref_resolve_href(m.group(1) or m.group(2) or m.group(3) or "", base_url)
+        if url is None:
+            continue
+        if url not in seen:
+            seen.add(url)
+            out.append(url)
+    return out
+
+
+def _ref_resolve_href(href, base_url):
+    href = unescape(href).strip()
+    if not href or href.startswith("#"):
+        return None
+    if href.lower().startswith(_REF_SKIP_SCHEMES):
+        return None
+    url = urljoin(base_url, href) if base_url else href
+    if not url.lower().startswith(("http://", "https://")):
+        return None
+    return url
+
+
+def ref_extract_anchors(raw, base_url=None, valid=None):
+    if raw is None:
+        return []
+    if isinstance(raw, (bytes, bytearray, memoryview)):
+        b = bytes(raw)
+        if b[: len(b"%PDF-")] == b"%PDF-":
+            return []
+        s = decode_bytes(b)
+    else:
+        s = raw
+    valid = set(
+        ref_extract_outlinks(s, base_url=base_url) if valid is None else valid
+    )
+    bm = _REF_BASE_HREF_RE.search(s)
+    if bm:
+        declared = unescape(bm.group(1) or bm.group(2) or bm.group(3) or "").strip()
+        if declared:
+            base_url = urljoin(base_url, declared) if base_url else declared
+    out = []
+    for m in _REF_A_ELEM_RE.finditer(s):
+        inner = m.group(2)
+        hm = _REF_A_HREF_RE.match(s, m.start())
+        if not hm:
+            continue
+        url = _ref_resolve_href(hm.group(1) or hm.group(2) or hm.group(3) or "", base_url)
+        if url is None or url not in valid:
+            continue
+        text = " ".join(unescape(_REF_TAG_RE.sub(" ", inner)).split())
+        out.append((url, text))
+    return out
+
+
+def _diff_against_reference(docs) -> tuple[int, int]:
+    """(pages whose faces differ from the reference, pages on which the
+    reference raises); every face of the one pass is compared."""
+    from greenocr_spark.extractor.links import extract_anchors, extract_link_faces
+
+    diffs = raised = 0
+    for raw, base in docs:
+        try:
+            want_links = ref_extract_outlinks(raw, base)
+            want_anchors = ref_extract_anchors(raw, base)
+        except ValueError:
+            raised += 1
+            continue
+        got = (
+            extract_outlinks(raw, base),
+            extract_anchors(raw, base),
+            extract_anchors(raw, base, valid=want_links),
+            extract_link_faces(raw, base),
+        )
+        if got != (want_links, want_anchors, want_anchors, (want_links, want_anchors)):
+            diffs += 1
+    return diffs, raised
+
+
+def test_link_pass_matches_reference_on_fixtures():
+    pages = make_pages(GOLDEN_N, seed=42)
+    assert _diff_against_reference((p["html"], p["url"]) for p in pages) == (0, 0)
+
+
+def test_link_pass_matches_reference_on_benchmark_pages():
+    from perfbench.inputs import cold_pages, crawl_pages
+
+    pages = crawl_pages(5, 3, 0, 400) + cold_pages(5, 3, 0, 300)
+    assert sum(1 for p in pages if b"<a" in p["html"]) > 500
+    assert _diff_against_reference((p["html"], p["url"]) for p in pages) == (0, 0)
+
+
+FUZZ_BASES = [
+    "https://host.ex/d/p", None, "", "http://h:8080/x?y", "ftp://f/x",
+    "HTTPS://Up.ex/a/b/", "http://u:p@h/", "http://[::1]/v6/", "http://[bad/",
+]
+
+
+def test_link_pass_fuzz_matches_reference():
+    rng = random.Random(11)
+    frags = ANCHOR_FUZZ_FRAGMENTS + [
+        " href =", "HREF", "<base ", "/p", " ", "=", "https://[x/", "?q=1",
+        "/.x", "/a/../b", "<baſe href=/s/>", "ä", "_", "<a\nhref='/nl'>",
+        "&quot;", "<a title='>' href=/t>", "http://Q.ex/Up", "</a\t>",
+    ]
+    docs = []
+    for _ in range(20_000):
+        doc = "".join(rng.choice(frags) for _ in range(rng.randrange(0, 40)))
+        raw = doc if rng.random() < 0.5 else doc.encode("utf-8")
+        docs.append((raw, rng.choice(FUZZ_BASES)))
+    diffs, raised = _diff_against_reference(docs)
+    assert diffs == 0
+    assert raised < len(docs) // 5  # one base in nine raises on every href
+
+
+def test_fast_join_matches_urljoin():
+    # the shapes that skip urljoin must give its result, and where urljoin
+    # raises on the base they must not get through either
+    from greenocr_spark.extractor import links
+
+    rng = random.Random(5)
+    bases = [
+        "https://h.ex/d/p", "http://h.ex", "http://u:p@h.ex:8080/a/b?q=1#f",
+        "https://h.ex:443/a/", "HTTPS://Up.EX/A", "http://[::1]:80/x",
+        "http://[::1/x", "http://[", "ftp://f.ex/x", "file:///x",
+        "//nohost/x", "/just/path", "rel/path", "http:///x", "https://h.ex/a;p?q",
+        "mailto:x@y", " http://sp.ex/", "http://ä.ex/", "https://h.ex?q",
+        "HtTp://h.ex/", "http://h.ex/a/./b/../c",
+    ]
+    pieces = [
+        "/", "//", "a", "B", "..", ".", "?", "#", ";", ":", "@", "%20", "~",
+        "-", "_", "[", "]", "::1", "ä", " ", "\t", "http", "https", "HTTP",
+        "://", "h.ex", "x.y", "80", "=", "&", "'", "(", "+", "!", "\\", "ftp:",
+    ]
+    plain = ["a", "B", "x.y", "-", "_", "~", "/", "80", "%20", "=", "&", "'", "(", "+", "!", ":", "@"]
+    outcomes = {"fast": 0, "urljoin": 0}
+    diffs = []
+    for _ in range(100_000):
+        base = rng.choice(bases)
+        if rng.random() < 0.3:
+            base += "".join(rng.choice(pieces) for _ in range(rng.randrange(0, 4)))
+        if rng.random() < 0.5:  # mostly the fast shapes
+            head = rng.choice(["/", "http://h.ex/", "https://a-b.c", "/x/"])
+            tail = "".join(rng.choice(plain) for _ in range(rng.randrange(0, 8)))
+        else:
+            head = rng.choice(["/", "http://", "https://", "HTTP://", "", "//"])
+            tail = "".join(rng.choice(pieces) for _ in range(rng.randrange(0, 8)))
+        href = head + tail
+        if not href:
+            continue
+        try:
+            want = urljoin(base, href)
+        except ValueError:
+            want = None  # raising is an outcome: the href must be dropped
+        b = links._Base(base)
+        fast = b.ok and (
+            links._ABSOLUTE_RE.fullmatch(href)
+            or (b.root is not None and links._ROOTED_RE.fullmatch(href))
+        )
+        outcomes["fast" if fast else "urljoin"] += 1
+        if links._join(b, href) != want:
+            diffs.append((base, href, want))
+    assert diffs == []
+    assert outcomes["fast"] > 20_000 and outcomes["urljoin"] > 20_000, outcomes
+
+
+UNRESOLVABLE_PAGES = [
+    b'<a href="https://[x/">v6</a><a href="/ok">ok</a>',
+    b'<a href="//[::1">v6</a><a href="/ok">ok</a>',
+    b'<base href="http://["><a href="/ok">ok</a>',
+]
+
+
+def test_unresolvable_hrefs_are_dropped():
+    from greenocr_spark.extractor.links import extract_anchors, extract_link_faces
+
+    page = "https://h.ex/d/p"
+    want = (["https://h.ex/ok"], [("https://h.ex/ok", "ok")])
+    for raw in UNRESOLVABLE_PAGES:
+        assert extract_link_faces(raw, page) == want, raw
+        assert extract_outlinks(raw, page) == want[0]
+        assert extract_anchors(raw, page) == want[1]
+    # an unresolvable <base href> without a page url is ignored as well
+    raw = b'<base href="http://["><a href="https://a.ex/">a</a><a href=/r>r</a>'
+    assert extract_link_faces(raw) == (["https://a.ex/"], [("https://a.ex/", "a")])
+    # a page url that cannot be parsed: urljoin raises on every href
+    raw = b'<a href="https://a.ex/">a</a><a href=/r>r</a>'
+    assert extract_link_faces(raw, "http://[bad/") == ([], [])
+
+
+# each shape at its smallest size; the linearity test doubles it twice
+ADVERSARIAL_SHAPES = {
+    "a-hre-no-gt": (b"<a hre ", 13_000),
+    "unclosed-a": (b"<a href=/p>", 21_000),
+    "unterminated-quote": (b'<a href="/p>', 21_000),
+}
+
+
+def _adversarial(unit: bytes, size: int) -> bytes:
+    return unit * (size // len(unit))
+
+
+def _fused_batch_fn(**faces):
+    """extract_pages' per-batch function, taken without a Spark session:
+    the frame below only records what mapInPandas is handed."""
+    from pyspark.sql.types import StructType
+
+    from greenocr_spark.operators.extract import extract_pages
+
+    class _Frame:
+        schema = StructType([])
+
+        def select(self, *cols):
+            return self
+
+        def mapInPandas(self, fn, schema):
+            self.fn = fn
+            return self
+
+    return extract_pages(_Frame(), **faces).fn
+
+
+def test_link_faces_linear_time():
+    import pandas as pd
+
+    from greenocr_spark.extractor.links import extract_anchors
+
+    fused = _fused_batch_fn(with_links=True, with_anchors=True)
+    url = "https://h.ex/d/p"
+
+    def fused_call(raw):
+        (res,) = fused(iter([pd.DataFrame({"url": [url], "html": [raw]})]))
+        return list(res["outlinks"][0]), list(res["anchors"][0])
+
+    def wrappers(raw):
+        links = extract_outlinks(raw, url)
+        return links, extract_anchors(raw, url, valid=links)
+
+    # CPU time, the three sizes interleaved and the best of 7 rounds kept:
+    # a few-ms timing must not pick up other processes or one slow round
+    gc.disable()
+    try:
+        for name, (unit, size) in ADVERSARIAL_SHAPES.items():
+            docs = [_adversarial(unit, size << k) for k in range(3)]
+            for run in (fused_call, wrappers):
+                secs = [float("inf")] * 3
+                for _ in range(7):
+                    for k, raw in enumerate(docs):
+                        t = time.process_time()
+                        run(raw)
+                        secs[k] = min(secs[k], time.process_time() - t)
+                assert secs[1] <= 2.5 * secs[0] and secs[2] <= 2.5 * secs[1], (name, run, secs)
+                assert secs[2] < 0.25, (name, run, secs)
+    finally:
+        gc.enable()
+
+
+def test_extract_pages_survives_hostile_pages(spark):
+    # unresolvable hrefs and the largest adversarial shapes go through the
+    # fused stage: it completes, and each row equals the pure-Python faces
+    from greenocr_spark.extractor.links import extract_link_faces
+    from greenocr_spark.operators.extract import extract_pages
+
+    rows = [(f"https://h{i}.ex/d/p", raw) for i, raw in enumerate(UNRESOLVABLE_PAGES)]
+    rows += [
+        (f"https://adv.ex/{name}", _adversarial(unit, size << 2))
+        for name, (unit, size) in ADVERSARIAL_SHAPES.items()
+    ]
+    df = spark.createDataFrame(rows, "url string, html binary").repartition(2)
+    got = {
+        r["url"]: (list(r["outlinks"]), [(a["dst"], a["anchor"]) for a in r["anchors"]])
+        for r in extract_pages(df, with_links=True, with_anchors=True).collect()
+    }
+    assert len(got) == len(rows)
+    for url, raw in rows:
+        assert got[url] == extract_link_faces(raw, url), url
+    assert got["https://h0.ex/d/p"] == (["https://h0.ex/ok"], [("https://h0.ex/ok", "ok")])

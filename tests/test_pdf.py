@@ -95,3 +95,66 @@ def test_hex_string_odd_length_pads():
         + body + b"\nendstream\nendobj\n%%EOF\n"
     )
     assert extract_pdf(raw)["text"] == "Hello"
+
+
+def test_truncated_and_trailing_flate_streams_parse_as_before():
+    # a cut stream is not inflated (parsed raw, as zlib.decompress's error
+    # left it); bytes after a complete stream are ignored
+    from greenocr_spark.extractor.pdf import _inflate
+
+    body = zlib.compress(b"BT (hello) Tj ET")
+    assert _inflate(body, 1 << 20) == b"BT (hello) Tj ET"
+    assert _inflate(body + b"junk", 1 << 20) == b"BT (hello) Tj ET"
+    assert _inflate(body[:-3], 1 << 20) is None
+    assert _inflate(b"BT (plain) Tj ET", 1 << 20) is None
+    assert _inflate(body, 4) == b"BT ("
+    assert _inflate(body, 0) == b""
+
+
+def test_flate_bomb_is_capped():
+    # ~1000:1 deflate bomb: 256 MB of content in ~0.8 MB. Uncapped, it ran
+    # for minutes in gigabytes; capped, one document inflates at most
+    # MAX_INFLATE_BYTES. Run in a fresh interpreter so its peak RSS is this
+    # document's alone.
+    import subprocess
+    import sys
+    import textwrap
+
+    code = textwrap.dedent(
+        """
+        import json, resource, time, zlib
+        from greenocr_spark.extractor.pdf import MAX_INFLATE_BYTES, extract_pdf
+
+        chunk = b"BT /F1 12 Tf 72 700 Td (hello world) Tj ET\\n" * 24_000
+        c = zlib.compressobj(9)
+        stream = b"".join([c.compress(chunk) for _ in range(256)] + [c.flush()])
+        raw = (
+            b"%PDF-1.4\\n1 0 obj << /Length " + str(len(stream)).encode()
+            + b" /Filter /FlateDecode >> stream\\n" + stream
+            + b"\\nendstream\\nendobj\\n" + stream  # a second bomb, past the cap
+            + b"\\n%%EOF"
+        )
+        t = time.perf_counter()
+        r = extract_pdf(raw)
+        print(json.dumps({
+            "s": time.perf_counter() - t,
+            "rss_mb": resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024,
+            "chars": len(r["text"]),
+            "cap_chars": MAX_INFLATE_BYTES * 12 // 43,
+        }))
+        """
+    )
+    import json
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True, text=True, timeout=300
+    )
+    assert out.returncode == 0, out.stderr
+    got = json.loads(out.stdout)
+    assert got["s"] < 30, got
+    assert got["rss_mb"] < 400, got
+    # each 43-byte line gives "hello world" and a joining space: the text is
+    # what fit under the cap, and the second bomb adds nothing
+    assert 0 < got["chars"] <= got["cap_chars"], got
