@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Volume soak for the anchor-text face: extract_anchors_df over N
+"""Volume soak for the anchor-text face: extract_anchor_rows over N
 Zipf-skewed fixture pages (noop sink — isolates the harvest stage like
 the bench does), then the per-host anchor-term aggregation (the anch2
 shape: host counts + (host, term) counts + WindowGroupLimit rank-1) over
@@ -36,7 +36,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from greenocr_spark.functions.sqlfns import host_expr
-    from greenocr_spark.operators.links import extract_anchors_df
+    from greenocr_spark.operators.extract import extract_anchor_rows
     from greenocr_spark.session import build_session
 
     # reuse the battery's cached fixture corpus directory scheme
@@ -58,7 +58,7 @@ def main() -> None:
     # generator is seed-deterministic and independent of corpus size, so
     # the prefix IS the golden corpus)
     prefix = spark.read.parquet(_fixture_pages_path(1500))
-    an = extract_anchors_df(prefix)
+    an = extract_anchor_rows(prefix)
     canon = F.concat_ws(
         "\x1f", F.col("src"), F.col("seq").cast("string"), F.col("dst"), F.col("anchor")
     )
@@ -75,11 +75,11 @@ def main() -> None:
 
     # stage 1: harvest throughput (narrow, Arrow-batched)
     t0 = time.perf_counter()
-    noop(extract_anchors_df(pages))
+    noop(extract_anchor_rows(pages))
     harvest_secs = time.perf_counter() - t0
 
     # stage 2: the anch2 aggregation shape over the harvested edges
-    edges = extract_anchors_df(pages).select(
+    edges = extract_anchor_rows(pages).select(
         host_expr("dst").alias("dst_host"), "anchor"
     )
     t1 = time.perf_counter()

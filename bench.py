@@ -63,7 +63,7 @@ def bench_queries(spark, sf_dir: str, cpus: int) -> dict:
     """name -> thunk returning a DataFrame to materialize."""
     import greenocr_spark.battery as b
     import greenocr_spark.battery_ml  # noqa: F401
-    from greenocr_spark.operators.extract import extract_pages
+    from greenocr_spark.operators.extract import extract_anchor_rows, extract_pages
 
     reg = b.REGISTRY
     # the real job repartitions on the salted key before extracting
@@ -75,12 +75,12 @@ def bench_queries(spark, sf_dir: str, cpus: int) -> dict:
         fn, _ = reg[name]
         return lambda: fn(spark, sf_dir)
 
-    from greenocr_spark.operators.links import extract_anchors_df, extract_links
-
     return {
         "extract_pipeline": lambda: extract_pages(pages),
         # round-4: the web-graph face — outlink harvest over the same pages
-        "link_pipeline": lambda: extract_links(pages),
+        "link_pipeline": lambda: extract_pages(pages, with_links=True).select(
+            "url", "outlinks", "n_links"
+        ),
         "a1_pricing_summary": from_reg("a1_pricing_summary"),
         "j1_broadcast_join_agg": from_reg("j1_broadcast_join_agg"),
         "j8_asof_join": from_reg("j8_asof_join"),
@@ -116,7 +116,7 @@ def bench_queries(spark, sf_dir: str, cpus: int) -> dict:
         # round-5 late: anchor-text harvest over the same pages (third
         # extraction-class number next to text and outlinks) and the
         # keep-latest-per-url recrawl dedup (single-exchange window shape)
-        "anchor_pipeline": lambda: extract_anchors_df(pages),
+        "anchor_pipeline": lambda: extract_anchor_rows(pages),
         "url1_latest_snapshot": from_reg("url1_latest_snapshot"),
     }
 

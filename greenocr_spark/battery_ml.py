@@ -16,55 +16,33 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from greenocr_spark.battery import _dec, q, t, table_rowcount
+from greenocr_spark.operators.clean import c4_keep_line
+from greenocr_spark.operators.dedup import (
+    MINHASH_AB,
+    P_MOD,
+    _N_BANDS,
+    _ROWS_PER_BAND,
+    _band_pairs,
+    _connected_components,
+    _minhash_signature,
+    _neardup_losers,
+)
+from greenocr_spark.operators.text import (
+    _LANG_ORDER,
+    _LANG_TRIGRAMS,
+    _bigram_array,
+    _spark_gram3_hashes,
+    _spark_words,
+    lang_id_col,
+)
+from greenocr_spark.plans.curate import _mixture_weight_table
+from greenocr_spark.plans.export import chunk_corpus
 
-# ---- shared hash/shingle expression builders (Spark SQL + DuckDB SQL) -----
-
-P_MOD = 2147483647  # 2^31-1
-# 8 permutations → 4 bands × 2 rows (b=4, r=2): the S-curve threshold
-# (1/b)^(1/r) ≈ 0.5 Jaccard — a realistic near-dup operating point
-MINHASH_AB = [
-    (2971, 1013), (4111, 2707), (5737, 331), (7001, 977),
-    (8191, 57), (9973, 1409), (11003, 2113), (12577, 761),
-]
-
-
-def _spark_words(col="text"):
-    return F.split(F.trim(F.col(col)), r"\s+")
+# ---- DuckDB twin of operators/text._spark_words --------------------------
 
 
 def _duck_words(col="text"):
     return f"regexp_split_to_array(trim({col}), '\\s+')"
-
-
-def _bigram_array(ws):
-    """Word-bigram array ("w1 w2") from a words-array expression, with each
-    side of the zip evaluated ONCE per row.
-
-    Never build bigrams as transform(slice(ws,...), lambda x, i:
-    concat_ws(' ', x, element_at(ws, i+2))): higher-order-function lambdas
-    are interpreted (no whole-stage codegen, no common-subexpression
-    elimination), so an `ws` expression embedded in the lambda body — e.g.
-    the split() behind it — re-evaluates per ELEMENT, turning the bigram
-    build into O(tokens²) string work per document.  On multi-thousand-token
-    documents that is a throughput cliff (measured ~50x on the pipeline
-    quality gate).  zip_with evaluates each input array expression once and
-    only iterates element-wise."""
-    n = F.greatest(F.size(ws) - 1, F.lit(0))
-    return F.zip_with(
-        F.slice(ws, 1, n), F.slice(ws, 2, n), lambda a, b: F.concat_ws(" ", a, b)
-    )
-
-
-def _spark_gram3_hashes(ws_col="ws"):
-    """md5 hashes of word 3-gram windows over an ALREADY-MATERIALIZED word
-    array column (select _spark_words() into a column first — referencing
-    the split expression inside the lambda would re-tokenize the text for
-    every window)."""
-    ws = F.col(ws_col)
-    return F.transform(
-        F.sequence(F.lit(1), F.size(ws) - 2),
-        lambda i: F.md5(F.concat_ws(" ", F.slice(ws, i, 3))),
-    )
 
 
 # ---- distributed prefix-sum block sizing (chk2 / shuf1 scale knobs) ------
@@ -210,34 +188,6 @@ def dd1_dedup_exact(spark, sf_dir):
     )
 
 
-def _minhash_signature(docs):
-    """doc_id + minhash values over word-3-shingles (md5-int based), for
-    any (doc_id, text) DataFrame — shared by the battery queries and the
-    curation job (plans/curate.py)."""
-    d = docs.select("doc_id", _spark_words().alias("w"))
-    sh = d.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("w") - 3),
-                lambda i: F.concat_ws(
-                    " ",
-                    F.element_at("w", i + 1),
-                    F.element_at("w", i + 2),
-                    F.element_at("w", i + 3),
-                ),
-            )
-        ).alias("sh"),
-    ).distinct()
-    x = F.conv(F.substring(F.md5("sh"), 1, 15), 16, 10).cast("long") % P_MOD
-    sh = sh.select("doc_id", x.alias("x"))
-    aggs = [
-        F.min((F.lit(a) * F.col("x") + F.lit(b)) % P_MOD).alias(f"mh{i}")
-        for i, (a, b) in enumerate(MINHASH_AB)
-    ]
-    return sh.groupBy("doc_id").agg(*aggs)
-
-
 def _minhash_signature_df(spark, sf_dir):
     return _minhash_signature(t(spark, sf_dir, "documents"))
 
@@ -261,9 +211,6 @@ def dd2_minhash_signature(spark, sf_dir):
     # MinHash: shingle → md5-int → k permutations → min. Exactly mirrored in
     # SQL because min over a deterministic set is order-independent.
     return _minhash_signature_df(spark, sf_dir)
-
-
-_N_BANDS, _ROWS_PER_BAND = 4, 2
 
 
 def _band_case_sql() -> str:
@@ -291,102 +238,6 @@ def dd3_minhash_band_pairs(spark, sf_dir):
     # S-curve threshold (1/b)^(1/r) ≈ 0.5 Jaccard. The scale path: the
     # self-join is per (band, bkey) bucket, never all-pairs.
     return _band_pairs(_minhash_signature_df(spark, sf_dir))
-
-
-def _band_pairs(sig):
-    """LSH banded candidate pairs from a minhash-signature DataFrame —
-    shared by dd3 and the curation job (plans/curate.py)."""
-    band_keys = [
-        F.md5(
-            F.concat_ws(
-                "-",
-                *[F.col(f"mh{b * _ROWS_PER_BAND + r}").cast("string") for r in range(_ROWS_PER_BAND)],
-            )
-        )
-        for b in range(_N_BANDS)
-    ]
-    bands = sig.select(
-        "doc_id", F.posexplode(F.array(*band_keys))
-    ).withColumnsRenamed({"pos": "band", "col": "bkey"})
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-
-def _connected_components(pairs, max_iter: int = 20):
-    """Connected components over an undirected pair list (doc_a, doc_b) →
-    (doc_id, cluster_id) with cluster_id = min member id.
-
-    Hash-to-min with pointer jumping: each round a node takes the min label
-    among itself and its neighbors, then follows its label's label (path
-    halving), so convergence is O(log diameter) rounds — not O(diameter)
-    like plain label propagation. Each round is two key-partitioned
-    joins + one groupBy; no driver-side graph, so it runs at any scale.
-    localCheckpoint truncates the lineage each round (an iterative plan
-    otherwise grows a plan tree Catalyst re-analyzes every action)."""
-    e = pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("d")).union(
-        pairs.select(F.col("doc_b").alias("s"), F.col("doc_a").alias("d"))
-    )
-    e = e.localCheckpoint(eager=True)
-    # init: label(x) = min(x, min neighbor)
-    lab = e.groupBy("s").agg(F.least(F.min("d"), F.col("s")).alias("lab")).select(
-        F.col("s").alias("node"), "lab"
-    )
-    converged = False
-    for _ in range(max_iter):
-        # neighbor-min: for each edge (s,d), s sees label(d)
-        nb = (
-            e.join(lab.withColumnRenamed("node", "d"), "d")
-            .groupBy("s")
-            .agg(F.min("lab").alias("nlab"))
-            .withColumnRenamed("s", "node")
-        )
-        stepped = (
-            lab.join(nb, "node", "left")
-            .select("node", F.least("lab", F.coalesce("nlab", "lab")).alias("lab"))
-        )
-        # pointer jump: label(x) := min(label(x), label(label(x)))
-        jumped = (
-            stepped.alias("x")
-            .join(
-                stepped.select(F.col("node").alias("lab"), F.col("lab").alias("ll")).alias("y"),
-                "lab",
-                "left",
-            )
-            .select("node", F.least("lab", F.coalesce("ll", "lab")).alias("lab"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            jumped.alias("n")
-            .join(lab.alias("o"), "node")
-            .filter(F.col("n.lab") != F.col("o.lab"))
-            .limit(1)
-            .count()
-        )
-        lab = jumped
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # A silently-truncated result would hand back WRONG cluster ids with
-        # no signal (ADVICE r02). Pointer jumping converges in O(log
-        # diameter), so hitting this bound means the input graph (or
-        # max_iter) is pathological — fail loudly instead.
-        raise RuntimeError(
-            f"connected components did not converge within {max_iter} "
-            "pointer-jumping rounds; raise max_iter (graph diameter > "
-            f"2^{max_iter}) or check the pair input for corruption"
-        )
-    return lab.select(F.col("node").alias("doc_id"), F.col("lab").alias("cluster_id"))
 
 
 @q(
@@ -461,61 +312,6 @@ def pipe2_neardup_removal(spark, sf_dir):
         docs.select("doc_id")
         .join(F.broadcast(_neardup_losers(docs)), "doc_id", "left_anti")
     )
-
-
-# Candidate verification bound (the dd9 shape): LSH candidates are checked
-# with edit distance over a bounded text prefix before any doc is dropped.
-# 200 chars / distance <= 40 separates cleanly: true near-dups differ by a
-# few edits in the prefix (or not at all), random false-positive collisions
-# differ by ~the whole prefix.
-_NEARDUP_VERIFY_PREFIX = 200
-_NEARDUP_MAX_EDITDIST = 40
-
-
-def _verified_pairs(pairs, docs):
-    """Drop LSH candidate pairs that fail the bounded-prefix edit-distance
-    check (levenshtein over the first _NEARDUP_VERIFY_PREFIX chars >
-    _NEARDUP_MAX_EDITDIST).
-
-    Clustering UNVERIFIED candidates is wrong at scale: band-collision false
-    positives arrive at a roughly corpus-quadratic rate, so past ~10^5 docs
-    the candidate graph percolates into giant random components — measured
-    on the 2M-page pipeline soak: 145k candidate pairs over 109k docs formed
-    a 13,933-doc component, i.e. ~14k NON-duplicate docs would be dropped as
-    "losers", and connected components needed 25 rounds to cross it.
-    Verification breaks the random edges (a false pair's prefixes disagree
-    almost everywhere), leaving tight true-dup clusters that converge in a
-    few rounds. The joins ship only (doc_id, 200-char prefix); Spark's
-    thresholded levenshtein early-exits above the bound."""
-    pre = docs.select(
-        "doc_id", F.substring("text", 1, _NEARDUP_VERIFY_PREFIX).alias("pre")
-    )
-    return (
-        pairs.join(
-            pre.select(F.col("doc_id").alias("doc_a"), F.col("pre").alias("pre_a")),
-            "doc_a",
-        )
-        .join(
-            pre.select(F.col("doc_id").alias("doc_b"), F.col("pre").alias("pre_b")),
-            "doc_b",
-        )
-        .filter(
-            F.levenshtein("pre_a", "pre_b", _NEARDUP_MAX_EDITDIST) != F.lit(-1)
-        )
-        .select("doc_a", "doc_b")
-    )
-
-
-def _neardup_losers(docs):
-    """doc_ids to DROP under near-dup removal (every clustered doc except
-    its cluster's min member) for any (doc_id, text) DataFrame — shared by
-    pipe2 and the curation job (plans/curate.py). Composes all three dedup
-    primitives: signatures (dd2) → banded candidates (dd3) → edit-distance
-    verification (dd9) → connected components (dd8)."""
-    sig = _minhash_signature(docs)
-    pairs = _verified_pairs(_band_pairs(sig), docs)
-    clusters = _connected_components(pairs)
-    return clusters.filter(F.col("cluster_id") != F.col("doc_id")).select("doc_id")
 
 
 @q(
@@ -1232,20 +1028,6 @@ def tx2_quality_score(spark, sf_dir):
     )
 
 
-# Frozen char-trigram profiles (top discriminative trigrams per language,
-# ASCII-only so Java/DuckDB literal semantics coincide byte-for-byte).
-# Score(doc, lang) = #profile trigrams present in " "+lower(canon(text))+" ";
-# pred = argmax with fixed tie-break order; 'und' when every score is 0.
-_LANG_TRIGRAMS: dict[str, tuple[str, ...]] = {
-    "en": (" th", "the", "he ", " an", "nd ", "ing", " of", "ion"),
-    "de": ("der", "ein", "sch", "ich", "die", "und", "ung", "cht"),
-    "fr": (" le", "les", "ent", "que", "ait", "our", "ais", "eur"),
-    "es": (" el", "los", " la", "ado", "nte", "cio", "ar ", "una"),
-    "it": (" di", "che", "ell", "zio", "gli", "ita", "ono", "lla"),
-}
-_LANG_ORDER = tuple(_LANG_TRIGRAMS)  # tie-break priority: en,de,fr,es,it
-
-
 def _tx3_oracle() -> str:
     scores = ", ".join(
         " + ".join(f"(CASE WHEN contains(pt, '{g}') THEN 1 ELSE 0 END)" for g in grams)
@@ -1261,44 +1043,6 @@ def _tx3_oracle() -> str:
     s AS (SELECT doc_id, {scores} FROM p)
     SELECT doc_id, CASE WHEN {best} = 0 THEN 'und' {whens} END AS pred_lang
     FROM s"""
-
-
-def lang_id_col(text_col="text"):
-    """Predicted-language Column for any string column (used by tx3 and by
-    tests over real multilingual sentences)."""
-    padded = F.concat(
-        F.lit(" "),
-        F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")),
-        F.lit(" "),
-    )
-    # Single-instance argmax: each trigram `contains` appears exactly ONCE in
-    # the expression tree.  The naive greatest(...) + when-cascade form
-    # duplicates the 40 score terms ~7x; fused into a larger whole-stage-
-    # codegen region (e.g. the pipeline handoff projection + quality filter)
-    # that blows janino's 64 KB method cap and silently drops the stage to
-    # interpreted mode — a real throughput cliff at corpus scale.
-    # array_max over struct(score, priority) compares field-by-field, so ties
-    # resolve to the highest priority = FIRST lang in _LANG_ORDER (identical
-    # to the old first-wins when-cascade); an (s=0, highest-priority) sentinel
-    # yields 'und' exactly when every score is 0.
-    n = len(_LANG_ORDER)
-    entries = [
-        F.struct(
-            sum(
-                F.when(F.contains(padded, F.lit(g)), 1).otherwise(0)
-                for g in _LANG_TRIGRAMS[lo]
-            ).alias("s"),
-            F.lit(n - 1 - i).alias("p"),
-        )
-        for i, lo in enumerate(_LANG_ORDER)
-    ]
-    sentinel = F.struct(F.lit(0).alias("s"), F.lit(n).alias("p"))
-    # lang_by_priority[p] = lang with priority p (p = n-1-i), plus 'und' at p=n
-    lang_by_priority = F.array(
-        *[F.lit(_LANG_ORDER[n - 1 - p]) for p in range(n)], F.lit("und")
-    )
-    best = F.array_max(F.array(*entries, sentinel))
-    return F.element_at(lang_by_priority, best["p"] + 1)
 
 
 @q("tx3_lang_id", _tx3_oracle())
@@ -1989,38 +1733,6 @@ def scrub1_pii_redact(spark, sf_dir):
     )
 
 
-def _mixture_weight_table(d):
-    """Per (source, lang) doc/token counts + the token-equalizing sampling
-    weight in integer ppm — shared by mix1 (reports it) and samp2 (applies
-    it), so the two can never drift apart. One map-side-combined groupBy
-    over the corpus; the window runs over the GROUP table (sources × langs
-    — tiny), so the single-partition window is a non-issue at any corpus
-    scale. The ppm is computed in DOUBLE with the identical operation
-    order on both engines (same IEEE ops → bit-identical results); a
-    pure-int64 numerator (tot_tokens * 1e6) would wrap Spark's BIGINT at
-    ~9.2e12 total tokens — inside the 100-TB target — while DuckDB's
-    HUGEINT would not: silent engine divergence."""
-    g = d.groupBy("source", "lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.size(_spark_words())).alias("n_tokens"),
-    )
-    w = Window.partitionBy()
-    return (
-        g.withColumn("tot_tokens", F.sum("n_tokens").over(w))
-        .withColumn("n_groups", F.count("*").over(w))
-        .select(
-            "source",
-            "lang",
-            "n_docs",
-            "n_tokens",
-            F.expr(
-                "CAST(floor((1000000.0 * tot_tokens)"
-                " / (n_groups * n_tokens)) AS BIGINT)"
-            ).alias("weight_ppm"),
-        )
-    )
-
-
 @q(
     "mix1_source_mix_weights",
     f"""WITH g AS (SELECT source, lang, count(*) AS n_docs,
@@ -2079,44 +1791,6 @@ def samp2_mixture_resample(spark, sf_dir):
         d.join(F.broadcast(weights), ["source", "lang"])
         .filter(ppm < F.col("keep_ppm"))
         .select("doc_id", "source", "lang", "keep_ppm")
-    )
-
-
-def chunk_corpus(docs, seq_len: int):
-    """Shared sequence-packing kernel (chk1 + plans/export.py): fixed-size
-    token chunks with stable (doc_id, chunk_idx) addresses. The word array
-    is materialized ONCE per row; explode(sequence(...)) fans out to chunk
-    starts and slice() reads the shared array — a narrow one-to-many
-    projection, zero shuffles, embarrassingly parallel at 10^12 docs.
-    Empty tokens are filtered from the word array itself (split of an
-    empty/whitespace-only string yields [''] or ['','']; a trim-based
-    prefilter misses tab/newline-only docs), so whitespace-only documents
-    produce zero chunks and no ghost tokens, whatever the whitespace."""
-    ws_clean = F.filter(_spark_words(), lambda x: x != "")
-    d = (
-        docs.select("doc_id", ws_clean.alias("ws"))
-        .filter(F.size("ws") > 0)
-        .withColumn(
-            "n_chunks", F.ceil(F.size("ws") / F.lit(float(seq_len))).cast("int")
-        )
-    )
-    g = F.col("g")
-    return (
-        d.select(
-            "doc_id",
-            "ws",
-            F.explode(F.sequence(F.lit(0), F.col("n_chunks") - 1)).alias("g"),
-        )
-        .select(
-            "doc_id",
-            g.cast("int").alias("chunk_idx"),
-            F.array_join(F.slice("ws", g * seq_len + 1, seq_len), " ").alias(
-                "chunk_text"
-            ),
-            F.least(F.lit(seq_len), F.size("ws") - g * seq_len)
-            .cast("int")
-            .alias("n_tokens"),
-        )
     )
 
 
@@ -3898,19 +3572,20 @@ def km1_kmeans_estep(spark, sf_dir):
 )
 def ex7_outlink_hash(spark, sf_dir):
     # Web-graph construction face: harvest every <a href> of the 1500-page
-    # seed-42 fixture corpus through the Arrow-batched link stage
-    # (operators/links.extract_links — entity decode, urljoin resolution,
-    # scheme filtering identical to the pure-Python extractor.links spec),
-    # reduce (url, outlinks, n_links) rows with the same order-insensitive
-    # sha256-prefix xor as ex4. The oracle literal is computed by the pure
-    # -Python path (pinned with it in tests/test_links.py), so a green row
-    # proves the distributed link harvest is string-identical to the
-    # reference implementation — the ex4 byte-identity pattern applied to
-    # the graph face. Narrow stage: no shuffle upstream of the 1-row agg.
-    from greenocr_spark.operators.links import extract_links
+    # seed-42 fixture corpus through the fused extraction stage's link face
+    # (operators/extract.extract_pages(with_links=True) — entity decode,
+    # urljoin resolution, scheme filtering identical to the pure-Python
+    # extractor.links spec), reduce (url, outlinks, n_links) rows with the
+    # same order-insensitive sha256-prefix xor as ex4. The oracle literal
+    # is computed by the pure-Python path (pinned with it in
+    # tests/test_links.py), so a green row proves the distributed link
+    # harvest is string-identical to the reference implementation — the
+    # ex4 byte-identity pattern applied to the graph face. Narrow stage: no
+    # shuffle upstream of the 1-row agg.
+    from greenocr_spark.operators.extract import extract_pages
 
     pages = spark.read.parquet(_fixture_pages_path(1500))
-    lk = extract_links(pages)
+    lk = extract_pages(pages, with_links=True)
     canon = F.concat_ws(
         "\x1f",
         F.col("url"),
@@ -3967,10 +3642,10 @@ def lnk1_host_graph(spark, sf_dir):
     # -keyed aggregate with map-side partials; hosts come from
     # try_parse_url (NULL-safe on malformed crawl urls).
     from greenocr_spark.functions.sqlfns import host_expr
-    from greenocr_spark.operators.links import extract_links
+    from greenocr_spark.operators.extract import extract_pages
 
     pages = spark.read.parquet(_fixture_pages_path(400))
-    lk = extract_links(pages)
+    lk = extract_pages(pages, with_links=True)
     return (
         lk.select(
             host_expr("url").alias("src_host"),
@@ -4020,21 +3695,21 @@ def ex8_meta_hash(spark, sf_dir):
 )
 def st10_stream_link_hash(spark, sf_dir):
     # §2.10 × web graph: the STREAMING face of the outlink harvest —
-    # stream_warc over the same 1500-page WARC fixture → extract_links →
-    # ex7's xor-hash canon, availableNow drain. Must land on ex7's frozen
-    # pure-Python literal: batch-parquet (ex7) and streaming-WARC (this)
-    # harvests are string-identical, the st8 container-independence
-    # argument extended to the graph face (the link stage is a pure
-    # DataFrame→DataFrame function, so the batch pipeline IS the
-    # streaming pipeline).
+    # stream_warc over the same 1500-page WARC fixture → the link face of
+    # extract_pages → ex7's xor-hash canon, availableNow drain. Must land
+    # on ex7's frozen pure-Python literal: batch-parquet (ex7) and
+    # streaming-WARC (this) harvests are string-identical, the st8
+    # container-independence argument extended to the graph face (the
+    # link stage is a pure DataFrame→DataFrame function, so the batch
+    # pipeline IS the streaming pipeline).
     import tempfile
     import uuid as _uuid
 
-    from greenocr_spark.operators.links import extract_links
+    from greenocr_spark.operators.extract import extract_pages
     from greenocr_spark.sources.warc import stream_warc
 
     pages = stream_warc(spark, _fixture_warc_dir(1500)).select("url", "html")
-    lk = extract_links(pages)
+    lk = extract_pages(pages, with_links=True)
     canon = F.concat_ws(
         "\x1f",
         F.col("url"),
@@ -4216,23 +3891,6 @@ SELECT doc_id,
        len(kept) >= 3 AS keep_doc,
        array_to_string(kept, chr(10)) AS clean_text
 FROM k"""
-
-
-def c4_keep_line(line):
-    """C4's line-level keep rule (Raffel et al. 2020 §2.2, the 'C4' corpus
-    rules), as one JVM boolean expression over a line Column: kept iff the
-    trimmed line ends in terminal punctuation, has >= 5 whitespace words,
-    and contains no '{', no 'lorem ipsum', and no 'javascript' word. Shared
-    by c4f1 and any caller composing it over extracted text."""
-    s = F.trim(line)
-    return (
-        (F.length(s) > 0)
-        & F.substring(s, -1, 1).isin(".", "!", "?", '"')
-        & (F.size(F.split(s, r"\s+")) >= 5)
-        & ~s.contains("{")
-        & ~F.lower(s).contains("lorem ipsum")
-        & ~F.array_contains(F.split(F.lower(s), r"\s+"), "javascript")
-    )
 
 
 @q("c4f1_line_filter", _C4F1_ORACLE)
@@ -4435,17 +4093,18 @@ _ANCH1_N = 11636
 )
 def anch1_anchor_hash(spark, sf_dir):
     # Anchor-text harvest over the 1500-page seed-42 fixture corpus through
-    # the Arrow-batched stage (operators/links.extract_anchors_df — one
-    # link pass resolves each href for the outlink and anchor faces alike),
-    # reduced with the order-insensitive sha256-prefix xor over
-    # (src, seq, dst, anchor) rows. The literal is computed by the pure-
-    # Python path and pinned with it in tests/test_links.py, so a green row
-    # proves the distributed anchor harvest is string-identical to the
-    # spec. Narrow stage: no shuffle upstream of the 1-row agg.
-    from greenocr_spark.operators.links import extract_anchors_df
+    # operators/extract.extract_anchor_rows (the fused stage's anchor face,
+    # posexploded in the JVM; one link pass resolves each href for the
+    # outlink and anchor faces alike), reduced with the order-insensitive
+    # sha256-prefix xor over (src, seq, dst, anchor) rows. The literal is
+    # computed by the pure-Python path and pinned with it in
+    # tests/test_links.py, so a green row proves the distributed anchor
+    # harvest is string-identical to the spec. Narrow stage: no shuffle
+    # upstream of the 1-row agg.
+    from greenocr_spark.operators.extract import extract_anchor_rows
 
     pages = spark.read.parquet(_fixture_pages_path(1500))
-    an = extract_anchors_df(pages)
+    an = extract_anchor_rows(pages)
     canon = F.concat_ws(
         "\x1f",
         F.col("src"),
@@ -4512,10 +4171,10 @@ def anch2_host_anchor_terms(spark, sf_dir):
     from pyspark.sql import Window
 
     from greenocr_spark.functions.sqlfns import host_expr
-    from greenocr_spark.operators.links import extract_anchors_df
+    from greenocr_spark.operators.extract import extract_anchor_rows
 
     pages = spark.read.parquet(_fixture_pages_path(400))
-    an = extract_anchors_df(pages).select(
+    an = extract_anchor_rows(pages).select(
         host_expr("dst").alias("dst_host"), F.col("anchor")
     )
     n_anchors = an.groupBy("dst_host").agg(F.count(F.lit(1)).alias("n_anchors"))
@@ -4678,7 +4337,7 @@ def meta1_canonical_dedup(spark, sf_dir):
 def st11_stream_anchor_hash(spark, sf_dir):
     # §2.10 × anchor text: the STREAMING face of the anchor harvest —
     # stream_warc over the same 1500-page WARC fixture →
-    # extract_anchors_df → anch1's xor-hash canon, availableNow drain.
+    # extract_anchor_rows → anch1's xor-hash canon, availableNow drain.
     # Must land on anch1's frozen pure-Python literal: batch-parquet
     # (anch1) and streaming-WARC (this) harvests are string-identical —
     # the st8/st10 container-independence argument extended to the
@@ -4688,11 +4347,11 @@ def st11_stream_anchor_hash(spark, sf_dir):
     import tempfile
     import uuid as _uuid
 
-    from greenocr_spark.operators.links import extract_anchors_df
+    from greenocr_spark.operators.extract import extract_anchor_rows
     from greenocr_spark.sources.warc import stream_warc
 
     pages = stream_warc(spark, _fixture_warc_dir(1500)).select("url", "html")
-    an = extract_anchors_df(pages)
+    an = extract_anchor_rows(pages)
     canon = F.concat_ws(
         "\x1f",
         F.col("src"),

@@ -2,9 +2,9 @@
 
 `tokenize_blocks` deliberately discards tag attributes (its hot path is
 the frozen byte-identity spec for TEXT), so link harvesting is its own
-pass over the same decoded markup. Deterministic pure Python — the Spark
-operators (`operators/links`, and the fused `operators/extract` stage)
-are thin Arrow-batched wrappers, and the edges feed the host-graph
+pass over the same decoded markup. Deterministic pure Python — the fused
+Spark stage (`operators/extract.extract_pages` with its link and anchor
+faces) is a thin Arrow-batched wrapper, and the edges feed the host-graph
 workloads (pr1 host rank, gr1 triangles, crawl-frontier prioritization).
 
 One left-to-right pass yields both faces (`extract_link_faces`):

@@ -11,9 +11,11 @@ A deliberately small, documented subset of the Robots Exclusion Protocol
 - ``Allow:`` / ``Disallow:`` append (allow, path_prefix) rules to every
   agent of the current group; a Disallow with an EMPTY path is the
   classic allow-all no-op and is dropped;
-- group selection for an agent: the exact agent token (lowercased) if a
-  group for it exists, else ``*`` — when a specific group exists the
-  ``*`` group does NOT also apply (RFC 9309 §2.2.1);
+- group selection for an agent: the group of the agent's product token
+  (the leading ``[A-Za-z_-]`` run of the agent string, lowercased, so
+  ``GreenOCRBot/1.2 (+https://x)`` matches ``User-agent: greenocrbot``)
+  if one exists, else ``*`` — when a specific group exists the ``*`` group
+  does NOT also apply (RFC 9309 §2.2.1);
 - matching is plain path-prefix (no ``*`` / ``$`` wildcards — documented
   limitation), longest match wins, and on a length tie Allow wins
   (Google REP tie-break);
@@ -22,10 +24,15 @@ A deliberately small, documented subset of the Robots Exclusion Protocol
 Deterministic pure Python; the Spark operator parses one robots.txt per
 HOST (a host-cardinality table — tiny next to the page corpus at any
 scale), broadcasts the rule arrays, and the per-page decision is pure
-JVM array lambdas (battery_ml.rob1_robots_filter).
+JVM array lambdas (operators/robots.allowed_col, value-checked by the
+rob1_robots_filter battery entry).
 """
 
 from __future__ import annotations
+
+import re
+
+_PRODUCT_TOKEN_RE = re.compile(r"[A-Za-z_-]*")
 
 
 def parse_robots(text: str | None) -> dict[str, list[tuple[bool, str]]]:
@@ -70,10 +77,12 @@ def parse_robots(text: str | None) -> dict[str, list[tuple[bool, str]]]:
 def rules_for_agent(
     groups: dict[str, list[tuple[bool, str]]], agent: str
 ) -> list[tuple[bool, str]]:
-    """The rule list governing `agent`: its own group if present, else *."""
-    agent = agent.lower()
-    if agent in groups:
-        return groups[agent]
+    """The rule list governing `agent`: the group of its product token (the
+    leading [A-Za-z_-] run, lowercased; RFC 9309 §2.2.1) if present, else
+    *."""
+    token = _PRODUCT_TOKEN_RE.match(agent).group(0).lower()
+    if token in groups:
+        return groups[token]
     return groups.get("*", [])
 
 

@@ -1,9 +1,8 @@
 """Line-level cleaning stage for extracted text: C4 rules as a narrow
 DataFrame operator.
 
-Applies battery_ml.c4_keep_line (the C4 corpus line rules — terminal
-punctuation, >= 5 words, no brace / lorem-ipsum / javascript markers) to
-every line of a text column and reports the doc-level keep decision
+Applies c4_keep_line (the C4 corpus line rules — terminal punctuation,
+>= 5 words, no brace / lorem-ipsum / javascript markers) to of a text column and reports the doc-level keep decision
 (>= `min_lines` surviving lines). Entirely JVM array lambdas inside one
 projection: preserves input partitioning, no shuffle, no Python — the
 same narrow-operation contract as operators/extract.py, so it composes
@@ -18,6 +17,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def c4_keep_line(line):
+    """C4's line-level keep rule (Raffel et al. 2020 §2.2, the 'C4' corpus
+    rules), as one JVM boolean expression over a line Column: kept iff the
+    trimmed line ends in terminal punctuation, has >= 5 whitespace words,
+    and contains no '{', no 'lorem ipsum', and no 'javascript' word. Shared
+    by c4f1 and any caller composing it over extracted text."""
+    s = F.trim(line)
+    return (
+        (F.length(s) > 0)
+        & F.substring(s, -1, 1).isin(".", "!", "?", '"')
+        & (F.size(F.split(s, r"\s+")) >= 5)
+        & ~s.contains("{")
+        & ~F.lower(s).contains("lorem ipsum")
+        & ~F.array_contains(F.split(F.lower(s), r"\s+"), "javascript")
+    )
+
+
 def clean_lines(
     df: DataFrame, text_col: str = "text", *, min_lines: int = 3
 ) -> DataFrame:
@@ -28,8 +44,6 @@ def clean_lines(
     `min_lines` lines survive. Rows are NOT filtered — callers decide
     whether to `.filter("keep_doc")` or keep the attribution columns
     (a funnel reports both)."""
-    from greenocr_spark.battery_ml import c4_keep_line
-
     lines = F.split(F.col(text_col), "\n")
     kept = F.filter(lines, c4_keep_line)
     return (

@@ -13,6 +13,7 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -102,10 +103,10 @@ def extract_pages(
 
     with_links=True additionally harvests each page's outlinks
     (extractor/links spec) in the SAME batch loop — at 10^12 pages the
-    payload scan dominates both faces, so fusing them halves the I/O vs
-    running operators/links.extract_links as a second pass. Default off:
-    the text-only schema and every frozen byte-identity surface are
-    untouched.
+    payload scan dominates every face, so this is the only per-document
+    stage: link rows are `extract_pages(df, with_links=True).select("url",
+    "outlinks", "n_links")`. Default off: the text-only schema and every
+    frozen byte-identity surface are untouched.
 
     with_anchors=True likewise fuses the anchor-text harvest ((dst, anchor)
     per closed <a> element, duplicates kept); composes freely with
@@ -168,3 +169,16 @@ def extract_pages(
             yield res
 
     return df.select(*keep).mapInPandas(run, schema=schema)
+
+
+def extract_anchor_rows(df: DataFrame) -> DataFrame:
+    """Anchor-text harvest as rows: one (src, seq, dst, anchor) row per
+    closed <a href>…</a> element of every page, seq = the element's 0-based
+    position in its page's anchor list. Duplicates are kept (anchor-text
+    aggregation counts multiplicity) and seq keeps each row unique, so
+    order-insensitive xor-hash canons cannot self-cancel on repeated
+    (src, dst, anchor) triples. A JVM projection of the fused stage: pages
+    without anchors emit no rows, and the plan stays narrow."""
+    return extract_pages(df, with_anchors=True).select(
+        F.col("url").alias("src"), F.posexplode("anchors").alias("seq", "a")
+    ).select("src", "seq", "a.dst", "a.anchor")

@@ -1,5 +1,5 @@
 """Vectorized page-metadata stage: pages → (url, title, robots, noindex,
-canonical). Same Arrow-batched narrow shape as operators/links.py; the
+canonical). Same Arrow-batched narrow shape as operators/extract.py; the
 per-document logic is extractor/meta.extract_meta.
 
 Downstream shapes: `noindex` filters pages out of the corpus before any

@@ -37,19 +37,50 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from greenocr_spark.battery_ml import (
+from greenocr_spark.operators.dedup import _neardup_losers
+from greenocr_spark.operators.text import (
     _bigram_array,
-    _mixture_weight_table,
-    _neardup_losers,
     _spark_gram3_hashes,
     _spark_words,
 )
 from greenocr_spark.sources.pages import read_parquet_or_none
 
 CURATE_MANIFEST_COLS = ["stage", "idx", "rows_in", "rows_out", "run_id"]
+
+
+def _mixture_weight_table(d):
+    """Per (source, lang) doc/token counts + the token-equalizing sampling
+    weight in integer ppm — shared by mix1 (reports it) and samp2 (applies
+    it), so the two can never drift apart. One map-side-combined groupBy
+    over the corpus; the window runs over the GROUP table (sources × langs
+    — tiny), so the single-partition window is a non-issue at any corpus
+    scale. The ppm is computed in DOUBLE with the identical operation
+    order on both engines (same IEEE ops → bit-identical results); a
+    pure-int64 numerator (tot_tokens * 1e6) would wrap Spark's BIGINT at
+    ~9.2e12 total tokens — inside the 100-TB target — while DuckDB's
+    HUGEINT would not: silent engine divergence."""
+    g = d.groupBy("source", "lang").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.size(_spark_words())).alias("n_tokens"),
+    )
+    w = Window.partitionBy()
+    return (
+        g.withColumn("tot_tokens", F.sum("n_tokens").over(w))
+        .withColumn("n_groups", F.count("*").over(w))
+        .select(
+            "source",
+            "lang",
+            "n_docs",
+            "n_tokens",
+            F.expr(
+                "CAST(floor((1000000.0 * tot_tokens)"
+                " / (n_groups * n_tokens)) AS BIGINT)"
+            ).alias("weight_ppm"),
+        )
+    )
 
 
 def _stage_dir(out_dir: str, name: str) -> str:

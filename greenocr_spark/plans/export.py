@@ -45,11 +45,47 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-# the chunking kernel is shared with the oracle-checked chk1_token_chunks
-# battery entry (battery_ml.chunk_corpus) so query and job cannot diverge
-from greenocr_spark.battery_ml import chunk_corpus  # noqa: F401  (re-export)
+from greenocr_spark.operators.text import _spark_words
 
 EXPORT_MANIFEST_COLS = ["shard_id", "n_rows", "min_pos", "max_pos", "n_tokens"]
+
+
+def chunk_corpus(docs, seq_len: int):
+    """Shared sequence-packing kernel (chk1 + plans/export.py): fixed-size
+    token chunks with stable (doc_id, chunk_idx) addresses. The word array
+    is materialized ONCE per row; explode(sequence(...)) fans out to chunk
+    starts and slice() reads the shared array — a narrow one-to-many
+    projection, zero shuffles, embarrassingly parallel at 10^12 docs.
+    Empty tokens are filtered from the word array itself (split of an
+    empty/whitespace-only string yields [''] or ['','']; a trim-based
+    prefilter misses tab/newline-only docs), so whitespace-only documents
+    produce zero chunks and no ghost tokens, whatever the whitespace."""
+    ws_clean = F.filter(_spark_words(), lambda x: x != "")
+    d = (
+        docs.select("doc_id", ws_clean.alias("ws"))
+        .filter(F.size("ws") > 0)
+        .withColumn(
+            "n_chunks", F.ceil(F.size("ws") / F.lit(float(seq_len))).cast("int")
+        )
+    )
+    g = F.col("g")
+    return (
+        d.select(
+            "doc_id",
+            "ws",
+            F.explode(F.sequence(F.lit(0), F.col("n_chunks") - 1)).alias("g"),
+        )
+        .select(
+            "doc_id",
+            g.cast("int").alias("chunk_idx"),
+            F.array_join(F.slice("ws", g * seq_len + 1, seq_len), " ").alias(
+                "chunk_text"
+            ),
+            F.least(F.lit(seq_len), F.size("ws") - g * seq_len)
+            .cast("int")
+            .alias("n_tokens"),
+        )
+    )
 
 
 def shuffle_positions(chunks: DataFrame, seed: int) -> DataFrame:

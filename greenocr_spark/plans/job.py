@@ -157,6 +157,10 @@ def run_extract_job(
     hot-host map is persisted next to the manifest on the first run and
     REUSED on resume, so part_id assignment stays stable even if the input
     dataset drifted between runs (ADVICE r01)."""
+    if salting not in ("uniform", "adaptive"):
+        # a misspelt mode would silently salt uniformly, and on resume of an
+        # adaptive run its part_ids would disagree with the done set
+        raise ValueError(f"salting must be 'uniform' or 'adaptive', got {salting!r}")
     run_id = run_id or uuid.uuid4().hex[:12]
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     ext_path = _extracted_dir(out_dir)

@@ -39,6 +39,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from greenocr_spark.functions.sqlfns import host_expr
+from greenocr_spark.operators.text import lang_id_col
+from greenocr_spark.plans.curate import read_curate_manifest, run_curate_job
+from greenocr_spark.plans.export import run_export_job
+from greenocr_spark.plans.job import run_extract_job
 
 
 def extract_dir(out_dir: str) -> str:
@@ -56,8 +60,6 @@ def export_dir(out_dir: str) -> str:
 def curation_input(extracted: DataFrame) -> DataFrame:
     """extract → curate handoff: (doc_id, text, lang, source) from the
     extracted table. Narrow projection — no shuffle, no Python."""
-    from greenocr_spark.battery_ml import lang_id_col
-
     return extracted.filter(F.col("text") != "").select(
         F.col("url").alias("doc_id"),
         "text",
@@ -99,10 +101,6 @@ def run_pipeline_job(
     Returns a stats dict with one entry per stage: extracted/curated row
     counts, the curation funnel (stage, rows_in, rows_out), and the export
     summary (n_shards/n_chunks/n_tokens/resumed)."""
-    from greenocr_spark.plans.curate import read_curate_manifest, run_curate_job
-    from greenocr_spark.plans.export import run_export_job
-    from greenocr_spark.plans.job import run_extract_job
-
     extracted = run_extract_job(
         spark,
         pages,

@@ -184,3 +184,17 @@ def test_adaptive_host_stats_one_action_no_cache(spark):
         # per-host shuffle, total shuffle, result: one action
         assert n_jobs <= 3
         assert len(sc._jsc.getPersistentRDDs()) == cached
+
+
+@pytest.mark.parametrize("entry", ["extract", "pipeline"])
+def test_unknown_salting_rejected_before_any_read(entry, tmp_path):
+    # a misspelt mode used to salt uniformly without a word (and break the
+    # resume of an adaptive run); it must fail before Spark is touched, so
+    # neither a session nor a pages DataFrame is needed to see the error
+    from greenocr_spark.plans.pipeline import run_pipeline_job
+
+    run = run_extract_job if entry == "extract" else run_pipeline_job
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="salting"):
+        run(None, None, str(out), salting="adaptve")
+    assert not out.exists()

@@ -1,5 +1,6 @@
-"""Outlink extraction (extractor/links.py + operators/links.py): unit
-spec, Spark≡pure-Python string identity, and the host-graph shape."""
+"""Outlink and anchor extraction (extractor/links.py + the link faces of
+operators/extract.py): unit spec, Spark≡pure-Python string identity, and
+the host-graph shape."""
 
 from __future__ import annotations
 
@@ -67,15 +68,20 @@ def test_outlink_golden_frozen():
     assert (acc, n) == (GOLDEN_OUTLINK_XOR, GOLDEN_N)
 
 
+def _link_rows(pages):
+    from greenocr_spark.operators.extract import extract_pages
+
+    return extract_pages(pages, with_links=True).select("url", "outlinks", "n_links")
+
+
 def test_spark_links_match_python(spark, tmp_path):
     from greenocr_spark.fixtures import write_pages_parquet
-    from greenocr_spark.operators.links import extract_links
 
     path = str(tmp_path / "p.parquet")
     write_pages_parquet(path, 300)
     got = {
         r["url"]: (list(r["outlinks"]), r["n_links"])
-        for r in extract_links(spark.read.parquet(path)).collect()
+        for r in _link_rows(spark.read.parquet(path)).collect()
     }
     pages = make_pages(300, seed=42)
     assert len(got) == 300
@@ -86,7 +92,6 @@ def test_spark_links_match_python(spark, tmp_path):
 
 def test_links_stage_is_narrow(spark, tmp_path):
     from greenocr_spark.fixtures import write_pages_parquet
-    from greenocr_spark.operators.links import extract_links
 
     path = str(tmp_path / "p.parquet")
     write_pages_parquet(path, 50)
@@ -94,7 +99,7 @@ def test_links_stage_is_narrow(spark, tmp_path):
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        extract_links(spark.read.parquet(path)).explain("formatted")
+        _link_rows(spark.read.parquet(path)).explain("formatted")
     p = buf.getvalue()
     assert "Exchange" not in p
     assert "MapInPandas" in p
@@ -134,10 +139,9 @@ def test_outlink_fuzz_never_raises_and_deterministic():
 
 def test_fused_extract_with_links_matches_both_faces(spark, tmp_path):
     # extract_pages(with_links=True) must equal the text face of the
-    # default stage AND the link face of the standalone stage, row for row
+    # default stage AND the pure-Python outlink spec, row for row
     from greenocr_spark.fixtures import write_pages_parquet
     from greenocr_spark.operators.extract import extract_pages
-    from greenocr_spark.operators.links import extract_links
 
     path = str(tmp_path / "p.parquet")
     write_pages_parquet(path, 200)
@@ -147,14 +151,12 @@ def test_fused_extract_with_links_matches_both_faces(spark, tmp_path):
         for r in extract_pages(pages, with_links=True).collect()
     }
     text_only = {r["url"]: r["text"] for r in extract_pages(pages).collect()}
-    links_only = {
-        r["url"]: (list(r["outlinks"]), r["n_links"])
-        for r in extract_links(pages).collect()
-    }
     assert len(fused) == 200
-    for url, (text, links, nl) in fused.items():
-        assert text == text_only[url]
-        assert (links, nl) == links_only[url]
+    for p in make_pages(200, seed=42):
+        text, links, nl = fused[p["url"]]
+        assert text == text_only[p["url"]]
+        want = extract_outlinks(p["html"], base_url=p["url"])
+        assert (links, nl) == (want, len(want))
     # and the fused stage is still narrow
     import contextlib, io
 
@@ -192,11 +194,10 @@ def test_extract_job_with_links_and_schema_guard(spark, tmp_path):
 def test_link_and_meta_stages_run_under_streaming(spark, tmp_path):
     # the graph/metadata faces are pure DataFrame→DataFrame stages, so the
     # batch pipeline IS the streaming pipeline (same contract st8 pins for
-    # text): stream_warc → extract_links/extract_meta_pages, availableNow
+    # text): stream_warc → link rows/extract_meta_pages, availableNow
     # drain, output equal to the batch path over the same segments
     import tempfile
 
-    from greenocr_spark.operators.links import extract_links
     from greenocr_spark.operators.meta import extract_meta_pages
     from greenocr_spark.sources.warc import read_warc, stream_warc, write_warc_dir
     from greenocr_spark.streaming.face import run_available_now
@@ -207,9 +208,9 @@ def test_link_and_meta_stages_run_under_streaming(spark, tmp_path):
 
     batch_links = {
         r["url"]: list(r["outlinks"])
-        for r in extract_links(read_warc(spark, d).select("url", "html")).collect()
+        for r in _link_rows(read_warc(spark, d).select("url", "html")).collect()
     }
-    stream = extract_links(stream_warc(spark, d).select("url", "html"))
+    stream = _link_rows(stream_warc(spark, d).select("url", "html"))
     qh = run_available_now(
         stream, "lnk_stream_test", tempfile.mkdtemp(prefix="lnk_ckpt_")
     )
@@ -360,7 +361,7 @@ def test_anchor_host_terms_provenance():
 
 def test_anchor_stage_is_narrow(spark, tmp_path):
     from greenocr_spark.fixtures import write_pages_parquet
-    from greenocr_spark.operators.links import extract_anchors_df
+    from greenocr_spark.operators.extract import extract_anchor_rows
 
     path = str(tmp_path / "p.parquet")
     write_pages_parquet(path, 50)
@@ -368,10 +369,47 @@ def test_anchor_stage_is_narrow(spark, tmp_path):
 
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        extract_anchors_df(spark.read.parquet(path)).explain("formatted")
+        extract_anchor_rows(spark.read.parquet(path)).explain("formatted")
     p = buf.getvalue()
     assert "Exchange" not in p
     assert "MapInPandas" in p
+
+
+def test_anchor_rows_match_python(spark):
+    # extract_anchor_rows ≡ enumerating the pure-Python anchor spec per
+    # page, in order, over fixture pages plus the edge pages: no anchors,
+    # a PDF, html=NULL and repeated identical anchors (kept, distinct seq)
+    from greenocr_spark.extractor.links import extract_anchors
+    from greenocr_spark.operators.extract import extract_anchor_rows
+
+    rep = b'<a href="/same">same text</a>' * 3
+    pages = [(p["url"], p["html"]) for p in make_pages(60, seed=42)] + [
+        ("https://e.example.com/none", b"<html><body><p>no links</p></body></html>"),
+        ("https://e.example.com/doc.pdf", b"%PDF-1.4 <a href=/x>pdf</a>"),
+        ("https://e.example.com/null", None),
+        ("https://e.example.com/rep", b"<html><body>" + rep + b"</body></html>"),
+    ]
+    df = spark.createDataFrame(pages, "url string, html binary").repartition(4)
+    rows = extract_anchor_rows(df)
+    assert [(f.name, f.dataType.simpleString()) for f in rows.schema.fields] == [
+        ("src", "string"), ("seq", "int"), ("dst", "string"), ("anchor", "string"),
+    ]
+    got = sorted(tuple(r) for r in rows.collect())
+    want = sorted(
+        (u, i, d, a)
+        for u, html in pages
+        for i, (d, a) in enumerate(extract_anchors(html, base_url=u))
+    )
+    assert got == want
+    srcs = {r[0] for r in got}
+    assert not srcs & {
+        "https://e.example.com/none",
+        "https://e.example.com/doc.pdf",
+        "https://e.example.com/null",
+    }
+    assert [r[1:] for r in got if r[0] == "https://e.example.com/rep"] == [
+        (i, "https://e.example.com/same", "same text") for i in range(3)
+    ]
 
 
 ANCHOR_FUZZ_FRAGMENTS = [

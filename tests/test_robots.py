@@ -64,6 +64,14 @@ def test_group_selection_and_decision():
     g4 = parse_robots("User-agent: *\nDisallow: /\nUser-agent: quiet\n")
     assert rules_for_agent(g4, "quiet") == []
     assert robots_allowed(rules_for_agent(g4, "quiet"), "/anything") is True
+    # a full User-Agent string selects its group by product token, the
+    # leading [A-Za-z_-] run, case-insensitively (RFC 9309 §2.2.1)
+    g5 = parse_robots(
+        "User-agent: *\nDisallow: /\nUser-agent: greenocrbot\nDisallow: /bot\n"
+    )
+    assert rules_for_agent(g5, "GreenOCRBot/1.2 (+https://x)") == [(False, "/bot")]
+    assert rules_for_agent(g5, "GreenOCRBot") == [(False, "/bot")]
+    assert rules_for_agent(g5, "Other-Bot/2.0") == [(False, "/")]
 
 
 def test_rob1_plan_broadcast_and_narrow_pages(spark):
