@@ -195,8 +195,16 @@ def pages_arrow_table(n: int, seed: int = 42):
     return pa.Table.from_pydict(cols, schema=schema)
 
 
+# A parquet row group is the smallest unit Spark can put in a split, so a
+# fixture file written as one row group reads as one busy task however big
+# it is. ~1 MB groups let Spark split a large fixture by bytes.
+ROW_GROUP_BYTES = 1 << 20
+
+
 def write_pages_parquet(path: str, n: int, seed: int = 42):
     import pyarrow.parquet as pq
 
-    pq.write_table(pages_arrow_table(n, seed), path)
+    table = pages_arrow_table(n, seed)
+    rows = max(1, table.num_rows * ROW_GROUP_BYTES // max(1, table.nbytes))
+    pq.write_table(table, path, row_group_size=rows)
     return path

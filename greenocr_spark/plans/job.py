@@ -4,9 +4,9 @@ checkpoint-resume against the done set (north rule; SURVEY.md §3.1, §4 X7).
 Physical plan (one shuffle total):
     read the manifest ONCE → done part_ids (≤ n_parts ints, on the driver)
     scan pages → part_id → [drop done part_ids: literal filter, narrow]
-    → repartition(n_parts, part_id)            ← THE shuffle
-    → sortWithinPartitions(url)                ← deterministic output order
-    → mapInPandas extract (narrow, Arrow-batched)
+    → mapInPandas extract (narrow, Arrow-batched, one task per input split)
+    → repartition(n_parts, part_id)            ← THE shuffle, of extracted rows
+    → sortWithinPartitions(part_id, url)       ← deterministic output order
     → dynamic-partition-overwrite write (idempotent per partition)
     → read back only the partitions outside the done set (pruned: this
       run's) → metrics agg (≤ n_parts rows, collected) → manifest append
@@ -17,12 +17,21 @@ holds every part_id in [0, n_parts) returns the stored table without
 scanning the input.
 
 Scale notes (100 TB / 10^12 rows): the only all-data shuffle is the
-repartition on the salted key; the done set is ≤ n_parts ints (≤ 10^5), so
-dropping done rows is a hash-set filter inside each pages task, never a
-join; the metrics read only this run's partitions and reduce to n_parts
-rows map-side. Re-running a partition is idempotent via dynamic partition
-overwrite, so a crash between the data write and the manifest append
-self-heals on resume.
+repartition on the salted key, and it carries extracted rows, not raw
+html (text is a fraction of the page bytes). The Python stage runs one
+task per input split: splits are sized in bytes
+(spark.sql.files.maxPartitionBytes), which is what extraction cost
+follows, and every Python task pays a fixed worker start-up cost, so a
+Python stage after an n_parts-wide shuffle would pay it n_parts times
+whatever the input size. Salting therefore balances the write and the
+resume unit (a part_id), not the extraction; the input should have at
+least as many splits as cores, each holding rows (a bare limit() makes
+one: see sources/pages.limit_pages). The done set is ≤ n_parts
+ints (≤ 10^5), so dropping done rows is a hash-set filter inside each
+pages task, never a join; the metrics read only this run's partitions and
+reduce to n_parts rows map-side. Re-running a partition is idempotent via
+dynamic partition overwrite, so a crash between the data write and the
+manifest append self-heals on resume.
 """
 
 from __future__ import annotations
@@ -208,13 +217,18 @@ def run_extract_job(
     if resume:
         df = _drop_done(df, done)
 
+    # extract where the pages are read (one Python task per input split),
+    # then shuffle the extracted rows. part_id leads the sort because the
+    # partitioned write needs that order: a url-only sort would not satisfy
+    # it, and the optimizer would drop it for the write's own part_id sort.
     extracted = extract_pages(
-        df.repartition(n_parts, "part_id").sortWithinPartitions("url"),
-        passthrough=("part_id",),
-        with_links=with_links,
-        with_anchors=with_anchors,
+        df, passthrough=("part_id",), with_links=with_links, with_anchors=with_anchors
     )
-    write_extracted(extracted, ext_path, partition_col="part_id")
+    write_extracted(
+        extracted.repartition(n_parts, "part_id").sortWithinPartitions("part_id", "url"),
+        ext_path,
+        partition_col="part_id",
+    )
 
     # Metrics/lineage rows (A4/A6 analog: per-partition running stats merged
     # by a final agg — reference train.py:1193-1207). Read back the committed

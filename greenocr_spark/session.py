@@ -35,6 +35,9 @@ def build_session(
         # html blobs are KB-to-MB; cap Arrow batch rows so a batch stays
         # well under executor/python-worker memory at 100 TB scale
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
+        # ... and by bytes: 64 MB is the Spark 4.1 default, pinned so a
+        # change of default cannot move it (above every benchmark batch)
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(64 << 20))
         .config("spark.python.worker.reuse", "true")
         # dynamic partition overwrite makes per-partition re-extraction
         # idempotent (the checkpoint-resume write discipline)

@@ -38,6 +38,14 @@ def read_pages(spark: SparkSession, source: str) -> DataFrame:
     return spark.read.table(source)
 
 
+def limit_pages(pages: DataFrame, n: int) -> DataFrame:
+    """n pages (as limit() picks them), spread over the cluster's cores
+    again: limit() gathers its rows into one partition, and extraction
+    runs one Python task per input partition."""
+    cores = pages.sparkSession.sparkContext.defaultParallelism
+    return pages.limit(n).repartition(cores, "url")
+
+
 def read_parquet_or_none(
     spark: SparkSession, path: str, schema: StructType | str | None = None
 ) -> DataFrame | None:

@@ -64,7 +64,9 @@ def main() -> None:
 
         pages = read_pages(spark, args.input)
     if args.limit:
-        pages = pages.limit(args.limit)
+        from greenocr_spark.sources.pages import limit_pages
+
+        pages = limit_pages(pages, args.limit)
 
     t0 = time.perf_counter()
     result = run_extract_job(

@@ -4,17 +4,22 @@ rows per run, and the host-stat action behind adaptive salting."""
 from __future__ import annotations
 
 import math
+import os
 import random
+import re
 import shutil
 from urllib.parse import urlsplit
 
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
 
-from greenocr_spark.fixtures import write_pages_parquet
-from greenocr_spark.functions.sqlfns import adaptive_salted_part_id
+import greenocr_spark.plans.job as job_module
+from greenocr_spark.fixtures import ROW_GROUP_BYTES, pages_arrow_table, write_pages_parquet
+from greenocr_spark.functions.sqlfns import adaptive_salted_part_id, hot_salted_part_id
 from greenocr_spark.plans.job import run_extract_job
+from greenocr_spark.sources.pages import limit_pages
 
 N_PAGES = 400
 N_PARTS = 16
@@ -147,6 +152,127 @@ def test_extract_job_manifest_rows(spark, pages_path, tmp_path):
     _lose_partitions(spark, out, forced, seed="forced")
     run_extract_job(spark, pages, forced, n_parts=N_PARTS, n_salts=4, resume=False)
     assert _manifest_rows(spark, forced) == fresh
+
+
+def _stage_graph(sc, stage_id):
+    """Names of the operator scopes a stage ran (its DAG clusters)."""
+    graph = sc._jsc.sc().statusStore().operationGraphForStage(stage_id)
+    names, todo = [], [graph.rootCluster()]
+    while todo:
+        cluster = todo.pop()
+        names.append(cluster.name())
+        children = cluster.childClusters().iterator()
+        while children.hasNext():
+            todo.append(children.next())
+    return names
+
+
+def _python_stage_tasks(spark, group):
+    """Task counts of the stages a job group ran MapInPandas in."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    return [
+        info.numTasks
+        for job in st.getJobIdsForGroup(group)
+        for sid in st.getJobInfo(job).stageIds
+        # a stage whose shuffle output an earlier job wrote is skipped (and
+        # is the first the status store evicts in a long session: None)
+        if (info := st.getStageInfo(sid)) is not None
+        and info.numCompletedTasks
+        and "MapInPandas" in _stage_graph(sc, sid)
+    ]
+
+
+def test_extraction_runs_once_per_input_split(spark, tmp_path, monkeypatch):
+    """Every Python task pays a fixed worker start-up cost, so the
+    extraction stage must be as wide as the input, not as n_parts: the
+    plan extracts below the part_id shuffle, and the stage that runs
+    MapInPandas has one task per input split."""
+    src = tmp_path / "two_splits"
+    src.mkdir()
+    table = pages_arrow_table(200)
+    pq.write_table(table.slice(0, 100), str(src / "a.parquet"))
+    pq.write_table(table.slice(100), str(src / "b.parquet"))
+    pages = spark.read.parquet(str(src))
+    assert pages.rdd.getNumPartitions() == 2
+
+    plans, write_extracted = [], job_module.write_extracted
+
+    def capture(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write_extracted(df, *args, **kwargs)
+
+    monkeypatch.setattr(job_module, "write_extracted", capture)
+    _counted(
+        spark, "splits", lambda: run_extract_job(spark, pages, str(tmp_path / "o"), n_parts=16)
+    )
+    (plan,) = plans
+    exchange = re.search(r"Exchange hashpartitioning\(part_id#\d+L?, 16\)", plan)
+    assert exchange and plan.index("MapInPandas") > exchange.start(), plan
+    assert _python_stage_tasks(spark, "splits") == [2]
+
+
+def test_limited_input_extracts_on_every_core(spark, pages_path, tmp_path):
+    """limit() gathers its rows into one partition; limit_pages spreads them
+    over the cores again, so a limited job does not extract in one task."""
+    pages = spark.read.parquet(pages_path)
+    assert pages.limit(300).rdd.getNumPartitions() == 1
+    cores = spark.sparkContext.defaultParallelism
+    table, _ = _counted(
+        spark,
+        "limited",
+        lambda: run_extract_job(spark, limit_pages(pages, 300), str(tmp_path / "o"), n_parts=16),
+    )
+    assert table.count() == 300
+    assert _python_stage_tasks(spark, "limited") == [cores] and cores > 1
+
+
+def test_fixture_pages_split_by_bytes(spark, tmp_path):
+    """write_pages_parquet bounds its row groups (a split cannot cut one),
+    so a fixture file larger than a split reads as several splits that all
+    hold rows, not one busy task and empty ones."""
+    path = write_pages_parquet(str(tmp_path / "pages.parquet"), 2000)
+    groups = pq.ParquetFile(path).metadata
+    assert groups.num_row_groups > 2
+    assert all(
+        groups.row_group(i).total_byte_size <= 1.1 * ROW_GROUP_BYTES
+        for i in range(groups.num_row_groups)
+    )
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(ROW_GROUP_BYTES))
+    try:
+        pages = spark.read.parquet(path)
+        splits = pages.rdd.getNumPartitions()
+        filled = pages.groupBy(F.spark_partition_id()).count().collect()
+    finally:
+        spark.conf.set(key, before)
+    assert splits > 1 and len(filled) == splits
+    assert sum(r["count"] for r in filled) == 2000
+
+
+def test_extracted_partition_files_in_url_order(spark, pages_path, tmp_path):
+    """Each part_id=<p> directory of a fresh adaptive job holds one file
+    whose rows all salt to p, in ascending url order."""
+    pages = spark.read.parquet(pages_path)
+    out = str(tmp_path / "o")
+    run_extract_job(spark, pages, out, n_parts=N_PARTS, salting="adaptive")
+    stored = pq.read_table(f"{out}/hot_hosts")
+    hot = dict(zip(stored["h"].to_pylist(), stored["s"].to_pylist()))
+    salted = pages.select("url", hot_salted_part_id("url", hot, N_PARTS).alias("p"))
+    expected = {r["url"]: r["p"] for r in salted.collect()}
+
+    seen = 0
+    for name in os.listdir(f"{out}/extracted"):
+        if not name.startswith("part_id="):
+            continue
+        p = int(name.split("=", 1)[1])
+        (data,) = [f for f in os.listdir(f"{out}/extracted/{name}") if f.endswith(".parquet")]
+        urls = pq.read_table(f"{out}/extracted/{name}/{data}", columns=["url"])["url"].to_pylist()
+        assert {expected[u] for u in urls} == {p}, name
+        assert urls == sorted(urls), name
+        seen += len(urls)
+    assert seen == N_PAGES
 
 
 def _reference_hot(urls, n_parts):

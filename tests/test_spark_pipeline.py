@@ -14,6 +14,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pandas as pd
 import pytest
 
 from pyspark.sql import functions as F
@@ -59,6 +60,34 @@ def test_golden_spans_match(spark, tmp_path):
     for row in make_pages(50):
         expected = [tuple(s) for s in extract_document(row["html"])["spans"]]
         assert got[row["url"]] == expected, row["url"]
+
+
+def test_arrow_batches_bounded_by_bytes(spark):
+    """spark.sql.execution.arrow.maxBytesPerBatch splits a partition's html
+    into several Arrow batches; extract_pages' rows are the same either way."""
+    rows = [(r["url"], r["html"]) for r in make_pages(N_GOLDEN)]
+    df = spark.createDataFrame(rows, "url string, html binary").coalesce(1)
+
+    def batch_rows(batches):
+        for b in batches:
+            yield pd.DataFrame({"n": [len(b)]})
+
+    def run():
+        batches = [r["n"] for r in df.mapInPandas(batch_rows, "n long").collect()]
+        ext = extract_pages(df, with_links=True, with_anchors=True).collect()
+        return batches, sorted(tuple(r) for r in ext)
+
+    key = "spark.sql.execution.arrow.maxBytesPerBatch"
+    whole, expected = run()
+    before = spark.conf.get(key)
+    spark.conf.set(key, str(64 << 10))
+    try:
+        split, got = run()
+    finally:
+        spark.conf.set(key, before)
+    assert whole == [N_GOLDEN]
+    assert len(split) > 4 and sum(split) == N_GOLDEN
+    assert got == expected
 
 
 def _final_state(spark, out_dir):
