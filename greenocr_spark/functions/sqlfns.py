@@ -64,9 +64,10 @@ def adaptive_salted_part_id(
     one task.
 
     Two phases, both cheap at any scale:
-      1. stats: ONE action, no cache — a partial-aggregated count per host
-         (#hosts << #rows) feeds both the grand total and a top-n_parts
-         of the non-NULL hosts. At most n_parts - 1 hosts can exceed
+      1. stats: ONE action, no cache, one exchange — a partial-aggregated
+         rollup(host) (#hosts << #rows) yields the per-host counts and the
+         grand total together; ordered total first, then non-NULL hosts
+         by count, limit n_parts + 1. At most n_parts - 1 hosts can exceed
          total / n_parts, so the top n_parts hold every hot host, and the
          driver never receives more than n_parts host rows however many
          hosts there are;
@@ -81,20 +82,25 @@ def adaptive_salted_part_id(
     default for unknown distributions."""
     import math
 
-    per_host = df.groupBy(host_expr(url_col).alias("h")).count()
-    # NULL hosts (unparseable urls) stay cold even over budget: a None key
-    # would break sorted(hot.items()) and is invalid as a create_map
-    # literal key (ADVICE r02). They hash by host alone — all-NULL-host
-    # skew is not salvageable by salting anyway (no per-host identity to
-    # spread), and in practice such rows are rejects headed for the error
-    # sink. So the top list ranks them last and drops them after the limit
-    # (a filter before it would be pushed below the aggregate, and the two
-    # branches would scan the input twice instead of reusing one exchange);
-    # the one NULL-h row is the grand total, NULL hosts included.
-    top = per_host.orderBy(F.col("h").isNull(), F.desc("count")).limit(n_parts)
-    grand = per_host.agg(F.lit(None).cast("string").alias("h"), F.sum("count").alias("count"))
-    rows = grand.unionByName(top.where(F.col("h").isNotNull())).collect()
-    total = next(r["count"] for r in rows if r["h"] is None) or 0
+    # one rollup: the host groups (g = 0) and the grand total (g = 1)
+    # share one exchange, and the total is told apart by grouping_id, not
+    # by its NULL key, so a NULL-host group cannot pass for it. NULL hosts
+    # (unparseable urls) stay cold even over budget: a None key would break
+    # sorted(hot.items()) and is invalid as a create_map literal key
+    # (ADVICE r02). They hash by host alone — all-NULL-host skew is not
+    # salvageable by salting anyway (no per-host identity to spread), and
+    # in practice such rows are rejects headed for the error sink. So they
+    # rank after every real host and drop after the limit (a filter before
+    # it would be pushed below the aggregate).
+    rows = (
+        df.rollup(host_expr(url_col).alias("h"))
+        .agg(F.count("*").alias("count"), F.grouping_id().alias("g"))
+        .orderBy(F.desc("g"), F.col("h").isNull(), F.desc("count"))
+        .limit(n_parts + 1)
+        .collect()
+    )
+    # an empty input has no groups at all, not even the total
+    total = next((r["count"] for r in rows if r["g"] == 1), 0)
     budget = max(total / n_parts, 1.0)
     hot = {
         r["h"]: min(n_parts, math.ceil(r["count"] / budget))

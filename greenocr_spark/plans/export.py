@@ -217,13 +217,16 @@ def run_export_job(
         "shard_id", F.floor(F.col("pos") / F.lit(rows_per_shard)).cast("long")
     )
     # one task per shard → exactly one file per shard, sorted by pos inside.
+    # shard_id leads the sort: the partitioned write sorts by shard_id
+    # itself, and the optimizer drops a pos-only sort that order does not
+    # extend.
     # STATIC overwrite: a forced rerun over a smaller input must remove the
     # old run's higher-numbered shard partitions — dynamic mode would leave
     # them on disk and the read-back manifest would silently bless a mix of
     # two corpora.
     (
         sharded.repartition("shard_id")
-        .sortWithinPartitions("pos")
+        .sortWithinPartitions("shard_id", "pos")
         .write.mode("overwrite")
         .partitionBy("shard_id")
         .option("partitionOverwriteMode", "static")

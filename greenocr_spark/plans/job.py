@@ -5,8 +5,8 @@ Physical plan (one shuffle total):
     read the manifest ONCE → done part_ids (≤ n_parts ints, on the driver)
     scan pages → part_id → [drop done part_ids: literal filter, narrow]
     → mapInPandas extract (narrow, Arrow-batched, one task per input split)
-    → repartition(n_parts, part_id)            ← THE shuffle, of extracted rows
-    → sortWithinPartitions(part_id, url)       ← deterministic output order
+    → repartition(min(n_parts, cores), part_id) ← THE shuffle, of extracted rows
+    → sortWithinPartitions(part_id, url)        ← deterministic output order
     → dynamic-partition-overwrite write (idempotent per partition)
     → read back only the partitions outside the done set (pruned: this
       run's) → metrics agg (≤ n_parts rows, collected) → manifest append
@@ -16,9 +16,20 @@ pending, and the job appends nothing. A resume whose done set already
 holds every part_id in [0, n_parts) returns the stored table without
 scanning the input.
 
+The write is as wide as the cluster (defaultParallelism tasks), not
+n_parts: n_parts is the resume and file unit, the task count is only how
+many cores write. Hash partitioning on part_id still sends every part_id
+to exactly one task, so each part_id=<p> dir holds one file with the same
+rows in the same url order an n_parts-wide shuffle would write; only the
+file names differ. Every task has a fixed cost, so the write pays it
+once per core instead of once per part_id.
+
 Scale notes (100 TB / 10^12 rows): the only all-data shuffle is the
 repartition on the salted key, and it carries extracted rows, not raw
-html (text is a fraction of the page bytes). The Python stage runs one
+html (text is a fraction of the page bytes). On a cluster with at least
+n_parts cores it is n_parts wide; with fewer, each write task takes
+about n_parts / cores whole part_ids, which salting keeps near equal in
+rows, so the tasks stay balanced too. The Python stage runs one
 task per input split: splits are sized in bytes
 (spark.sql.files.maxPartitionBytes), which is what extraction cost
 follows, and every Python task pays a fixed worker start-up cost, so a
@@ -78,9 +89,14 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
 def _write_rows(spark: SparkSession, rows: list, ddl: str, path: str, mode: str) -> None:
     """Write a few driver-side rows as one parquet file. Handed over as
     pandas, so Arrow ships them to the JVM directly: a plain list would
-    run a Python worker task that costs more than the write itself."""
-    names = [c.split()[0] for c in ddl.split(",")]
-    frame = spark.createDataFrame(pd.DataFrame(rows, columns=names), ddl)
+    run a Python worker task that costs more than the write itself. No
+    rows is a JVM-only empty relation typed from the DDL, since an empty
+    pandas frame still plans a Python scan."""
+    cols = [c.split() for c in ddl.split(",")]
+    if rows:
+        frame = spark.createDataFrame(pd.DataFrame(rows, columns=[n for n, _ in cols]), ddl)
+    else:
+        frame = spark.range(0).select(*[F.lit(None).cast(t).alias(n) for n, t in cols])
     frame.coalesce(1).write.mode(mode).parquet(path)
 
 
@@ -218,14 +234,17 @@ def run_extract_job(
         df = _drop_done(df, done)
 
     # extract where the pages are read (one Python task per input split),
-    # then shuffle the extracted rows. part_id leads the sort because the
-    # partitioned write needs that order: a url-only sort would not satisfy
-    # it, and the optimizer would drop it for the write's own part_id sort.
+    # then shuffle the extracted rows over one task per core: hashing on
+    # part_id keeps each part_id in one task, so one file per part_id dir.
+    # part_id leads the sort because the partitioned write needs that
+    # order: a url-only sort would not satisfy it, and the optimizer would
+    # drop it for the write's own part_id sort.
     extracted = extract_pages(
         df, passthrough=("part_id",), with_links=with_links, with_anchors=with_anchors
     )
     write_extracted(
-        extracted.repartition(n_parts, "part_id").sortWithinPartitions("part_id", "url"),
+        extracted.repartition(min(n_parts, spark.sparkContext.defaultParallelism), "part_id")
+        .sortWithinPartitions("part_id", "url"),
         ext_path,
         partition_col="part_id",
     )

@@ -18,11 +18,12 @@ the HANDOFFS first-class (VERDICT r04 task 3):
 
 Resume model: each stage keeps its own; the pipeline simply re-derives
 every stage's input from the previous stage's COMMITTED output, so a
-rerun no-ops through completed stages (extract: anti-join finds nothing
-pending; curate: all survivor sets committed → returns the stored table
-without rescanning; export: manifest + shard dirs verify → stats from
-the manifest). Like the stages themselves, resume assumes the same pages
-input — a grown corpus is plans/incremental.py's job, not a resume.
+rerun no-ops through completed stages (extract: the manifest's done
+part_ids leave nothing pending; curate: all survivor sets committed →
+returns the stored table without rescanning; export: manifest + shard
+dirs verify → stats from the manifest). Like the stages themselves,
+resume assumes the same pages input — a grown corpus is
+plans/incremental.py's job, not a resume.
 
 Scale shape at 10^12 pages: the handoff projections are narrow (no added
 exchange); every shuffle in the chain is owned and documented by its

@@ -10,7 +10,6 @@ the backend touches nothing else.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -54,14 +53,17 @@ def read_parquet_or_none(
     callers read None as "first run", and taking an unreadable store for
     a first run silently restarts or duplicates committed work. A known
     `schema` skips inference, so an empty committed dir reads as an empty
-    frame instead of failing."""
+    frame instead of failing.
+
+    "Missing" is one Hadoop FileSystem.exists on the path's own file
+    system (local, s3a, hdfs alike), a driver-side call of a few ms, not a
+    Spark analysis that fails with PATH_NOT_FOUND."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if not hpath.getFileSystem(conf).exists(hpath):
+        return None
     reader = spark.read if schema is None else spark.read.schema(schema)
-    try:
-        return reader.parquet(path)
-    except AnalysisException as e:
-        if e.getCondition() == "PATH_NOT_FOUND":
-            return None
-        raise
+    return reader.parquet(path)
 
 
 def write_pages(df: DataFrame, target: str, mode: str = "append") -> None:

@@ -12,8 +12,9 @@ Sandbox smoke:
     spark-submit --master 'local[8]' --py-files dist/greenocr_spark.zip \
         jobs/extract_job.py --fixture-pages 2000 --output /tmp/extract_out
 
-The job is resumable: re-submitting with the same --output anti-joins the
-completed partition manifests and processes only what's left (plans/job.py).
+The job is resumable: re-submitting with the same --output reads the
+part_ids the manifest marks done and processes only the rest, dropped by a
+literal part_id filter (plans/job.py).
 """
 
 from __future__ import annotations

@@ -7,6 +7,7 @@ from __future__ import annotations
 import hashlib
 import os
 
+import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
@@ -58,6 +59,28 @@ def test_export_permutation_and_shard_bounds(spark, tmp_path):
         assert m["min_pos"] == m["shard_id"] * 500
         assert m["n_rows"] == m["max_pos"] - m["min_pos"] + 1
         assert m["n_rows"] <= 500
+
+
+def test_export_shard_files_sorted_by_pos(spark, tmp_path):
+    """Each shard_id=<s> dir holds one file whose rows are in pos order: a
+    pos-only sort under the partitioned write's own shard_id sort would be
+    dropped by the optimizer. Small shuffles stay uncoalesced here, so the
+    rows reach the write from several tasks, as they do at scale (one
+    coalesced task would hand them over in pos order already)."""
+    out = str(tmp_path / "exp")
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        run_export_job(spark, _docs(spark), out, seq_len=16, rows_per_shard=150, seed=7)
+    finally:
+        spark.conf.set(key, before)
+    dirs = [d for d in os.listdir(f"{out}/shards") if d.startswith("shard_id=")]
+    assert len(dirs) >= 10
+    for d in dirs:
+        (data,) = [f for f in os.listdir(f"{out}/shards/{d}") if f.endswith(".parquet")]
+        pos = pq.read_table(f"{out}/shards/{d}/{data}", columns=["pos"])["pos"].to_pylist()
+        assert pos == sorted(pos), d
 
 
 def test_export_shards_reassemble_to_corpus(spark, tmp_path):

@@ -17,9 +17,14 @@ from pyspark.sql import functions as F
 
 import greenocr_spark.plans.job as job_module
 from greenocr_spark.fixtures import ROW_GROUP_BYTES, pages_arrow_table, write_pages_parquet
-from greenocr_spark.functions.sqlfns import adaptive_salted_part_id, hot_salted_part_id
+from greenocr_spark.functions.sqlfns import (
+    adaptive_salted_part_id,
+    hot_salted_part_id,
+    salted_part_id,
+)
+from greenocr_spark.operators.extract import extract_pages
 from greenocr_spark.plans.job import run_extract_job
-from greenocr_spark.sources.pages import limit_pages
+from greenocr_spark.sources.pages import limit_pages, write_extracted
 
 N_PAGES = 400
 N_PARTS = 16
@@ -76,9 +81,9 @@ def _table(df):
 def test_extract_job_spark_job_counts(spark, pages_path, tmp_path):
     """The resume path reads the done set once, runs no emptiness pass and
     aggregates only this run's partitions; adaptive host stats are one
-    action. Ceilings are this plan's counts on local[4]; the plan before
-    it ran 13 / 8 / 18 (adaptive fresh / no-op / 1/8 resume) and 7 / 6
-    (uniform fresh / no-op) jobs here."""
+    action of 2 jobs (one rollup). Ceilings are this plan's counts on
+    local[4]; the plan before it ran 13 / 8 / 18 (adaptive fresh / no-op /
+    1/8 resume) and 7 / 6 (uniform fresh / no-op) jobs here."""
     pages = spark.read.parquet(pages_path)
 
     def job(out, **kw):
@@ -100,7 +105,7 @@ def test_extract_job_spark_job_counts(spark, pages_path, tmp_path):
     # so its no-op runs the (empty) pipeline and appends nothing
     assert len(_manifest_rows(spark, u)) == N_PARTS > len(_manifest_rows(spark, a))
     ceilings = {
-        "fresh_adaptive": 9,
+        "fresh_adaptive": 8,
         "noop_adaptive": 6,
         "resume_adaptive": 9,
         "fresh_uniform": 5,
@@ -155,7 +160,8 @@ def test_extract_job_manifest_rows(spark, pages_path, tmp_path):
 
 
 def _stage_graph(sc, stage_id):
-    """Names of the operator scopes a stage ran (its DAG clusters)."""
+    """Names of the operator scopes a stage ran (its DAG clusters) and of
+    the RDDs inside them."""
     graph = sc._jsc.sc().statusStore().operationGraphForStage(stage_id)
     names, todo = [], [graph.rootCluster()]
     while todo:
@@ -164,11 +170,14 @@ def _stage_graph(sc, stage_id):
         children = cluster.childClusters().iterator()
         while children.hasNext():
             todo.append(children.next())
+        nodes = cluster.childNodes().iterator()
+        while nodes.hasNext():
+            names.append(nodes.next().name())
     return names
 
 
-def _python_stage_tasks(spark, group):
-    """Task counts of the stages a job group ran MapInPandas in."""
+def _stage_tasks(spark, group, *scopes):
+    """Task counts of the stages a job group ran all of `scopes` in."""
     sc = spark.sparkContext
     st = sc.statusTracker()
     return [
@@ -179,7 +188,7 @@ def _python_stage_tasks(spark, group):
         # is the first the status store evicts in a long session: None)
         if (info := st.getStageInfo(sid)) is not None
         and info.numCompletedTasks
-        and "MapInPandas" in _stage_graph(sc, sid)
+        and set(scopes) <= set(_stage_graph(sc, sid))
     ]
 
 
@@ -207,9 +216,69 @@ def test_extraction_runs_once_per_input_split(spark, tmp_path, monkeypatch):
         spark, "splits", lambda: run_extract_job(spark, pages, str(tmp_path / "o"), n_parts=16)
     )
     (plan,) = plans
-    exchange = re.search(r"Exchange hashpartitioning\(part_id#\d+L?, 16\)", plan)
+    width = min(16, spark.sparkContext.defaultParallelism)
+    exchange = re.search(rf"Exchange hashpartitioning\(part_id#\d+L?, {width}\)", plan)
     assert exchange and plan.index("MapInPandas") > exchange.start(), plan
-    assert _python_stage_tasks(spark, "splits") == [2]
+    assert _stage_tasks(spark, "splits", "MapInPandas") == [2]
+
+
+def _part_files(table_dir):
+    """{part_id= dir: the rows of its one file, in file order}."""
+    files = {}
+    for name in sorted(os.listdir(table_dir)):
+        if name.startswith("part_id="):
+            (data,) = [f for f in os.listdir(f"{table_dir}/{name}") if f.endswith(".parquet")]
+            files[name] = pq.read_table(f"{table_dir}/{name}/{data}").to_pylist()
+    return files
+
+
+def test_write_runs_one_task_per_core(spark, pages_path, tmp_path):
+    """The write shuffle is min(n_parts, cores) wide, not n_parts: hash
+    partitioning still sends each part_id to one task, so every part_id=
+    dir holds the one file an n_parts-wide write of the same extracted
+    rows would, row for row."""
+    pages = spark.read.parquet(pages_path)
+    out = str(tmp_path / "o")
+    _counted(spark, "width", lambda: run_extract_job(spark, pages, out, n_parts=N_PARTS))
+    cores = spark.sparkContext.defaultParallelism
+    assert 1 < cores < N_PARTS
+    # the write stage reads the shuffle; the manifest write reads local rows
+    assert _stage_tasks(spark, "width", "WriteFiles", "ShuffledRowRDD") == [cores]
+
+    keyed = pages.withColumn("part_id", salted_part_id(F.col("url"), N_PARTS))
+    ref = str(tmp_path / "ref")
+    write_extracted(
+        extract_pages(keyed, passthrough=("part_id",))
+        .repartition(N_PARTS, "part_id")
+        .sortWithinPartitions("part_id", "url"),
+        ref,
+    )
+    assert _part_files(ref) == _part_files(f"{out}/extracted")
+
+
+def test_adaptive_job_without_hot_hosts_runs_one_python_stage(spark, pages_path, tmp_path):
+    """An adaptive job over uniform hosts persists an empty hot map. That
+    write is a JVM-only empty relation, so the only Python stage the job
+    runs is the extraction (an empty pandas frame would plan a Python
+    scan: a PythonRDD stage)."""
+    pages = spark.read.parquet(pages_path).withColumn(
+        "url",
+        F.concat(
+            F.lit("https://h"),
+            F.pmod(F.xxhash64("url"), F.lit(64)).cast("string"),
+            F.lit(".example.com/"),
+            F.sha1("url"),
+        ),
+    )
+    out = str(tmp_path / "o")
+    _counted(
+        spark,
+        "uniform_hosts",
+        lambda: run_extract_job(spark, pages, out, n_parts=N_PARTS, salting="adaptive"),
+    )
+    assert pq.read_table(f"{out}/hot_hosts").num_rows == 0
+    assert len(_stage_tasks(spark, "uniform_hosts", "MapInPandas")) == 1
+    assert _stage_tasks(spark, "uniform_hosts", "PythonRDD") == []
 
 
 def test_limited_input_extracts_on_every_core(spark, pages_path, tmp_path):
@@ -224,7 +293,7 @@ def test_limited_input_extracts_on_every_core(spark, pages_path, tmp_path):
         lambda: run_extract_job(spark, limit_pages(pages, 300), str(tmp_path / "o"), n_parts=16),
     )
     assert table.count() == 300
-    assert _python_stage_tasks(spark, "limited") == [cores] and cores > 1
+    assert _stage_tasks(spark, "limited", "MapInPandas") == [cores] and cores > 1
 
 
 def test_fixture_pages_split_by_bytes(spark, tmp_path):
@@ -263,12 +332,9 @@ def test_extracted_partition_files_in_url_order(spark, pages_path, tmp_path):
     expected = {r["url"]: r["p"] for r in salted.collect()}
 
     seen = 0
-    for name in os.listdir(f"{out}/extracted"):
-        if not name.startswith("part_id="):
-            continue
+    for name, rows in _part_files(f"{out}/extracted").items():
         p = int(name.split("=", 1)[1])
-        (data,) = [f for f in os.listdir(f"{out}/extracted/{name}") if f.endswith(".parquet")]
-        urls = pq.read_table(f"{out}/extracted/{name}/{data}", columns=["url"])["url"].to_pylist()
+        urls = [r["url"] for r in rows]
         assert {expected[u] for u in urls} == {p}, name
         assert urls == sorted(urls), name
         seen += len(urls)
@@ -293,23 +359,30 @@ def _reference_hot(urls, n_parts):
 def test_adaptive_host_stats_one_action_no_cache(spark):
     """The host stats are one action over the input with nothing cached,
     and the hot map matches the budget rule even with far more hosts than
-    n_parts and a NULL-host group over the budget."""
+    n_parts and a NULL-host group over the budget, or bigger than every
+    real host."""
     rng = random.Random(5)
-    urls = [f"not a url {i}" for i in range(300)]
+    hosts = []
     for i in range(2000):
         h = min(int(rng.paretovariate(0.8)), 500)
-        urls.append(f"https://h{h}.example.com/p{i}")
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
+        hosts.append(f"https://h{h}.example.com/p{i}")
     sc = spark.sparkContext
     cached = len(sc._jsc.getPersistentRDDs())
-    for n_parts in (2, 8, 32):
-        (_, hot), n_jobs = _counted(
-            spark, f"hs{n_parts}", lambda: adaptive_salted_part_id(df, "url", n_parts)
-        )
-        assert hot == _reference_hot(urls, n_parts)
-        # per-host shuffle, total shuffle, result: one action
-        assert n_jobs <= 3
-        assert len(sc._jsc.getPersistentRDDs()) == cached
+    for n_null in (300, 3000):
+        urls = [f"not a url {i}" for i in range(n_null)] + hosts
+        df = spark.createDataFrame([(u,) for u in urls], "url string")
+        for n_parts in (2, 8, 32):
+            (_, hot), n_jobs = _counted(
+                spark,
+                f"hs{n_null}_{n_parts}",
+                lambda: adaptive_salted_part_id(df, "url", n_parts),
+            )
+            assert hot == _reference_hot(urls, n_parts)
+            # one rollup: the per-host shuffle, then the result
+            assert n_jobs <= 2
+            assert len(sc._jsc.getPersistentRDDs()) == cached
+    # an empty input has no rollup groups, not even the total
+    assert adaptive_salted_part_id(df.limit(0), "url", 8)[1] == {}
 
 
 @pytest.mark.parametrize("entry", ["extract", "pipeline"])

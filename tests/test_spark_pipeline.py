@@ -297,8 +297,13 @@ def test_read_parquet_or_none(spark, tmp_path):
     from greenocr_spark.sources.pages import read_parquet_or_none
 
     assert read_parquet_or_none(spark, str(tmp_path / "missing")) is None
+    # a missing parent, and a missing leaf under an existing dir, by plain
+    # path and by file: URI
+    assert read_parquet_or_none(spark, str(tmp_path / "no" / "such" / "dir")) is None
     empty = tmp_path / "empty"
     empty.mkdir()
+    assert read_parquet_or_none(spark, str(empty / "leaf"), "url string") is None
+    assert read_parquet_or_none(spark, f"file://{empty}/leaf") is None
     got = read_parquet_or_none(spark, str(empty), "url string")
     assert got.columns == ["url"] and got.count() == 0
     with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
