@@ -3,7 +3,6 @@
 Commands:
     extract   --input PATH|TABLE --output DIR [--n-parts N] [--n-salts S]
               [--no-resume] [--limit N]   (or --fixture-pages N)
-    bench     [bench.py args]             headline suite, one JSON line
     calibrate --input PATH --sample N     grid-fit scorer config on labeled pages
     compact   --output DIR [--target-mb N] [--min-files K]
               merge small files in DIR/extracted (rewrite_data_files analog)
@@ -54,16 +53,6 @@ def main() -> int:
         import importlib.util
 
         spec = importlib.util.spec_from_file_location("extract_job", path)
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        mod.main()
-        return 0
-    if cmd == "bench":
-        sys.argv = ["bench", *rest]
-        path = os.path.join(repo, "bench.py")
-        import importlib.util
-
-        spec = importlib.util.spec_from_file_location("bench", path)
         mod = importlib.util.module_from_spec(spec)
         spec.loader.exec_module(mod)
         mod.main()

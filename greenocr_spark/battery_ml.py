@@ -2933,17 +2933,16 @@ def shuf1_train_order(spark, sf_dir, _n_override: int | None = None):
 )
 def cdc1_snapshot_diff(spark, sf_dir):
     # Recrawl change-data-capture: diff two crawl snapshots by url into
-    # added / deleted / changed / unchanged — the incremental-refresh
-    # planning step (plans/incremental.py consumes exactly this signal) as
-    # an oracle-checked query. The two snapshots are carved
-    # deterministically out of documents (doc_id % 13 / % 17 membership,
-    # % 5 text edits) so the query is self-contained. Scale shape: content
-    # hashes are computed NARROW before the join so the full-outer join
-    # carries (url, 32-byte hash), never text; a url-keyed full outer join
-    # cannot broadcast, so it shuffle-joins co-partitioned on url — the
-    # right 10^12-row shape (bucket both snapshots by url to elide the
-    # exchange entirely) — and the status rollup aggregates with map-side
-    # partials.
+    # added / deleted / changed / unchanged — the signal a recrawl
+    # refresh would plan from — as an oracle-checked query. The two
+    # snapshots are carved deterministically out of documents (doc_id
+    # % 13 / % 17 membership, % 5 text edits) so the query is
+    # self-contained. Scale shape: content hashes are computed NARROW
+    # before the join so the full-outer join carries (url, 32-byte hash),
+    # never text; a url-keyed full outer join cannot broadcast, so it
+    # shuffle-joins co-partitioned on url — the right 10^12-row shape
+    # (bucket both snapshots by url to elide the exchange entirely) — and
+    # the status rollup aggregates with map-side partials.
     base = t(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(

@@ -1,7 +1,7 @@
 """Small-file compaction of the extracted table — routine maintenance at
-10^12-row scale, where incremental refreshes and per-partition resume
-writes accumulate many sub-target-size parquet files and every downstream
-scan pays the per-file open/footers cost.
+10^12-row scale, where any write that spreads a partition over many tasks
+leaves many sub-target-size parquet files and every downstream scan pays
+the per-file open/footers cost.
 
 Plain-Spark expression of Iceberg's `rewrite_data_files` action:
 
@@ -11,13 +11,15 @@ Plain-Spark expression of Iceberg's `rewrite_data_files` action:
   2. each picked partition is read back (partition-pruned scan), coalesced
      to ceil(bytes/target) files, and STAGED to a scratch directory;
   3. the final dynamic-partition overwrite reads from staging, never from
-     the directory it is replacing (same crash-safety argument as
-     plans/incremental.py's stitch);
+     the directory it is replacing (the overwrite deletes that
+     partition's files when it commits);
   4. row content is untouched — compaction commutes with every query and
-     with the manifest (which tracks partitions, not files).
+     with the manifest (which tracks partitions, not files), so a resume
+     of the job still finds every compacted partition done.
 
 Only affected partitions are rewritten; untouched partitions keep their
-files byte-identical.
+files byte-identical. Each compacted file holds its rows in url order, as
+the job's own files do (tests/test_extract_job.py pins both).
 """
 
 from __future__ import annotations

@@ -11,8 +11,7 @@ commits its survivor doc_id set under out_dir/stages/<name>/ (ids only —
 tiny next to the corpus), and a rerun reuses every committed stage,
 recomputing only what's missing. A params fingerprint is committed on
 the first run and checked on resume, so a config drift cannot silently
-mix survivor sets computed under different rules (the
-plans/incremental.py layout-guard lesson, ADVICE r02).
+mix survivor sets computed under different rules (ADVICE r02).
 
 Scale shape per stage (10^12-doc corpus):
 - quality/lang: narrow array-lambda filters, zero shuffle.

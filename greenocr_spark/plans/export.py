@@ -22,8 +22,7 @@ Pipeline (fully deterministic, seed-parameterized):
 4. **manifest** — per-shard (n_rows, min_pos, max_pos, n_tokens) rows
    plus a params fingerprint (seq_len/rows_per_shard/seed) committed
    with the shards; a rerun against an existing out_dir with different
-   params fails loudly instead of silently mixing layouts (the
-   plans/incremental.py layout-guard lesson, ADVICE r02).
+   params fails loudly instead of silently mixing layouts (ADVICE r02).
 
 Resume: with resume=True (default) a committed manifest whose params
 match is returned as-is — the export is a no-op. The job is end-to-end

@@ -22,8 +22,8 @@ rerun no-ops through completed stages (extract: the manifest's done
 part_ids leave nothing pending; curate: all survivor sets committed →
 returns the stored table without rescanning; export: manifest + shard
 dirs verify → stats from the manifest). Like the stages themselves,
-resume assumes the same pages input — a grown corpus is
-plans/incremental.py's job, not a resume.
+resume assumes the same pages input: the done part_ids say nothing about
+pages added since, so a grown corpus needs a fresh out_dir.
 
 Scale shape at 10^12 pages: the handoff projections are narrow (no added
 exchange); every shuffle in the chain is owned and documented by its

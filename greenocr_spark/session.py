@@ -18,7 +18,6 @@ def build_session(
     app_name: str = "greenocr-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch_rows: int = 1024,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -34,7 +33,7 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # html blobs are KB-to-MB; cap Arrow batch rows so a batch stays
         # well under executor/python-worker memory at 100 TB scale
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
         # ... and by bytes: 64 MB is the Spark 4.1 default, pinned so a
         # change of default cannot move it (above every benchmark batch)
         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(64 << 20))

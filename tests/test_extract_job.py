@@ -1,5 +1,6 @@
 """run_extract_job's plan budget and lineage: Spark jobs per run, manifest
-rows per run, and the host-stat action behind adaptive salting."""
+rows per run, the host-stat action behind adaptive salting, compaction of
+the job's table, and a resume over a corrupt manifest."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import os
 import random
 import re
 import shutil
+from pathlib import Path
 from urllib.parse import urlsplit
 
 import pyarrow.parquet as pq
@@ -157,6 +159,100 @@ def test_extract_job_manifest_rows(spark, pages_path, tmp_path):
     _lose_partitions(spark, out, forced, seed="forced")
     run_extract_job(spark, pages, forced, n_parts=N_PARTS, n_salts=4, resume=False)
     assert _manifest_rows(spark, forced) == fresh
+
+
+def _listing(root):
+    """{path under root: (size, mtime_ns)} of every file, hidden ones too."""
+    files = {}
+    for d, _, names in os.walk(root):
+        for name in names:
+            st = os.stat(os.path.join(d, name))
+            files[os.path.relpath(os.path.join(d, name), root)] = (st.st_size, st.st_mtime_ns)
+    return files
+
+
+def _file_bytes(root):
+    return {p.name: p.read_bytes() for p in Path(root).iterdir()}
+
+
+def test_compaction_reduces_files_preserves_rows(spark, pages_path, tmp_path):
+    """Compaction merges a job's fragmented partition files into url-sorted
+    ones, preserves every row, is idempotent, and leaves the manifest
+    byte-equal, so a resume still finds every partition done and returns
+    the same rows without writing."""
+    from greenocr_spark.plans.compact import _partition_files, compact_extracted
+
+    pages = spark.read.parquet(pages_path)
+    out = str(tmp_path / "out")
+    ext = f"{out}/extracted"
+    run_extract_job(spark, pages, out, n_parts=N_PARTS)
+    manifest = _file_bytes(f"{out}/manifest")
+
+    def fragment():
+        # rewrite with many tasks per hive partition
+        frag = spark.read.parquet(ext).repartition(24)
+        frag.write.mode("overwrite").partitionBy("part_id").parquet(ext)
+        return sum(len(f) for f in _partition_files(ext).values())
+
+    def rows():
+        return sorted(tuple(r) for r in spark.read.parquet(ext).collect())
+
+    def assert_files_in_url_order():
+        for files in _partition_files(ext).values():
+            for f in files:
+                urls = pq.read_table(f, columns=["url"])["url"].to_pylist()
+                assert urls == sorted(urls), f
+
+    files0 = fragment()
+    assert files0 > N_PARTS  # genuinely fragmented
+    before_rows = rows()
+
+    stats = compact_extracted(spark, out, min_files=2)
+    assert stats["n_parts_compacted"] > 0
+    assert stats["files_after"] < files0
+    assert all(len(f) == 1 for f in _partition_files(ext).values())  # small: 1 file
+    assert_files_in_url_order()
+    assert rows() == before_rows
+
+    # idempotent second run
+    assert compact_extracted(spark, out, min_files=2)["n_parts_compacted"] == 0
+    # partitions made of files already at/above target size are never
+    # picked, however many there are (the large-partition idempotence rule)
+    assert compact_extracted(spark, out, target_bytes=1, min_files=1)["n_parts_compacted"] == 0
+
+    # a target below a partition's bytes splits it into several files,
+    # each still in url order
+    fragment()
+    stats = compact_extracted(spark, out, target_bytes=40 * 1024, min_files=2)
+    assert stats["n_parts_compacted"] == len(_partition_files(ext))  # every file is new
+    assert stats["files_after"] > stats["n_parts_compacted"]
+    assert_files_in_url_order()
+    assert rows() == before_rows
+
+    # the manifest tracks partitions, not files: untouched, so a resume
+    # finds every part_id done and writes nothing
+    assert _file_bytes(f"{out}/manifest") == manifest
+    files = _listing(out)
+    resumed = run_extract_job(spark, pages, out, n_parts=N_PARTS)
+    assert sorted(tuple(r) for r in resumed.collect()) == before_rows
+    assert _listing(out) == files
+
+
+def test_resume_over_corrupt_manifest_raises(spark, pages_path, tmp_path):
+    """An unreadable manifest is not a first run: a resume that read it as
+    "nothing done" would re-extract and append every partition again. The
+    done-set read raises, before anything is written."""
+    pages = spark.read.parquet(pages_path)
+    out = str(tmp_path / "out")
+    run_extract_job(spark, pages, out, n_parts=N_PARTS)
+    (stored,) = [f for f in os.listdir(f"{out}/manifest") if f.endswith(".parquet")]
+    with open(f"{out}/manifest/{stored}", "wb") as f:
+        f.write(b"not a parquet file" * 8)
+    extracted, manifest = _listing(f"{out}/extracted"), _listing(f"{out}/manifest")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        run_extract_job(spark, pages, out, n_parts=N_PARTS)
+    assert _listing(f"{out}/extracted") == extracted
+    assert _listing(f"{out}/manifest") == manifest
 
 
 def _stage_graph(sc, stage_id):

@@ -157,11 +157,11 @@ def test_connected_components_adversarial_graphs(spark):
 
 
 def test_adaptive_salting_bounds_task_skew(spark, tmp_path):
-    """The straggler bound behind BENCH/run_soak.py's task med/max column:
-    on the Zipf fixture corpus (one host ~30% of rows) the adaptive-salted
-    partitioning keeps max/median partition load small, while raw host
-    hashing leaves a ~8x straggler. Per-partition row count is the
-    deterministic proxy for task time (per-doc extract cost is uniform)."""
+    """The straggler bound of adaptive salting: on the Zipf fixture corpus
+    (one host ~30% of rows) the adaptive-salted partitioning keeps
+    max/median partition load small, while raw host hashing leaves a ~8x
+    straggler. Per-partition row count is the deterministic proxy for task
+    time (per-doc extract cost is uniform)."""
     import statistics
 
     from greenocr_spark.fixtures import write_pages_parquet

@@ -247,51 +247,6 @@ def test_resume_heals_write_without_manifest(spark, pages_path, tmp_path):
     assert m.filter(F.col("status") == "done").select("part_id").distinct().count() == 8
 
 
-def test_ingest_dedup_append(spark, tmp_path):
-    # ingestion job: normalize + salted key + anti-join dedup + append
-    from greenocr_spark.plans.ingest import ingest_pages
-
-    rows = [
-        ("https://a.example.com/1", "2025-01-01 00:00:00", b"<p>one</p>", "en"),
-        ("https://a.example.com/2", "2025-01-01 00:00:01", b"<p>two</p>", "de"),
-        ("https://a.example.com/3", "2025-01-01 00:00:02", b"", "en"),
-    ]
-    df = spark.createDataFrame(rows, "url string, warc_ts string, payload binary, lang string").withColumn(
-        "warc_ts", F.col("warc_ts").cast("timestamp")
-    )
-    tgt = str(tmp_path / "pages_store")
-    assert ingest_pages(spark, df, tgt, n_parts=4) == 3
-    # re-ingest the same batch + one new row: only the new row lands
-    rows2 = rows + [("https://a.example.com/4", "2025-01-01 00:00:03", b"<p>four</p>", "fr")]
-    df2 = spark.createDataFrame(rows2, "url string, warc_ts string, payload binary, lang string").withColumn(
-        "warc_ts", F.col("warc_ts").cast("timestamp")
-    )
-    assert ingest_pages(spark, df2, tgt, n_parts=4) == 1
-    stored = spark.read.parquet(tgt)
-    assert stored.count() == 4
-    # empty payload normalized to NULL html, not dropped
-    assert stored.filter(F.col("html").isNull()).count() == 1
-    assert set(stored.columns) >= {"url", "warc_ts", "html", "text", "lang", "part_id"}
-
-
-def test_ingest_unreadable_store_raises(spark, tmp_path):
-    # a corrupt pages store is not a first ingest: skipping dedup would
-    # re-append every row already stored
-    from greenocr_spark.plans.ingest import ingest_pages
-
-    df = spark.createDataFrame(
-        [("https://a.example.com/1", b"<p>one</p>")], "url string, payload binary"
-    ).withColumn("warc_ts", F.current_timestamp())
-    tgt = str(tmp_path / "pages_store")
-    assert ingest_pages(spark, df, tgt, n_parts=4) == 1
-    (stored,) = glob.glob(f"{tgt}/part_id=*/*.parquet")
-    with open(stored, "wb") as f:
-        f.write(b"not a parquet file" * 8)
-    with pytest.raises(Exception, match="FAILED_READ_FILE"):
-        ingest_pages(spark, df, tgt, n_parts=4)
-    assert glob.glob(f"{tgt}/part_id=*/*.parquet") == [stored]  # nothing appended
-
-
 def test_read_parquet_or_none(spark, tmp_path):
     # None only for a missing path; a known schema reads an empty dir
     from greenocr_spark.sources.pages import read_parquet_or_none

@@ -1,10 +1,14 @@
-"""spark-submit --py-files packaging smoke (north rule execution surface)."""
+"""Execution surfaces (north rule): the spark-submit --py-files packaging
+smoke and the `python -m greenocr_spark` command list."""
 
 from __future__ import annotations
 
+import ast
 import json
 import os
+import re
 import subprocess
+import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -23,3 +27,39 @@ def test_spark_submit_pyfiles(tmp_path):
     line = [ln for ln in out.stdout.splitlines() if ln.startswith("{")][-1]
     res = json.loads(line)
     assert res["rows_out"] == 300
+
+
+def _dispatched_commands():
+    """The command names main() compares `cmd` against."""
+    with open(os.path.join(REPO, "greenocr_spark", "__main__.py")) as f:
+        tree = ast.parse(f.read())
+    (main,) = [n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "main"]
+    return {
+        node.comparators[0].value
+        for node in ast.walk(main)
+        if isinstance(node, ast.Compare)
+        and isinstance(node.left, ast.Name)
+        and node.left.id == "cmd"
+        and isinstance(node.ops[0], ast.Eq)
+    }
+
+
+def _cli(*args):
+    return subprocess.run(
+        [sys.executable, "-m", "greenocr_spark", *args],
+        cwd=REPO, capture_output=True, text=True, timeout=60,
+    )
+
+
+def test_cli_help_lists_exactly_the_dispatched_commands():
+    out = _cli("--help")
+    assert out.returncode == 0, out.stderr
+    listed = {m.group(1) for m in re.finditer(r"^ {4}(\w+) ", out.stdout, re.M)}
+    assert listed == _dispatched_commands()
+    assert "extract" in listed and "bench" not in listed
+
+
+def test_cli_unknown_command_exits_2():
+    out = _cli("bench")
+    assert out.returncode == 2
+    assert "unknown command: bench" in out.stderr
