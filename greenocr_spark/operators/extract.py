@@ -24,6 +24,7 @@ from pyspark.sql.types import (
 )
 
 from greenocr_spark.extractor.core import DEFAULT_CONFIG, ExtractorConfig, extract_document
+from greenocr_spark.worker import trim_import_caches
 
 SPAN_TYPE = ArrayType(
     StructType(
@@ -118,6 +119,7 @@ def extract_pages(
         from greenocr_spark.extractor.links import extract_link_faces, extract_outlinks
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_import_caches()
         for pdf in batches:
             n = len(pdf)
             if n == 0:

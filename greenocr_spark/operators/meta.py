@@ -23,6 +23,7 @@ from pyspark.sql.types import (
 )
 
 from greenocr_spark.extractor.meta import extract_meta
+from greenocr_spark.worker import trim_import_caches
 
 META_SCHEMA = StructType(
     [
@@ -39,6 +40,7 @@ def extract_meta_pages(df: DataFrame) -> DataFrame:
     """Input requires (url:string, html:binary)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_import_caches()
         for pdf in batches:
             if len(pdf) == 0:
                 continue

@@ -26,6 +26,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from greenocr_spark.worker import trim_import_caches
+
 PATCH_BYTES = 256
 
 
@@ -63,6 +65,7 @@ def binary_meta(df: DataFrame, id_col: str = "doc_id", payload_col: str = "paylo
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_import_caches()
         for pdf in batches:
             metas = [_stub_decode(p) for p in pdf[payload_col].tolist()]
             yield pd.DataFrame(
@@ -94,6 +97,7 @@ def frame_sample(df: DataFrame, id_col: str = "doc_id", payload_col: str = "payl
     schema = StructType([id_field, *FRAME_SCHEMA.fields])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_import_caches()
         for pdf in batches:
             out = {id_col: [], "frame_idx": [], "feature": [], "note": []}
             for key, payload in zip(pdf[id_col].tolist(), pdf[payload_col].tolist()):

@@ -31,6 +31,7 @@ from pyspark.sql.types import (
 )
 
 from greenocr_spark.extractor.robots import parse_robots, rules_for_agent
+from greenocr_spark.worker import trim_import_caches
 
 RULE_TYPE = ArrayType(
     StructType(
@@ -51,6 +52,7 @@ def compile_robots(df: DataFrame, agent: str, host_col: str = "host") -> DataFra
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_import_caches()
         for pdf in batches:
             if len(pdf) == 0:
                 continue

@@ -34,6 +34,7 @@ from pyspark.sql.types import (
 )
 
 from greenocr_spark.extractor.core import DEFAULT_CONFIG, canon_ws, extract_document
+from greenocr_spark.worker import trim_import_caches
 
 EVAL_SCHEMA = StructType(
     [
@@ -61,6 +62,7 @@ def evaluate_configs(labeled: DataFrame, grid: list | None = None) -> DataFrame:
     grid = grid or default_grid()
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_import_caches()
         for pdf in batches:
             hits = [0] * len(grid)
             n = 0
@@ -110,6 +112,7 @@ def calibrate_grouped(labeled: DataFrame, group_col: str, grid: list | None = No
     )
 
     def run(key, pdf):
+        trim_import_caches()
         hits = [0] * len(grid)
         n = 0
         for raw, want in zip(pdf["html"].tolist(), pdf["text"].tolist()):

@@ -28,12 +28,25 @@ import math
 import os
 import shutil
 import uuid
+from urllib.parse import urlsplit
 
 from pyspark.sql import SparkSession
 
 from greenocr_spark.plans.job import _extracted_dir
 
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024
+
+
+def _local_dir(out_dir: str) -> str:
+    """out_dir as a local path. Compaction lists and sizes files with os,
+    so a file: URI is resolved to its path, and any other scheme (s3a,
+    hdfs) raises rather than listing as a table with nothing to compact."""
+    parts = urlsplit(out_dir)
+    if not parts.scheme:
+        return out_dir
+    if parts.scheme != "file" or parts.netloc not in ("", "localhost"):
+        raise ValueError(f"compaction needs a local out_dir, got {out_dir!r}")
+    return parts.path
 
 
 def _partition_files(ext_dir: str) -> dict[int, list[str]]:
@@ -64,7 +77,8 @@ def compact_extracted(
     min_files: int = 2,
 ) -> dict:
     """Compact fragmented partitions of `out_dir`/extracted. Returns stats
-    {n_parts_compacted, files_before, files_after}.
+    {n_parts_compacted, files_before, files_after}. `out_dir` is a local
+    path or a file: URI; any other scheme raises ValueError.
 
     A partition is picked only when it holds >= min_files files SMALLER
     than target_bytes/2 — partitions already made of target-sized files
@@ -79,6 +93,7 @@ def compact_extracted(
     it needs no update."""
     from pyspark.sql import functions as F
 
+    out_dir = _local_dir(out_dir)
     ext_dir = _extracted_dir(out_dir)
     parts = _partition_files(ext_dir)
     small_cut = max(target_bytes // 2, 1)

@@ -32,12 +32,13 @@ about n_parts / cores whole part_ids, which salting keeps near equal in
 rows, so the tasks stay balanced too. The Python stage runs one
 task per input split: splits are sized in bytes
 (spark.sql.files.maxPartitionBytes), which is what extraction cost
-follows, and every Python task pays a fixed worker start-up cost, so a
-Python stage after an n_parts-wide shuffle would pay it n_parts times
-whatever the input size. Salting therefore balances the write and the
-resume unit (a part_id), not the extraction; the input should have at
-least as many splits as cores, each holding rows (a bare limit() makes
-one: see sources/pages.limit_pages). The done set is ≤ n_parts
+follows, and every Python task pays a fixed cost (see
+greenocr_spark/worker.py), so a Python stage after an n_parts-wide
+shuffle would pay it n_parts times whatever the input size. Salting
+therefore balances the write and the resume unit (a part_id), not the
+extraction; the input should have at least as many splits as cores,
+each holding rows (a bare limit() makes one: see
+sources/pages.limit_pages). The done set is ≤ n_parts
 ints (≤ 10^5), so dropping done rows is a hash-set filter inside each
 pages task, never a join; the metrics read only this run's partitions and
 reduce to n_parts rows map-side. Re-running a partition is idempotent via

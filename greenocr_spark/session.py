@@ -4,7 +4,10 @@ Tuned for the sandbox (local[N]) but every knob is the one you'd set on a
 real 1000-executor cluster: AQE on (runtime re-plan + skew handling),
 Arrow batching bounded so big html blobs don't blow Python-worker memory
 (the admission-control analog of reference exe_t.py:126-137), and Python
-worker reuse so per-task UDF startup is amortized.
+worker reuse so per-task UDF startup is amortized. Reuse is also what
+makes greenocr_spark.worker.trim_import_caches() stick: a trimmed worker
+re-reads only its Python archives at the start of its next task, while a
+fresh worker pays the full zip-directory re-read again.
 """
 
 from __future__ import annotations

@@ -1,11 +1,7 @@
-"""Pages-table IO: one interface, Iceberg on a real cluster, partitioned
-parquet in the sandbox (SURVEY.md §7.0 — identical writer interface).
-
-The production deployment target (north rule) is an Iceberg catalog table
-`(url string, warc_ts timestamp, html binary, text string, lang string)`;
-this container ships no Iceberg runtime jar, so the same calls fall back to
-a parquet directory. Every call site goes through this module — swapping
-the backend touches nothing else.
+"""Pages-table IO. read_pages and write_extracted take a source or target
+with a PATH_PREFIXES prefix as a parquet directory and anything else as a
+catalog table name (Iceberg on a cluster), so swapping the backend
+touches no caller.
 """
 
 from __future__ import annotations
@@ -13,21 +9,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-PAGES_DDL = (
-    "url string, warc_ts timestamp, html binary, text string, lang string"
-)
-
 # every entry point shares this: a source/target with one of these prefixes
 # is a filesystem path (parquet dir); anything else is a catalog table name
 PATH_PREFIXES = ("/", "file:", "s3:", "s3a:", "hdfs:")
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
 
 
 def read_pages(spark: SparkSession, source: str) -> DataFrame:
@@ -64,17 +48,6 @@ def read_parquet_or_none(
         return None
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(path)
-
-
-def write_pages(df: DataFrame, target: str, mode: str = "append") -> None:
-    """Append rows to the pages store. Iceberg: `writeTo(...).append()`
-    (atomic snapshot); parquet fallback: directory append."""
-    if target.startswith(PATH_PREFIXES):
-        df.write.mode(mode).parquet(target)
-    elif mode == "append":
-        df.writeTo(target).append()
-    else:
-        df.writeTo(target).createOrReplace()
 
 
 def write_extracted(df: DataFrame, target: str, partition_col: str = "part_id") -> None:

@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from greenocr_spark.worker import trim_import_caches
+
 _CRLF = b"\r\n"
 _VERSION = b"WARC/1.0"
 
@@ -198,6 +200,7 @@ def stream_warc(spark: SparkSession, warc_dir: str, strict: bool = True) -> Data
 
 def _segment_parser(strict: bool):
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        trim_import_caches()
         for pdf in batches:
             urls, tss, htmls = [], [], []
             for blob in pdf["content"]:

@@ -238,6 +238,35 @@ def test_compaction_reduces_files_preserves_rows(spark, pages_path, tmp_path):
     assert _listing(out) == files
 
 
+def test_compaction_of_file_uri_out_dir(spark, tmp_path):
+    """A file: out_dir compacts like its plain path; compaction lists
+    files with os, so any other scheme raises instead of reporting
+    nothing to compact."""
+    from greenocr_spark.plans.compact import _partition_files, compact_extracted
+
+    out = tmp_path / "out"
+    ext = str(out / "extracted")
+    (
+        spark.range(50)
+        .select(F.format_string("https://h/%03d", "id").alias("url"), F.lit(0).alias("part_id"))
+        .repartition(5)
+        .write.partitionBy("part_id")
+        .parquet(ext)
+    )
+    assert len(_partition_files(ext)[0]) == 5
+
+    stats = compact_extracted(spark, out.as_uri())
+    assert stats == {"n_parts_compacted": 1, "files_before": 5, "files_after": 1}
+    (compacted,) = _partition_files(ext)[0]
+    urls = pq.read_table(compacted, columns=["url"])["url"].to_pylist()
+    assert urls == [f"https://h/{i:03d}" for i in range(50)]
+    assert os.listdir(out) == ["extracted"]  # staging removed
+
+    for remote in ("s3a://bucket/out", "hdfs://nn:8020/out"):
+        with pytest.raises(ValueError, match="local out_dir"):
+            compact_extracted(spark, remote)
+
+
 def test_resume_over_corrupt_manifest_raises(spark, pages_path, tmp_path):
     """An unreadable manifest is not a first run: a resume that read it as
     "nothing done" would re-extract and append every partition again. The
@@ -289,8 +318,8 @@ def _stage_tasks(spark, group, *scopes):
 
 
 def test_extraction_runs_once_per_input_split(spark, tmp_path, monkeypatch):
-    """Every Python task pays a fixed worker start-up cost, so the
-    extraction stage must be as wide as the input, not as n_parts: the
+    """Every Python task pays a fixed cost (see greenocr_spark/worker.py),
+    so the extraction stage must be as wide as the input, not as n_parts: the
     plan extracts below the part_id shuffle, and the stage that runs
     MapInPandas has one task per input split."""
     src = tmp_path / "two_splits"

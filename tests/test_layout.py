@@ -137,3 +137,105 @@ def test_shared_kernels_defined_once():
         if len(where) != 1 or where[0].startswith("battery")
     }
     assert not bad, bad
+
+
+# Spark calls these with a Python function that runs in a Python worker.
+PYTHON_STAGES = {"mapInPandas", "applyInPandas"}
+
+
+def _stage_functions(tree: ast.Module):
+    """(call, function or None) for every function a module passes to a
+    PYTHON_STAGES call: a def in scope by name, or the one def a factory
+    call returns by name in its last statement (sources/warc._segment_parser).
+    None when the argument has neither shape."""
+    parents = {c: p for p in ast.walk(tree) for c in ast.iter_child_nodes(p)}
+
+    def lookup(name: str, node: ast.AST):
+        while node is not None:
+            if isinstance(node, (ast.Module, ast.FunctionDef)):
+                for d in node.body:
+                    if isinstance(d, ast.FunctionDef) and d.name == name:
+                        return d
+            node = parents.get(node)
+        return None
+
+    for call in ast.walk(tree):
+        if not (
+            isinstance(call, ast.Call)
+            and isinstance(call.func, ast.Attribute)
+            and call.func.attr in PYTHON_STAGES
+        ):
+            continue
+        arg, fn = (call.args or [None])[0], None
+        if isinstance(arg, ast.Name):
+            fn = lookup(arg.id, call)
+        elif isinstance(arg, ast.Call) and isinstance(arg.func, ast.Name):
+            factory = lookup(arg.func.id, call)
+            last = factory.body[-1] if factory else None
+            if isinstance(last, ast.Return) and isinstance(last.value, ast.Name):
+                fn = lookup(last.value.id, last)
+        yield call, fn
+
+
+def _untrimmed_stages(path: Path, source: str) -> tuple[int, list[str]]:
+    """(stages found, those whose function does not call
+    trim_import_caches() as its first statement)."""
+    found, bad = 0, []
+    for call, fn in _stage_functions(ast.parse(source, str(path))):
+        found += 1
+        body = fn.body if fn else []
+        if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
+            body = body[1:]  # docstring
+        first = body[0] if body else None
+        if not (
+            isinstance(first, ast.Expr)
+            and isinstance(first.value, ast.Call)
+            and isinstance(first.value.func, ast.Name)
+            and first.value.func.id == "trim_import_caches"
+        ):
+            bad.append(f"{path}:{call.lineno} {call.func.attr}")
+    return found, bad
+
+
+def test_engine_python_stages_trim_import_caches():
+    """Each task's importlib.invalidate_caches() re-reads every zip
+    importer a worker holds; each engine Python stage trims them first
+    (greenocr_spark/worker.py)."""
+    found, bad = 0, []
+    for path in _py_files(PKG):
+        if path.name.startswith("battery"):
+            continue
+        n, b = _untrimmed_stages(path.relative_to(ROOT), path.read_text())
+        found, bad = found + n, bad + b
+    assert found >= 9  # the stage calls in the engine today
+    assert not bad, "\n".join(bad)
+
+
+def test_untrimmed_stage_is_reported():
+    src = '''
+def stage(df):
+    def run(batches):
+        for b in batches:
+            yield b
+    return df.mapInPandas(run, "x long")
+
+def grouped(df):
+    def run(key, pdf):
+        trim_import_caches()
+        return pdf
+    return df.groupBy("k").applyInPandas(run, "k long")
+
+def factory():
+    def run(batches):
+        yield from batches
+    return run
+
+def from_factory(df):
+    return df.mapInPandas(factory(), "x long")
+
+def lambda_stage(df):
+    return df.mapInPandas(lambda it: it, "x long")
+'''
+    found, bad = _untrimmed_stages(Path("m.py"), src)
+    assert found == 4
+    assert bad == ["m.py:6 mapInPandas", "m.py:20 mapInPandas", "m.py:23 mapInPandas"]

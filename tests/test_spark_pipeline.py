@@ -12,6 +12,7 @@
 from __future__ import annotations
 
 import glob
+import json
 import os
 
 import pandas as pd
@@ -88,6 +89,83 @@ def test_arrow_batches_bounded_by_bytes(spark):
     assert whole == [N_GOLDEN]
     assert len(split) > 4 and sum(split) == N_GOLDEN
     assert got == expected
+
+
+def test_extraction_trims_worker_import_caches(spark, pages_path, tmp_path):
+    """Spark's worker calls importlib.invalidate_caches() at the start of
+    every task, and each zip importer it holds re-reads its archive's
+    directory. After extract_pages' tasks a reused worker holds no
+    importer with a prefix and none for Spark's jar (no Python member), so
+    the call re-reads each Python archive once and takes milliseconds
+    (untrimmed costs: greenocr_spark/worker.py)."""
+    extract_pages(spark.read.parquet(pages_path).repartition(16)).count()
+    lock = str(tmp_path / "timing.lock")
+
+    def probe(batches):
+        import fcntl
+        import importlib
+        import json
+        import sys
+        import time
+        import zipimport
+
+        from greenocr_spark.worker import trim_import_caches
+
+        for _ in batches:
+            pass
+        cache = sys.path_importer_cache
+        jars = [p for p in sys.path if p.endswith(".jar")]
+        state = {
+            "prefixed": [
+                k for k, f in cache.items()
+                if isinstance(f, zipimport.zipimporter) and f.prefix
+            ],
+            "live_jars": [
+                p for p in jars if isinstance(cache.get(p), zipimport.zipimporter)
+            ],
+        }
+        reads: dict = {}
+        read_directory = zipimport._read_directory
+
+        def counting(archive):
+            reads[archive] = reads.get(archive, 0) + 1
+            return read_directory(archive)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        # CPU time, the workers taking turns: the call's own cost, not a
+        # wait for a core held by another worker or another process
+        times = []
+        with open(lock, "w") as fh:
+            fcntl.flock(fh, fcntl.LOCK_EX)
+            for _ in range(5):
+                t0 = time.process_time()
+                importlib.invalidate_caches()
+                times.append(time.process_time() - t0)
+        # each task's invalidation drops None entries, so the trim's None
+        # for the jar is seen right after a trim
+        trim_import_caches()
+        state.update(
+            reads=reads,
+            invalidate_s=min(times),
+            jars=jars,
+            jar_entries=[cache.get(p, "absent") is None for p in jars],
+        )
+        yield pd.DataFrame({"state": [json.dumps(state)]})
+
+    rows = spark.range(4).repartition(4).mapInPandas(probe, "state string").collect()
+    assert len(rows) == 4
+    for r in rows:
+        state = json.loads(r.state)
+        assert state["prefixed"] == [], state
+        assert state["jars"] and state["live_jars"] == [], state
+        assert all(state["jar_entries"]), state
+        assert state["reads"] and set(state["reads"].values()) == {1}, state
+        assert not set(state["reads"]) & set(state["jars"]), state
+        assert state["invalidate_s"] < 0.02, state
 
 
 def _final_state(spark, out_dir):
@@ -377,22 +455,13 @@ def test_grouped_calibration_weighted_merge(spark, tmp_path):
 
 
 def test_pages_io_roundtrip(spark, tmp_path):
-    from greenocr_spark.sources.pages import (
-        iceberg_available,
-        read_pages,
-        write_pages,
-    )
-
-    # sandbox has no Iceberg runtime — the probe must say so, not raise
-    assert iceberg_available(spark) is False
+    from greenocr_spark.sources.pages import read_pages
 
     p = str(tmp_path / "store")
     rows = [("https://x/1", b"<p>a</p>"), ("https://x/2", b"<p>b</p>")]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    write_pages(df, p)
-    assert read_pages(spark, p).count() == 2
-    write_pages(df.limit(1), p)  # append mode
-    assert read_pages(spark, p).count() == 3
+    spark.createDataFrame(rows, "url string, html binary").write.parquet(p)
+    got = read_pages(spark, p).orderBy("url").collect()
+    assert [(r.url, bytes(r.html)) for r in got] == rows
 
 
 def test_corpus_hash_frozen():
