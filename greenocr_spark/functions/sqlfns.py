@@ -9,14 +9,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def canon_ws_expr(col) -> Column:
-    """F1 whitespace canonicalization as a JVM expression (for SQL-side
-    queries; the byte-identity path uses core.canon_ws inside the UDF).
-
-    Reference analog: ' '.join(text.split()) (exe_t.py:531-532)."""
-    return F.regexp_replace(F.trim(col), r"\s+", " ")
-
-
 def host_expr(url_col) -> Column:
     """Extract the host from a url (F20) — feeds skew salting.
 
@@ -116,9 +108,9 @@ def adaptive_salted_part_id(
 def hot_salted_part_id(url_col: str, hot, n_parts: int, n_salts: int = 8) -> Column:
     """part_id for a KNOWN hot-host assignment: hot hosts get a per-url salt
     in [0, salts_for_host) folded in, cold hosts hash by host alone. Split
-    out so a resumed job can reuse the hot map persisted by the first run
-    (part_id stability across runs must not depend on re-deriving hot hosts
-    from a changed input — ADVICE r01).
+    out so a resumed job can reuse the hot map the first run recorded in
+    its params record (part_id stability across runs must not depend on
+    re-deriving hot hosts from a changed input — ADVICE r01).
 
     `hot` is {host: n_salts_for_host}; `n_salts` is accepted for signature
     stability only, since the map carries each host's salt count.

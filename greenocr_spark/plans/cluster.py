@@ -6,6 +6,9 @@ IVF training iterates to convergence. This job runs the same scaled-int
 kernel per iteration and commits centroids + an (iter, inertia, moved)
 manifest row after EVERY iteration (the dd8/pr1 iterative pattern), so a
 killed run resumes at the last committed iteration instead of restarting.
+The params (k, scale, d) are recorded in out_dir/_params.json
+(sources/pages.check_params); resuming committed iterations under other
+params fails loudly on params drift.
 
 Determinism (the north rule applied to an iterative algorithm):
 - components quantize to round(x*1000) longs once up front; ALL distance
@@ -30,12 +33,13 @@ Scale shape per iteration (10^12 vectors, K clusters, d dims):
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from greenocr_spark.sources.pages import check_params, write_params
 
 SCALE = 1000  # quantization: component -> round(x*1000) as long
 
@@ -167,24 +171,13 @@ def run_kmeans_job(
     qe = quantize(embeddings)
     d = len(qe.select("qe").first()["qe"])
 
-    params = json.dumps({"k": k, "scale": SCALE, "d": d}, sort_keys=True)
-    params_path = os.path.join(out_dir, "_kmeans_params.json")
-    if resume and os.path.exists(params_path):
-        with open(params_path) as f:
-            stored = f.read()
-        if stored != params:
-            raise ValueError(
-                f"kmeans params drift at {out_dir}: committed {stored} vs "
-                f"requested {params} — committed iterations were computed "
-                "under different rules; use a fresh out_dir or resume=False"
-            )
-    os.makedirs(out_dir, exist_ok=True)
-    tmp = params_path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(params)
-    os.replace(tmp, params_path)
-
+    # a resume keeps the committed iterations, so they must have been
+    # computed under these params; resume=False keeps none
     start_iter = _latest_committed_iter(out_dir) if resume else None
+    params = {"k": k, "scale": SCALE, "d": d}
+    if check_params(spark, out_dir, params, start_iter is not None) is None:
+        write_params(spark, out_dir, params)
+
     if start_iter is not None:
         cents_df = spark.read.parquet(_iter_dir(out_dir, start_iter))
         cents = [

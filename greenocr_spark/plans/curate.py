@@ -9,9 +9,12 @@ and near-dup clusters depend on all rows — so partitions cannot complete
 independently. The restart unit is the completed stage: each stage
 commits its survivor doc_id set under out_dir/stages/<name>/ (ids only —
 tiny next to the corpus), and a rerun reuses every committed stage,
-recomputing only what's missing. A params fingerprint is committed on
-the first run and checked on resume, so a config drift cannot silently
-mix survivor sets computed under different rules (ADVICE r02).
+recomputing only what's missing. The params are recorded in
+out_dir/_params.json (sources/pages.check_params): a resume over
+committed survivor sets must match them, so a config drift cannot
+silently mix survivor sets computed under different rules (ADVICE r02);
+a run that keeps no survivor set (resume=False, or none committed yet)
+records its own.
 
 Scale shape per stage (10^12-doc corpus):
 - quality/lang: narrow array-lambda filters, zero shuffle.
@@ -31,7 +34,6 @@ Scale shape per stage (10^12-doc corpus):
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -45,7 +47,9 @@ from greenocr_spark.operators.text import (
     _spark_gram3_hashes,
     _spark_words,
 )
-from greenocr_spark.sources.pages import read_parquet_or_none
+from greenocr_spark.sources.pages import (
+    check_params, path_exists, read_parquet_or_none, write_params,
+)
 
 CURATE_MANIFEST_COLS = ["stage", "idx", "rows_in", "rows_out", "run_id"]
 
@@ -186,47 +190,30 @@ def run_curate_job(
     run_id = run_id or uuid.uuid4().hex[:12]
 
     eval_grams = _eval_grams(eval_docs) if eval_docs is not None else None
-    params = json.dumps(
-        {
-            "min_tokens": min_tokens,
-            "max_dup_bigram_frac": max_dup_bigram_frac,
-            "langs": sorted(langs) if langs else None,
-            "neardup": neardup,
-            "resample": resample,
-            # eval CONTENT is fingerprinted, not just the on/off flag: a
-            # changed benchmark set must fail the drift check, because the
-            # committed decon survivors were computed under the old one
-            "decon": (
-                {
-                    "min_overlap": decon_min_overlap,
-                    "eval_fp": _eval_fingerprint(eval_grams),
-                }
-                if eval_grams is not None
-                else None
-            ),
-        },
-        sort_keys=True,
-    )
-    params_dir = os.path.join(out_dir, "params")
-    committed = read_parquet_or_none(spark, params_dir)
-    if committed is not None and resume:
-        stored = committed.first()["params"]
-        if stored != params:
-            raise ValueError(
-                f"curation params drift at {out_dir}: committed {stored} vs "
-                f"requested {params} — completed stage survivor sets were "
-                "computed under different rules; rerun fresh into a new "
-                "out_dir (or pass resume=False to recompute everything)"
-            )
-    if committed is None or not resume:
-        # resume=False recomputes every stage under the CURRENT params, so
-        # the committed fingerprint must follow: leaving the old one behind
-        # would let a later resume=True run pass the drift check and mix
-        # survivor sets computed under different rules (ADVICE r03). Same
-        # always-re-commit contract as export._check_or_commit_params.
-        spark.createDataFrame([(params,)], "params string").coalesce(
-            1
-        ).write.mode("overwrite").parquet(params_dir)
+    params = {
+        "min_tokens": min_tokens,
+        "max_dup_bigram_frac": max_dup_bigram_frac,
+        "langs": sorted(langs) if langs else None,
+        "neardup": neardup,
+        "resample": resample,
+        # eval CONTENT is fingerprinted, not just the on/off flag: a
+        # changed benchmark set must fail the drift check, because the
+        # committed decon survivors were computed under the old one
+        "decon": (
+            {
+                "min_overlap": decon_min_overlap,
+                "eval_fp": _eval_fingerprint(eval_grams),
+            }
+            if eval_grams is not None
+            else None
+        ),
+    }
+    # a resume keeps every committed stage survivor set, so they must have
+    # been computed under these params; resume=False recomputes every
+    # stage and keeps nothing, so its params become the record
+    keeps = resume and path_exists(spark, os.path.join(out_dir, "stages"))
+    if check_params(spark, out_dir, params, keeps) is None:
+        write_params(spark, out_dir, params)
     if not resume:
         # full recompute: the funnel manifest describes the OLD run's stage
         # rows — clear it so the append-per-stage below rebuilds a manifest

@@ -19,10 +19,11 @@ Pipeline (fully deterministic, seed-parameterized):
    shard membership is identical run-over-run; one repartition on
    shard_id + sortWithinPartitions(pos) + partitionBy(shard_id) write
    gives exactly one file per shard, each internally in training order.
-4. **manifest** — per-shard (n_rows, min_pos, max_pos, n_tokens) rows
-   plus a params fingerprint (seq_len/rows_per_shard/seed) committed
-   with the shards; a rerun against an existing out_dir with different
-   params fails loudly instead of silently mixing layouts (ADVICE r02).
+4. **manifest** — per-shard (n_rows, min_pos, max_pos, n_tokens) rows;
+   the params (seq_len/rows_per_shard/seed) are recorded in
+   out_dir/_params.json (sources/pages.check_params), and a rerun over a
+   committed manifest with different params fails loudly instead of
+   silently mixing layouts (ADVICE r02).
 
 Resume: with resume=True (default) a committed manifest whose params
 match is returned as-is — the export is a no-op. The job is end-to-end
@@ -37,7 +38,6 @@ funnels the corpus through one partition.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from greenocr_spark.operators.text import _spark_words
+from greenocr_spark.sources.pages import check_params, path_exists, write_params
 
 EXPORT_MANIFEST_COLS = ["shard_id", "n_rows", "min_pos", "max_pos", "n_tokens"]
 
@@ -116,35 +117,6 @@ def shuffle_positions(chunks: DataFrame, seed: int) -> DataFrame:
     )
 
 
-def _params_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "_export_params.json")
-
-
-def _check_or_commit_params(out_dir: str, params: dict) -> None:
-    path = _params_path(out_dir)
-    if os.path.exists(path):
-        with open(path) as f:
-            committed = json.load(f)
-        if committed == params:
-            return
-        # the manifest's _SUCCESS is the durable commit marker: if it never
-        # landed, the prior run crashed before producing anything a resume
-        # could consume, so adopting new params is safe (the shard write is
-        # a static overwrite); with a committed manifest, params drift would
-        # silently mix layouts — fail loudly instead
-        if os.path.exists(os.path.join(out_dir, "manifest", "_SUCCESS")):
-            raise ValueError(
-                f"export params drift at {out_dir}: committed={committed} "
-                f"requested={params} — shards on disk were built under a "
-                "different layout; export to a fresh out_dir or delete it"
-            )
-    os.makedirs(out_dir, exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(params, f, sort_keys=True)
-    os.replace(tmp, path)
-
-
 def _shards_match_manifest(
     spark: SparkSession, out_dir: str, manifest_dir: str
 ) -> bool:
@@ -186,9 +158,15 @@ def run_export_job(
         "rows_per_shard": int(rows_per_shard),
         "seed": int(seed),
     }
-    _check_or_commit_params(out_dir, params)
     manifest_dir = os.path.join(out_dir, "manifest")
-    if resume and os.path.exists(os.path.join(manifest_dir, "_SUCCESS")):
+    # the manifest's _SUCCESS is the durable commit marker: without it no
+    # run produced anything a resume could consume (the shard write is a
+    # static overwrite), so new params are adopted; with it, a params
+    # drift would mix layouts, forced rerun or not
+    committed = path_exists(spark, os.path.join(manifest_dir, "_SUCCESS"))
+    if check_params(spark, out_dir, params, committed) is None:
+        write_params(spark, out_dir, params)
+    if resume and committed:
         # the manifest alone isn't proof the shards survived: verify every
         # manifest shard_id still has its partition dir on disk before
         # blessing the export as a no-op resume (ADVICE r03). The listing is

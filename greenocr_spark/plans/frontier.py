@@ -23,29 +23,26 @@ harvested links):
      hosts default to allow-all, matching the crawl convention for
      404 robots.
 
-Commit: the frontier parquet is a static overwrite under one out_dir with
-a params fingerprint (`_frontier_params.json`, agent + require_robots);
-resume=True returns the committed table without recompute when the
-_SUCCESS marker exists and params match, and fails loudly on params
-drift (the export-job convention).
+Commit: the frontier parquet is a static overwrite under one out_dir,
+with its params (agent + require_robots) recorded in out_dir/_params.json
+(sources/pages.check_params). Once the _SUCCESS marker exists, a run
+with other params fails loudly on params drift, and resume=True returns
+the committed table without recompute (the export-job convention).
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from greenocr_spark.functions.sqlfns import host_expr
-from greenocr_spark.sources.pages import read_parquet_or_none
+from greenocr_spark.sources.pages import (
+    check_params, path_exists, read_parquet_or_none, write_params,
+)
 
 FRONTIER_DDL = "host string, url string"
-
-
-def _params_path(out_dir: str) -> str:
-    return os.path.join(out_dir, "_frontier_params.json")
 
 
 def _frontier_dir(out_dir: str) -> str:
@@ -68,22 +65,14 @@ def run_frontier_job(
 
     params = {"agent": agent.lower(), "require_robots": require_robots}
     fdir = _frontier_dir(out_dir)
-    ppath = _params_path(out_dir)
-    success = os.path.join(fdir, "_SUCCESS")
-    if os.path.exists(ppath):
-        with open(ppath) as f:
-            committed = json.load(f)
-        if committed != params:
-            if os.path.exists(success):
-                raise ValueError(
-                    f"frontier params drift at {out_dir}: "
-                    f"committed={committed} requested={params} — build into "
-                    "a fresh out_dir or delete it"
-                )
-            # crashed before commit: safe to adopt the new params
-        elif resume and os.path.exists(success):
-            # the known schema also reads a committed-but-empty frontier
-            return read_parquet_or_none(spark, fdir, FRONTIER_DDL)
+    # _SUCCESS marks a committed frontier; without it (a crash before the
+    # commit) new params are safe to adopt
+    committed = path_exists(spark, os.path.join(fdir, "_SUCCESS"))
+    if check_params(spark, out_dir, params, committed) is None:
+        write_params(spark, out_dir, params)
+    elif resume:
+        # the known schema also reads a committed-but-empty frontier
+        return read_parquet_or_none(spark, fdir, FRONTIER_DDL)
 
     candidates = (
         extracted.select(F.explode("outlinks").alias("url"))
@@ -104,9 +93,6 @@ def run_frontier_job(
     seen = extracted.select("url").distinct()
     frontier = allowed.join(seen, "url", "left_anti").select("host", "url")
 
-    os.makedirs(out_dir, exist_ok=True)
-    with open(ppath, "w") as f:
-        json.dump(params, f)
     frontier.write.mode("overwrite").parquet(fdir)
     # a fully-crawled corpus yields an EMPTY frontier, which may commit no
     # data files: the known schema reads it back without inference

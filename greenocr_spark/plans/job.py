@@ -2,6 +2,10 @@
 checkpoint-resume against the done set (north rule; SURVEY.md §3.1, §4 X7).
 
 Physical plan (one shuffle total):
+    read the params record (out_dir/_params.json, no Spark job) → the
+      layout: n_parts, salting, n_salts, face flags and, for adaptive
+      salting, the hot-host map; a run with nothing committed derives it
+      and writes it before any data, any other run must match it
     read the manifest ONCE → done part_ids (≤ n_parts ints, on the driver)
     scan pages → part_id → [drop done part_ids: literal filter, narrow]
     → mapInPandas extract (narrow, Arrow-batched, one task per input split)
@@ -52,7 +56,6 @@ import os
 import uuid
 
 import pandas as pd
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
@@ -63,7 +66,13 @@ from greenocr_spark.functions.sqlfns import (
     salted_part_id,
 )
 from greenocr_spark.operators.extract import extract_pages, extract_schema
-from greenocr_spark.sources.pages import read_parquet_or_none, write_extracted
+from greenocr_spark.sources.pages import (
+    check_params,
+    path_exists,
+    read_parquet_or_none,
+    write_extracted,
+    write_params,
+)
 
 MANIFEST_DDL = (
     "part_id int, status string, n_docs long, n_content_blocks long, "
@@ -82,22 +91,16 @@ def _manifest_dir(out_dir: str) -> str:
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """None ONLY when the manifest doesn't exist yet (first run). Any other
     failure propagates: treating a transient FS error as 'first run' would
-    silently restart the whole job (and, for adaptive salting, re-derive a
-    different hot map — breaking part_id stability)."""
+    silently restart the whole job and re-extract every done partition."""
     return read_parquet_or_none(spark, _manifest_dir(out_dir), MANIFEST_DDL)
 
 
 def _write_rows(spark: SparkSession, rows: list, ddl: str, path: str, mode: str) -> None:
     """Write a few driver-side rows as one parquet file. Handed over as
     pandas, so Arrow ships them to the JVM directly: a plain list would
-    run a Python worker task that costs more than the write itself. No
-    rows is a JVM-only empty relation typed from the DDL, since an empty
-    pandas frame still plans a Python scan."""
-    cols = [c.split() for c in ddl.split(",")]
-    if rows:
-        frame = spark.createDataFrame(pd.DataFrame(rows, columns=[n for n, _ in cols]), ddl)
-    else:
-        frame = spark.range(0).select(*[F.lit(None).cast(t).alias(n) for n, t in cols])
+    run a Python worker task that costs more than the write itself."""
+    names = [c.split()[0] for c in ddl.split(",")]
+    frame = spark.createDataFrame(pd.DataFrame(rows, columns=names), ddl)
     frame.coalesce(1).write.mode(mode).parquet(path)
 
 
@@ -117,47 +120,29 @@ def _drop_done(df: DataFrame, done: list) -> DataFrame:
     return df.where(~F.col("part_id").isin(done)) if done else df
 
 
+def _with_part_id(pages: DataFrame, layout: dict) -> DataFrame:
+    """Attach the part_id the layout (a params record) assigns: adaptive
+    salting through its recorded hot-host map, uniform salting by url."""
+    n_parts, n_salts = layout["n_parts"], layout["n_salts"]
+    if layout["salting"] == "adaptive":
+        part_id = hot_salted_part_id("url", layout["hot"], n_parts, n_salts)
+    else:
+        part_id = salted_part_id(F.col("url"), n_parts, n_salts)
+    return pages.withColumn("part_id", part_id)
+
+
 def pending_pages(
     spark: SparkSession, pages: DataFrame, out_dir: str, n_parts: int, n_salts: int
 ) -> DataFrame:
     """Attach part_id and drop partitions already marked done (J5 — the
     reference's commented-out skip-if-exists, ENHANCMENT24.py:86-87, done
-    properly)."""
-    df = pages.withColumn("part_id", salted_part_id(F.col("url"), n_parts, n_salts))
-    return _drop_done(df, _done_part_ids(spark, out_dir))
-
-
-def _adaptive_part_id(
-    spark: SparkSession,
-    pages: DataFrame,
-    out_dir: str,
-    n_parts: int,
-    n_salts: int,
-    resume: bool,
-) -> DataFrame:
-    """Attach the adaptive part_id. The hot-host map (host -> salt count)
-    lives next to the manifest (same FS as the data, via Spark, so s3a/hdfs
-    out_dirs work): derived and persisted on a fresh run, REUSED on resume."""
-    hot_dir = os.path.join(out_dir, "hot_hosts")
-    hot_df = read_parquet_or_none(spark, hot_dir) if resume else None
-    if hot_df is None:
-        pages, hot = adaptive_salted_part_id(pages, "url", n_parts, n_salts)
-        _write_rows(spark, list(hot.items()), "h string, s int", hot_dir, "overwrite")
-        return pages
-    if not {"h", "s"} <= set(hot_df.columns):
-        # Pre-upgrade layouts persisted only 'h' (and used a hashed
-        # (host,salt) part_id formula); their manifests' part_ids no longer
-        # match what this version assigns, so resuming would mis-route rows.
-        # Fail explicitly instead of KeyError-ing mid-resume (ADVICE r02).
-        raise ValueError(
-            f"incompatible hot_hosts layout at {hot_dir} "
-            f"(columns {sorted(hot_df.columns)}, expected h/s): "
-            "this out_dir was written by an older version whose "
-            "part_id assignment differs — rerun fresh into a new "
-            "out_dir (or delete this one) instead of resuming"
-        )
-    hot = {r["h"]: r["s"] for r in hot_df.collect()}
-    return pages.withColumn("part_id", hot_salted_part_id("url", hot, n_parts, n_salts))
+    properly). part_ids come from the layout out_dir recorded, so an
+    adaptive out_dir is read with its own hot map; an out_dir with nothing
+    committed is read as a uniform one."""
+    params = {"n_parts": n_parts, "n_salts": n_salts}
+    keeps = path_exists(spark, _extracted_dir(out_dir))
+    layout = check_params(spark, out_dir, params, keeps) or {**params, "salting": "uniform"}
+    return _drop_done(_with_part_id(pages, layout), _done_part_ids(spark, out_dir))
 
 
 def run_extract_job(
@@ -178,11 +163,17 @@ def run_extract_job(
     salting: 'uniform' salts every url (robust default for unknown host
     distributions); 'adaptive' salts only hosts carrying more than their
     share of rows and keeps the long tail host-local (Scarlett-style skew
-    handling — one extra cheap host-count aggregation). NOTE: resume
-    requires the SAME salting mode across runs; in adaptive mode the
-    hot-host map is persisted next to the manifest on the first run and
-    REUSED on resume, so part_id assignment stays stable even if the input
-    dataset drifted between runs (ADVICE r01)."""
+    handling — one extra cheap host-count aggregation).
+
+    Resume requires the same layout across runs: n_parts, salting,
+    n_salts and the two face flags are recorded in out_dir/_params.json
+    before the first data write, and a run over committed output
+    (extracted/ exists, whatever `resume` is: dynamic overwrite keeps
+    every part_id dir a run does not write) raises "params drift" on any
+    difference, before it writes. In adaptive mode the record also holds
+    the hot-host map, derived once by the first run and REUSED on every
+    later one, so part_id assignment stays stable even if the input
+    drifted between runs (ADVICE r01)."""
     if salting not in ("uniform", "adaptive"):
         # a misspelt mode would silently salt uniformly, and on resume of an
         # adaptive run its part_ids would disagree with the done set
@@ -190,30 +181,9 @@ def run_extract_job(
     run_id = run_id or uuid.uuid4().hex[:12]
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     ext_path = _extracted_dir(out_dir)
-
-    if resume:
-        # like the salting mode, the fused-face flags must be stable across
-        # resume: mixing runs would leave partition dirs with two different
-        # schemas under one table (and a fully-done resume would silently
-        # hand back a table of the other shape). Fail loudly up front.
-        try:
-            stored = read_parquet_or_none(spark, ext_path)
-        except AnalysisException as e:
-            # an empty commit (nothing was ever pending) holds no schema
-            if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
-                raise
-            stored = None
-        for flag_name, flag, col in (
-            ("with_links", with_links, "outlinks"),
-            ("with_anchors", with_anchors, "anchors"),
-        ):
-            if stored is not None and (col in stored.columns) != flag:
-                raise ValueError(
-                    f"extracted table at {ext_path} was written "
-                    f"{flag_name}={not flag}; resuming {flag_name}={flag} "
-                    "would mix schemas under one table — rerun with the "
-                    "same flag or extract into a fresh out_dir"
-                )
+    params = dict(n_parts=n_parts, salting=salting, n_salts=n_salts,
+                  with_links=with_links, with_anchors=with_anchors)
+    layout = check_params(spark, out_dir, params, path_exists(spark, ext_path))
 
     # The extracted table as it reads back: the known schema (part_id typed
     # as partition discovery types it) skips inference and reads an empty
@@ -227,10 +197,14 @@ def run_extract_job(
     if resume and set(range(n_parts)) <= set(done):
         # every part_id is done, so nothing can be pending: skip the scan
         return spark.read.schema(table_schema).parquet(ext_path)
-    if salting == "adaptive":
-        df = _adaptive_part_id(spark, pages, out_dir, n_parts, n_salts, resume)
-    else:
-        df = pages.withColumn("part_id", salted_part_id(F.col("url"), n_parts, n_salts))
+    if layout is None:
+        # nothing committed: derive the layout and record it before the
+        # first data write
+        layout = dict(params)
+        if salting == "adaptive":
+            layout["hot"] = adaptive_salted_part_id(pages, "url", n_parts, n_salts)[1]
+        write_params(spark, out_dir, layout)
+    df = _with_part_id(pages, layout)
     if resume:
         df = _drop_done(df, done)
 

@@ -1,10 +1,14 @@
 """Pages-table IO. read_pages and write_extracted take a source or target
 with a PATH_PREFIXES prefix as a parquet directory and anything else as a
 catalog table name (Iceberg on a cluster), so swapping the backend
-touches no caller.
+touches no caller. Also the one params record of every resumable plan's
+out_dir (check_params, write_params).
 """
 
 from __future__ import annotations
+
+import json
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -29,6 +33,21 @@ def limit_pages(pages: DataFrame, n: int) -> DataFrame:
     return pages.limit(n).repartition(cores, "url")
 
 
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) of `path` on the file system its scheme names
+    (local, s3a, hdfs), as Spark's own reads resolve it."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return hpath.getFileSystem(conf), hpath
+
+
+def path_exists(spark: SparkSession, path: str) -> bool:
+    """One Hadoop FileSystem.exists on the path's own file system: a
+    driver-side call of a few ms, no Spark job."""
+    fs, hpath = _hadoop_path(spark, path)
+    return fs.exists(hpath)
+
+
 def read_parquet_or_none(
     spark: SparkSession, path: str, schema: StructType | str | None = None
 ) -> DataFrame | None:
@@ -37,14 +56,9 @@ def read_parquet_or_none(
     callers read None as "first run", and taking an unreadable store for
     a first run silently restarts or duplicates committed work. A known
     `schema` skips inference, so an empty committed dir reads as an empty
-    frame instead of failing.
-
-    "Missing" is one Hadoop FileSystem.exists on the path's own file
-    system (local, s3a, hdfs alike), a driver-side call of a few ms, not a
-    Spark analysis that fails with PATH_NOT_FOUND."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    conf = spark._jsparkSession.sessionState().newHadoopConf()
-    if not hpath.getFileSystem(conf).exists(hpath):
+    frame instead of failing. "Missing" is path_exists, not a Spark
+    analysis that fails with PATH_NOT_FOUND."""
+    if not path_exists(spark, path):
         return None
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(path)
@@ -59,3 +73,55 @@ def write_extracted(df: DataFrame, target: str, partition_col: str = "part_id") 
         df.write.mode("overwrite").partitionBy(partition_col).parquet(target)
     else:
         df.writeTo(target).overwritePartitions()
+
+
+PARAMS_FILE = "_params.json"
+
+
+def check_params(
+    spark: SparkSession, out_dir: str, params: dict, keeps_output: bool
+) -> dict | None:
+    """The drift rule of every resumable plan. `keeps_output` is the plan's
+    own test of whether this run keeps committed output in out_dir. If it
+    does, out_dir's params record must exist and equal `params` on params'
+    keys (it may also hold what the first run derived, like the job's hot
+    map), or this raises before the run writes. Returns the record, or None
+    when nothing is kept: the run then records its params (write_params).
+    The record goes through the path's Hadoop FileSystem: no Spark job."""
+    if not keeps_output:
+        return None
+    fs, hpath = _hadoop_path(spark, os.path.join(out_dir, PARAMS_FILE))
+    record, drift = None, "no params record beside committed output"
+    if fs.exists(hpath):
+        stream = fs.open(hpath)
+        try:
+            record = json.loads(bytes(stream.readAllBytes()))
+        finally:
+            stream.close()
+        drift = ", ".join(
+            f"{k}: committed {record.get(k)!r}, requested {v!r}"
+            for k, v in sorted(params.items())
+            if k not in record or record[k] != v
+        )
+    if drift:
+        raise ValueError(
+            f"params drift at {out_dir} ({drift}): resuming would mix output written "
+            "under other params; rerun with the committed ones or into a fresh out_dir"
+        )
+    return record
+
+
+def write_params(spark: SparkSession, out_dir: str, record: dict) -> None:
+    """Write out_dir's params record beside it, then rename it over the old
+    one (an atomic replace on local and hdfs file systems)."""
+    fs, hpath = _hadoop_path(spark, os.path.join(out_dir, PARAMS_FILE))
+    fs_api = spark._jvm.org.apache.hadoop.fs
+    tmp = fs_api.Path(hpath.toString() + ".tmp")
+    stream = fs.create(tmp, True)
+    try:
+        stream.write(bytearray(json.dumps(record, sort_keys=True).encode()))
+    finally:
+        stream.close()
+    overwrite = spark.sparkContext._gateway.new_array(fs_api.Options.Rename, 1)
+    overwrite[0] = fs_api.Options.Rename.OVERWRITE
+    fs_api.FileContext.getFileContext(hpath.toUri(), fs.getConf()).rename(tmp, hpath, overwrite)

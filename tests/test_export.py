@@ -231,20 +231,23 @@ def test_export_empty_input_raises_clearly(spark, tmp_path):
 
 def test_export_params_adoptable_after_crashed_first_run(spark, tmp_path):
     """A first run that died before the manifest committed leaves only the
-    params file; a rerun with different params must proceed (nothing
-    durable exists to mix with), while drift against a COMMITTED manifest
-    still raises (covered by test_export_params_drift_raises)."""
+    params record; a rerun with different params must proceed (nothing
+    durable exists to mix with) and record its own, while drift against a
+    COMMITTED manifest still raises (covered by
+    test_export_params_drift_raises)."""
     import json
     import os
 
     out = str(tmp_path / "exp")
     os.makedirs(out)
-    with open(os.path.join(out, "_export_params.json"), "w") as f:
+    with open(os.path.join(out, "_params.json"), "w") as f:
         json.dump({"seq_len": 999, "rows_per_shard": 1, "seed": 0}, f)
     stats = run_export_job(
         spark, _docs(spark), out, seq_len=16, rows_per_shard=500, seed=7
     )
     assert not stats["resumed"] and stats["n_chunks"] > 0
+    with open(os.path.join(out, "_params.json")) as f:
+        assert json.load(f) == {"seq_len": 16, "rows_per_shard": 500, "seed": 7}
 
 
 def test_export_tab_newline_only_docs_dropped(spark, tmp_path):

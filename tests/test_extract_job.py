@@ -4,6 +4,7 @@ the job's table, and a resume over a corrupt manifest."""
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import random
@@ -83,9 +84,11 @@ def _table(df):
 def test_extract_job_spark_job_counts(spark, pages_path, tmp_path):
     """The resume path reads the done set once, runs no emptiness pass and
     aggregates only this run's partitions; adaptive host stats are one
-    action of 2 jobs (one rollup). Ceilings are this plan's counts on
-    local[4]; the plan before it ran 13 / 8 / 18 (adaptive fresh / no-op /
-    1/8 resume) and 7 / 6 (uniform fresh / no-op) jobs here."""
+    action of 2 jobs (one rollup), and the layout (hot map included) is a
+    params record that costs no Spark job to write or read. Ceilings are
+    this plan's counts on local[4]; earlier plans ran 13 / 8 / 18 and then
+    8 / 6 / 9 (adaptive fresh / no-op / 1/8 resume), and 7 / 6 and then
+    5 / 2 (uniform fresh / no-op) jobs here."""
     pages = spark.read.parquet(pages_path)
 
     def job(out, **kw):
@@ -107,11 +110,11 @@ def test_extract_job_spark_job_counts(spark, pages_path, tmp_path):
     # so its no-op runs the (empty) pipeline and appends nothing
     assert len(_manifest_rows(spark, u)) == N_PARTS > len(_manifest_rows(spark, a))
     ceilings = {
-        "fresh_adaptive": 8,
-        "noop_adaptive": 6,
-        "resume_adaptive": 9,
+        "fresh_adaptive": 7,
+        "noop_adaptive": 3,
+        "resume_adaptive": 6,
         "fresh_uniform": 5,
-        "noop_uniform": 2,
+        "noop_uniform": 1,
     }
     over = {k: (n, ceilings[k]) for k, n in counts.items() if n > ceilings[k]}
     assert not over, f"jobs over their ceiling: {over}"
@@ -267,6 +270,42 @@ def test_compaction_of_file_uri_out_dir(spark, tmp_path):
             compact_extracted(spark, remote)
 
 
+def _record(out):
+    with open(f"{out}/_params.json") as f:
+        return json.load(f)
+
+
+@pytest.mark.parametrize(
+    "drift",
+    [
+        {"n_parts": 2 * N_PARTS},
+        {"n_parts": 2 * N_PARTS, "resume": False},
+        {"salting": "adaptive"},
+        {"n_salts": 2},
+        {"with_links": True},
+    ],
+    ids=lambda d: "-".join(f"{k}={v}" for k, v in d.items()),
+)
+def test_resume_under_other_params_raises(spark, pages_path, tmp_path, drift):
+    """The layout of a committed out_dir is its params record: a run that
+    keeps its output (extracted/ exists, whatever `resume` is) under any
+    other n_parts, salting, n_salts or face flag raises params drift and
+    writes nothing. Unchecked, resuming a 16-part out_dir with 32 parts
+    extracts every url again under new part_ids, next to the old ones."""
+    pages = spark.read.parquet(pages_path)
+    out = str(tmp_path / "o")
+    params = dict(n_parts=N_PARTS, n_salts=4, salting="uniform")
+    run_extract_job(spark, pages, out, **params)
+    files = _listing(out)
+    (key,) = [k for k in drift if k != "resume"]
+    with pytest.raises(ValueError, match=f"params drift .*{key}: committed"):
+        run_extract_job(spark, pages, out, **{**params, **drift})
+    assert _listing(out) == files
+    urls = [r["url"] for r in run_extract_job(spark, pages, out, **params).collect()]
+    assert len(urls) == len(set(urls)) == N_PAGES
+    assert _record(out) == {**params, "with_links": False, "with_anchors": False}
+
+
 def test_resume_over_corrupt_manifest_raises(spark, pages_path, tmp_path):
     """An unreadable manifest is not a first run: a resume that read it as
     "nothing done" would re-extract and append every partition again. The
@@ -382,10 +421,10 @@ def test_write_runs_one_task_per_core(spark, pages_path, tmp_path):
 
 
 def test_adaptive_job_without_hot_hosts_runs_one_python_stage(spark, pages_path, tmp_path):
-    """An adaptive job over uniform hosts persists an empty hot map. That
-    write is a JVM-only empty relation, so the only Python stage the job
-    runs is the extraction (an empty pandas frame would plan a Python
-    scan: a PythonRDD stage)."""
+    """An adaptive job over uniform hosts records an empty hot map. The
+    record is a driver-side file, so the only Python stage the job runs is
+    the extraction (no PythonRDD stage: an empty pandas frame would plan a
+    Python scan)."""
     pages = spark.read.parquet(pages_path).withColumn(
         "url",
         F.concat(
@@ -401,7 +440,7 @@ def test_adaptive_job_without_hot_hosts_runs_one_python_stage(spark, pages_path,
         "uniform_hosts",
         lambda: run_extract_job(spark, pages, out, n_parts=N_PARTS, salting="adaptive"),
     )
-    assert pq.read_table(f"{out}/hot_hosts").num_rows == 0
+    assert _record(out)["hot"] == {}
     assert len(_stage_tasks(spark, "uniform_hosts", "MapInPandas")) == 1
     assert _stage_tasks(spark, "uniform_hosts", "PythonRDD") == []
 
@@ -451,8 +490,7 @@ def test_extracted_partition_files_in_url_order(spark, pages_path, tmp_path):
     pages = spark.read.parquet(pages_path)
     out = str(tmp_path / "o")
     run_extract_job(spark, pages, out, n_parts=N_PARTS, salting="adaptive")
-    stored = pq.read_table(f"{out}/hot_hosts")
-    hot = dict(zip(stored["h"].to_pylist(), stored["s"].to_pylist()))
+    hot = _record(out)["hot"]
     salted = pages.select("url", hot_salted_part_id("url", hot, N_PARTS).alias("p"))
     expected = {r["url"]: r["p"] for r in salted.collect()}
 

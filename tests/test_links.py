@@ -8,6 +8,7 @@ import gc
 import hashlib
 import random
 import re
+import statistics
 import time
 from html import unescape
 from urllib.parse import urljoin
@@ -775,21 +776,28 @@ def test_link_faces_linear_time():
         links = extract_outlinks(raw, url)
         return links, extract_anchors(raw, url, valid=links)
 
-    # CPU time, the three sizes interleaved and the best of 7 rounds kept:
-    # a few-ms timing must not pick up other processes or one slow round
+    # CPU time, so other processes do not count, with the three sizes run
+    # back to back in each of 7 rounds. A shared core can switch speed for
+    # a few ms at a time, so each size is compared with the one before it
+    # in the same round, and the median of those ratios over the rounds is
+    # bounded: a per-size best can come from a fast window the next size
+    # never saw. A quadratic pass reads ~4 per doubling.
     gc.disable()
     try:
         for name, (unit, size) in ADVERSARIAL_SHAPES.items():
             docs = [_adversarial(unit, size << k) for k in range(3)]
             for run in (fused_call, wrappers):
-                secs = [float("inf")] * 3
+                rounds = []
                 for _ in range(7):
-                    for k, raw in enumerate(docs):
+                    secs = []
+                    for raw in docs:
                         t = time.process_time()
                         run(raw)
-                        secs[k] = min(secs[k], time.process_time() - t)
-                assert secs[1] <= 2.5 * secs[0] and secs[2] <= 2.5 * secs[1], (name, run, secs)
-                assert secs[2] < 0.25, (name, run, secs)
+                        secs.append(time.process_time() - t)
+                    rounds.append(secs)
+                growth = [statistics.median(r[k + 1] / r[k] for r in rounds) for k in (0, 1)]
+                assert max(growth) <= 2.5, (name, run, growth, rounds)
+                assert min(r[2] for r in rounds) < 0.25, (name, run, rounds)
     finally:
         gc.enable()
 

@@ -130,6 +130,15 @@ def test_resume_filter_never_shuffles_pages(spark, tmp_path):
     assert "Filter" in p
     assert {r["part_id"] for r in pend.select("part_id").distinct().collect()} == {0}
 
+    # an adaptive out_dir is read with the layout it recorded (its hot-host
+    # map), not with uniform salting: complete, it has nothing pending, and
+    # the recorded map is a literal, so still no Exchange
+    adaptive = str(tmp_path / "adaptive")
+    run_extract_job(spark, pages, adaptive, n_parts=16, n_salts=2, salting="adaptive")
+    pend = pending_pages(spark, pages, adaptive, n_parts=16, n_salts=2)
+    assert "Exchange" not in plan_of(pend)
+    assert pend.count() == 0
+
 
 def test_ann_brute_force_no_corpus_shuffle(spark):
     # ann1: query vector broadcast; corpus scanned once, TakeOrdered top-k

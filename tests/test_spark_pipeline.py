@@ -532,17 +532,31 @@ def test_fixture400_hashes_frozen():
 
 
 def test_adaptive_resume_rejects_legacy_hot_hosts(spark, pages_path, tmp_path):
-    """Resuming an adaptive-salted job over a hot_hosts map written by an
-    older layout (single column, different part_id formula) must fail with
-    an explicit error, not a KeyError mid-resume."""
+    """An out_dir written by an older layout holds extracted/ data and a
+    hot_hosts map (single column, different part_id formula) but no params
+    record. Resuming it must fail with params drift before it writes, not
+    re-derive a layout its manifest's part_ids were not assigned under."""
     out = str(tmp_path / "legacy")
     pages = spark.read.parquet(pages_path)
-    # simulate the pre-upgrade artifact: only column 'h'
+    run_extract_job(spark, pages, out, n_parts=16, salting="adaptive")
+    os.remove(f"{out}/_params.json")
     spark.createDataFrame([("big.example.com",)], "h string").coalesce(
         1
     ).write.parquet(f"{out}/hot_hosts")
-    with pytest.raises(ValueError, match="incompatible hot_hosts layout"):
+
+    def files():
+        return sorted((d, f, os.stat(os.path.join(d, f)).st_mtime_ns)
+                      for d, _, fs in os.walk(out) for f in fs)
+
+    before = files()
+    with pytest.raises(ValueError, match="params drift.*no params record"):
         run_extract_job(spark, pages, out, n_parts=16, salting="adaptive")
+    assert files() == before
+
+
+def _recorded_hot(out):
+    with open(f"{out}/_params.json") as f:
+        return sorted(json.load(f)["hot"].items())
 
 
 def test_adaptive_resume_with_drifted_skew(spark, pages_path, tmp_path):
@@ -557,9 +571,7 @@ def test_adaptive_resume_with_drifted_skew(spark, pages_path, tmp_path):
     out = str(tmp_path / "drift")
     pages1 = spark.read.parquet(pages_path)
     run_extract_job(spark, pages1, out, n_parts=16, salting="adaptive")
-    hot_before = sorted(
-        (r["h"], r["s"]) for r in spark.read.parquet(f"{out}/hot_hosts").collect()
-    )
+    hot_before = _recorded_hot(out)
 
     # simulate a crash: partitions with odd part_id never committed
     man_dir = f"{out}/manifest"
@@ -586,9 +598,7 @@ def test_adaptive_resume_with_drifted_skew(spark, pages_path, tmp_path):
     final = run_extract_job(spark, pages2, out, n_parts=16, salting="adaptive")
 
     # the learned map did not move (and did not learn the flood host)
-    hot_after = sorted(
-        (r["h"], r["s"]) for r in spark.read.parquet(f"{out}/hot_hosts").collect()
-    )
+    hot_after = _recorded_hot(out)
     assert hot_after == hot_before
     assert all(h != "flood.example.com" for h, _ in hot_after)
 
