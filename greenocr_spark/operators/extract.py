@@ -4,6 +4,9 @@ This is UD1+UD3+UD5+UD6 of SURVEY.md §2.9 fused into one Arrow-batched
 stage (one JVM↔Python boundary crossing per batch, never per row). The
 per-document math is greenocr_spark.extractor.core — the byte-identity
 spec — called unmodified, so Spark output ≡ reference extractor output.
+
+The stage can also count the job's manifest sums where it runs (PartTally):
+the job then needs no second pass over what it wrote.
 """
 
 from __future__ import annotations
@@ -12,6 +15,8 @@ from typing import Iterator
 
 import pandas as pd
 
+from pyspark import TaskContext
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -71,6 +76,32 @@ ANCHOR_FIELDS = [
 ]
 
 
+class PartTally(AccumulatorParam):
+    """Per-part_id manifest sums counted inside the extraction tasks. A
+    value is (splits, sums): the input splits merged so far and
+    {part_id: [n_docs, n_content, n_boilerplate, bytes_in, bytes_out]}.
+
+    Each task adds one value, for its own split, after its last batch.
+    Merges stay exact under retries: Spark drops a failed attempt's
+    update, and a second successful attempt of a split (a speculative
+    copy, a recomputed stage) is dropped here, because extraction is
+    deterministic and its sums equal the ones already merged. The driver
+    holds one split id per input split and one row per part_id."""
+
+    def zero(self, value):
+        return set(), {}
+
+    def addInPlace(self, value, update):
+        splits, sums = value
+        if not splits.isdisjoint(update[0]):
+            return value
+        splits |= update[0]
+        for part_id, row in update[1].items():
+            have = sums.get(part_id)
+            sums[part_id] = list(row) if have is None else [a + b for a, b in zip(have, row)]
+        return value
+
+
 def extract_schema(
     passthrough: list | None = None,
     input_schema: StructType | None = None,
@@ -95,6 +126,8 @@ def extract_pages(
     passthrough: tuple = (),
     with_links: bool = False,
     with_anchors: bool = False,
+    *,
+    tally=None,
 ) -> DataFrame:
     """Run main-content extraction over a pages DataFrame.
 
@@ -112,7 +145,11 @@ def extract_pages(
     with_anchors=True likewise fuses the anchor-text harvest ((dst, anchor)
     per closed <a> element, duplicates kept); composes freely with
     with_links. Either face flag runs extractor/links' one link pass per
-    page, which yields the outlinks and the anchors together."""
+    page, which yields the outlinks and the anchors together.
+
+    tally: an accumulator of PartTally. Each task then sums its rows'
+    manifest counts per part_id (a passthrough column) over all its
+    batches and adds them once, after its last batch."""
     schema = extract_schema(list(passthrough), df.schema, with_links, with_anchors)
     keep = ["url", "html", *passthrough]
     if with_links or with_anchors:
@@ -120,6 +157,7 @@ def extract_pages(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         trim_import_caches()
+        sums: dict = {}
         for pdf in batches:
             n = len(pdf)
             if n == 0:
@@ -165,10 +203,24 @@ def extract_pages(
                 if with_links:
                     out["outlinks"][i] = links
                     out["n_links"][i] = len(links)
+            if tally is not None:
+                counts = zip(
+                    pdf["part_id"].tolist(), out["n_content"], out["n_boilerplate"],
+                    out["bytes_in"], out["bytes_out"],
+                )
+                for part_id, n_content, n_boilerplate, b_in, b_out in counts:
+                    row = sums.setdefault(part_id, [0, 0, 0, 0, 0])
+                    row[0] += 1
+                    row[1] += n_content
+                    row[2] += n_boilerplate
+                    row[3] += b_in
+                    row[4] += b_out
             res = pd.DataFrame(out)
             for name in passthrough:
                 res[name] = pdf[name].values
             yield res
+        if tally is not None:
+            tally.add(({TaskContext.get().partitionId()}, sums))
 
     return df.select(*keep).mapInPandas(run, schema=schema)
 

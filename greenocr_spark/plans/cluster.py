@@ -39,7 +39,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from greenocr_spark.sources.pages import check_params, write_params
+from greenocr_spark.sources.pages import check_params, delete_path, write_params
 
 SCALE = 1000  # quantization: component -> round(x*1000) as long
 
@@ -172,10 +172,14 @@ def run_kmeans_job(
     d = len(qe.select("qe").first()["qe"])
 
     # a resume keeps the committed iterations, so they must have been
-    # computed under these params; resume=False keeps none
+    # computed under these params; resume=False keeps none, and a run
+    # that keeps none clears them: an earlier run's iterations past this
+    # run's last one would otherwise be where the next resume starts
     start_iter = _latest_committed_iter(out_dir) if resume else None
     params = {"k": k, "scale": SCALE, "d": d}
     if check_params(spark, out_dir, params, start_iter is not None) is None:
+        for kept in ("iters", "manifest"):
+            delete_path(spark, os.path.join(out_dir, kept))
         write_params(spark, out_dir, params)
 
     if start_iter is not None:

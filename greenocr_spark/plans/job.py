@@ -12,10 +12,12 @@ Physical plan (one shuffle total):
     → repartition(min(n_parts, cores), part_id) ← THE shuffle, of extracted rows
     → sortWithinPartitions(part_id, url)        ← deterministic output order
     → dynamic-partition-overwrite write (idempotent per partition)
-    → read back only the partitions outside the done set (pruned: this
-      run's) → metrics agg (≤ n_parts rows, collected) → manifest append
+    → manifest rows from the extraction tasks' own per-part_id sums (one
+      accumulator, ≤ n_parts rows on the driver), minus the done set
+    → manifest append: one parquet file written from the driver (no
+      Spark job, no read-back of the table just written)
 
-There is no separate emptiness pass: zero metric rows means nothing was
+There is no separate emptiness pass: zero tallied rows means nothing was
 pending, and the job appends nothing. A resume whose done set already
 holds every part_id in [0, n_parts) returns the stored table without
 scanning the input.
@@ -44,10 +46,11 @@ extraction; the input should have at least as many splits as cores,
 each holding rows (a bare limit() makes one: see
 sources/pages.limit_pages). The done set is ≤ n_parts
 ints (≤ 10^5), so dropping done rows is a hash-set filter inside each
-pages task, never a join; the metrics read only this run's partitions and
-reduce to n_parts rows map-side. Re-running a partition is idempotent via
-dynamic partition overwrite, so a crash between the data write and the
-manifest append self-heals on resume.
+pages task, never a join; the manifest sums arrive as one small value per
+extraction task (≤ n_parts rows each) and the driver keeps one row per
+part_id. Re-running a partition is idempotent via dynamic partition
+overwrite, so a crash between the data write and the manifest append
+self-heals on resume.
 """
 
 from __future__ import annotations
@@ -55,7 +58,7 @@ from __future__ import annotations
 import os
 import uuid
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
@@ -65,8 +68,9 @@ from greenocr_spark.functions.sqlfns import (
     hot_salted_part_id,
     salted_part_id,
 )
-from greenocr_spark.operators.extract import extract_pages, extract_schema
+from greenocr_spark.operators.extract import PartTally, extract_pages, extract_schema
 from greenocr_spark.sources.pages import (
+    append_parquet_file,
     check_params,
     path_exists,
     read_parquet_or_none,
@@ -77,6 +81,10 @@ from greenocr_spark.sources.pages import (
 MANIFEST_DDL = (
     "part_id int, status string, n_docs long, n_content_blocks long, "
     "n_boilerplate_blocks long, bytes_in long, bytes_out long, run_id string"
+)
+_ARROW_TYPES = {"int": pa.int32(), "long": pa.int64(), "string": pa.string()}
+MANIFEST_SCHEMA = pa.schema(
+    [(name, _ARROW_TYPES[kind]) for name, kind in (c.split() for c in MANIFEST_DDL.split(","))]
 )
 
 
@@ -93,15 +101,6 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
     failure propagates: treating a transient FS error as 'first run' would
     silently restart the whole job and re-extract every done partition."""
     return read_parquet_or_none(spark, _manifest_dir(out_dir), MANIFEST_DDL)
-
-
-def _write_rows(spark: SparkSession, rows: list, ddl: str, path: str, mode: str) -> None:
-    """Write a few driver-side rows as one parquet file. Handed over as
-    pandas, so Arrow ships them to the JVM directly: a plain list would
-    run a Python worker task that costs more than the write itself."""
-    names = [c.split()[0] for c in ddl.split(",")]
-    frame = spark.createDataFrame(pd.DataFrame(rows, columns=names), ddl)
-    frame.coalesce(1).write.mode(mode).parquet(path)
 
 
 def _done_part_ids(spark: SparkSession, out_dir: str) -> list:
@@ -191,8 +190,8 @@ def run_extract_job(
     table_schema = extract_schema(with_links=with_links, with_anchors=with_anchors)
     table_schema.add("part_id", IntegerType())
     # read once: drops done input rows on resume, and on every run keeps
-    # already-done partitions out of the metrics (a forced rerun appends
-    # no manifest rows for them)
+    # already-done partitions out of the manifest rows (a forced rerun
+    # appends none for them)
     done = _done_part_ids(spark, out_dir)
     if resume and set(range(n_parts)) <= set(done):
         # every part_id is done, so nothing can be pending: skip the scan
@@ -213,9 +212,14 @@ def run_extract_job(
     # part_id keeps each part_id in one task, so one file per part_id dir.
     # part_id leads the sort because the partitioned write needs that
     # order: a url-only sort would not satisfy it, and the optimizer would
-    # drop it for the write's own part_id sort.
+    # drop it for the write's own part_id sort. The extraction tasks also
+    # sum the manifest counts of what they extract (A4/A6 analog: per-
+    # partition running stats merged on the driver — reference
+    # train.py:1193-1207), so the table is never read back for them.
+    tally = spark.sparkContext.accumulator((set(), {}), PartTally())
     extracted = extract_pages(
-        df, passthrough=("part_id",), with_links=with_links, with_anchors=with_anchors
+        df, passthrough=("part_id",), with_links=with_links, with_anchors=with_anchors,
+        tally=tally,
     )
     write_extracted(
         extracted.repartition(min(n_parts, spark.sparkContext.defaultParallelism), "part_id")
@@ -224,23 +228,16 @@ def run_extract_job(
         partition_col="part_id",
     )
 
-    # Metrics/lineage rows (A4/A6 analog: per-partition running stats merged
-    # by a final agg — reference train.py:1193-1207). Read back the committed
-    # output so extraction runs exactly once.
-    written = spark.read.schema(table_schema).parquet(ext_path)
-    metrics = (
-        _drop_done(written, done)
-        .groupBy("part_id")
-        .agg(  # MANIFEST_DDL order, status and run_id added below
-            F.count("*"),
-            F.sum("n_content").cast("long"),
-            F.sum("n_boilerplate").cast("long"),
-            F.sum("bytes_in").cast("long"),
-            F.sum("bytes_out").cast("long"),
-        )
-        .collect()
-    )
-    if metrics:
-        rows = [(r[0], "done", *r[1:], run_id) for r in metrics]
-        _write_rows(spark, rows, MANIFEST_DDL, _manifest_dir(out_dir), "append")
-    return written
+    # the write's job has merged every extraction task's sums; part_ids
+    # already done get no second row (a forced rerun re-extracts them)
+    done_set = set(done)
+    rows = [
+        (part_id, "done", *sums, run_id)
+        for part_id, sums in sorted(tally.value[1].items())
+        if part_id not in done_set
+    ]
+    if rows:
+        names = MANIFEST_SCHEMA.names
+        table = pa.Table.from_pylist([dict(zip(names, r)) for r in rows], MANIFEST_SCHEMA)
+        append_parquet_file(spark, _manifest_dir(out_dir), table)
+    return spark.read.schema(table_schema).parquet(ext_path)

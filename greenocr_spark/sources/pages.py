@@ -1,15 +1,20 @@
 """Pages-table IO. read_pages and write_extracted take a source or target
 with a PATH_PREFIXES prefix as a parquet directory and anything else as a
 catalog table name (Iceberg on a cluster), so swapping the backend
-touches no caller. Also the one params record of every resumable plan's
-out_dir (check_params, write_params).
+touches no caller. Also the driver-side files of a resumable plan's
+out_dir, written through the path's Hadoop FileSystem with no Spark job:
+the one params record (check_params, write_params) and small parquet
+appends like the job's manifest (append_parquet_file).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -46,6 +51,40 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     driver-side call of a few ms, no Spark job."""
     fs, hpath = _hadoop_path(spark, path)
     return fs.exists(hpath)
+
+
+def delete_path(spark: SparkSession, path: str) -> None:
+    """Delete a file or a whole dir, if it is there (one Hadoop call)."""
+    fs, hpath = _hadoop_path(spark, path)
+    fs.delete(hpath, True)
+
+
+def _put_file(spark: SparkSession, path: str, data: bytes) -> None:
+    """Write `data` under a hidden name beside `path` (readers of the dir
+    skip names starting with '.'), then rename it to `path`, replacing
+    any file there: a reader sees the old file or the whole new one (an
+    atomic rename on local and hdfs file systems)."""
+    fs, hpath = _hadoop_path(spark, path)
+    fs_api = spark._jvm.org.apache.hadoop.fs
+    tmp = fs_api.Path(hpath.getParent(), f".{hpath.getName()}.tmp")
+    stream = fs.create(tmp, True)
+    try:
+        stream.write(bytearray(data))
+    finally:
+        stream.close()
+    overwrite = spark.sparkContext._gateway.new_array(fs_api.Options.Rename, 1)
+    overwrite[0] = fs_api.Options.Rename.OVERWRITE
+    fs_api.FileContext.getFileContext(hpath.toUri(), fs.getConf()).rename(tmp, hpath, overwrite)
+
+
+def append_parquet_file(spark: SparkSession, path: str, table: pa.Table) -> None:
+    """Add `table` to the parquet dir `path` as one new file, written from
+    the driver: no Spark job, and Spark's reads see it like a file a Spark
+    append wrote."""
+    sink = pa.BufferOutputStream()
+    pq.write_table(table, sink)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    _put_file(spark, os.path.join(path, name), sink.getvalue().to_pybytes())
 
 
 def read_parquet_or_none(
@@ -112,16 +151,6 @@ def check_params(
 
 
 def write_params(spark: SparkSession, out_dir: str, record: dict) -> None:
-    """Write out_dir's params record beside it, then rename it over the old
-    one (an atomic replace on local and hdfs file systems)."""
-    fs, hpath = _hadoop_path(spark, os.path.join(out_dir, PARAMS_FILE))
-    fs_api = spark._jvm.org.apache.hadoop.fs
-    tmp = fs_api.Path(hpath.toString() + ".tmp")
-    stream = fs.create(tmp, True)
-    try:
-        stream.write(bytearray(json.dumps(record, sort_keys=True).encode()))
-    finally:
-        stream.close()
-    overwrite = spark.sparkContext._gateway.new_array(fs_api.Options.Rename, 1)
-    overwrite[0] = fs_api.Options.Rename.OVERWRITE
-    fs_api.FileContext.getFileContext(hpath.toUri(), fs.getConf()).rename(tmp, hpath, overwrite)
+    """Write out_dir's params record, replacing the old one."""
+    data = json.dumps(record, sort_keys=True).encode()
+    _put_file(spark, os.path.join(out_dir, PARAMS_FILE), data)

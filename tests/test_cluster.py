@@ -126,6 +126,25 @@ def test_kmeans_params_drift_raises(spark, embeddings, tmp_path):
         run_kmeans_job(spark, embeddings, out, k=K + 1, max_iters=1)
 
 
+def test_forced_rerun_clears_earlier_iterations(spark, embeddings, tmp_path):
+    """resume=False keeps nothing of an earlier run: a longer k=8 run's
+    iterations and manifest rows past the forced k=2 run's last iteration
+    are gone, so the next resume starts from the k=2 run's own state."""
+    out = str(tmp_path / "km_forced")
+    long_run = run_kmeans_job(spark, embeddings, out, k=8, max_iters=4)
+    forced = run_kmeans_job(spark, embeddings, out, k=2, max_iters=2, resume=False,
+                            run_id="forced")
+    assert long_run["iters"] == 4 and forced["iters"] == 2 and not forced["converged"]
+    assert sorted(os.listdir(os.path.join(out, "iters"))) == ["0001", "0002"]
+    manifest = spark.read.parquet(os.path.join(out, "manifest")).collect()
+    assert sorted((r["iter"], r["run_id"]) for r in manifest) == [(1, "forced"), (2, "forced")]
+
+    resumed = run_kmeans_job(spark, embeddings, out, k=2, max_iters=3)
+    assert resumed["resumed"] and resumed["iters"] == 3
+    cids = [r["cid"] for r in spark.read.parquet(os.path.join(out, "centroids")).collect()]
+    assert sorted(cids) == [0, 1]
+
+
 def test_kmeans_iteration_plan_single_aggregate(spark, embeddings):
     """The per-iteration plan: assignment is a narrow broadcast projection
     (no exchange), and the E+M partials groupBy is the ONLY shuffle."""

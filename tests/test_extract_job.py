@@ -1,6 +1,7 @@
 """run_extract_job's plan budget and lineage: Spark jobs per run, manifest
-rows per run, the host-stat action behind adaptive salting, compaction of
-the job's table, and a resume over a corrupt manifest."""
+rows per run (counted in the extraction tasks, exact under a retried
+task), the host-stat action behind adaptive salting, compaction of the
+job's table, and a resume over a corrupt manifest."""
 
 from __future__ import annotations
 
@@ -10,6 +11,8 @@ import os
 import random
 import re
 import shutil
+import subprocess
+import sys
 from pathlib import Path
 from urllib.parse import urlsplit
 
@@ -25,7 +28,7 @@ from greenocr_spark.functions.sqlfns import (
     hot_salted_part_id,
     salted_part_id,
 )
-from greenocr_spark.operators.extract import extract_pages
+from greenocr_spark.operators.extract import PartTally, extract_pages
 from greenocr_spark.plans.job import run_extract_job
 from greenocr_spark.sources.pages import limit_pages, write_extracted
 
@@ -60,6 +63,23 @@ def _manifest_rows(spark, out):
     return sorted(tuple(r) for r in m.collect())
 
 
+def _table_aggregates(table):
+    """The manifest rows a job's table implies, as _manifest_rows lists them."""
+    return sorted(
+        tuple(r)
+        for r in table.groupBy("part_id")
+        .agg(
+            F.lit("done"),
+            F.count("*"),
+            F.sum("n_content"),
+            F.sum("n_boilerplate"),
+            F.sum("bytes_in"),
+            F.sum("bytes_out"),
+        )
+        .collect()
+    )
+
+
 def _lose_partitions(spark, src, dst, seed="lost"):
     """Copy a committed job and lose 1/8 of its partitions — their data
     dirs and manifest rows, as a crash before the manifest commit would.
@@ -82,13 +102,14 @@ def _table(df):
 
 
 def test_extract_job_spark_job_counts(spark, pages_path, tmp_path):
-    """The resume path reads the done set once, runs no emptiness pass and
-    aggregates only this run's partitions; adaptive host stats are one
-    action of 2 jobs (one rollup), and the layout (hot map included) is a
-    params record that costs no Spark job to write or read. Ceilings are
-    this plan's counts on local[4]; earlier plans ran 13 / 8 / 18 and then
-    8 / 6 / 9 (adaptive fresh / no-op / 1/8 resume), and 7 / 6 and then
-    5 / 2 (uniform fresh / no-op) jobs here."""
+    """The resume path reads the done set once and runs no emptiness pass;
+    adaptive host stats are one action of 2 jobs (one rollup), the layout
+    (hot map included) is a params record, and the manifest rows come from
+    the extraction tasks and are written from the driver: none of the
+    three costs a Spark job. Ceilings are this plan's counts on local[4];
+    earlier plans ran 13 / 8 / 18, then 8 / 6 / 9, then 7 / 3 / 6
+    (adaptive fresh / no-op / 1/8 resume), and 7 / 6, then 5 / 2, then
+    5 / 1 (uniform fresh / no-op) jobs here."""
     pages = spark.read.parquet(pages_path)
 
     def job(out, **kw):
@@ -110,10 +131,10 @@ def test_extract_job_spark_job_counts(spark, pages_path, tmp_path):
     # so its no-op runs the (empty) pipeline and appends nothing
     assert len(_manifest_rows(spark, u)) == N_PARTS > len(_manifest_rows(spark, a))
     ceilings = {
-        "fresh_adaptive": 7,
+        "fresh_adaptive": 4,
         "noop_adaptive": 3,
-        "resume_adaptive": 6,
-        "fresh_uniform": 5,
+        "resume_adaptive": 3,
+        "fresh_uniform": 2,
         "noop_uniform": 1,
     }
     over = {k: (n, ceilings[k]) for k, n in counts.items() if n > ceilings[k]}
@@ -162,6 +183,121 @@ def test_extract_job_manifest_rows(spark, pages_path, tmp_path):
     _lose_partitions(spark, out, forced, seed="forced")
     run_extract_job(spark, pages, forced, n_parts=N_PARTS, n_salts=4, resume=False)
     assert _manifest_rows(spark, forced) == fresh
+
+
+def test_part_tally_counts_each_split_once():
+    """The manifest accumulator's merge: a split whose sums were merged
+    already (a retried or speculative attempt of the same task) adds
+    nothing, other splits add up per part_id."""
+    param = PartTally()
+    value = param.zero(None)
+    split3 = ({3}, {0: [2, 5, 1, 100, 40], 5: [1, 1, 0, 10, 4]})
+    split4 = ({4}, {0: [1, 1, 1, 10, 2]})
+    for update in (split3, split4, split3):
+        value = param.addInPlace(value, update)
+    assert value == ({3, 4}, {0: [3, 6, 2, 110, 42], 5: [1, 1, 0, 10, 4]})
+    assert split3[1][0] == [2, 5, 1, 100, 40]  # an update is not aliased
+
+
+RETRY_CHILD = r"""
+import itertools, json, os, sys
+import pyarrow.parquet as pq
+from pyspark import TaskContext
+import greenocr_spark.operators.extract as extract_module
+from greenocr_spark.fixtures import pages_arrow_table
+from greenocr_spark.plans.job import run_extract_job
+from greenocr_spark.session import build_session
+from tests.test_extract_job import _lose_partitions, _manifest_rows, _table, _table_aggregates
+
+tmp = sys.argv[1]
+spark = build_session(master="local[4,2]", shuffle_partitions=4,
+                      extra_conf={"spark.driver.memory": "1g"})
+sc = spark.sparkContext
+# more rows than one Arrow batch (1024), all in one row group: one task
+# extracts them all
+pq.write_table(pages_arrow_table(1200), f"{tmp}/pages.parquet")
+pages = spark.read.parquet(f"{tmp}/pages.parquet")
+
+extract_document = extract_module.extract_document
+
+def fail_first_attempt(raw, cfg, calls=itertools.count()):
+    # attempt 0 of a task dies on the first page after its first batch,
+    # once that batch's rows are extracted, written out and tallied
+    if next(calls) == 1024 and TaskContext.get().attemptNumber() == 0:
+        raise RuntimeError("injected task failure")
+    return extract_document(raw, cfg)
+
+# shipped to the workers with the batch function that calls it
+extract_module.extract_document = fail_first_attempt
+
+def failed_tasks(group):
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    st = sc.statusTracker()
+    return sum(st.getStageInfo(s).numFailedTasks
+               for j in st.getJobIdsForGroup(group) for s in st.getJobInfo(j).stageIds)
+
+out = f"{tmp}/o"
+sc.setJobGroup("fresh", "fresh")
+fresh = run_extract_job(spark, pages, out, n_parts=8)
+result = {"failed": failed_tasks("fresh"),
+          "manifest_is_table": _manifest_rows(spark, out) == _table_aggregates(fresh),
+          "n_docs": sum(r[2] for r in _manifest_rows(spark, out))}
+_lose_partitions(spark, out, f"{tmp}/o8")
+resumed = run_extract_job(spark, pages, f"{tmp}/o8", n_parts=8)
+result["resumed_is_fresh"] = _table(resumed) == _table(fresh)
+result["resumed_manifest"] = _manifest_rows(spark, f"{tmp}/o8") == _manifest_rows(spark, out)
+print(json.dumps(result))
+"""
+
+
+def test_manifest_exact_when_an_extraction_task_is_retried(tmp_path):
+    """The extraction task's first attempt dies after tallying its first
+    batch; Spark drops that attempt's sums and the retry's are merged once,
+    so the manifest still equals the table's per-part_id aggregates, and a
+    resume after losing 1/8 of the partitions matches the fresh table. One
+    session in a child process: the failure is injected into the batch
+    function the workers unpickle, and local[4,2] allows one retry."""
+    root = Path(__file__).resolve().parent.parent
+    res = subprocess.run(
+        [sys.executable, "-c", RETRY_CHILD, str(tmp_path)],
+        capture_output=True, text=True, cwd=str(root), timeout=600,
+        env=dict(os.environ, PYTHONPATH=str(root)),
+    )
+    assert res.returncode == 0, res.stderr[-4000:]
+    got = json.loads(res.stdout.strip().splitlines()[-1])
+    assert got == {
+        "failed": 1,
+        "manifest_is_table": True,
+        "n_docs": 1200,
+        "resumed_is_fresh": True,
+        "resumed_manifest": True,
+    }
+
+
+def test_fresh_job_never_scans_its_output(spark, pages_path, tmp_path):
+    """A fresh job's manifest comes from its extraction tasks, so no stage
+    it runs reads the table it wrote. The pages are ORC, so every parquet
+    scan a stage runs would be a read of the job's own output."""
+    orc = str(tmp_path / "pages.orc")
+    spark.read.parquet(pages_path).write.orc(orc)
+    pages = spark.read.orc(orc)
+    _counted(
+        spark,
+        "own_output",
+        lambda: run_extract_job(spark, pages, str(tmp_path / "o"), n_parts=N_PARTS,
+                                salting="adaptive"),
+    )
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    scans = [
+        name
+        for job in st.getJobIdsForGroup("own_output")
+        for sid in st.getJobInfo(job).stageIds
+        if st.getStageInfo(sid) is not None
+        for name in _stage_graph(sc, sid)
+        if name.startswith("Scan ")
+    ]
+    assert scans and {s.strip() for s in scans} == {"Scan orc"}, scans
 
 
 def _listing(root):
@@ -406,7 +542,7 @@ def test_write_runs_one_task_per_core(spark, pages_path, tmp_path):
     _counted(spark, "width", lambda: run_extract_job(spark, pages, out, n_parts=N_PARTS))
     cores = spark.sparkContext.defaultParallelism
     assert 1 < cores < N_PARTS
-    # the write stage reads the shuffle; the manifest write reads local rows
+    # the write stage reads the shuffle
     assert _stage_tasks(spark, "width", "WriteFiles", "ShuffledRowRDD") == [cores]
 
     keyed = pages.withColumn("part_id", salted_part_id(F.col("url"), N_PARTS))
