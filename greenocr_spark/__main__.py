@@ -4,8 +4,6 @@ Commands:
     extract   --input PATH|TABLE --output DIR [--n-parts N] [--n-salts S]
               [--no-resume] [--limit N]   (or --fixture-pages N)
     calibrate --input PATH --sample N     grid-fit scorer config on labeled pages
-    compact   --output DIR [--target-mb N] [--min-files K]
-              merge small files in DIR/extracted (rewrite_data_files analog)
     curate    --input PATH --output DIR [--min-tokens N] [--max-dup-frac F]
               [--eval-input PATH]  decontaminate against a benchmark table
               [--langs en,de,...] [--no-neardup] [--no-resample] [--no-resume]
@@ -78,27 +76,6 @@ def main() -> int:
         cfg, acc, _ = calibrate(labeled)
         print(json.dumps({"threshold": cfg.threshold, "neargood_chars": cfg.neargood_chars,
                           "accuracy": round(acc, 4)}))
-        spark.stop()
-        return 0
-    if cmd == "compact":
-        import argparse
-        import json
-
-        ap = argparse.ArgumentParser(prog="greenocr_spark compact")
-        ap.add_argument("--output", required=True)
-        ap.add_argument("--target-mb", type=int, default=128)
-        ap.add_argument("--min-files", type=int, default=2)
-        a = ap.parse_args(rest)
-        from greenocr_spark.plans.compact import compact_extracted
-        from greenocr_spark.session import build_session
-
-        spark = build_session(app_name="compact")
-        spark.sparkContext.setLogLevel("WARN")
-        stats = compact_extracted(
-            spark, a.output, target_bytes=a.target_mb * 1024 * 1024,
-            min_files=a.min_files,
-        )
-        print(json.dumps(stats))
         spark.stop()
         return 0
     if cmd == "curate":

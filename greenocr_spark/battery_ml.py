@@ -3428,7 +3428,7 @@ def z1_zorder_key(spark, sf_dir):
     # the key is computed with pure integer bit arithmetic — JVM-codegen'd
     # narrow projection, exact in both engines — and the table layout step
     # is repartitionByRange(zval) + sortWithinPartitions(zval) at write
-    # time. At 100 TB this is a maintenance job like plans/compact.py.
+    # time. At 100 TB this is a table-maintenance job of its own.
     li = t(spark, sf_dir, "lineitem")
     a = (F.col("l_orderkey") % 256).cast("long")
     b = (F.col("l_partkey") % 256).cast("long")

@@ -100,20 +100,20 @@ def adaptive_salted_part_id(
         if r["h"] is not None and r["count"] > budget
     }
     return (
-        df.withColumn("part_id", hot_salted_part_id(url_col, hot, n_parts, n_salts)),
+        df.withColumn("part_id", hot_salted_part_id(url_col, hot, n_parts)),
         hot,
     )
 
 
-def hot_salted_part_id(url_col: str, hot, n_parts: int, n_salts: int = 8) -> Column:
+def hot_salted_part_id(url_col: str, hot, n_parts: int) -> Column:
     """part_id for a KNOWN hot-host assignment: hot hosts get a per-url salt
     in [0, salts_for_host) folded in, cold hosts hash by host alone. Split
     out so a resumed job can reuse the hot map the first run recorded in
     its params record (part_id stability across runs must not depend on
     re-deriving hot hosts from a changed input — ADVICE r01).
 
-    `hot` is {host: n_salts_for_host}; `n_salts` is accepted for signature
-    stability only, since the map carries each host's salt count.
+    `hot` is {host: n_salts_for_host}: the map carries each host's salt
+    count.
 
     Hot buckets are laid out ROUND-ROBIN, not hashed: bucket (host, salt)
     gets part_id = (offset_of_host + salt) % n_parts, with offsets the

@@ -39,9 +39,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from greenocr_spark.sources.pages import check_params, delete_path, write_params
+from greenocr_spark.sources.pages import (
+    append_parquet_file, check_params, delete_path, glob_paths, write_params,
+)
 
 SCALE = 1000  # quantization: component -> round(x*1000) as long
+MANIFEST_DDL = "iter int, inertia long, n_moved int, run_id string"
 
 
 def _iround_div(s: int, n: int) -> int:
@@ -139,15 +142,11 @@ def _iter_dir(out_dir: str, it: int) -> str:
     return os.path.join(out_dir, "iters", f"{it:04d}")
 
 
-def _latest_committed_iter(out_dir: str) -> int | None:
-    root = os.path.join(out_dir, "iters")
-    if not os.path.isdir(root):
-        return None
-    done = [
-        int(name)
-        for name in os.listdir(root)
-        if name.isdigit() and os.path.exists(os.path.join(root, name, "_SUCCESS"))
-    ]
+def _latest_committed_iter(spark: SparkSession, out_dir: str) -> int | None:
+    """The last iteration whose centroid write committed (has _SUCCESS)."""
+    markers = glob_paths(spark, os.path.join(out_dir, "iters", "*", "_SUCCESS"))
+    names = (m.split("/")[-2] for m in markers)
+    done = [int(name) for name in names if name.isdigit()]
     return max(done) if done else None
 
 
@@ -175,7 +174,7 @@ def run_kmeans_job(
     # computed under these params; resume=False keeps none, and a run
     # that keeps none clears them: an earlier run's iterations past this
     # run's last one would otherwise be where the next resume starts
-    start_iter = _latest_committed_iter(out_dir) if resume else None
+    start_iter = _latest_committed_iter(spark, out_dir) if resume else None
     params = {"k": k, "scale": SCALE, "d": d}
     if check_params(spark, out_dir, params, start_iter is not None) is None:
         for kept in ("iters", "manifest"):
@@ -208,10 +207,10 @@ def run_kmeans_job(
         spark.createDataFrame(cents, "cid int, qc array<long>").coalesce(
             1
         ).write.mode("overwrite").parquet(_iter_dir(out_dir, it))
-        spark.createDataFrame(
-            [(it, inertia, n_moved, run_id)],
-            "iter int, inertia long, n_moved int, run_id string",
-        ).coalesce(1).write.mode("append").parquet(os.path.join(out_dir, "manifest"))
+        append_parquet_file(
+            spark, os.path.join(out_dir, "manifest"), [(it, inertia, n_moved, run_id)],
+            MANIFEST_DDL,
+        )
         converged = n_moved == 0
 
     final = spark.createDataFrame(cents, "cid int, qc array<long>")

@@ -35,7 +35,6 @@ Scale shape per stage (10^12-doc corpus):
 from __future__ import annotations
 
 import os
-import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -48,10 +47,11 @@ from greenocr_spark.operators.text import (
     _spark_words,
 )
 from greenocr_spark.sources.pages import (
-    check_params, path_exists, read_parquet_or_none, write_params,
+    append_parquet_file, check_params, delete_path, path_exists, read_parquet_or_none,
+    write_params,
 )
 
-CURATE_MANIFEST_COLS = ["stage", "idx", "rows_in", "rows_out", "run_id"]
+CURATE_MANIFEST_DDL = "stage string, idx int, rows_in long, rows_out long, run_id string"
 
 
 def _mixture_weight_table(d):
@@ -219,7 +219,7 @@ def run_curate_job(
         # rows — clear it so the append-per-stage below rebuilds a manifest
         # describing exactly one run (export.py invalidates its manifest the
         # same way before touching shards)
-        shutil.rmtree(os.path.join(out_dir, "manifest"), ignore_errors=True)
+        delete_path(spark, os.path.join(out_dir, "manifest"))
 
     stages: list[tuple[str, object]] = [
         (
@@ -272,12 +272,9 @@ def run_curate_job(
             compute(cur).write.mode("overwrite").parquet(sdir)
             ids = spark.read.parquet(sdir)
             rows_out = ids.count()
-            spark.createDataFrame(
-                [(name, idx, rows_in, rows_out, run_id)],
-                "stage string, idx int, rows_in long, rows_out long,"
-                " run_id string",
-            ).coalesce(1).write.mode("append").parquet(
-                os.path.join(out_dir, "manifest")
+            append_parquet_file(
+                spark, os.path.join(out_dir, "manifest"),
+                [(name, idx, rows_in, rows_out, run_id)], CURATE_MANIFEST_DDL,
             )
             rows_in = rows_out
         else:
@@ -285,7 +282,7 @@ def run_curate_job(
         cur = docs.join(ids.select("doc_id"), "doc_id", "left_semi")
 
     curated_dir = os.path.join(out_dir, "curated")
-    if not any_fresh and os.path.exists(os.path.join(curated_dir, "_SUCCESS")):
+    if not any_fresh and path_exists(spark, os.path.join(curated_dir, "_SUCCESS")):
         # every stage resumed from its committed survivor set AND the final
         # table finished its write (crash between last stage and this write
         # leaves no _SUCCESS → falls through to the rewrite): true no-op —
@@ -297,4 +294,4 @@ def run_curate_job(
 
 
 def read_curate_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    return read_parquet_or_none(spark, os.path.join(out_dir, "manifest"))
+    return read_parquet_or_none(spark, os.path.join(out_dir, "manifest"), CURATE_MANIFEST_DDL)

@@ -39,15 +39,14 @@ funnels the corpus through one partition.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from greenocr_spark.operators.text import _spark_words
-from greenocr_spark.sources.pages import check_params, path_exists, write_params
-
-EXPORT_MANIFEST_COLS = ["shard_id", "n_rows", "min_pos", "max_pos", "n_tokens"]
+from greenocr_spark.sources.pages import (
+    check_params, delete_path, glob_paths, path_exists, write_params,
+)
 
 
 def chunk_corpus(docs, seq_len: int):
@@ -122,16 +121,13 @@ def _shards_match_manifest(
 ) -> bool:
     """True iff every shard_id the manifest describes has its partition dir
     under out_dir/shards (partial deletions → False → recompute)."""
-    shards_dir = os.path.join(out_dir, "shards")
-    if not os.path.isdir(shards_dir):
-        return False
-    # skip unparsable partition dirs (shard_id=__HIVE_DEFAULT_PARTITION__,
-    # stray temp dirs) instead of crashing resume on ValueError (ADVICE r04)
-    on_disk = {
-        int(name.split("=", 1)[1])
-        for name in os.listdir(shards_dir)
-        if name.startswith("shard_id=") and name.split("=", 1)[1].isdigit()
-    }
+    # skip unparsable partition dirs (shard_id=__HIVE_DEFAULT_PARTITION__)
+    # instead of crashing resume on ValueError (ADVICE r04)
+    ids = (
+        p.rsplit("=", 1)[1]
+        for p in glob_paths(spark, os.path.join(out_dir, "shards", "shard_id=*"))
+    )
+    on_disk = {int(i) for i in ids if i.isdigit()}
     manifest_ids = {
         r["shard_id"]
         for r in spark.read.parquet(manifest_dir).select("shard_id").collect()
@@ -188,7 +184,7 @@ def run_export_job(
     # dies between the shard overwrite and the manifest write, a resume
     # must see "no committed manifest" rather than the previous run's
     # manifest blessing shards it no longer describes
-    shutil.rmtree(manifest_dir, ignore_errors=True)
+    delete_path(spark, manifest_dir)
     shuffled = shuffle_positions(chunks, seed)
     sharded = shuffled.withColumn(
         "shard_id", F.floor(F.col("pos") / F.lit(rows_per_shard)).cast("long")

@@ -58,7 +58,7 @@ from __future__ import annotations
 import os
 import uuid
 
-import pyarrow as pa
+from pyspark.accumulators import _accumulatorRegistry
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
@@ -81,10 +81,6 @@ from greenocr_spark.sources.pages import (
 MANIFEST_DDL = (
     "part_id int, status string, n_docs long, n_content_blocks long, "
     "n_boilerplate_blocks long, bytes_in long, bytes_out long, run_id string"
-)
-_ARROW_TYPES = {"int": pa.int32(), "long": pa.int64(), "string": pa.string()}
-MANIFEST_SCHEMA = pa.schema(
-    [(name, _ARROW_TYPES[kind]) for name, kind in (c.split() for c in MANIFEST_DDL.split(","))]
 )
 
 
@@ -124,7 +120,7 @@ def _with_part_id(pages: DataFrame, layout: dict) -> DataFrame:
     salting through its recorded hot-host map, uniform salting by url."""
     n_parts, n_salts = layout["n_parts"], layout["n_salts"]
     if layout["salting"] == "adaptive":
-        part_id = hot_salted_part_id("url", layout["hot"], n_parts, n_salts)
+        part_id = hot_salted_part_id("url", layout["hot"], n_parts)
     else:
         part_id = salted_part_id(F.col("url"), n_parts, n_salts)
     return pages.withColumn("part_id", part_id)
@@ -236,8 +232,11 @@ def run_extract_job(
         for part_id, sums in sorted(tally.value[1].items())
         if part_id not in done_set
     ]
+    # pyspark keeps every Python accumulator for the SparkContext's life;
+    # drop this one now that its value is read. Not before the write has
+    # returned: the driver's update server adds each task's update through
+    # the registry, so a late update would find no entry.
+    del _accumulatorRegistry[tally.aid]
     if rows:
-        names = MANIFEST_SCHEMA.names
-        table = pa.Table.from_pylist([dict(zip(names, r)) for r in rows], MANIFEST_SCHEMA)
-        append_parquet_file(spark, _manifest_dir(out_dir), table)
+        append_parquet_file(spark, _manifest_dir(out_dir), rows, MANIFEST_DDL)
     return spark.read.schema(table_schema).parquet(ext_path)

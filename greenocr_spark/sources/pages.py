@@ -1,10 +1,15 @@
 """Pages-table IO. read_pages and write_extracted take a source or target
 with a PATH_PREFIXES prefix as a parquet directory and anything else as a
 catalog table name (Iceberg on a cluster), so swapping the backend
-touches no caller. Also the driver-side files of a resumable plan's
-out_dir, written through the path's Hadoop FileSystem with no Spark job:
-the one params record (check_params, write_params) and small parquet
-appends like the job's manifest (append_parquet_file).
+touches no caller.
+
+Also the one way a plan reaches its out_dir outside Spark's reads and
+writes: through the path's own Hadoop FileSystem (local, file:, s3a,
+hdfs alike), driver-side and with no Spark job. A plan lists
+(glob_paths), tests (path_exists) and deletes (delete_path) there,
+keeps its one params record (check_params, write_params) and adds
+small parquet files of driver-side rows, like the manifests
+(append_parquet_file).
 """
 
 from __future__ import annotations
@@ -59,6 +64,14 @@ def delete_path(spark: SparkSession, path: str) -> None:
     fs.delete(hpath, True)
 
 
+def glob_paths(spark: SparkSession, pattern: str) -> list[str]:
+    """The paths matching a Hadoop glob (`*`, `?`, `[...]`, `{a,b}`), as
+    fully qualified strings: one globStatus on the pattern's own file
+    system. A pattern under a missing dir matches nothing."""
+    fs, hpath = _hadoop_path(spark, pattern)
+    return [st.getPath().toString() for st in fs.globStatus(hpath) or []]
+
+
 def _put_file(spark: SparkSession, path: str, data: bytes) -> None:
     """Write `data` under a hidden name beside `path` (readers of the dir
     skip names starting with '.'), then rename it to `path`, replacing
@@ -77,10 +90,17 @@ def _put_file(spark: SparkSession, path: str, data: bytes) -> None:
     fs_api.FileContext.getFileContext(hpath.toUri(), fs.getConf()).rename(tmp, hpath, overwrite)
 
 
-def append_parquet_file(spark: SparkSession, path: str, table: pa.Table) -> None:
-    """Add `table` to the parquet dir `path` as one new file, written from
-    the driver: no Spark job, and Spark's reads see it like a file a Spark
-    append wrote."""
+_ARROW_TYPES = {"int": pa.int32(), "long": pa.int64(), "string": pa.string()}
+
+
+def append_parquet_file(spark: SparkSession, path: str, rows: list, ddl: str) -> None:
+    """Add `rows` (tuples in the column order of `ddl`, a Spark DDL string
+    of int, long and string columns) to the parquet dir `path` as one new
+    file, written from the driver: no Spark job, and Spark's reads see it
+    like a file a Spark append of the same DDL wrote."""
+    fields = [c.split() for c in ddl.split(",")]
+    schema = pa.schema([(name, _ARROW_TYPES[kind]) for name, kind in fields])
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema)
     sink = pa.BufferOutputStream()
     pq.write_table(table, sink)
     name = f"part-{uuid.uuid4().hex}.parquet"

@@ -95,8 +95,8 @@ def test_kmeans_matches_pure_python(spark, embeddings, pure, tmp_path):
     assert got == ref_cents  # exact longs — bit-for-bit, any parallelism
 
 
-def test_kmeans_resume_at_iteration(spark, embeddings, pure, tmp_path):
-    out = str(tmp_path / "km_resume")
+def test_kmeans_resume_at_iteration(spark, embeddings, pure, tmp_path, as_uri=False):
+    out = (tmp_path / "km_resume").as_uri() if as_uri else str(tmp_path / "km_resume")
     s1 = run_kmeans_job(spark, embeddings, out, k=K, max_iters=3)
     assert s1["iters"] == 3 and s1["resumed"] is False
     s2 = run_kmeans_job(spark, embeddings, out, k=K, max_iters=50)
@@ -117,6 +117,37 @@ def test_kmeans_resume_at_iteration(spark, embeddings, pure, tmp_path):
     s3 = run_kmeans_job(spark, embeddings, out, k=K, max_iters=50)
     assert s3["resumed"] is True and s3["iters"] == s2["iters"]
     assert spark.read.parquet(os.path.join(out, "manifest")).count() == len(iters)
+
+
+def test_kmeans_resume_at_iteration_file_uri(spark, embeddings, pure, tmp_path):
+    """A file: out_dir resumes like a plain path: the committed iterations
+    are listed through the path's own file system."""
+    test_kmeans_resume_at_iteration(spark, embeddings, pure, tmp_path, as_uri=True)
+
+
+def test_iteration_rows_appended_without_a_spark_job(spark, embeddings, tmp_path, monkeypatch):
+    """Each iteration's manifest row is one parquet file written from the
+    driver: the append runs no Spark job (counted by job group)."""
+    import greenocr_spark.plans.cluster as cluster_module
+
+    sc, append, iters = spark.sparkContext, cluster_module.append_parquet_file, []
+
+    def append_in_group(spark, path, rows, ddl):
+        iters.append(rows[0][0])
+        sc.setJobGroup("iter_append", "iter_append")
+        try:
+            append(spark, path, rows, ddl)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(cluster_module, "append_parquet_file", append_in_group)
+    out = str(tmp_path / "km")
+    run_kmeans_job(spark, embeddings, out, k=K, max_iters=2)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert iters == [1, 2]
+    assert list(sc.statusTracker().getJobIdsForGroup("iter_append")) == []
+    manifest = spark.read.parquet(os.path.join(out, "manifest"))
+    assert sorted(r["iter"] for r in manifest.collect()) == iters
 
 
 def test_kmeans_params_drift_raises(spark, embeddings, tmp_path):

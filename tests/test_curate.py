@@ -102,13 +102,13 @@ def test_curate_resample_deterministic(spark, tmp_path):
     assert a == b  # md5-ppm sampling is reproducible across runs
 
 
-def test_curate_full_recompute_recommits_params_and_manifest(spark, tmp_path):
+def test_curate_full_recompute_recommits_params_and_manifest(spark, tmp_path, as_uri=False):
     # ADVICE r03: resume=False recomputes under NEW params — the committed
     # fingerprint must follow (else a later resume=True run would pass the
     # drift check against stale params and mix survivor sets), and the
     # funnel manifest must describe exactly the latest run, not an
     # append-accumulation of both runs.
-    out = str(tmp_path / "cur")
+    out = (tmp_path / "cur").as_uri() if as_uri else str(tmp_path / "cur")
     docs = _corpus(spark)
     run_curate_job(spark, docs, out, min_tokens=4, resample=False, neardup=False)
     # forced recompute with different params succeeds and adopts them
@@ -124,6 +124,36 @@ def test_curate_full_recompute_recommits_params_and_manifest(spark, tmp_path):
     with _pt.raises(ValueError, match="params drift"):
         run_curate_job(spark, docs, out, min_tokens=4, resample=False,
                        neardup=False)
+
+
+def test_curate_full_recompute_recommits_params_and_manifest_file_uri(spark, tmp_path):
+    """A file: out_dir clears its funnel manifest on a forced rerun like a
+    plain path does."""
+    test_curate_full_recompute_recommits_params_and_manifest(spark, tmp_path, as_uri=True)
+
+
+def test_funnel_rows_appended_without_a_spark_job(spark, tmp_path, monkeypatch):
+    """Each fresh stage's funnel row is one parquet file written from the
+    driver: the append runs no Spark job (counted by job group)."""
+    import greenocr_spark.plans.curate as curate_module
+
+    sc, append, stages = spark.sparkContext, curate_module.append_parquet_file, []
+
+    def append_in_group(spark, path, rows, ddl):
+        stages.append(rows[0][0])
+        sc.setJobGroup("funnel_append", "funnel_append")
+        try:
+            append(spark, path, rows, ddl)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(curate_module, "append_parquet_file", append_in_group)
+    out = str(tmp_path / "cur")
+    run_curate_job(spark, _corpus(spark), out, neardup=False, resample=False)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert stages == ["quality", "exact"]
+    assert list(sc.statusTracker().getJobIdsForGroup("funnel_append")) == []
+    assert sorted(r["stage"] for r in read_curate_manifest(spark, out).collect()) == sorted(stages)
 
 
 def test_curate_decontamination_stage(spark, tmp_path):

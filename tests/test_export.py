@@ -112,20 +112,25 @@ def test_export_shards_reassemble_to_corpus(spark, tmp_path):
     assert bad == 0
 
 
-def test_export_deterministic_and_resume(spark, tmp_path):
-    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+def test_export_deterministic_and_resume(spark, tmp_path, as_uri=False):
+    a, b, c = ((tmp_path / n).as_uri() if as_uri else str(tmp_path / n) for n in "abc")
     docs = _docs(spark)
     s1 = run_export_job(spark, docs, a, seq_len=16, rows_per_shard=500, seed=7)
     s2 = run_export_job(spark, docs, b, seq_len=16, rows_per_shard=500, seed=7)
     assert s1["n_chunks"] == s2["n_chunks"]
     assert _layout_hash(spark, a) == _layout_hash(spark, b)
     # a different seed yields a different permutation over the same chunks
-    c = str(tmp_path / "c")
     run_export_job(spark, docs, c, seq_len=16, rows_per_shard=500, seed=8)
     assert _layout_hash(spark, c) != _layout_hash(spark, a)
     # resume: second run against a committed dir is a manifest read
     s3 = run_export_job(spark, docs, a, seq_len=16, rows_per_shard=500, seed=7)
     assert s3["resumed"] and s3["n_chunks"] == s1["n_chunks"]
+
+
+def test_export_deterministic_and_resume_file_uri(spark, tmp_path):
+    """A file: out_dir resumes like a plain path: the shard listing goes
+    through the path's own file system."""
+    test_export_deterministic_and_resume(spark, tmp_path, as_uri=True)
 
 
 def test_export_params_drift_raises(spark, tmp_path):
@@ -279,18 +284,18 @@ def test_export_crash_between_shards_and_manifest_not_blessed(spark, tmp_path):
     import greenocr_spark.plans.export as ex
 
     calls = []
-    orig_rmtree = ex.shutil.rmtree
+    orig_delete = ex.delete_path
 
-    def spy(path, **kw):
+    def spy(spark, path):
         calls.append(("rm", os.path.basename(path)))
-        return orig_rmtree(path, **kw)
+        return orig_delete(spark, path)
 
-    ex.shutil.rmtree = spy
+    ex.delete_path = spy
     try:
         run_export_job(spark, docs.limit(50), out, seq_len=16,
                        rows_per_shard=200, seed=7, resume=False)
     finally:
-        ex.shutil.rmtree = orig_rmtree
+        ex.delete_path = orig_delete
     assert ("rm", "manifest") in calls
     # and the final state is consistent: manifest describes the small run
     small = read_export_manifest(spark, out)

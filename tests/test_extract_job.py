@@ -1,7 +1,7 @@
 """run_extract_job's plan budget and lineage: Spark jobs per run, manifest
 rows per run (counted in the extraction tasks, exact under a retried
-task), the host-stat action behind adaptive salting, compaction of the
-job's table, and a resume over a corrupt manifest."""
+task), the host-stat action behind adaptive salting, and a resume over a
+corrupt manifest."""
 
 from __future__ import annotations
 
@@ -199,6 +199,23 @@ def test_part_tally_counts_each_split_once():
     assert split3[1][0] == [2, 5, 1, 100, 40]  # an update is not aliased
 
 
+def test_job_leaves_no_accumulator_behind(spark, pages_path, tmp_path):
+    """pyspark keeps a Python accumulator in its driver registry for the
+    SparkContext's life; a fresh job and a resume each drop their manifest
+    tally once read, so a long-lived driver does not grow per job."""
+    from pyspark.accumulators import _accumulatorRegistry
+
+    pages = spark.read.parquet(pages_path)
+    out, resumed_out = str(tmp_path / "o"), str(tmp_path / "o8")
+    before = len(_accumulatorRegistry)
+    fresh = run_extract_job(spark, pages, out, n_parts=N_PARTS)
+    assert len(_accumulatorRegistry) == before
+    _lose_partitions(spark, out, resumed_out)
+    resumed = run_extract_job(spark, pages, resumed_out, n_parts=N_PARTS)
+    assert len(_accumulatorRegistry) == before
+    assert _table(resumed) == _table(fresh)
+
+
 RETRY_CHILD = r"""
 import itertools, json, os, sys
 import pyarrow.parquet as pq
@@ -308,102 +325,6 @@ def _listing(root):
             st = os.stat(os.path.join(d, name))
             files[os.path.relpath(os.path.join(d, name), root)] = (st.st_size, st.st_mtime_ns)
     return files
-
-
-def _file_bytes(root):
-    return {p.name: p.read_bytes() for p in Path(root).iterdir()}
-
-
-def test_compaction_reduces_files_preserves_rows(spark, pages_path, tmp_path):
-    """Compaction merges a job's fragmented partition files into url-sorted
-    ones, preserves every row, is idempotent, and leaves the manifest
-    byte-equal, so a resume still finds every partition done and returns
-    the same rows without writing."""
-    from greenocr_spark.plans.compact import _partition_files, compact_extracted
-
-    pages = spark.read.parquet(pages_path)
-    out = str(tmp_path / "out")
-    ext = f"{out}/extracted"
-    run_extract_job(spark, pages, out, n_parts=N_PARTS)
-    manifest = _file_bytes(f"{out}/manifest")
-
-    def fragment():
-        # rewrite with many tasks per hive partition
-        frag = spark.read.parquet(ext).repartition(24)
-        frag.write.mode("overwrite").partitionBy("part_id").parquet(ext)
-        return sum(len(f) for f in _partition_files(ext).values())
-
-    def rows():
-        return sorted(tuple(r) for r in spark.read.parquet(ext).collect())
-
-    def assert_files_in_url_order():
-        for files in _partition_files(ext).values():
-            for f in files:
-                urls = pq.read_table(f, columns=["url"])["url"].to_pylist()
-                assert urls == sorted(urls), f
-
-    files0 = fragment()
-    assert files0 > N_PARTS  # genuinely fragmented
-    before_rows = rows()
-
-    stats = compact_extracted(spark, out, min_files=2)
-    assert stats["n_parts_compacted"] > 0
-    assert stats["files_after"] < files0
-    assert all(len(f) == 1 for f in _partition_files(ext).values())  # small: 1 file
-    assert_files_in_url_order()
-    assert rows() == before_rows
-
-    # idempotent second run
-    assert compact_extracted(spark, out, min_files=2)["n_parts_compacted"] == 0
-    # partitions made of files already at/above target size are never
-    # picked, however many there are (the large-partition idempotence rule)
-    assert compact_extracted(spark, out, target_bytes=1, min_files=1)["n_parts_compacted"] == 0
-
-    # a target below a partition's bytes splits it into several files,
-    # each still in url order
-    fragment()
-    stats = compact_extracted(spark, out, target_bytes=40 * 1024, min_files=2)
-    assert stats["n_parts_compacted"] == len(_partition_files(ext))  # every file is new
-    assert stats["files_after"] > stats["n_parts_compacted"]
-    assert_files_in_url_order()
-    assert rows() == before_rows
-
-    # the manifest tracks partitions, not files: untouched, so a resume
-    # finds every part_id done and writes nothing
-    assert _file_bytes(f"{out}/manifest") == manifest
-    files = _listing(out)
-    resumed = run_extract_job(spark, pages, out, n_parts=N_PARTS)
-    assert sorted(tuple(r) for r in resumed.collect()) == before_rows
-    assert _listing(out) == files
-
-
-def test_compaction_of_file_uri_out_dir(spark, tmp_path):
-    """A file: out_dir compacts like its plain path; compaction lists
-    files with os, so any other scheme raises instead of reporting
-    nothing to compact."""
-    from greenocr_spark.plans.compact import _partition_files, compact_extracted
-
-    out = tmp_path / "out"
-    ext = str(out / "extracted")
-    (
-        spark.range(50)
-        .select(F.format_string("https://h/%03d", "id").alias("url"), F.lit(0).alias("part_id"))
-        .repartition(5)
-        .write.partitionBy("part_id")
-        .parquet(ext)
-    )
-    assert len(_partition_files(ext)[0]) == 5
-
-    stats = compact_extracted(spark, out.as_uri())
-    assert stats == {"n_parts_compacted": 1, "files_before": 5, "files_after": 1}
-    (compacted,) = _partition_files(ext)[0]
-    urls = pq.read_table(compacted, columns=["url"])["url"].to_pylist()
-    assert urls == [f"https://h/{i:03d}" for i in range(50)]
-    assert os.listdir(out) == ["extracted"]  # staging removed
-
-    for remote in ("s3a://bucket/out", "hdfs://nn:8020/out"):
-        with pytest.raises(ValueError, match="local out_dir"):
-            compact_extracted(spark, remote)
 
 
 def _record(out):

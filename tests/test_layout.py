@@ -1,7 +1,9 @@
 """Static layout checks over the source tree (AST only, no Spark session):
 engine modules do not import the test battery, every greenocr_spark
-import in the repository resolves, and each kernel the plans share with
-the battery has one definition."""
+import in the repository resolves, each kernel the plans share with
+the battery has one definition, every engine Python stage trims the
+worker's import caches, and no plan reaches the file system through os or
+shutil."""
 
 from __future__ import annotations
 
@@ -239,3 +241,63 @@ def lambda_stage(df):
     found, bad = _untrimmed_stages(Path("m.py"), src)
     assert found == 4
     assert bad == ["m.py:6 mapInPandas", "m.py:20 mapInPandas", "m.py:23 mapInPandas"]
+
+
+# A plan reaches its out_dir through sources/pages, on the path's own
+# Hadoop FileSystem; os and shutil see only plain local paths, so a file:,
+# s3a or hdfs out_dir would read as empty.
+LOCAL_FS_CALLS = {
+    "os.listdir", "os.path.exists", "os.path.isdir", "os.path.isfile",
+    "os.path.getsize", "os.remove",
+}
+
+
+def _local_fs_uses(path: Path, source: str) -> list[str]:
+    """Each shutil import and each os file-system call in LOCAL_FS_CALLS."""
+    bad = []
+    for node in ast.walk(ast.parse(source, str(path))):
+        if isinstance(node, ast.Import):
+            used = [a.name for a in node.names if a.name.split(".")[0] == "shutil"]
+        elif isinstance(node, ast.ImportFrom):
+            module = node.module or ""
+            used = [module] if module == "shutil" else [
+                f"{module}.{a.name}" for a in node.names if f"{module}.{a.name}" in LOCAL_FS_CALLS
+            ]
+        elif isinstance(node, ast.Call):
+            used = [n for n in [ast.unparse(node.func)] if n in LOCAL_FS_CALLS]
+        else:
+            continue
+        bad += [(node.lineno, node.col_offset, name) for name in used]
+    return [f"{path}:{line} {name}" for line, _, name in sorted(bad)]
+
+
+def test_plans_reach_the_file_system_through_sources():
+    plans = _py_files(f"{PKG}/plans")
+    assert len(plans) >= 8  # the plan modules today
+    bad = [b for p in plans for b in _local_fs_uses(p.relative_to(ROOT), p.read_text())]
+    assert not bad, "\n".join(bad)
+
+
+def test_local_fs_use_is_reported():
+    src = '''
+import os
+import shutil
+from os.path import isdir
+from shutil import rmtree
+
+def f(out):
+    os.path.join(out, "x")
+    if os.path.exists(out) and os.path.isfile(out):
+        os.remove(out)
+    return os.listdir(out), os.path.getsize(out), os.makedirs
+'''
+    assert _local_fs_uses(Path("m.py"), src) == [
+        "m.py:3 shutil",
+        "m.py:4 os.path.isdir",
+        "m.py:5 shutil",
+        "m.py:9 os.path.exists",
+        "m.py:9 os.path.isfile",
+        "m.py:10 os.remove",
+        "m.py:11 os.listdir",
+        "m.py:11 os.path.getsize",
+    ]

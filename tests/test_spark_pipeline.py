@@ -615,7 +615,7 @@ def test_adaptive_resume_with_drifted_skew(spark, pages_path, tmp_path):
     flood_parts = {
         r["part_id"]
         for r in flood.withColumn(
-            "part_id", hot_salted_part_id("url", hot_map, 16, 8)
+            "part_id", hot_salted_part_id("url", hot_map, 16)
         ).select("part_id").collect()
     }
     expected_flood = 40 if (flood_parts - done_parts) == flood_parts else None
