@@ -115,12 +115,7 @@ def main() -> int:
             decon_min_overlap=a.decon_min_overlap,
             resume=not a.no_resume,
         )
-        funnel = [
-            r.asDict()
-            for r in read_curate_manifest(spark, a.output)
-            .orderBy("idx")
-            .collect()
-        ]
+        funnel = read_curate_manifest(spark, a.output)
         print(json.dumps({"curated_rows": curated.count(), "funnel": funnel}))
         spark.stop()
         return 0

@@ -40,7 +40,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from greenocr_spark.sources.pages import (
-    append_parquet_file, check_params, delete_path, glob_paths, write_params,
+    append_parquet_file, check_params, delete_path, glob_paths, read_parquet_rows,
+    write_params,
 )
 
 SCALE = 1000  # quantization: component -> round(x*1000) as long
@@ -189,8 +190,8 @@ def run_kmeans_job(
         ]
         it = start_iter
         # converged already? the committed manifest row knows
-        manifest = spark.read.parquet(os.path.join(out_dir, "manifest"))
-        last = manifest.filter(F.col("iter") == start_iter).first()
+        manifest = read_parquet_rows(spark, os.path.join(out_dir, "manifest"), MANIFEST_DDL)
+        last = next((r for r in manifest if r["iter"] == start_iter), None)
         converged = last is not None and last["n_moved"] == 0
         inertia = int(last["inertia"]) if last is not None else None
         resumed = True

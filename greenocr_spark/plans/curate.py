@@ -8,13 +8,13 @@ curation stage after the narrow gates is corpus-GLOBAL — dedup winners
 and near-dup clusters depend on all rows — so partitions cannot complete
 independently. The restart unit is the completed stage: each stage
 commits its survivor doc_id set under out_dir/stages/<name>/ (ids only —
-tiny next to the corpus), and a rerun reuses every committed stage,
-recomputing only what's missing. The params are recorded in
-out_dir/_params.json (sources/pages.check_params): a resume over
-committed survivor sets must match them, so a config drift cannot
-silently mix survivor sets computed under different rules (ADVICE r02);
-a run that keeps no survivor set (resume=False, or none committed yet)
-records its own.
+tiny next to the corpus; committed = its _SUCCESS marker exists), and a
+rerun reuses every committed stage, recomputing only what's missing.
+The params are recorded in out_dir/_params.json
+(sources/pages.check_params): a resume over committed survivor sets
+must match them, so a config drift cannot silently mix survivor sets
+computed under different rules (ADVICE r02); a run that keeps no
+survivor set (resume=False, or none committed yet) records its own.
 
 Scale shape per stage (10^12-doc corpus):
 - quality/lang: narrow array-lambda filters, zero shuffle.
@@ -47,8 +47,8 @@ from greenocr_spark.operators.text import (
     _spark_words,
 )
 from greenocr_spark.sources.pages import (
-    append_parquet_file, check_params, delete_path, path_exists, read_parquet_or_none,
-    write_params,
+    append_parquet_file, check_params, delete_path, glob_paths, path_exists,
+    read_parquet_rows, write_params,
 )
 
 CURATE_MANIFEST_DDL = "stage string, idx int, rows_in long, rows_out long, run_id string"
@@ -208,11 +208,13 @@ def run_curate_job(
             else None
         ),
     }
-    # a resume keeps every committed stage survivor set, so they must have
-    # been computed under these params; resume=False recomputes every
-    # stage and keeps nothing, so its params become the record
-    keeps = resume and path_exists(spark, os.path.join(out_dir, "stages"))
-    if check_params(spark, out_dir, params, keeps) is None:
+    # a resume keeps every committed stage survivor set (its write left
+    # _SUCCESS), so they must have been computed under these params;
+    # resume=False recomputes every stage and keeps nothing, so its params
+    # become the record
+    pattern = os.path.join(out_dir, "stages", "*", "_SUCCESS")
+    committed = {m.split("/")[-2] for m in glob_paths(spark, pattern)} if resume else set()
+    if check_params(spark, out_dir, params, bool(committed)) is None:
         write_params(spark, out_dir, params)
     if not resume:
         # full recompute: the funnel manifest describes the OLD run's stage
@@ -264,8 +266,7 @@ def run_curate_job(
     any_fresh = False
     for idx, (name, compute) in enumerate(stages):
         sdir = _stage_dir(out_dir, name)
-        ids = read_parquet_or_none(spark, sdir) if resume else None
-        if ids is None:
+        if name not in committed:
             any_fresh = True
             if rows_in is None:
                 rows_in = cur.count()
@@ -278,6 +279,7 @@ def run_curate_job(
             )
             rows_in = rows_out
         else:
+            ids = spark.read.parquet(sdir)
             rows_in = None  # unknown without counting; next fresh stage recounts
         cur = docs.join(ids.select("doc_id"), "doc_id", "left_semi")
 
@@ -293,5 +295,7 @@ def run_curate_job(
     return spark.read.parquet(curated_dir)
 
 
-def read_curate_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    return read_parquet_or_none(spark, os.path.join(out_dir, "manifest"), CURATE_MANIFEST_DDL)
+def read_curate_manifest(spark: SparkSession, out_dir: str) -> list[dict]:
+    """The funnel rows (CURATE_MANIFEST_DDL) in stage order; [] if none."""
+    rows = read_parquet_rows(spark, os.path.join(out_dir, "manifest"), CURATE_MANIFEST_DDL)
+    return sorted(rows, key=lambda r: r["idx"])

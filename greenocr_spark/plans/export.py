@@ -19,16 +19,20 @@ Pipeline (fully deterministic, seed-parameterized):
    shard membership is identical run-over-run; one repartition on
    shard_id + sortWithinPartitions(pos) + partitionBy(shard_id) write
    gives exactly one file per shard, each internally in training order.
-4. **manifest** — per-shard (n_rows, min_pos, max_pos, n_tokens) rows;
-   the params (seq_len/rows_per_shard/seed) are recorded in
+4. **manifest** — per-shard (n_rows, min_pos, max_pos, n_tokens) rows,
+   one aggregate over the written shards collected to the driver
+   (≤ n_shards rows) and appended as one parquet file
+   (sources/pages.append_parquet_file). That file is the export's
+   commit. The params (seq_len/rows_per_shard/seed) are recorded in
    out_dir/_params.json (sources/pages.check_params), and a rerun over a
    committed manifest with different params fails loudly instead of
    silently mixing layouts (ADVICE r02).
 
 Resume: with resume=True (default) a committed manifest whose params
-match is returned as-is — the export is a no-op. The job is end-to-end
-deterministic, so a forced rerun reproduces identical shard contents
-(pinned by tests/test_export.py).
+match, and whose shard dirs are all on disk, is returned as-is: the
+export is a no-op, read on the driver with no Spark job. The job is
+end-to-end deterministic, so a forced rerun reproduces identical shard
+contents (pinned by tests/test_export.py).
 
 Scale shape at 10^12 docs: two key-partitioned shuffles total (the
 256-block ranking exchange and the shard_id exchange); rows_per_shard
@@ -45,8 +49,11 @@ from pyspark.sql import functions as F
 
 from greenocr_spark.operators.text import _spark_words
 from greenocr_spark.sources.pages import (
-    check_params, delete_path, glob_paths, path_exists, write_params,
+    append_parquet_file, check_params, delete_path, glob_paths, read_parquet_rows,
+    write_params,
 )
+
+EXPORT_MANIFEST_DDL = "shard_id long, n_rows long, min_pos long, max_pos long, n_tokens long"
 
 
 def chunk_corpus(docs, seq_len: int):
@@ -116,9 +123,7 @@ def shuffle_positions(chunks: DataFrame, seed: int) -> DataFrame:
     )
 
 
-def _shards_match_manifest(
-    spark: SparkSession, out_dir: str, manifest_dir: str
-) -> bool:
+def _shards_match_manifest(spark: SparkSession, out_dir: str, manifest: list) -> bool:
     """True iff every shard_id the manifest describes has its partition dir
     under out_dir/shards (partial deletions → False → recompute)."""
     # skip unparsable partition dirs (shard_id=__HIVE_DEFAULT_PARTITION__)
@@ -128,15 +133,12 @@ def _shards_match_manifest(
         for p in glob_paths(spark, os.path.join(out_dir, "shards", "shard_id=*"))
     )
     on_disk = {int(i) for i in ids if i.isdigit()}
-    manifest_ids = {
-        r["shard_id"]
-        for r in spark.read.parquet(manifest_dir).select("shard_id").collect()
-    }
-    return manifest_ids <= on_disk
+    return {r["shard_id"] for r in manifest} <= on_disk
 
 
-def read_export_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, "manifest"))
+def read_export_manifest(spark: SparkSession, out_dir: str) -> list[dict]:
+    """The committed per-shard rows (EXPORT_MANIFEST_DDL); [] if none."""
+    return read_parquet_rows(spark, os.path.join(out_dir, "manifest"), EXPORT_MANIFEST_DDL)
 
 
 def run_export_job(
@@ -155,21 +157,22 @@ def run_export_job(
         "seed": int(seed),
     }
     manifest_dir = os.path.join(out_dir, "manifest")
-    # the manifest's _SUCCESS is the durable commit marker: without it no
-    # run produced anything a resume could consume (the shard write is a
-    # static overwrite), so new params are adopted; with it, a params
-    # drift would mix layouts, forced rerun or not
-    committed = path_exists(spark, os.path.join(manifest_dir, "_SUCCESS"))
-    if check_params(spark, out_dir, params, committed) is None:
+    # the manifest's rows are the durable commit: the driver writes them
+    # last, as one file (a manifest Spark wrote shows its part file only
+    # once that write committed). Without rows no run produced anything a
+    # resume could consume (the shard write is a static overwrite), so new
+    # params are adopted; with them, a params drift would mix layouts,
+    # forced rerun or not
+    manifest = read_export_manifest(spark, out_dir)
+    if check_params(spark, out_dir, params, bool(manifest)) is None:
         write_params(spark, out_dir, params)
-    if resume and committed:
-        # the manifest alone isn't proof the shards survived: verify every
-        # manifest shard_id still has its partition dir on disk before
-        # blessing the export as a no-op resume (ADVICE r03). The listing is
-        # n_shards-bounded — no shard data is read. On mismatch fall through
-        # to a full recompute (which invalidates this manifest first).
-        if _shards_match_manifest(spark, out_dir, manifest_dir):
-            return _stats_from_manifest(spark, manifest_dir, params, resumed=True)
+    # the manifest alone isn't proof the shards survived: verify every
+    # manifest shard_id still has its partition dir on disk before
+    # blessing the export as a no-op resume (ADVICE r03). The listing is
+    # n_shards-bounded — no shard data is read. On mismatch fall through
+    # to a full recompute (which invalidates this manifest first).
+    if resume and manifest and _shards_match_manifest(spark, out_dir, manifest):
+        return _stats(manifest, params, resumed=True)
 
     chunks = chunk_corpus(docs, seq_len)
     # guard on CHUNKS, not docs: a corpus of only whitespace docs would pass
@@ -206,34 +209,24 @@ def run_export_job(
         .parquet(os.path.join(out_dir, "shards"))
     )
     shards = spark.read.parquet(os.path.join(out_dir, "shards"))
-    manifest = shards.groupBy("shard_id").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.min("pos").alias("min_pos"),
-        F.max("pos").alias("max_pos"),
-        F.sum("n_tokens").cast("long").alias("n_tokens"),
+    manifest = sorted(
+        shards.groupBy("shard_id").agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.min("pos").alias("min_pos"),
+            F.max("pos").alias("max_pos"),
+            F.sum("n_tokens").cast("long").alias("n_tokens"),
+        ).collect()
     )
-    manifest.coalesce(1).write.mode("overwrite").parquet(manifest_dir)
-    # stats come from the 1-file manifest just written, not a second full
-    # scan of every shard file
-    return _stats_from_manifest(spark, manifest_dir, params, resumed=False)
+    append_parquet_file(spark, manifest_dir, manifest, EXPORT_MANIFEST_DDL)
+    return _stats(manifest, params, resumed=False)
 
 
-def _stats_from_manifest(
-    spark: SparkSession, manifest_dir: str, params: dict, resumed: bool
-) -> dict:
-    agg = (
-        spark.read.parquet(manifest_dir)
-        .agg(
-            F.count(F.lit(1)).alias("n_shards"),
-            F.sum("n_rows").alias("n_chunks"),
-            F.sum("n_tokens").alias("n_tokens"),
-        )
-        .collect()[0]
-    )
+def _stats(manifest: list, params: dict, resumed: bool) -> dict:
+    """Summary stats of the manifest rows (no scan of the shards)."""
     return {
         "resumed": resumed,
-        "n_shards": agg["n_shards"],
-        "n_chunks": int(agg["n_chunks"]),
-        "n_tokens": int(agg["n_tokens"]),
+        "n_shards": len(manifest),
+        "n_chunks": sum(r["n_rows"] for r in manifest),
+        "n_tokens": sum(r["n_tokens"] for r in manifest),
         **params,
     }

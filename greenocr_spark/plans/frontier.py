@@ -38,9 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from greenocr_spark.functions.sqlfns import host_expr
-from greenocr_spark.sources.pages import (
-    check_params, path_exists, read_parquet_or_none, write_params,
-)
+from greenocr_spark.sources.pages import check_params, path_exists, write_params
 
 FRONTIER_DDL = "host string, url string"
 
@@ -72,7 +70,7 @@ def run_frontier_job(
         write_params(spark, out_dir, params)
     elif resume:
         # the known schema also reads a committed-but-empty frontier
-        return read_parquet_or_none(spark, fdir, FRONTIER_DDL)
+        return spark.read.schema(FRONTIER_DDL).parquet(fdir)
 
     candidates = (
         extracted.select(F.explode("outlinks").alias("url"))
@@ -96,4 +94,4 @@ def run_frontier_job(
     frontier.write.mode("overwrite").parquet(fdir)
     # a fully-crawled corpus yields an EMPTY frontier, which may commit no
     # data files: the known schema reads it back without inference
-    return read_parquet_or_none(spark, fdir, FRONTIER_DDL)
+    return spark.read.schema(FRONTIER_DDL).parquet(fdir)

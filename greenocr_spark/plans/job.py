@@ -6,7 +6,7 @@ Physical plan (one shuffle total):
       layout: n_parts, salting, n_salts, face flags and, for adaptive
       salting, the hot-host map; a run with nothing committed derives it
       and writes it before any data, any other run must match it
-    read the manifest ONCE → done part_ids (≤ n_parts ints, on the driver)
+    read the manifest ONCE on the driver (no Spark job) → done part_ids
     scan pages → part_id → [drop done part_ids: literal filter, narrow]
     → mapInPandas extract (narrow, Arrow-batched, one task per input split)
     → repartition(min(n_parts, cores), part_id) ← THE shuffle, of extracted rows
@@ -20,7 +20,7 @@ Physical plan (one shuffle total):
 There is no separate emptiness pass: zero tallied rows means nothing was
 pending, and the job appends nothing. A resume whose done set already
 holds every part_id in [0, n_parts) returns the stored table without
-scanning the input.
+scanning the input: it runs no Spark job at all.
 
 The write is as wide as the cluster (defaultParallelism tasks), not
 n_parts: n_parts is the resume and file unit, the task count is only how
@@ -73,7 +73,7 @@ from greenocr_spark.sources.pages import (
     append_parquet_file,
     check_params,
     path_exists,
-    read_parquet_or_none,
+    read_parquet_rows,
     write_extracted,
     write_params,
 )
@@ -93,20 +93,19 @@ def _manifest_dir(out_dir: str) -> str:
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """None ONLY when the manifest doesn't exist yet (first run). Any other
-    failure propagates: treating a transient FS error as 'first run' would
-    silently restart the whole job and re-extract every done partition."""
-    return read_parquet_or_none(spark, _manifest_dir(out_dir), MANIFEST_DDL)
+    """The manifest rows as a DataFrame (for reports), or None while there
+    are none. An unreadable manifest file raises: taken for a first run, it
+    would re-extract every done partition."""
+    rows = read_parquet_rows(spark, _manifest_dir(out_dir), MANIFEST_DDL)
+    return spark.createDataFrame(rows, MANIFEST_DDL) if rows else None
 
 
 def _done_part_ids(spark: SparkSession, out_dir: str) -> list:
-    """part_ids the manifest marks done. A partition's row is appended only
-    by the run that first completes it, so this collects ≤ n_parts ints."""
-    manifest = read_manifest(spark, out_dir)
-    if manifest is None:
-        return []
-    rows = manifest.where(F.col("status") == "done").select("part_id").collect()
-    return sorted({r["part_id"] for r in rows})
+    """part_ids the manifest marks done, read on the driver (no Spark job).
+    A partition's row is appended only by the run that first completes it,
+    so this is ≤ n_parts ints."""
+    rows = read_parquet_rows(spark, _manifest_dir(out_dir), MANIFEST_DDL)
+    return sorted({r["part_id"] for r in rows if r["status"] == "done"})
 
 
 def _drop_done(df: DataFrame, done: list) -> DataFrame:
@@ -174,7 +173,6 @@ def run_extract_job(
         # adaptive run its part_ids would disagree with the done set
         raise ValueError(f"salting must be 'uniform' or 'adaptive', got {salting!r}")
     run_id = run_id or uuid.uuid4().hex[:12]
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     ext_path = _extracted_dir(out_dir)
     params = dict(n_parts=n_parts, salting=salting, n_salts=n_salts,
                   with_links=with_links, with_anchors=with_anchors)

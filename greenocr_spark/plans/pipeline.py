@@ -140,15 +140,9 @@ def run_pipeline_job(
         resume=resume,
     )
 
-    funnel_df = read_curate_manifest(spark, curate_dir(out_dir))
-    funnel = (
-        [r.asDict() for r in funnel_df.orderBy("idx").collect()]
-        if funnel_df is not None
-        else []
-    )
     return {
         "extracted_rows": extracted.count(),
         "curated_rows": curated.count(),
-        "funnel": funnel,
+        "funnel": read_curate_manifest(spark, curate_dir(out_dir)),
         "export": export_stats,
     }

@@ -41,9 +41,6 @@ def build_session(
         # change of default cannot move it (above every benchmark batch)
         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(64 << 20))
         .config("spark.python.worker.reuse", "true")
-        # dynamic partition overwrite makes per-partition re-extraction
-        # idempotent (the checkpoint-resume write discipline)
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")

@@ -7,9 +7,9 @@ Also the one way a plan reaches its out_dir outside Spark's reads and
 writes: through the path's own Hadoop FileSystem (local, file:, s3a,
 hdfs alike), driver-side and with no Spark job. A plan lists
 (glob_paths), tests (path_exists) and deletes (delete_path) there,
-keeps its one params record (check_params, write_params) and adds
-small parquet files of driver-side rows, like the manifests
-(append_parquet_file).
+keeps its one params record (check_params, write_params), and adds and
+reads back small parquet files of driver-side rows, like the manifests
+(append_parquet_file, read_parquet_rows).
 """
 
 from __future__ import annotations
@@ -20,8 +20,8 @@ import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 # every entry point shares this: a source/target with one of these prefixes
 # is a filesystem path (parquet dir); anything else is a catalog table name
@@ -90,7 +90,21 @@ def _put_file(spark: SparkSession, path: str, data: bytes) -> None:
     fs_api.FileContext.getFileContext(hpath.toUri(), fs.getConf()).rename(tmp, hpath, overwrite)
 
 
+def _get_file(fs, hpath) -> bytes:
+    stream = fs.open(hpath)
+    try:
+        return bytes(stream.readAllBytes())
+    finally:
+        stream.close()
+
+
 _ARROW_TYPES = {"int": pa.int32(), "long": pa.int64(), "string": pa.string()}
+
+
+def _arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow schema of a Spark DDL string of int, long and string columns."""
+    fields = [c.split() for c in ddl.split(",")]
+    return pa.schema([(name, _ARROW_TYPES[kind]) for name, kind in fields])
 
 
 def append_parquet_file(spark: SparkSession, path: str, rows: list, ddl: str) -> None:
@@ -98,8 +112,7 @@ def append_parquet_file(spark: SparkSession, path: str, rows: list, ddl: str) ->
     of int, long and string columns) to the parquet dir `path` as one new
     file, written from the driver: no Spark job, and Spark's reads see it
     like a file a Spark append of the same DDL wrote."""
-    fields = [c.split() for c in ddl.split(",")]
-    schema = pa.schema([(name, _ARROW_TYPES[kind]) for name, kind in fields])
+    schema = _arrow_schema(ddl)
     table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows], schema)
     sink = pa.BufferOutputStream()
     pq.write_table(table, sink)
@@ -107,29 +120,36 @@ def append_parquet_file(spark: SparkSession, path: str, rows: list, ddl: str) ->
     _put_file(spark, os.path.join(path, name), sink.getvalue().to_pybytes())
 
 
-def read_parquet_or_none(
-    spark: SparkSession, path: str, schema: StructType | str | None = None
-) -> DataFrame | None:
-    """Read a parquet dir that may not exist yet. None ONLY for a missing
-    path; any other failure (corrupt file, transient FS error) propagates:
-    callers read None as "first run", and taking an unreadable store for
-    a first run silently restarts or duplicates committed work. A known
-    `schema` skips inference, so an empty committed dir reads as an empty
-    frame instead of failing. "Missing" is path_exists, not a Spark
-    analysis that fails with PATH_NOT_FOUND."""
-    if not path_exists(spark, path):
-        return None
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path)
+def read_parquet_rows(spark: SparkSession, path: str, ddl: str) -> list[dict]:
+    """The rows of the parquet dir `path` as dicts of `ddl`'s columns, read
+    on the driver (no Spark job): the inverse of append_parquet_file. One
+    glob lists the files Spark's reader would see (names not starting with
+    '_' or '.'), whoever wrote them; each is read through the path's Hadoop
+    FileSystem and cast to `ddl`. A missing dir has no rows; a file that
+    does not read as `ddl` raises, naming it."""
+    schema = _arrow_schema(ddl)
+    rows = []
+    for file in sorted(glob_paths(spark, os.path.join(path, "*"))):
+        if file.rsplit("/", 1)[1].startswith(("_", ".")):
+            continue
+        try:
+            data = _get_file(*_hadoop_path(spark, file))
+            table = pq.read_table(pa.BufferReader(data)).select(schema.names).cast(schema)
+        except (Py4JJavaError, pa.ArrowException, KeyError) as e:
+            raise ValueError(f"unreadable parquet file {file}: {e}") from e
+        rows += table.to_pylist()
+    return rows
 
 
 def write_extracted(df: DataFrame, target: str, partition_col: str = "part_id") -> None:
     """Idempotent per-partition write of extraction output: Iceberg gets
     `overwritePartitions()` (the dynamic-overwrite equivalent with snapshot
-    atomicity); parquet gets dynamic partitionOverwriteMode — both make
-    re-running a partition after a crash self-healing (plans/job.py)."""
+    atomicity); parquet gets dynamic partitionOverwriteMode on this write,
+    whatever the session's — both make re-running a partition after a
+    crash self-healing (plans/job.py)."""
     if target.startswith(PATH_PREFIXES):
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(target)
+        (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+         .partitionBy(partition_col).parquet(target))
     else:
         df.writeTo(target).overwritePartitions()
 
@@ -152,11 +172,7 @@ def check_params(
     fs, hpath = _hadoop_path(spark, os.path.join(out_dir, PARAMS_FILE))
     record, drift = None, "no params record beside committed output"
     if fs.exists(hpath):
-        stream = fs.open(hpath)
-        try:
-            record = json.loads(bytes(stream.readAllBytes()))
-        finally:
-            stream.close()
+        record = json.loads(_get_file(fs, hpath))
         drift = ", ".join(
             f"{k}: committed {record.get(k)!r}, requested {v!r}"
             for k, v in sorted(params.items())

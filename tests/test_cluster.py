@@ -150,6 +150,31 @@ def test_iteration_rows_appended_without_a_spark_job(spark, embeddings, tmp_path
     assert sorted(r["iter"] for r in manifest.collect()) == iters
 
 
+def test_resume_reads_its_manifest_without_a_spark_job(spark, embeddings, tmp_path, monkeypatch):
+    """A resume looks up its last iteration's manifest row on the driver:
+    the read runs no Spark job (counted by job group)."""
+    import greenocr_spark.plans.cluster as cluster_module
+
+    sc, read, reads = spark.sparkContext, cluster_module.read_parquet_rows, []
+
+    def read_in_group(spark, path, ddl):
+        sc.setJobGroup("manifest_read", "manifest_read")
+        try:
+            reads.append(read(spark, path, ddl))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return reads[-1]
+
+    out = str(tmp_path / "km")
+    run_kmeans_job(spark, embeddings, out, k=K, max_iters=2)
+    monkeypatch.setattr(cluster_module, "read_parquet_rows", read_in_group)
+    s = run_kmeans_job(spark, embeddings, out, k=K, max_iters=2)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert s["resumed"] and s["iters"] == 2
+    assert [sorted(r["iter"] for r in rows) for rows in reads] == [[1, 2]]
+    assert list(sc.statusTracker().getJobIdsForGroup("manifest_read")) == []
+
+
 def test_kmeans_params_drift_raises(spark, embeddings, tmp_path):
     out = str(tmp_path / "km_drift")
     run_kmeans_job(spark, embeddings, out, k=K, max_iters=1)

@@ -3,7 +3,9 @@ resume invariance, and the params-drift guard."""
 
 from __future__ import annotations
 
+import os
 import shutil
+from collections import Counter
 
 import pytest
 
@@ -55,7 +57,7 @@ def test_curate_funnel_and_stages(spark, tmp_path):
     assert ids == [0, 2, 7, 8, 9]
     funnel = {
         r["stage"]: (r["rows_in"], r["rows_out"])
-        for r in read_curate_manifest(spark, out).collect()
+        for r in read_curate_manifest(spark, out)
     }
     assert funnel["quality"] == (10, 8)
     assert funnel["lang"] == (8, 7)
@@ -75,9 +77,38 @@ def test_curate_resume_reuses_committed_stages(spark, tmp_path):
     second = run_curate_job(spark, _corpus(spark), out, **kw)
     assert sorted(r["doc_id"] for r in second.select("doc_id").collect()) == first_ids
     # only the recomputed stage appended a new funnel row
-    m = read_curate_manifest(spark, out).groupBy("stage").count().collect()
-    counts = {r["stage"]: r["count"] for r in m}
+    counts = Counter(r["stage"] for r in read_curate_manifest(spark, out))
     assert counts == {"quality": 1, "lang": 1, "exact": 1, "neardup": 2}
+
+
+@pytest.mark.parametrize("forged", ["temporary_only", "part_without_success"])
+def test_curate_recomputes_an_uncommitted_stage(spark, tmp_path, forged):
+    """A stage is resumed only if its write committed (left _SUCCESS). A
+    write that crashed leaves only _temporary/ (no schema to read), or part
+    files without _SUCCESS (part of a survivor set). Either stage is
+    recomputed, and the curated table equals a clean run's."""
+    kw = dict(min_tokens=4, max_dup_bigram_frac=0.5, langs=("en",), resample=False)
+
+    def table(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    clean = table(run_curate_job(spark, _corpus(spark), str(tmp_path / "clean"), **kw))
+    out = str(tmp_path / "cur")
+    run_curate_job(spark, _corpus(spark), out, **kw)
+    # the crash: 'exact' dies in its write, so neither the stage after it
+    # nor the curated table is written
+    sdir = f"{out}/stages/exact"
+    shutil.rmtree(sdir)
+    shutil.rmtree(f"{out}/stages/neardup")
+    shutil.rmtree(f"{out}/curated")
+    if forged == "temporary_only":
+        os.makedirs(f"{sdir}/_temporary/0")
+    else:
+        spark.createDataFrame([(0,)], "doc_id long").write.parquet(sdir)
+        os.remove(f"{sdir}/_SUCCESS")
+    assert table(run_curate_job(spark, _corpus(spark), out, **kw)) == clean
+    counts = Counter(r["stage"] for r in read_curate_manifest(spark, out))
+    assert counts == {"quality": 1, "lang": 1, "exact": 2, "neardup": 2}
 
 
 def test_curate_params_drift_rejected(spark, tmp_path):
@@ -115,9 +146,9 @@ def test_curate_full_recompute_recommits_params_and_manifest(spark, tmp_path, as
     run_curate_job(spark, docs, out, min_tokens=6, resample=False,
                    neardup=False, resume=False)
     m = read_curate_manifest(spark, out)
-    counts = {r["stage"]: r["count"] for r in m.groupBy("stage").count().collect()}
+    counts = Counter(r["stage"] for r in m)
     assert counts == {"quality": 1, "exact": 1}  # one row per stage, one run
-    assert m.select("run_id").distinct().count() == 1
+    assert len({r["run_id"] for r in m}) == 1
     # resuming with the NEW params is now clean; the OLD params drift-raise
     run_curate_job(spark, docs, out, min_tokens=6, resample=False, neardup=False)
     import pytest as _pt
@@ -153,7 +184,7 @@ def test_funnel_rows_appended_without_a_spark_job(spark, tmp_path, monkeypatch):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     assert stages == ["quality", "exact"]
     assert list(sc.statusTracker().getJobIdsForGroup("funnel_append")) == []
-    assert sorted(r["stage"] for r in read_curate_manifest(spark, out).collect()) == sorted(stages)
+    assert [r["stage"] for r in read_curate_manifest(spark, out)] == stages
 
 
 def test_curate_decontamination_stage(spark, tmp_path):
@@ -173,8 +204,7 @@ def test_curate_decontamination_stage(spark, tmp_path):
     cur = run_curate_job(spark, docs, out, eval_docs=eval_docs, **kw)
     ids = sorted(r["doc_id"] for r in cur.select("doc_id").collect())
     assert 7 not in ids and 8 in ids and 9 in ids
-    m = read_curate_manifest(spark, out)
-    stages = {r["stage"] for r in m.collect()}
+    stages = {r["stage"] for r in read_curate_manifest(spark, out)}
     assert "decon" in stages
     # resume with the SAME eval set: clean no-op
     run_curate_job(spark, docs, out, eval_docs=eval_docs, **kw)

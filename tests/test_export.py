@@ -55,7 +55,7 @@ def test_export_permutation_and_shard_bounds(spark, tmp_path):
     ).collect()[0]
     assert (agg["lo"], agg["hi"], agg["d"]) == (0, n - 1, n)
     # every shard holds exactly its contiguous pos range
-    for m in read_export_manifest(spark, out).collect():
+    for m in read_export_manifest(spark, out):
         assert m["min_pos"] == m["shard_id"] * 500
         assert m["n_rows"] == m["max_pos"] - m["min_pos"] + 1
         assert m["n_rows"] <= 500
@@ -125,6 +125,37 @@ def test_export_deterministic_and_resume(spark, tmp_path, as_uri=False):
     # resume: second run against a committed dir is a manifest read
     s3 = run_export_job(spark, docs, a, seq_len=16, rows_per_shard=500, seed=7)
     assert s3["resumed"] and s3["n_chunks"] == s1["n_chunks"]
+
+
+def test_export_noop_resume_runs_no_spark_job(spark, tmp_path):
+    """A no-op resume reads the params record, the manifest rows and the
+    shard dir listing on the driver: it runs no Spark job."""
+    out = str(tmp_path / "exp")
+    docs = _docs(spark)
+    first = run_export_job(spark, docs, out, seq_len=16, rows_per_shard=500, seed=7)
+    sc = spark.sparkContext
+    sc.setJobGroup("export_noop", "export_noop")
+    try:
+        again = run_export_job(spark, docs, out, seq_len=16, rows_per_shard=500, seed=7)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("export_noop")) == []
+    assert again == {**first, "resumed": True}
+
+
+def test_export_resumes_a_manifest_spark_wrote(spark, tmp_path):
+    """An out_dir whose manifest is a Spark-written dir (part file, _SUCCESS
+    and checksum files; shard_id as int) still resumes, with the same stats."""
+    out = str(tmp_path / "exp")
+    docs = _docs(spark)
+    first = run_export_job(spark, docs, out, seq_len=16, rows_per_shard=500, seed=7)
+    rows = [tuple(r.values()) for r in read_export_manifest(spark, out)]
+    spark.createDataFrame(
+        rows, "shard_id int, n_rows long, min_pos long, max_pos long, n_tokens long"
+    ).coalesce(1).write.mode("overwrite").parquet(f"{out}/manifest")
+    again = run_export_job(spark, docs, out, seq_len=16, rows_per_shard=500, seed=7)
+    assert again == {**first, "resumed": True}
 
 
 def test_export_deterministic_and_resume_file_uri(spark, tmp_path):
@@ -299,8 +330,7 @@ def test_export_crash_between_shards_and_manifest_not_blessed(spark, tmp_path):
     assert ("rm", "manifest") in calls
     # and the final state is consistent: manifest describes the small run
     small = read_export_manifest(spark, out)
-    assert small.agg(F.sum("n_rows")).collect()[0][0] == \
-        spark.read.parquet(f"{out}/shards").count()
+    assert sum(r["n_rows"] for r in small) == spark.read.parquet(f"{out}/shards").count()
 
 
 def test_export_resume_detects_deleted_shards(spark, tmp_path):

@@ -2,8 +2,8 @@
 engine modules do not import the test battery, every greenocr_spark
 import in the repository resolves, each kernel the plans share with
 the battery has one definition, every engine Python stage trims the
-worker's import caches, and no plan reaches the file system through os or
-shutil."""
+worker's import caches, no plan reaches the file system through os or
+shutil, and no plan reads a manifest with Spark."""
 
 from __future__ import annotations
 
@@ -300,4 +300,55 @@ def f(out):
         "m.py:10 os.remove",
         "m.py:11 os.listdir",
         "m.py:11 os.path.getsize",
+    ]
+
+
+# A manifest is a few driver-written rows, and every plan reads it back the
+# same way: sources/pages.read_parquet_rows, on the driver with no Spark job.
+def _is_spark_read(func: ast.expr) -> bool:
+    """A call through spark.read (spark.read.parquet, spark.read.schema(s)
+    .parquet, ...)."""
+    while isinstance(func, (ast.Attribute, ast.Call)):
+        if isinstance(func, ast.Attribute) and func.attr == "read":
+            return True
+        func = func.value if isinstance(func, ast.Attribute) else func.func
+    return False
+
+
+def _spark_manifest_reads(path: Path, source: str) -> list[str]:
+    """Each Spark read given an argument that names a manifest."""
+    bad = []
+    for node in ast.walk(ast.parse(source, str(path))):
+        if isinstance(node, ast.Call) and _is_spark_read(node.func):
+            args = [*node.args, *(k.value for k in node.keywords)]
+            if any("manifest" in ast.unparse(a).lower() for a in args):
+                bad.append((node.lineno, node.col_offset, ast.unparse(node.func)))
+    return [f"{path}:{line} {name}" for line, _, name in sorted(bad)]
+
+
+def test_plans_read_manifests_on_the_driver():
+    plans = _py_files(f"{PKG}/plans")
+    assert len(plans) >= 8  # the plan modules today
+    bad = [b for p in plans for b in _spark_manifest_reads(p.relative_to(ROOT), p.read_text())]
+    assert not bad, "\n".join(bad)
+
+
+def test_spark_manifest_read_is_reported():
+    src = '''
+import os
+
+def f(spark, out, manifest_dir):
+    spark.read.parquet(os.path.join(out, "manifest"))
+    spark.read.schema("a int").parquet(manifest_dir)
+    spark.read.format("parquet").load(_manifest_dir(out))
+    spark.read.parquet(path=MANIFEST_PATH)
+    spark.read.parquet(os.path.join(out, "shards"))
+    read_parquet_rows(spark, manifest_dir, "a int")
+    spark.createDataFrame([], "a int").write.parquet(manifest_dir)
+'''
+    assert _spark_manifest_reads(Path("m.py"), src) == [
+        "m.py:5 spark.read.parquet",
+        "m.py:6 spark.read.schema('a int').parquet",
+        "m.py:7 spark.read.format('parquet').load",
+        "m.py:8 spark.read.parquet",
     ]

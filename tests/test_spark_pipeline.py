@@ -14,6 +14,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 
 import pandas as pd
 import pytest
@@ -325,22 +326,37 @@ def test_resume_heals_write_without_manifest(spark, pages_path, tmp_path):
     assert m.filter(F.col("status") == "done").select("part_id").distinct().count() == 8
 
 
-def test_read_parquet_or_none(spark, tmp_path):
-    # None only for a missing path; a known schema reads an empty dir
-    from greenocr_spark.sources.pages import read_parquet_or_none
+def test_read_parquet_rows(spark, tmp_path):
+    # the rows of every file Spark's reader sees, whoever wrote it, cast to
+    # the DDL; no rows for a missing or empty dir; a file that does not
+    # read as the DDL raises, naming it
+    from greenocr_spark.sources.pages import append_parquet_file, read_parquet_rows
 
-    assert read_parquet_or_none(spark, str(tmp_path / "missing")) is None
+    ddl = "part_id long, url string"
+    assert read_parquet_rows(spark, str(tmp_path / "missing"), ddl) == []
     # a missing parent, and a missing leaf under an existing dir, by plain
     # path and by file: URI
-    assert read_parquet_or_none(spark, str(tmp_path / "no" / "such" / "dir")) is None
+    assert read_parquet_rows(spark, str(tmp_path / "no" / "such" / "dir"), ddl) == []
     empty = tmp_path / "empty"
     empty.mkdir()
-    assert read_parquet_or_none(spark, str(empty / "leaf"), "url string") is None
-    assert read_parquet_or_none(spark, f"file://{empty}/leaf") is None
-    got = read_parquet_or_none(spark, str(empty), "url string")
-    assert got.columns == ["url"] and got.count() == 0
-    with pytest.raises(Exception, match="UNABLE_TO_INFER_SCHEMA"):
-        read_parquet_or_none(spark, str(empty))
+    assert read_parquet_rows(spark, f"file://{empty}/leaf", ddl) == []
+    assert read_parquet_rows(spark, str(empty), ddl) == []
+    # a Spark-written file (int part_id; _SUCCESS and .crc files beside
+    # it), a driver-written one, and a crashed write's _temporary/
+    d = str(tmp_path / "m")
+    spark.createDataFrame([(1, "a")], "part_id int, url string").write.parquet(d)
+    append_parquet_file(spark, d, [(2, "b")], ddl)
+    os.makedirs(f"{d}/_temporary/0")
+    for path in (d, f"file://{d}"):
+        got = sorted(read_parquet_rows(spark, path, ddl), key=lambda r: r["part_id"])
+        assert got == [{"part_id": 1, "url": "a"}, {"part_id": 2, "url": "b"}]
+    with pytest.raises(ValueError, match="unreadable parquet file .*/m/part-"):
+        read_parquet_rows(spark, d, ddl + ", n_docs long")
+    bad = f"{d}/part-corrupt.parquet"
+    with open(bad, "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(ValueError, match=re.escape(bad)):
+        read_parquet_rows(spark, d, ddl)
 
 
 def test_adaptive_salting(spark, pages_path):
