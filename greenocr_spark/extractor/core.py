@@ -73,11 +73,18 @@ PDF_MAGIC = b"%PDF-"
 
 _CHARSET_RE = re.compile(rb"charset\s*=\s*[\"']?([A-Za-z0-9_\-]+)", re.IGNORECASE)
 _COMMENT_RE = re.compile(r"<!--.*?(?:-->|$)", re.DOTALL)
+# A drop element is the frozen form `<name\b[^>]*>.*?(?:</name\s*>|$)`
+# (IGNORECASE, DOTALL): its opener, the opener's first '>', then up to the
+# first closer, else to the end of the page (`$` also matches before a
+# final '\n'). (opener, closer) per element; _drop finds each once.
 _DROP_RES = [
-    re.compile(rf"<{name}\b[^>]*>.*?(?:</{name}\s*>|$)", re.IGNORECASE | re.DOTALL)
+    (re.compile(rf"<{name}\b", re.IGNORECASE), re.compile(rf"</{name}\s*>", re.IGNORECASE))
     for name in DROP_ELEMENTS
 ]
 _CTRL_RE = re.compile(r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]")
+# the 30 chars _CTRL_RE matches: one `in` test each scans a page far faster
+# than _CTRL_RE.search does
+_CTRL_CHARS = "".join(map(chr, [*range(0x00, 0x09), 0x0B, 0x0C, *range(0x0E, 0x20), 0x7F]))
 # One pass captures span + closing-slash + tag name. The prefix
 # `\s*(/?)\s*(name)?` only ever consumes non-'>' characters, so the matched
 # spans are exactly those of the plain `<[^>]*>` form (byte-identical
@@ -91,35 +98,51 @@ def canon_ws(s: str) -> str:
     return " ".join(s.split())
 
 
-# Memo for cleaned text runs (round-3 speedup). Web corpora repeat the same
-# boilerplate runs (nav labels, footer legalese, titles) across every page of
-# a host, so the unescape+ctrl-strip+canon_ws chain keeps re-cleaning
-# identical strings. clean() is a pure function, so memoizing it is
-# byte-identical by construction (pinned by the fixture-corpus hash gate).
-# Keys are capped in length (long runs are article body text, rarely
-# repeated) and the dict is capped in size; it lives for the Python worker's
-# lifetime — the cluster analog is a per-executor cache.
+# Memo for cleaned text runs. Web corpora repeat the same boilerplate runs
+# (nav labels, footer legalese, titles) across every page of a host, so
+# the unescape+ctrl-strip+canon_ws chain keeps re-cleaning identical
+# strings. clean() is a pure function, so memoizing it is byte-identical
+# by construction (pinned by the fixture-corpus hash gate). Keys are
+# capped in length (long runs are article body text, rarely repeated).
+# The memo lives for the Python worker's lifetime (the cluster analog is a
+# per-executor cache), and a full memo is emptied rather than frozen, so
+# a reused worker keeps memoizing the hosts it meets later.
 _CLEAN_CACHE: dict = {}
 _CLEAN_CACHE_MAX = 1 << 16
 _CLEAN_KEY_MAX = 512
 
 
-def _clean_run(raw: str) -> str:
-    # unescape is the identity without '&'; skipping it (and the ctrl
-    # scan on short clean text) is a pure fast path, byte-identical
+def _clean_run(raw: str, ctrl: bool) -> str:
+    """clean(raw): unescape, strip control chars, canon_ws. ctrl=False
+    promises that raw holds no control char (its page has none).
+
+    Pure fast paths, byte-identical:
+    - unescape is the identity without '&'. It can make a control char
+      (html.unescape("&#12;") == "\\x0c"), so the strip is skipped only
+      for a run with no '&' on a page with no control char;
+    - with no control char left, an ASCII run's only whitespace chars are
+      ' ', '\\t', '\\n' and '\\r'. Without the last three, a space at
+      either end or a double space, canon_ws returns the run unchanged."""
     if "&" in raw:
-        raw = _htmlmod.unescape(raw)
-    return canon_ws(_CTRL_RE.sub("", raw))
+        raw = _CTRL_RE.sub("", _htmlmod.unescape(raw))
+    elif ctrl:
+        raw = _CTRL_RE.sub("", raw)
+    if raw.isascii() and not (
+        raw[:1] == " " or raw[-1:] == " " or "  " in raw or "\n" in raw or "\t" in raw or "\r" in raw
+    ):
+        return raw
+    return canon_ws(raw)
 
 
-def _clean_cached(raw: str) -> str:
+def _clean_cached(raw: str, ctrl: bool) -> str:
     if len(raw) > _CLEAN_KEY_MAX:
-        return _clean_run(raw)
+        return _clean_run(raw, ctrl)
     text = _CLEAN_CACHE.get(raw)
     if text is None:
-        text = _clean_run(raw)
-        if len(_CLEAN_CACHE) < _CLEAN_CACHE_MAX:
-            _CLEAN_CACHE[raw] = text
+        text = _clean_run(raw, ctrl)
+        if len(_CLEAN_CACHE) >= _CLEAN_CACHE_MAX:
+            _CLEAN_CACHE.clear()
+        _CLEAN_CACHE[raw] = text
     return text
 
 
@@ -155,9 +178,33 @@ def repair_markup(s: str) -> str:
     drop comments and script/style/noscript/template elements wholesale
     (tolerating a missing close tag — 'unclosed' degradation case)."""
     s = _COMMENT_RE.sub(" ", s)
-    for rx in _DROP_RES:
-        s = rx.sub(" ", s)
+    for opener, closer in _DROP_RES:
+        s = _drop(s, opener, closer)
     return s
+
+
+def _drop(s: str, opener: re.Pattern, closer: re.Pattern) -> str:
+    """re.sub(" ", s) of one drop element's frozen form, in linear time.
+
+    The regex rescans from every opener with no '>' after it to the end of
+    the page. Here each opener's '>' and closer is searched for once, and
+    the first opener with no '>' ends the pass: no later one has a '>'."""
+    out = []
+    pos = 0
+    while (m := opener.search(s, pos)) is not None:
+        gt = s.find(">", m.end())
+        if gt < 0:
+            break
+        out += (s[pos : m.start()], " ")
+        c = closer.search(s, gt + 1)
+        if c is None:
+            # `$`: the element runs to the end, or to a final '\n' (which
+            # cannot be the opener's '>')
+            pos = len(s) - 1 if s.endswith("\n") else len(s)
+            break
+        pos = c.end()
+    out.append(s[pos:])
+    return "".join(out)
 
 
 class Block:
@@ -173,7 +220,30 @@ class Block:
         self.link_density = min(1.0, link_chars / self.n_chars) if self.n_chars else 0.0
 
 
-def tokenize_blocks(markup: str) -> list:
+class Blocks:
+    """The flat DOM array, as parallel columns: each block's context tag,
+    cleaned text and link chars. Indexing and iteration give Block views;
+    the stage functions read the columns."""
+
+    __slots__ = ("tags", "texts", "link_chars")
+
+    def __init__(self, tags: list, texts: list, link_chars: list):
+        self.tags = tags
+        self.texts = texts
+        self.link_chars = link_chars
+
+    def __len__(self) -> int:
+        return len(self.texts)
+
+    def __getitem__(self, i: int) -> Block:
+        pos = range(len(self.texts))[i]
+        return Block(pos, self.tags[pos], self.texts[pos], self.link_chars[pos])
+
+    def __iter__(self):
+        return map(Block, range(len(self.texts)), self.tags, self.texts, self.link_chars)
+
+
+def tokenize_blocks(markup: str) -> Blocks:
     """Tokenize repaired markup into the flat DOM array of blocks.
 
     Tolerant by construction: unbalanced tags can't break it because tags are
@@ -181,40 +251,29 @@ def tokenize_blocks(markup: str) -> list:
     are decoded per text segment (single pass — double-encoded entities
     surface their one-level-decoded form, frozen spec).
 
-    Hot path (round-2 rewrite, byte-identical by tests/test_core.py +
-    the fixture-corpus hash gate): one _TAG_RE.split() does the whole
-    segmentation in C — the list alternates [text, slash, name, text, ...]
-    — replacing the finditer loop's per-match Match objects, .group()
-    calls and markup[pos:start] slicing. Text runs and link-text runs
-    accumulate in two flat string lists (no per-segment tuples)."""
-    blocks: list = []
-    seg_texts: list = []  # all text accumulated since last flush
+    Hot path, byte-identical by tests/test_core.py and the fixture-corpus
+    hash gates:
+    - one _TAG_RE.split() does the whole segmentation in C; the list
+      alternates [text, slash, name, text, ...] and is walked three parts
+      at a time;
+    - text runs and link-text runs accumulate in two flat string lists,
+      and blocks go straight into three column lists (no per-block
+      objects, no flush call);
+    - the page is tested for control chars once; without one, a run with
+      no '&' skips the control-char strip, and an ASCII run already in
+      canonical form skips canon_ws (see _clean_run)."""
+    tags: list = []
+    texts: list = []
+    link_chars: list = []
+    seg_texts: list = []  # all text accumulated since the last block tag
     seg_links: list = []  # the subset that was inside <a> context
     stack: list = []  # open block-tag context
     link_depth = 0
-    idx = 0
 
+    ctrl = any(c in markup for c in _CTRL_CHARS)
     clean = _clean_cached
-
-    def flush():
-        nonlocal link_depth, idx
-        if seg_texts:
-            raw = "".join(seg_texts)
-            # whitespace-only runs between tags are the common case; their
-            # cleaned form is always '' (no '&' ⇒ no unescape surprises)
-            if raw and not (raw.isspace() and "&" not in raw):
-                text = clean(raw)
-                if text:
-                    link_chars = len(clean(" ".join(seg_links))) if seg_links else 0
-                    tag = stack[-1] if stack else "body"
-                    blocks.append(Block(idx, tag, text, link_chars))
-                    idx += 1
-            del seg_texts[:]
-            del seg_links[:]
-        link_depth = 0
-
-    texts_append = seg_texts.append
-    links_append = seg_links.append
+    seg_append = seg_texts.append
+    link_append = seg_links.append
     block_tags, void_tags = BLOCK_TAGS, VOID_TAGS
     # no tag can start after the last '>', but each '<' there would rescan
     # to the end: split up to it and give the tail to the last text run
@@ -222,14 +281,12 @@ def tokenize_blocks(markup: str) -> list:
     k = markup.rfind(">") + 1
     parts = _TAG_RE.split(markup[:k])
     parts[-1] += markup[k:]
-    if parts[0]:
-        texts_append(parts[0])
-    i, n = 1, len(parts)
-    while i < n:
-        slash = parts[i]
-        name = parts[i + 1]
-        trailing = parts[i + 2]
-        i += 3
+    parts += ("", "br", "")  # a closing void block tag flushes the last run
+    it = iter(parts)
+    first = next(it)
+    if first:
+        seg_append(first)
+    for slash, name, trailing in zip(it, it, it):
         # name is None for <!DOCTYPE ...>, <?xml ...>, stray junk: the tag
         # is a pure separator, only its trailing text matters
         if name is not None:
@@ -241,8 +298,18 @@ def tokenize_blocks(markup: str) -> list:
                 else:
                     link_depth += 1
             elif name in block_tags:
-                if seg_texts or link_depth:
-                    flush()  # no-op otherwise; guard skips the call overhead
+                if seg_texts:
+                    raw = "".join(seg_texts)
+                    # a whitespace-only run cleans to '' (and holds no '&')
+                    if not raw.isspace():
+                        text = clean(raw, ctrl)
+                        if text:
+                            tags.append(stack[-1] if stack else "body")
+                            texts.append(text)
+                            link_chars.append(len(clean(" ".join(seg_links), ctrl)) if seg_links else 0)
+                    seg_texts.clear()
+                    seg_links.clear()
+                link_depth = 0
                 if name not in void_tags:
                     if slash:
                         if name in stack:
@@ -251,11 +318,10 @@ def tokenize_blocks(markup: str) -> list:
                     else:
                         stack.append(name)
         if trailing:
-            texts_append(trailing)
+            seg_append(trailing)
             if link_depth:
-                links_append(trailing)
-    flush()
-    return blocks
+                link_append(trailing)
+    return Blocks(tags, texts, link_chars)
 
 
 def _pctl_linear(sorted_a: np.ndarray, pct: float) -> float:
@@ -276,7 +342,7 @@ def _pctl_linear(sorted_a: np.ndarray, pct: float) -> float:
     return float(a + d * t)
 
 
-def score_blocks(blocks: list, cfg: ExtractorConfig = DEFAULT_CONFIG) -> dict:
+def score_blocks(blocks: Blocks, cfg: ExtractorConfig = DEFAULT_CONFIG) -> dict:
     """Per-block content score channels in [0,1], float64.
 
     raw signal  = n_chars * (1 - link_density) * tag_prior   (text density)
@@ -284,22 +350,19 @@ def score_blocks(blocks: list, cfg: ExtractorConfig = DEFAULT_CONFIG) -> dict:
     smooth      = 3-tap neighborhood average                  (gaussian analog)
     sharp       = clip(norm + 1.5*(norm - smooth), 0, 1)      (exe_t.py:299-300)
 
-    Returns dict of equal-length float64 arrays {norm, smooth, sharp}.
+    Returns dict of equal-length float64 arrays {raw, norm, smooth, sharp},
+    plus the n_chars and link_density columns (Block's values) that
+    classify_blocks gates on.
     """
     n = len(blocks)
     if n == 0:
         z = np.zeros(0, dtype=np.float64)
-        return {"raw": z, "norm": z, "smooth": z, "sharp": z}
-    raw = np.fromiter(
-        (
-            b.n_chars
-            * (1.0 - b.link_density)
-            * (cfg.boiler_tag_penalty if b.tag in BOILER_TAGS else 1.0)
-            for b in blocks
-        ),
-        dtype=np.float64,
-        count=n,
-    )
+        return {"raw": z, "norm": z, "smooth": z, "sharp": z, "n_chars": z, "link_density": z}
+    n_chars = np.fromiter(map(len, blocks.texts), dtype=np.float64, count=n)
+    density = np.minimum(1.0, np.array(blocks.link_chars, dtype=np.float64) / n_chars)
+    penalty = cfg.boiler_tag_penalty
+    prior = np.array([penalty if t in BOILER_TAGS else 1.0 for t in blocks.tags], dtype=np.float64)
+    raw = n_chars * (1.0 - density) * prior
     srt = np.sort(raw)
     lo = _pctl_linear(srt, cfg.contrast_lo)
     hi = _pctl_linear(srt, cfg.contrast_hi)
@@ -312,10 +375,10 @@ def score_blocks(blocks: list, cfg: ExtractorConfig = DEFAULT_CONFIG) -> dict:
     padded = np.concatenate(([norm[0]], norm, [norm[-1]]))
     smooth = k0 * padded[:-2] + k1 * padded[1:-1] + k2 * padded[2:]
     sharp = np.clip(norm + cfg.sharpen * (norm - smooth), 0.0, 1.0)
-    return {"raw": raw, "norm": norm, "smooth": smooth, "sharp": sharp}
+    return {"raw": raw, "norm": norm, "smooth": smooth, "sharp": sharp, "n_chars": n_chars, "link_density": density}
 
 
-def classify_blocks(blocks: list, scores: dict, cfg: ExtractorConfig = DEFAULT_CONFIG) -> np.ndarray:
+def classify_blocks(blocks: Blocks, scores: dict, cfg: ExtractorConfig = DEFAULT_CONFIG) -> np.ndarray:
     """Class per block: 1=content, 0=boilerplate ('blank').
 
     A block is content if it passes the hard gates (min length, link density)
@@ -325,39 +388,38 @@ def classify_blocks(blocks: list, scores: dict, cfg: ExtractorConfig = DEFAULT_C
     clears the threshold."""
     if len(blocks) == 0:
         return np.zeros(0, dtype=np.int64)
-    gates = np.fromiter(
-        (b.n_chars >= cfg.min_chars and b.link_density <= cfg.max_link_density for b in blocks),
-        dtype=bool,
-        count=len(blocks),
-    )
+    gates = (scores["n_chars"] >= cfg.min_chars) & (scores["link_density"] <= cfg.max_link_density)
     good = scores["sharp"] >= cfg.threshold
     promoted = (scores["raw"] >= cfg.neargood_chars) & (scores["smooth"] >= cfg.threshold)
     return ((good | promoted) & gates).astype(np.int64)
 
 
-def decode_blocks(blocks: list, cls: np.ndarray):
+def decode_blocks(blocks: Blocks, cls: np.ndarray):
     """CTC-style decode: keep content ('non-blank') blocks in document order,
     join with single spaces, record per-block spans (char offsets into the
     final text). Returns (text, spans) where spans is a list of
     (block_idx, start, end, cls) tuples."""
-    parts = []
+    keep = np.flatnonzero(np.asarray(cls) == 1).tolist()
+    if not keep:
+        return "", []
+    texts = blocks.texts
+    parts = [texts[i] for i in keep]
     spans = []
     off = 0
-    for b, c in zip(blocks, cls):
-        if c != 1:
-            continue
-        if parts:
-            off += 1  # joining space
-        start = off
-        parts.append(b.text)
-        off += len(b.text)
-        spans.append((int(b.pos), int(start), int(off), "content"))
+    for i, text in zip(keep, parts):
+        end = off + len(text)
+        spans.append((i, off, end, "content"))
+        off = end + 1  # joining space
     return " ".join(parts), spans
 
 
 def extract_html(raw: bytes, cfg: ExtractorConfig = DEFAULT_CONFIG):
     """Full HTML path: decode → repair → tokenize → score → classify → decode."""
-    markup = repair_markup(decode_bytes(raw))
+    return _extract_markup(decode_bytes(raw), cfg)
+
+
+def _extract_markup(s: str, cfg: ExtractorConfig):
+    markup = repair_markup(s)
     blocks = tokenize_blocks(markup)
     scores = score_blocks(blocks, cfg)
     cls = classify_blocks(blocks, scores, cfg)
@@ -373,14 +435,24 @@ def extract_html(raw: bytes, cfg: ExtractorConfig = DEFAULT_CONFIG):
     }
 
 
-def extract_document(raw, cfg: ExtractorConfig = DEFAULT_CONFIG):
+def extract_page(raw, cfg: ExtractorConfig = DEFAULT_CONFIG) -> tuple[dict, str | None]:
     """Route one document payload: PDF magic → layout-parse branch
-    (ENHANCMENT24.py:93-107 analog); empty/null → empty result; else HTML."""
+    (ENHANCMENT24.py:93-107 analog); empty/null → empty result; else HTML.
+
+    Returns (result, markup): markup is the decode_bytes(raw) the HTML
+    path read, so the link faces need not decode the page again, and None
+    for PDF and empty payloads."""
     if raw is None or len(raw) == 0:
-        return {"text": "", "spans": [], "n_blocks": 0, "n_content": 0, "n_boilerplate": 0, "kind": "empty"}
+        return {"text": "", "spans": [], "n_blocks": 0, "n_content": 0, "n_boilerplate": 0, "kind": "empty"}, None
     raw = bytes(raw)
     if raw.startswith(PDF_MAGIC):
         from greenocr_spark.extractor import pdf as _pdf
 
-        return _pdf.extract_pdf(raw)
-    return extract_html(raw, cfg)
+        return _pdf.extract_pdf(raw), None
+    s = decode_bytes(raw)
+    return _extract_markup(s, cfg), s
+
+
+def extract_document(raw, cfg: ExtractorConfig = DEFAULT_CONFIG):
+    """The extracted result of one document payload (extract_page's)."""
+    return extract_page(raw, cfg)[0]

@@ -302,7 +302,8 @@ def extract_link_faces(
     raw, base_url: str | None = None
 ) -> tuple[list[str], list[tuple[str, str]]]:
     """(extract_outlinks(raw, base_url), extract_anchors(raw, base_url))
-    from one pass over the page."""
+    from one pass over the page. raw may also be the page decode_bytes
+    already decoded (core.extract_page hands it over), or None."""
     s = _markup(raw)
     if s is None:
         return [], []

@@ -28,7 +28,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from greenocr_spark.extractor.core import DEFAULT_CONFIG, ExtractorConfig, extract_document
+from greenocr_spark.extractor.core import DEFAULT_CONFIG, ExtractorConfig, extract_page
 from greenocr_spark.worker import trim_import_caches
 
 SPAN_TYPE = ArrayType(
@@ -180,7 +180,9 @@ def extract_pages(
                 out["anchors"] = [None] * n
                 out["n_anchors"] = [0] * n
             for i, raw in enumerate(pdf["html"].tolist()):
-                r = extract_document(raw, cfg)
+                # markup: the decoded page, which the link faces read too
+                # (None for PDF and empty pages, which have no links)
+                r, markup = extract_page(raw, cfg)
                 out["text"][i] = r["text"]
                 # core emits spans as (block_idx, start, end, cls) tuples;
                 # Arrow accepts tuples positionally for struct arrays, so
@@ -195,11 +197,11 @@ def extract_pages(
                 if with_anchors:
                     # (dst, anchor) tuples pass positionally to the Arrow
                     # struct array, same zero-re-boxing path as spans
-                    links, anchors = extract_link_faces(raw, base_url=out["url"][i])
+                    links, anchors = extract_link_faces(markup, base_url=out["url"][i])
                     out["anchors"][i] = anchors
                     out["n_anchors"][i] = len(anchors)
                 elif with_links:
-                    links = extract_outlinks(raw, base_url=out["url"][i])
+                    links = extract_outlinks(markup, base_url=out["url"][i])
                 if with_links:
                     out["outlinks"][i] = links
                     out["n_links"][i] = len(links)

@@ -70,6 +70,32 @@ def test_repair_drops_script_style_comments():
 
 def test_repair_unclosed_script_drops_to_end():
     assert "secret" not in repair_markup("<p>a</p><script>secret")
+    # `$` of the frozen form also matches before a final newline
+    assert repair_markup("<p>a</p><script>x\n") == "<p>a</p> \n"
+
+
+def _repair_frozen_form(s):
+    # the regex form of repair_markup, the reference its linear pass keeps
+    import re
+
+    s = core._COMMENT_RE.sub(" ", s)
+    for name in core.DROP_ELEMENTS:
+        s = re.sub(rf"<{name}\b[^>]*>.*?(?:</{name}\s*>|$)", " ", s, flags=re.IGNORECASE | re.DOTALL)
+    return s
+
+
+_REPAIR_PIECES = [
+    "<script", "<SCRIPT", "<scripts", "<script-x", "</script", "</script >", "</ScRiPt\n>", ">",
+    "<style>", "</style>", "<noscript ", "</noscript>", "<template>", "</template\t>", "<!--", "-->",
+    "x", "\n", " ", "<p>", "<\u017fcript>", "<", "/",
+]
+
+
+@given(st.lists(st.sampled_from(_REPAIR_PIECES), max_size=16))
+@settings(max_examples=500, deadline=None)
+def test_repair_matches_frozen_regex_form(pieces):
+    s = "".join(pieces)
+    assert repair_markup(s) == _repair_frozen_form(s)
 
 
 # ---- tokenize_blocks -------------------------------------------------------
@@ -103,6 +129,75 @@ def test_tokenize_inline_tags_do_not_split():
     blocks = tokenize_blocks("<p>a <b>bold</b> and <span>span</span> text</p>")
     assert len(blocks) == 1
     assert blocks[0].text == "a bold and span text"
+
+
+# Frozen (pos, tag, text, n_chars, link_density) of shapes the fixture
+# corpus never holds: control chars, control-char references, link text
+# in one or several segments, an entity split by an inline tag, and a '<'
+# tail after the last '>'.
+TOKENIZE_FROZEN = {
+    "<p>a\x01b c</p><p><a href='/x'>l\x01k</a> and\x7f more</p>": [
+        (0, "p", "ab c", 4, 0.0),
+        (1, "p", "lk and more", 11, 0.18181818181818182),
+    ],
+    "<p>a&#12;b</p><p>c&#x0c;d e</p>": [(0, "p", "ab", 2, 0.0), (1, "p", "cd e", 4, 0.0)],
+    "<ul><li><a href='/n'>Home  page</a></li></ul>": [(0, "li", "Home page", 9, 1.0)],
+    "<p>q<a>r</a>s</p>": [(0, "p", "qrs", 3, 0.3333333333333333)],
+    "<p><a href='/x'>one <b>two</b> three</a> tail</p>": [
+        (0, "p", "one two three tail", 18, 0.7222222222222222),
+    ],
+    "<p><a>x</a><a>y</a></p>": [(0, "p", "xy", 2, 1.0)],
+    "<p>x &am<b></b>p; y</p>": [(0, "p", "x & y", 5, 0.0)],
+    "<p>body</p>tail < not <a tag": [(0, "p", "body", 4, 0.0), (1, "body", "tail < not <a tag", 17, 0.0)],
+    "<div> <a href=/a> &amp; </a>\n</div><div>\t</div>": [(0, "div", "&", 1, 1.0)],
+    "<p> lead</p><p>tab\there</p><p>cr\r\nlf</p><p>trail </p><p>caf\xe9 x</p><p>a\x0bb\x1cc</p>": [
+        (0, "p", "lead", 4, 0.0),
+        (1, "p", "tab here", 8, 0.0),
+        (2, "p", "cr lf", 5, 0.0),
+        (3, "p", "trail", 5, 0.0),
+        (4, "p", "caf\xe9 x", 6, 0.0),
+        (5, "p", "abc", 3, 0.0),
+    ],
+}
+
+
+@pytest.mark.parametrize("markup", list(TOKENIZE_FROZEN))
+def test_tokenize_frozen_shapes(markup):
+    got = [(b.pos, b.tag, b.text, b.n_chars, b.link_density) for b in tokenize_blocks(markup)]
+    assert got == TOKENIZE_FROZEN[markup]
+
+
+@given(st.text(alphabet=st.sampled_from("ab \t\n\r\x0b\x0c\x01\x1c\x7f\xa0\u3000&#;12x0c"), max_size=40))
+@settings(max_examples=500, deadline=None)
+def test_clean_run_is_the_frozen_clean(raw):
+    import html
+
+    want = canon_ws(core._CTRL_RE.sub("", html.unescape(raw)))
+    assert core._clean_run(raw, True) == want
+    if not any(c in raw for c in core._CTRL_CHARS):
+        assert core._clean_run(raw, False) == want
+
+
+def test_ctrl_chars_are_the_ctrl_regex_class():
+    matched = {c for c in map(chr, range(0x110000)) if core._CTRL_RE.match(c)}
+    assert matched == set(core._CTRL_CHARS) and len(core._CTRL_CHARS) == 30
+
+
+def test_clean_memo_keeps_admitting_new_runs(monkeypatch):
+    cleans = []
+    clean_run = core._clean_run
+    monkeypatch.setattr(core, "_clean_run", lambda raw, ctrl: cleans.append(raw) or clean_run(raw, ctrl))
+    core._CLEAN_CACHE.clear()
+    try:
+        for i in range(70_000):
+            core._clean_cached(f"run {i}", False)
+        assert len(core._CLEAN_CACHE) <= core._CLEAN_CACHE_MAX
+        del cleans[:]
+        assert core._clean_cached("Home  page", False) == "Home page"
+        assert core._clean_cached("Home  page", False) == "Home page"
+        assert cleans == ["Home  page"]  # the repeat is a memo hit
+    finally:
+        core._CLEAN_CACHE.clear()
 
 
 # ---- scoring + classify ----------------------------------------------------
@@ -252,3 +347,17 @@ def test_extraction_beats_naive_tag_strip():
     assert ours / total >= 0.85
     assert naive / total <= 0.05
     assert ours / total - naive / total >= 0.8
+
+
+def test_perfbench_replay_matches_reference():
+    # perfbench's traced extractor.*_s come from replaying the stage
+    # functions one by one; the replay must still reproduce extract_document
+    from perfbench.inputs import pages
+    from perfbench.verify import reference_hash
+    from perfbench.workloads import replay
+
+    for kind in ("cold", "crawl"):
+        rows = pages(kind, 3, 0, 0, 64)
+        rep = replay(rows, True)
+        assert rep.xor == reference_hash(rows, True)[0], kind
+        assert rep.docs["html"] > 0 and rep.blocks > 0 and rep.stage_s["tokenize_blocks"] > 0

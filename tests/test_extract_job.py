@@ -236,17 +236,17 @@ sc = spark.sparkContext
 pq.write_table(pages_arrow_table(1200), f"{tmp}/pages.parquet")
 pages = spark.read.parquet(f"{tmp}/pages.parquet")
 
-extract_document = extract_module.extract_document
+extract_page = extract_module.extract_page
 
 def fail_first_attempt(raw, cfg, calls=itertools.count()):
     # attempt 0 of a task dies on the first page after its first batch,
     # once that batch's rows are extracted, written out and tallied
     if next(calls) == 1024 and TaskContext.get().attemptNumber() == 0:
         raise RuntimeError("injected task failure")
-    return extract_document(raw, cfg)
+    return extract_page(raw, cfg)
 
 # shipped to the workers with the batch function that calls it
-extract_module.extract_document = fail_first_attempt
+extract_module.extract_page = fail_first_attempt
 
 def failed_tasks(group):
     sc._jsc.sc().listenerBus().waitUntilEmpty()

@@ -733,6 +733,7 @@ ADVERSARIAL_SHAPES = {
     "a-hre-no-gt": (b"<a hre ", 13_000),
     "unclosed-a": (b"<a href=/p>", 21_000),
     "unterminated-quote": (b'<a href="/p>', 21_000),
+    "script-no-gt": (b"<script ", 13_000),
 }
 
 
