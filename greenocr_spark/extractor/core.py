@@ -1,11 +1,11 @@
 """Pure-Python main-content extraction core — the byte-identity spec.
 
 This module is the single source of truth for what "extracted text" means.
-The Spark pipeline (greenocr_spark.operators.extract) calls *these exact
-functions* inside Arrow-batched pandas UDFs, and the pytest golden fixtures
-are produced by calling them directly — one code path, so per-url byte
-identity between Spark output and the reference extractor holds by
-construction (BASELINE.json input_hint).
+The Spark pipeline (greenocr_spark.operators.extract) runs *these exact
+functions* as one PageBatch per Arrow batch, and the pytest golden fixtures
+are produced by extract_document, the one-page PageBatch — one code path,
+so per-url byte identity between Spark output and the reference extractor
+holds by construction (BASELINE.json input_hint).
 
 Semantic lineage (grafted from the reference, see SURVEY.md §2):
 - decode_bytes        ~ grayscale decode        (reference exe_t.py:482,509)
@@ -28,6 +28,8 @@ import codecs
 import html as _htmlmod
 import re
 from dataclasses import dataclass
+from itertools import repeat
+from typing import NamedTuple
 
 import numpy as np
 
@@ -70,6 +72,8 @@ DROP_ELEMENTS = ("script", "style", "noscript", "template")
 BOILER_TAGS = frozenset({"nav", "header", "footer", "aside", "form", "title", "figcaption", "option", "select", "button", "head"})
 
 PDF_MAGIC = b"%PDF-"
+# the class of every span: only content blocks are decoded
+CONTENT = "content"
 
 _CHARSET_RE = re.compile(rb"charset\s*=\s*[\"']?([A-Za-z0-9_\-]+)", re.IGNORECASE)
 _COMMENT_RE = re.compile(r"<!--.*?(?:-->|$)", re.DOTALL)
@@ -324,36 +328,36 @@ def tokenize_blocks(markup: str) -> Blocks:
     return Blocks(tags, texts, link_chars)
 
 
-def _pctl_linear(sorted_a: np.ndarray, pct: float) -> float:
-    """np.percentile(method='linear') on an already-sorted float64 array,
-    bit-for-bit (replicates numpy's _lerp incl. the t>=0.5 symmetric branch)
-    without the generic dispatch overhead — percentile was 15% of extraction
-    CPU (tests/test_core.py pins equality against np.percentile)."""
-    n = sorted_a.size
-    v = (pct / 100.0) * (n - 1)
-    f = int(v)  # v >= 0 always
-    c = f + 1 if f + 1 < n else n - 1
+def _pctl_linear(srt: np.ndarray, first: np.ndarray, count: np.ndarray, pct: float) -> np.ndarray:
+    """np.percentile(method='linear') of every segment srt[first:first + count]
+    (count >= 1, each segment sorted), all in one pass and bit-for-bit:
+    numpy's _lerp, including its t >= 0.5 symmetric branch, without the
+    generic dispatch per segment (tests/test_core.py pins equality against
+    np.percentile)."""
+    v = (pct / 100.0) * (count - 1)
+    f = v.astype(np.int64)  # floor: v >= 0
     t = v - f
-    a = sorted_a[f]
-    b = sorted_a[c]
+    a = srt[first + f]
+    b = srt[first + np.minimum(f + 1, count - 1)]
     d = b - a
-    if t >= 0.5:
-        return float(b - d * (1 - t))
-    return float(a + d * t)
+    return np.where(t >= 0.5, b - d * (1 - t), a + d * t)
 
 
-def score_blocks(blocks: Blocks, cfg: ExtractorConfig = DEFAULT_CONFIG) -> dict:
-    """Per-block content score channels in [0,1], float64.
+def score_pages(blocks: Blocks, bounds, cfg: ExtractorConfig = DEFAULT_CONFIG) -> dict:
+    """Per-block content score channels in [0,1], float64, for a batch of
+    pages in one pass. blocks holds the pages' blocks back to back: page p's
+    are blocks[bounds[p]:bounds[p + 1]], and each page is scored on its own.
 
     raw signal  = n_chars * (1 - link_density) * tag_prior   (text density)
-    norm        = 1%/99% percentile contrast stretch          (exe_t.py:253-262)
-    smooth      = 3-tap neighborhood average                  (gaussian analog)
+    norm        = 1%/99% percentile contrast stretch, per page (exe_t.py:253-262)
+    smooth      = 3-tap neighborhood average within the page (gaussian analog)
     sharp       = clip(norm + 1.5*(norm - smooth), 0, 1)      (exe_t.py:299-300)
 
     Returns dict of equal-length float64 arrays {raw, norm, smooth, sharp},
     plus the n_chars and link_density columns (Block's values) that
-    classify_blocks gates on.
-    """
+    classify_blocks gates on. The numpy calls are per batch, not per page:
+    one sort keyed by page, and each page's percentiles, degenerate test
+    and smoothing edges come from its offsets."""
     n = len(blocks)
     if n == 0:
         z = np.zeros(0, dtype=np.float64)
@@ -363,23 +367,40 @@ def score_blocks(blocks: Blocks, cfg: ExtractorConfig = DEFAULT_CONFIG) -> dict:
     penalty = cfg.boiler_tag_penalty
     prior = np.array([penalty if t in BOILER_TAGS else 1.0 for t in blocks.tags], dtype=np.float64)
     raw = n_chars * (1.0 - density) * prior
-    srt = np.sort(raw)
-    lo = _pctl_linear(srt, cfg.contrast_lo)
-    hi = _pctl_linear(srt, cfg.contrast_hi)
-    if hi - lo < 1e-9:
-        # degenerate doc (all blocks equal): any positive signal is "bright"
-        norm = (raw > 0).astype(np.float64)
-    else:
-        norm = np.clip((raw - lo) / (hi - lo), 0.0, 1.0)
+    # the pages that have blocks, as (first, count) segments of the columns
+    bounds = np.asarray(bounds, dtype=np.int64)
+    count = np.diff(bounds)
+    pages = np.flatnonzero(count)
+    first, count = bounds[pages], count[pages]
+    seg = np.repeat(np.arange(pages.size), count)
+    srt = raw[np.lexsort((raw, seg))]
+    lo = _pctl_linear(srt, first, count, cfg.contrast_lo)
+    hi = _pctl_linear(srt, first, count, cfg.contrast_hi)
+    width = hi - lo
+    with np.errstate(divide="ignore", invalid="ignore"):
+        stretched = np.clip((raw - lo[seg]) / width[seg], 0.0, 1.0)
+    # degenerate page (all blocks equal): any positive signal is "bright"
+    norm = np.where((width < 1e-9)[seg], (raw > 0).astype(np.float64), stretched)
+    # each page's first and last block are their own outer neighbours
+    left = np.concatenate((norm[:1], norm[:-1]))
+    left[first] = norm[first]
+    right = np.concatenate((norm[1:], norm[-1:]))
+    last = first + count - 1
+    right[last] = norm[last]
     k0, k1, k2 = cfg.smooth_kernel
-    padded = np.concatenate(([norm[0]], norm, [norm[-1]]))
-    smooth = k0 * padded[:-2] + k1 * padded[1:-1] + k2 * padded[2:]
+    smooth = k0 * left + k1 * norm + k2 * right
     sharp = np.clip(norm + cfg.sharpen * (norm - smooth), 0.0, 1.0)
     return {"raw": raw, "norm": norm, "smooth": smooth, "sharp": sharp, "n_chars": n_chars, "link_density": density}
 
 
+def score_blocks(blocks: Blocks, cfg: ExtractorConfig = DEFAULT_CONFIG) -> dict:
+    """score_pages of one page."""
+    return score_pages(blocks, (0, len(blocks)), cfg)
+
+
 def classify_blocks(blocks: Blocks, scores: dict, cfg: ExtractorConfig = DEFAULT_CONFIG) -> np.ndarray:
-    """Class per block: 1=content, 0=boilerplate ('blank').
+    """Class per block: 1=content, 0=boilerplate ('blank'). Per block, so
+    it classifies a batch of pages (score_pages' columns) as it does one.
 
     A block is content if it passes the hard gates (min length, link density)
     and either its sharpened score clears the threshold, or — jusText-style
@@ -394,65 +415,159 @@ def classify_blocks(blocks: Blocks, scores: dict, cfg: ExtractorConfig = DEFAULT
     return ((good | promoted) & gates).astype(np.int64)
 
 
+def decode_pages(texts: list, cls: np.ndarray, bounds):
+    """CTC-style decode of a batch of pages in one pass: each page keeps
+    its content ('non-blank') blocks in document order, joined with single
+    spaces. texts holds the pages' block texts back to back (page p's are
+    texts[bounds[p]:bounds[p + 1]]).
+
+    Returns (page_texts, span_bounds, block_idx, start, end): page p's
+    spans are rows span_bounds[p] to span_bounds[p + 1] of the int64
+    columns block_idx (the block's index in its page), start and end (char
+    offsets into its page's text); every span's class is "content"."""
+    bounds = np.asarray(bounds, dtype=np.int64)
+    keep = np.flatnonzero(np.asarray(cls) == 1)
+    cut = np.searchsorted(keep, bounds)  # page p keeps keep[cut[p]:cut[p + 1]]
+    kept = [texts[i] for i in keep.tolist()]
+    page = np.repeat(np.arange(cut.size - 1), np.diff(cut))
+    step = np.fromiter(map(len, kept), dtype=np.int64, count=len(kept)) + 1  # text + joining space
+    at = np.cumsum(step) - step  # offsets in the join of all kept texts
+    start = at - at[cut[page]]
+    cut_at = cut.tolist()
+    page_texts = [" ".join(kept[a:b]) for a, b in zip(cut_at, cut_at[1:])]
+    return page_texts, cut, keep - bounds[page], start, start + step - 1
+
+
 def decode_blocks(blocks: Blocks, cls: np.ndarray):
-    """CTC-style decode: keep content ('non-blank') blocks in document order,
-    join with single spaces, record per-block spans (char offsets into the
-    final text). Returns (text, spans) where spans is a list of
+    """decode_pages of one page: (text, spans), spans a list of
     (block_idx, start, end, cls) tuples."""
-    keep = np.flatnonzero(np.asarray(cls) == 1).tolist()
-    if not keep:
-        return "", []
-    texts = blocks.texts
-    parts = [texts[i] for i in keep]
-    spans = []
-    off = 0
-    for i, text in zip(keep, parts):
-        end = off + len(text)
-        spans.append((i, off, end, "content"))
-        off = end + 1  # joining space
-    return " ".join(parts), spans
+    # a page with no blocks may come as any empty sequence
+    texts = blocks.texts if len(blocks) else ()
+    (text,), _, block_idx, start, end = decode_pages(texts, cls, (0, len(texts)))
+    return text, list(zip(block_idx.tolist(), start.tolist(), end.tolist(), repeat(CONTENT)))
+
+
+class PageBatch:
+    """Pages extracted together. add() runs one page's own stages (route;
+    decode → repair → tokenize, or the PDF branch) and keeps only its
+    block columns, not the decoded page; finish() scores, classifies and
+    decodes every page's blocks at once (score_pages → classify_blocks →
+    decode_pages). extract_document is the one-page batch."""
+
+    def __init__(self, cfg: ExtractorConfig = DEFAULT_CONFIG):
+        self.cfg = cfg
+        self.tags: list = []
+        self.texts: list = []
+        self.link_chars: list = []
+        self.bounds = [0]  # page p's blocks are [bounds[p], bounds[p + 1])
+        self.kinds: list = []
+        self.pdfs: dict = {}  # page index -> extract_pdf's result
+
+    def add(self, raw) -> str | None:
+        """Route one document payload: PDF magic → layout-parse branch
+        (ENHANCMENT24.py:93-107 analog); empty/null → empty result; else
+        HTML. Returns the decode_bytes(raw) the HTML path read, so the link
+        faces need not decode the page again, and None for PDF and empty
+        payloads."""
+        if raw is None or len(raw) == 0:
+            self._add_page("empty")
+            return None
+        raw = bytes(raw)
+        if raw.startswith(PDF_MAGIC):
+            from greenocr_spark.extractor import pdf as _pdf
+
+            r = _pdf.extract_pdf(raw)
+            self.pdfs[len(self.kinds)] = r
+            self._add_page(r["kind"])
+            return None
+        markup = decode_bytes(raw)
+        self.add_markup(markup)
+        return markup
+
+    def add_markup(self, s: str) -> None:
+        """Add one decoded HTML page."""
+        blocks = tokenize_blocks(repair_markup(s))
+        self.tags += blocks.tags
+        self.texts += blocks.texts
+        self.link_chars += blocks.link_chars
+        self._add_page("html")
+
+    def _add_page(self, kind: str) -> None:
+        self.kinds.append(kind)
+        self.bounds.append(len(self.texts))
+
+    def finish(self) -> "Extracted":
+        cfg = self.cfg
+        blocks = Blocks(self.tags, self.texts, self.link_chars)
+        cls = classify_blocks(blocks, score_pages(blocks, self.bounds, cfg), cfg)
+        texts, span_bounds, block_idx, start, end = decode_pages(self.texts, cls, self.bounds)
+        n_blocks = np.diff(self.bounds)
+        n_content = np.diff(span_bounds)
+        span_cls = [CONTENT] * len(block_idx)
+        if self.pdfs:
+            # a PDF page has no blocks in the pass: its result goes in as
+            # extract_pdf made it, its spans before the next page's
+            at, spans = [], []
+            for i, r in self.pdfs.items():
+                texts[i] = r["text"]
+                n_blocks[i] = r["n_blocks"]
+                n_content[i] = r["n_content"]
+                at += [span_bounds[i]] * len(r["spans"])
+                spans += r["spans"]
+            if spans:
+                counts = np.diff(span_bounds)
+                counts[list(self.pdfs)] = [len(r["spans"]) for r in self.pdfs.values()]
+                span_bounds = np.concatenate(([0], np.cumsum(counts)))
+                b, s, e, c = zip(*spans)
+                block_idx = np.insert(block_idx, at, b)
+                start = np.insert(start, at, s)
+                end = np.insert(end, at, e)
+                span_cls = np.insert(np.array(span_cls, dtype=object), at, c).tolist()
+        return Extracted(texts, self.kinds, n_blocks, n_content, span_bounds, block_idx, start, end, span_cls)
+
+
+class Extracted(NamedTuple):
+    """A finished PageBatch as columns, one entry per page: text, kind,
+    n_blocks, n_content (n_boilerplate is n_blocks - n_content). Page p's
+    spans are rows span_bounds[p] to span_bounds[p + 1] of the span
+    columns block_idx, start, end and cls."""
+
+    text: list
+    kind: list
+    n_blocks: np.ndarray
+    n_content: np.ndarray
+    span_bounds: np.ndarray
+    block_idx: np.ndarray
+    start: np.ndarray
+    end: np.ndarray
+    cls: list
+
+    def row(self, i: int) -> dict:
+        """Page i's result, as extract_document returns it."""
+        a, b = self.span_bounds[i : i + 2].tolist()
+        spans = list(
+            zip(self.block_idx[a:b].tolist(), self.start[a:b].tolist(), self.end[a:b].tolist(), self.cls[a:b])
+        )
+        n_blocks, n_content = int(self.n_blocks[i]), int(self.n_content[i])
+        return {
+            "text": self.text[i],
+            "spans": spans,
+            "n_blocks": n_blocks,
+            "n_content": n_content,
+            "n_boilerplate": n_blocks - n_content,
+            "kind": self.kind[i],
+        }
 
 
 def extract_html(raw: bytes, cfg: ExtractorConfig = DEFAULT_CONFIG):
     """Full HTML path: decode → repair → tokenize → score → classify → decode."""
-    return _extract_markup(decode_bytes(raw), cfg)
-
-
-def _extract_markup(s: str, cfg: ExtractorConfig):
-    markup = repair_markup(s)
-    blocks = tokenize_blocks(markup)
-    scores = score_blocks(blocks, cfg)
-    cls = classify_blocks(blocks, scores, cfg)
-    text, spans = decode_blocks(blocks, cls)
-    n_content = int(cls.sum()) if len(cls) else 0
-    return {
-        "text": text,
-        "spans": spans,
-        "n_blocks": len(blocks),
-        "n_content": n_content,
-        "n_boilerplate": len(blocks) - n_content,
-        "kind": "html",
-    }
-
-
-def extract_page(raw, cfg: ExtractorConfig = DEFAULT_CONFIG) -> tuple[dict, str | None]:
-    """Route one document payload: PDF magic → layout-parse branch
-    (ENHANCMENT24.py:93-107 analog); empty/null → empty result; else HTML.
-
-    Returns (result, markup): markup is the decode_bytes(raw) the HTML
-    path read, so the link faces need not decode the page again, and None
-    for PDF and empty payloads."""
-    if raw is None or len(raw) == 0:
-        return {"text": "", "spans": [], "n_blocks": 0, "n_content": 0, "n_boilerplate": 0, "kind": "empty"}, None
-    raw = bytes(raw)
-    if raw.startswith(PDF_MAGIC):
-        from greenocr_spark.extractor import pdf as _pdf
-
-        return _pdf.extract_pdf(raw), None
-    s = decode_bytes(raw)
-    return _extract_markup(s, cfg), s
+    batch = PageBatch(cfg)
+    batch.add_markup(decode_bytes(raw))
+    return batch.finish().row(0)
 
 
 def extract_document(raw, cfg: ExtractorConfig = DEFAULT_CONFIG):
-    """The extracted result of one document payload (extract_page's)."""
-    return extract_page(raw, cfg)[0]
+    """The extracted result of one document payload: a one-page PageBatch."""
+    batch = PageBatch(cfg)
+    batch.add(raw)
+    return batch.finish().row(0)

@@ -303,7 +303,7 @@ def extract_link_faces(
 ) -> tuple[list[str], list[tuple[str, str]]]:
     """(extract_outlinks(raw, base_url), extract_anchors(raw, base_url))
     from one pass over the page. raw may also be the page decode_bytes
-    already decoded (core.extract_page hands it over), or None."""
+    already decoded (core.PageBatch.add returns it), or None."""
     s = _markup(raw)
     if s is None:
         return [], []

@@ -17,8 +17,14 @@ import zlib
 
 from greenocr_spark.extractor.core import canon_ws
 
-_STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\nendstream", re.DOTALL)
-_DICT_STREAM_RE = re.compile(rb"<<([^>]*(?:>(?!>)[^>]*)*)>>\s*stream\r?\n", re.DOTALL)
+# The frozen forms of the two stream scans (tests/test_pdf.py keeps them
+# as the reference): a stream body, and a dictionary followed by a stream.
+# The regexes rescan to the end of the file from every "stream" header
+# with no "endstream" after it and from every "<<" with no ">>" after it,
+# so the scans below find each delimiter once instead.
+_STREAM_HEAD_RE = re.compile(rb"stream\r?\n")
+_STREAM_END = b"\nendstream"  # the body ends before it, or before "\r" + it
+_DICT_TAIL_RE = re.compile(rb">>\s*stream\r?\n")
 _LENGTH_RE = re.compile(rb"/Length\s+(\d+)")
 
 # Inflated bytes one document may parse, over all its Flate streams: a
@@ -28,6 +34,64 @@ _LENGTH_RE = re.compile(rb"/Length\s+(\d+)")
 MAX_INFLATE_BYTES = 4 << 20
 
 
+class _Streams:
+    """The stream scans of one file, in linear time: the forward search
+    for a body's end is cached, so asked at increasing positions it scans
+    each byte once."""
+
+    def __init__(self, raw: bytes):
+        self.raw = raw
+        # the first _STREAM_END at or after lo is at `at` (-1: none)
+        self._end_lo, self._end = 1, 0
+
+    def _body_end(self, s: int) -> int:
+        if not (self._end_lo <= s and (self._end < 0 or s <= self._end)):
+            self._end_lo, self._end = s, self.raw.find(_STREAM_END, s)
+        return self._end
+
+    def body(self, p: int) -> tuple[int, int, int] | None:
+        r"""rb"stream\r?\n(.*?)\r?\nendstream" (DOTALL) matched at p, as
+        (body start, body end, match end), or None."""
+        m = _STREAM_HEAD_RE.match(self.raw, p)
+        if m is None:
+            return None
+        s = m.end()
+        k = self._body_end(s)
+        if k < 0:
+            return None
+        return s, (k - 1 if k > s and self.raw[k - 1] == 0x0D else k), k + len(_STREAM_END)
+
+    def bodies(self):
+        r"""The bodies of rb"stream\r?\n(.*?)\r?\nendstream" (DOTALL)
+        .finditer: once one header has no end after it, no later one has."""
+        pos = 0
+        while (m := _STREAM_HEAD_RE.search(self.raw, pos)) is not None:
+            got = self.body(m.start())
+            if got is None:
+                return
+            s, e, pos = got
+            yield self.raw[s:e]
+
+    def dicts(self):
+        r"""(start, dictionary body, end) of each
+        rb"<<([^>]*(?:>(?!>)[^>]*)*)>>\s*stream\r?\n" (DOTALL) .finditer
+        match. A dictionary runs to the first ">>" after its "<<", so every
+        "<<" before that ">>" shares it and its tail."""
+        raw = self.raw
+        pos, close, tail = 0, -1, None
+        while (start := raw.find(b"<<", pos)) >= 0:
+            if close < start + 2:
+                close = raw.find(b">>", start + 2)
+                if close < 0:
+                    return
+                tail = _DICT_TAIL_RE.match(raw, close)
+            if tail is None:
+                pos = start + 1
+                continue
+            yield start, raw[start + 2 : close], tail.end()
+            pos = tail.end()
+
+
 def iter_streams(raw: bytes):
     """Yield content-stream bodies in document order.
 
@@ -35,23 +99,22 @@ def iter_streams(raw: bytes):
     streams, whose compressed bytes can legally contain the literal
     `\\nendstream` sequence (a naive delimiter scan truncates them).
     Streams without a usable /Length fall back to the delimiter scan."""
+    streams = _Streams(raw)
     found = False
-    for m in _DICT_STREAM_RE.finditer(raw):
-        lm = _LENGTH_RE.search(m.group(1))
-        start = m.end()
+    for start, dict_body, end in streams.dicts():
+        lm = _LENGTH_RE.search(dict_body)
         if lm:
             n = int(lm.group(1))
-            if raw[start + n : start + n + 11].lstrip(b"\r\n").startswith(b"endstream"):
+            if raw[end + n : end + n + 11].lstrip(b"\r\n").startswith(b"endstream"):
                 found = True
-                yield raw[start : start + n]
+                yield raw[end : end + n]
                 continue
-        em = _STREAM_RE.match(raw, m.start() + m.group(0).find(b"stream"))
+        em = streams.body(start + raw[start:end].find(b"stream"))
         if em:
             found = True
-            yield em.group(1)
+            yield raw[em[0] : em[1]]
     if not found:
-        for m in _STREAM_RE.finditer(raw):
-            yield m.group(1)
+        yield from _Streams(raw).bodies()
 
 
 # --------------------------------------------------------------------------

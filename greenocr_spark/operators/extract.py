@@ -1,9 +1,14 @@
-"""The vectorized extraction stage: DataFrame → DataFrame via mapInPandas.
+"""The vectorized extraction stage: DataFrame → DataFrame via mapInArrow.
 
 This is UD1+UD3+UD5+UD6 of SURVEY.md §2.9 fused into one Arrow-batched
 stage (one JVM↔Python boundary crossing per batch, never per row). The
 per-document math is greenocr_spark.extractor.core — the byte-identity
-spec — called unmodified, so Spark output ≡ reference extractor output.
+spec — run as one core.PageBatch per Arrow batch: each page is decoded,
+repaired and tokenized on its own, then the whole batch is scored,
+classified and decoded in one numpy pass, so Spark output ≡ reference
+extractor output. The output batch is built column by column in Arrow,
+against the Arrow form of extract_schema: the batch pass's columns and
+the link faces' lists go straight to Arrow arrays; no pandas.
 
 The stage can also count the job's manifest sums where it runs (PartTally):
 the job then needs no second pass over what it wrote.
@@ -13,12 +18,14 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark import TaskContext
 from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -28,7 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from greenocr_spark.extractor.core import DEFAULT_CONFIG, ExtractorConfig, extract_page
+from greenocr_spark.extractor.core import DEFAULT_CONFIG, Extracted, ExtractorConfig, PageBatch
 from greenocr_spark.worker import trim_import_caches
 
 SPAN_TYPE = ArrayType(
@@ -151,80 +158,84 @@ def extract_pages(
     manifest counts per part_id (a passthrough column) over all its
     batches and adds them once, after its last batch."""
     schema = extract_schema(list(passthrough), df.schema, with_links, with_anchors)
+    types = {f.name: f.type for f in to_arrow_schema(schema)}
     keep = ["url", "html", *passthrough]
     if with_links or with_anchors:
         from greenocr_spark.extractor.links import extract_link_faces, extract_outlinks
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         trim_import_caches()
         sums: dict = {}
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            out = {
-                "url": pdf["url"].tolist(),
-                "text": [None] * n,
-                "spans": [None] * n,
-                "n_blocks": [0] * n,
-                "n_content": [0] * n,
-                "n_boilerplate": [0] * n,
-                "bytes_in": [0] * n,
-                "bytes_out": [0] * n,
-                "kind": [""] * n,
-            }
-            if with_links:
-                out["outlinks"] = [None] * n
-                out["n_links"] = [0] * n
-            if with_anchors:
-                out["anchors"] = [None] * n
-                out["n_anchors"] = [0] * n
-            for i, raw in enumerate(pdf["html"].tolist()):
+            urls = batch.column("url").to_pylist()
+            pages = PageBatch(cfg)
+            links, anchors = [], []
+            for url, raw in zip(urls, batch.column("html").to_pylist()):
                 # markup: the decoded page, which the link faces read too
                 # (None for PDF and empty pages, which have no links)
-                r, markup = extract_page(raw, cfg)
-                out["text"][i] = r["text"]
-                # core emits spans as (block_idx, start, end, cls) tuples;
-                # Arrow accepts tuples positionally for struct arrays, so
-                # they pass through with zero per-span re-boxing
-                out["spans"][i] = r["spans"]
-                out["n_blocks"][i] = r["n_blocks"]
-                out["n_content"][i] = r["n_content"]
-                out["n_boilerplate"][i] = r["n_boilerplate"]
-                out["bytes_in"][i] = len(raw) if raw is not None else 0
-                out["bytes_out"][i] = len(r["text"].encode("utf-8"))
-                out["kind"][i] = r["kind"]
+                markup = pages.add(raw)
                 if with_anchors:
-                    # (dst, anchor) tuples pass positionally to the Arrow
-                    # struct array, same zero-re-boxing path as spans
-                    links, anchors = extract_link_faces(markup, base_url=out["url"][i])
-                    out["anchors"][i] = anchors
-                    out["n_anchors"][i] = len(anchors)
+                    page_links, page_anchors = extract_link_faces(markup, base_url=url)
+                    anchors.append(page_anchors)
                 elif with_links:
-                    links = extract_outlinks(markup, base_url=out["url"][i])
+                    page_links = extract_outlinks(markup, base_url=url)
                 if with_links:
-                    out["outlinks"][i] = links
-                    out["n_links"][i] = len(links)
+                    links.append(page_links)
+            ex = pages.finish()
+            n_boilerplate = ex.n_blocks - ex.n_content
+            text = pa.array(ex.text, types["text"])
+            bytes_in = pc.binary_length(batch.column("html")).fill_null(0).cast(pa.int64())
+            bytes_out = pc.binary_length(text).cast(pa.int64())
+            cols = {
+                "url": batch.column("url"),
+                "text": text,
+                "spans": _spans(ex, types["spans"]),
+                "n_blocks": pa.array(ex.n_blocks, types["n_blocks"]),
+                "n_content": pa.array(ex.n_content, types["n_content"]),
+                "n_boilerplate": pa.array(n_boilerplate, types["n_boilerplate"]),
+                "bytes_in": bytes_in,
+                "bytes_out": bytes_out,
+                "kind": pa.array(ex.kind, types["kind"]),
+            }
+            # the link faces are lists of strings and of (dst, anchor)
+            # tuples: Arrow converts them in C++, without Python per item
+            if with_links:
+                cols["outlinks"] = pa.array(links, types["outlinks"])
+                cols["n_links"] = pc.list_value_length(cols["outlinks"]).cast(types["n_links"])
+            if with_anchors:
+                cols["anchors"] = pa.array(anchors, types["anchors"])
+                cols["n_anchors"] = pc.list_value_length(cols["anchors"]).cast(types["n_anchors"])
+            for name in passthrough:
+                cols[name] = batch.column(name)
             if tally is not None:
                 counts = zip(
-                    pdf["part_id"].tolist(), out["n_content"], out["n_boilerplate"],
-                    out["bytes_in"], out["bytes_out"],
+                    batch.column("part_id").to_pylist(), ex.n_content.tolist(),
+                    n_boilerplate.tolist(), bytes_in.to_pylist(), bytes_out.to_pylist(),
                 )
-                for part_id, n_content, n_boilerplate, b_in, b_out in counts:
+                for part_id, n_content, n_boiler, b_in, b_out in counts:
                     row = sums.setdefault(part_id, [0, 0, 0, 0, 0])
                     row[0] += 1
                     row[1] += n_content
-                    row[2] += n_boilerplate
+                    row[2] += n_boiler
                     row[3] += b_in
                     row[4] += b_out
-            res = pd.DataFrame(out)
-            for name in passthrough:
-                res[name] = pdf[name].values
-            yield res
+            yield pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
         if tally is not None:
             tally.add(({TaskContext.get().partitionId()}, sums))
 
-    return df.select(*keep).mapInPandas(run, schema=schema)
+    return df.select(*keep).mapInArrow(run, schema=schema)
+
+
+def _spans(ex: Extracted, list_type: pa.ListType) -> pa.ListArray:
+    """The spans column of a finished PageBatch, from its span columns."""
+    fields = list(list_type.value_type)
+    children = [ex.block_idx, ex.start, ex.end, ex.cls]
+    values = pa.StructArray.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(children, fields)], fields=fields
+    )
+    return pa.ListArray.from_arrays(pa.array(ex.span_bounds, pa.int32()), values, type=list_type)
 
 
 def extract_anchor_rows(df: DataFrame) -> DataFrame:

@@ -8,7 +8,7 @@ Physical plan (one shuffle total):
       and writes it before any data, any other run must match it
     read the manifest ONCE on the driver (no Spark job) → done part_ids
     scan pages → part_id → [drop done part_ids: literal filter, narrow]
-    → mapInPandas extract (narrow, Arrow-batched, one task per input split)
+    → mapInArrow extract (narrow, Arrow-batched, one task per input split)
     → repartition(min(n_parts, cores), part_id) ← THE shuffle, of extracted rows
     → sortWithinPartitions(part_id, url)        ← deterministic output order
     → dynamic-partition-overwrite write (idempotent per partition)

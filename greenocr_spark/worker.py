@@ -35,7 +35,7 @@ Workers are reused (spark.python.worker.reuse, see session.py), so after
 the first task a worker's invalidation re-reads each Python archive once.
 Outside a Spark worker it trims whatever zip importers the process holds
 (usually none) and changes no import's result either.
-Every engine function passed to mapInPandas/applyInPandas calls it first
+Every engine function passed to mapInPandas/mapInArrow/applyInPandas calls it first
 (tests/test_layout.py checks this).
 """
 

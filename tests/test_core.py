@@ -232,6 +232,93 @@ def test_neargood_promotion():
     assert list(cls) == [1, 1, 1]
 
 
+def _score_frozen_form(blocks, cfg=core.DEFAULT_CONFIG):
+    # the per-page scorer and decoder the batch pass replaced, kept as its
+    # reference: (raw, norm, smooth, sharp, cls, text, spans) of one page
+    def pctl(srt, pct):
+        n = srt.size
+        v = (pct / 100.0) * (n - 1)
+        f = int(v)
+        c = f + 1 if f + 1 < n else n - 1
+        t = v - f
+        a, b = srt[f], srt[c]
+        d = b - a
+        return float(b - d * (1 - t)) if t >= 0.5 else float(a + d * t)
+
+    n = len(blocks)
+    if n == 0:
+        z = np.zeros(0, dtype=np.float64)
+        return z, z, z, z, np.zeros(0, dtype=np.int64), "", []
+    n_chars = np.fromiter(map(len, blocks.texts), dtype=np.float64, count=n)
+    density = np.minimum(1.0, np.array(blocks.link_chars, dtype=np.float64) / n_chars)
+    prior = np.array(
+        [cfg.boiler_tag_penalty if t in core.BOILER_TAGS else 1.0 for t in blocks.tags], dtype=np.float64
+    )
+    raw = n_chars * (1.0 - density) * prior
+    srt = np.sort(raw)
+    lo, hi = pctl(srt, cfg.contrast_lo), pctl(srt, cfg.contrast_hi)
+    if hi - lo < 1e-9:
+        norm = (raw > 0).astype(np.float64)
+    else:
+        norm = np.clip((raw - lo) / (hi - lo), 0.0, 1.0)
+    k0, k1, k2 = cfg.smooth_kernel
+    padded = np.concatenate(([norm[0]], norm, [norm[-1]]))
+    smooth = k0 * padded[:-2] + k1 * padded[1:-1] + k2 * padded[2:]
+    sharp = np.clip(norm + cfg.sharpen * (norm - smooth), 0.0, 1.0)
+    gates = (n_chars >= cfg.min_chars) & (density <= cfg.max_link_density)
+    good = sharp >= cfg.threshold
+    promoted = (raw >= cfg.neargood_chars) & (smooth >= cfg.threshold)
+    cls = ((good | promoted) & gates).astype(np.int64)
+    keep = np.flatnonzero(cls == 1).tolist()
+    spans, off = [], 0
+    for i in keep:
+        end = off + len(blocks.texts[i])
+        spans.append((i, off, end, "content"))
+        off = end + 1
+    return raw, norm, smooth, sharp, cls, " ".join(blocks.texts[i] for i in keep), spans
+
+
+_BLOCK = st.tuples(
+    st.sampled_from(["p", "div", "nav", "footer", "li", "body", "title"]),
+    st.integers(min_value=1, max_value=400),  # text length
+    st.integers(min_value=0, max_value=500),  # link chars (density clamps at 1)
+)
+_PAGE = st.one_of(
+    st.just([]),
+    st.lists(_BLOCK, min_size=1, max_size=1),
+    st.tuples(_BLOCK, st.integers(min_value=2, max_value=30)).map(lambda b: [b[0]] * b[1]),
+    st.lists(_BLOCK, max_size=80),
+)
+
+
+@given(st.lists(_PAGE, max_size=12))
+@settings(max_examples=500, deadline=None)
+def test_batch_pass_is_the_per_page_scorer(pages):
+    """One score_pages/classify/decode_pages pass over a batch equals the
+    frozen per-page scorer on each page, bit for bit."""
+    cols = core.Blocks([], [], [])
+    bounds, want = [0], []
+    for page in pages:
+        blocks = core.Blocks([t for t, _, _ in page], ["x" * n for _, n, _ in page], [k for _, _, k in page])
+        cols.tags += blocks.tags
+        cols.texts += blocks.texts
+        cols.link_chars += blocks.link_chars
+        bounds.append(len(cols.texts))
+        want.append(_score_frozen_form(blocks))
+    scores = core.score_pages(cols, bounds)
+    cls = classify_blocks(cols, scores)
+    texts, span_bounds, block_idx, start, end = core.decode_pages(cols.texts, cls, bounds)
+    for p, (raw, norm, smooth, sharp, page_cls, text, spans) in enumerate(want):
+        a, b = bounds[p], bounds[p + 1]
+        for name, arr in (("raw", raw), ("norm", norm), ("smooth", smooth), ("sharp", sharp)):
+            got = scores[name][a:b]
+            assert got.dtype == np.float64 and got.tobytes() == arr.tobytes(), (p, name)
+        assert cls[a:b].tolist() == page_cls.tolist()
+        s, e = span_bounds[p], span_bounds[p + 1]
+        assert texts[p] == text
+        assert list(zip(block_idx[s:e].tolist(), start[s:e].tolist(), end[s:e].tolist(), ["content"] * (e - s))) == spans
+
+
 # ---- decode_blocks (CTC collapse law) --------------------------------------
 
 
@@ -299,16 +386,23 @@ def test_stats_consistency():
 
 
 @given(
-    st.lists(st.floats(min_value=0, max_value=1e6, allow_nan=False), min_size=1, max_size=200),
+    st.lists(
+        st.lists(st.floats(min_value=0, max_value=1e6, allow_nan=False), min_size=1, max_size=200),
+        min_size=1,
+        max_size=5,
+    ),
     st.floats(min_value=0, max_value=100),
 )
-def test_pctl_linear_matches_numpy(vals, pct):
+def test_pctl_linear_matches_numpy(segments, pct):
     import numpy as np
 
     from greenocr_spark.extractor.core import _pctl_linear
 
-    a = np.sort(np.array(vals, dtype=np.float64))
-    assert _pctl_linear(a, pct) == float(np.percentile(a, pct))
+    srt = np.concatenate([np.sort(np.array(v, dtype=np.float64)) for v in segments])
+    count = np.array([len(v) for v in segments])
+    first = np.cumsum(count) - count
+    got = _pctl_linear(srt, first, count, pct)
+    assert got.tolist() == [float(np.percentile(np.array(v, dtype=np.float64), pct)) for v in segments]
 
 
 @given(st.text(alphabet="<>/ab! c-?=\"'\n\t&;", max_size=300))

@@ -200,6 +200,74 @@ def test_part_tally_counts_each_split_once():
     assert split3[1][0] == [2, 5, 1, 100, 40]  # an update is not aliased
 
 
+def test_stage_rows_are_the_spec_over_many_arrow_batches(spark):
+    """Every payload shape through the Arrow batch pass, several Arrow
+    batches per task: each row equals the pure-Python spec, the schema is
+    extract_schema's, and the tally holds each part_id's sums once."""
+    import pyarrow as pa
+
+    from greenocr_spark.extractor.core import extract_document
+    from greenocr_spark.extractor.links import extract_link_faces
+    from greenocr_spark.extractor.pdf import build_pdf
+    from greenocr_spark.fixtures import make_pages
+    from greenocr_spark.operators.extract import extract_schema
+    from tests.test_links import _fused_batch_fn
+
+    shapes = [
+        None,
+        b"",
+        build_pdf([[(72, 700, "a pdf page"), (72, 680, "of two lines")]]),
+        "<p>\u00fcber eine seite in utf-16, lang genug f\u00fcr inhalt</p>".encode("utf-16"),
+        b"<nav><a href='/h'>home</a> <a href='/a'>about</a></nav><footer>(c)</footer>",
+        b"<title>t</title><p>" + b"a normal paragraph of words " * 4 + b"<a href='/x'>x</a></p>",
+    ]
+    raws = shapes * 3 + [p["html"] for p in make_pages(40, seed=7)]
+    rows = [(f"https://h{i % 3}.ex/p{i}", raw, i % 4) for i, raw in enumerate(raws)]
+    df = spark.createDataFrame(rows, "url string, html binary, part_id long").repartition(2)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "5")
+    try:
+        per_task = df.mapInArrow(
+            lambda it: iter([pa.RecordBatch.from_pydict({"n": [sum(1 for _ in it)]})]), "n long"
+        ).collect()
+        tally = spark.sparkContext.accumulator((set(), {}), PartTally())
+        out = extract_pages(df, passthrough=("part_id",), with_links=True, with_anchors=True, tally=tally)
+        got = out.collect()
+    finally:
+        spark.conf.set(key, old)
+    assert len(per_task) == 2 and min(r["n"] for r in per_task) > 1
+    assert out.schema == extract_schema(["part_id"], df.schema, with_links=True, with_anchors=True)
+    by_url = {url: (raw, part_id) for url, raw, part_id in rows}
+    assert sorted(r["url"] for r in got) == sorted(by_url)
+    kinds, sums = set(), {}
+    for r in got:
+        raw, part_id = by_url[r["url"]]
+        want = extract_document(raw)
+        links, anchors = extract_link_faces(raw, r["url"])
+        assert {
+            "text": r["text"],
+            "spans": [tuple(s) for s in r["spans"]],
+            "n_blocks": r["n_blocks"],
+            "n_content": r["n_content"],
+            "n_boilerplate": r["n_boilerplate"],
+            "kind": r["kind"],
+        } == want, r["url"]
+        assert (r["outlinks"], r["n_links"]) == (links, len(links))
+        assert ([tuple(a) for a in r["anchors"]], r["n_anchors"]) == (anchors, len(anchors))
+        assert r["part_id"] == part_id
+        assert (r["bytes_in"], r["bytes_out"]) == (len(raw or b""), len(want["text"].encode()))
+        kinds.add(r["kind"])
+        row = sums.setdefault(part_id, [0, 0, 0, 0, 0])
+        for k, v in enumerate((1, r["n_content"], r["n_boilerplate"], r["bytes_in"], r["bytes_out"])):
+            row[k] += v
+    assert kinds == {"empty", "pdf", "html"}
+    assert tally.value[1] == sums
+    # a zero-row batch yields nothing
+    empty = pa.RecordBatch.from_pydict({"url": pa.array([], pa.string()), "html": pa.array([], pa.binary())})
+    assert list(_fused_batch_fn(with_links=True)(iter([empty]))) == []
+
+
 def test_job_leaves_no_accumulator_behind(spark, pages_path, tmp_path):
     """pyspark keeps a Python accumulator in its driver registry for the
     SparkContext's life; a fresh job and a resume each drop their manifest
@@ -236,17 +304,19 @@ sc = spark.sparkContext
 pq.write_table(pages_arrow_table(1200), f"{tmp}/pages.parquet")
 pages = spark.read.parquet(f"{tmp}/pages.parquet")
 
-extract_page = extract_module.extract_page
+class FailFirstAttempt(extract_module.PageBatch):
+    calls = itertools.count()
 
-def fail_first_attempt(raw, cfg, calls=itertools.count()):
-    # attempt 0 of a task dies on the first page after its first batch,
-    # once that batch's rows are extracted, written out and tallied
-    if next(calls) == 1024 and TaskContext.get().attemptNumber() == 0:
-        raise RuntimeError("injected task failure")
-    return extract_page(raw, cfg)
+    def add(self, raw):
+        # attempt 0 of a task dies on the first page after its first
+        # batch, once that batch's rows are extracted, written out and
+        # tallied
+        if next(self.calls) == 1024 and TaskContext.get().attemptNumber() == 0:
+            raise RuntimeError("injected task failure")
+        return super().add(raw)
 
 # shipped to the workers with the batch function that calls it
-extract_module.extract_page = fail_first_attempt
+extract_module.PageBatch = FailFirstAttempt
 
 def failed_tasks(group):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
@@ -442,7 +512,7 @@ def test_extraction_runs_once_per_input_split(spark, tmp_path, monkeypatch):
     """Every Python task pays a fixed cost (see greenocr_spark/worker.py),
     so the extraction stage must be as wide as the input, not as n_parts: the
     plan extracts below the part_id shuffle, and the stage that runs
-    MapInPandas has one task per input split."""
+    MapInArrow has one task per input split."""
     src = tmp_path / "two_splits"
     src.mkdir()
     table = pages_arrow_table(200)
@@ -464,8 +534,8 @@ def test_extraction_runs_once_per_input_split(spark, tmp_path, monkeypatch):
     (plan,) = plans
     width = min(16, spark.sparkContext.defaultParallelism)
     exchange = re.search(rf"Exchange hashpartitioning\(part_id#\d+L?, {width}\)", plan)
-    assert exchange and plan.index("MapInPandas") > exchange.start(), plan
-    assert _stage_tasks(spark, "splits", "MapInPandas") == [2]
+    assert exchange and plan.index("MapInArrow") > exchange.start(), plan
+    assert _stage_tasks(spark, "splits", "MapInArrow") == [2]
 
 
 def _part_files(table_dir):
@@ -523,7 +593,7 @@ def test_adaptive_job_without_hot_hosts_runs_one_python_stage(spark, pages_path,
         lambda: run_extract_job(spark, pages, out, n_parts=N_PARTS, salting="adaptive"),
     )
     assert _record(out)["hot"] == {}
-    assert len(_stage_tasks(spark, "uniform_hosts", "MapInPandas")) == 1
+    assert len(_stage_tasks(spark, "uniform_hosts", "MapInArrow")) == 1
     assert _stage_tasks(spark, "uniform_hosts", "PythonRDD") == []
 
 
@@ -539,7 +609,7 @@ def test_limited_input_extracts_on_every_core(spark, pages_path, tmp_path):
         lambda: run_extract_job(spark, limit_pages(pages, 300), str(tmp_path / "o"), n_parts=16),
     )
     assert table.count() == 300
-    assert _stage_tasks(spark, "limited", "MapInPandas") == [cores] and cores > 1
+    assert _stage_tasks(spark, "limited", "MapInArrow") == [cores] and cores > 1
 
 
 def test_fixture_pages_split_by_bytes(spark, tmp_path):

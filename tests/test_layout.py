@@ -142,7 +142,7 @@ def test_shared_kernels_defined_once():
 
 
 # Spark calls these with a Python function that runs in a Python worker.
-PYTHON_STAGES = {"mapInPandas", "applyInPandas"}
+PYTHON_STAGES = {"mapInPandas", "mapInArrow", "applyInPandas"}
 
 
 def _stage_functions(tree: ast.Module):
@@ -237,10 +237,17 @@ def from_factory(df):
 
 def lambda_stage(df):
     return df.mapInPandas(lambda it: it, "x long")
+
+def arrow_stage(df):
+    def run(batches):
+        yield from batches
+    return df.mapInArrow(run, "x long")
 '''
     found, bad = _untrimmed_stages(Path("m.py"), src)
-    assert found == 4
-    assert bad == ["m.py:6 mapInPandas", "m.py:20 mapInPandas", "m.py:23 mapInPandas"]
+    assert found == 5
+    assert bad == [
+        "m.py:6 mapInPandas", "m.py:20 mapInPandas", "m.py:23 mapInPandas", "m.py:28 mapInArrow",
+    ]
 
 
 # A plan reaches its out_dir through sources/pages, on the path's own

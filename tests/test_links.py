@@ -103,7 +103,7 @@ def test_links_stage_is_narrow(spark, tmp_path):
         _link_rows(spark.read.parquet(path)).explain("formatted")
     p = buf.getvalue()
     assert "Exchange" not in p
-    assert "MapInPandas" in p
+    assert "MapInArrow" in p
 
 
 def test_host_graph_values(spark):
@@ -373,7 +373,7 @@ def test_anchor_stage_is_narrow(spark, tmp_path):
         extract_anchor_rows(spark.read.parquet(path)).explain("formatted")
     p = buf.getvalue()
     assert "Exchange" not in p
-    assert "MapInPandas" in p
+    assert "MapInArrow" in p
 
 
 def test_anchor_rows_match_python(spark):
@@ -734,6 +734,8 @@ ADVERSARIAL_SHAPES = {
     "unclosed-a": (b"<a href=/p>", 21_000),
     "unterminated-quote": (b'<a href="/p>', 21_000),
     "script-no-gt": (b"<script ", 13_000),
+    "pdf-dict-no-close": (b"%PDF-<<", 8_000),
+    "pdf-stream-no-end": (b"%PDF-stream\n", 13_000),
 }
 
 
@@ -743,7 +745,7 @@ def _adversarial(unit: bytes, size: int) -> bytes:
 
 def _fused_batch_fn(**faces):
     """extract_pages' per-batch function, taken without a Spark session:
-    the frame below only records what mapInPandas is handed."""
+    the frame below only records what mapInArrow is handed."""
     from pyspark.sql.types import StructType
 
     from greenocr_spark.operators.extract import extract_pages
@@ -754,7 +756,7 @@ def _fused_batch_fn(**faces):
         def select(self, *cols):
             return self
 
-        def mapInPandas(self, fn, schema):
+        def mapInArrow(self, fn, schema):
             self.fn = fn
             return self
 
@@ -762,7 +764,7 @@ def _fused_batch_fn(**faces):
 
 
 def test_link_faces_linear_time():
-    import pandas as pd
+    import pyarrow as pa
 
     from greenocr_spark.extractor.links import extract_anchors
 
@@ -770,8 +772,11 @@ def test_link_faces_linear_time():
     url = "https://h.ex/d/p"
 
     def fused_call(raw):
-        (res,) = fused(iter([pd.DataFrame({"url": [url], "html": [raw]})]))
-        return list(res["outlinks"][0]), list(res["anchors"][0])
+        batch = pa.RecordBatch.from_pydict(
+            {"url": pa.array([url]), "html": pa.array([raw], pa.binary())}
+        )
+        (res,) = fused(iter([batch]))
+        return res.column("outlinks")[0].as_py(), res.column("anchors")[0].as_py()
 
     def wrappers(raw):
         links = extract_outlinks(raw, url)

@@ -1,8 +1,12 @@
 """Tests for the minimal PDF layout parser (SURVEY.md §7.2 milestone 7)."""
 
+import re
 import zlib
 
-from greenocr_spark.extractor.pdf import build_pdf, extract_pdf
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
+from greenocr_spark.extractor.pdf import build_pdf, extract_pdf, iter_streams
 
 
 def test_roundtrip_uncompressed():
@@ -158,3 +162,50 @@ def test_flate_bomb_is_capped():
     # each 43-byte line gives "hello world" and a joining space: the text is
     # what fit under the cap, and the second bomb adds nothing
     assert 0 < got["chars"] <= got["cap_chars"], got
+
+
+# the regex forms of the stream scans, frozen as the scans' reference
+_STREAM_RE = re.compile(rb"stream\r?\n(.*?)\r?\nendstream", re.DOTALL)
+_DICT_STREAM_RE = re.compile(rb"<<([^>]*(?:>(?!>)[^>]*)*)>>\s*stream\r?\n", re.DOTALL)
+
+
+def _iter_streams_frozen_form(raw):
+    found = False
+    for m in _DICT_STREAM_RE.finditer(raw):
+        lm = re.search(rb"/Length\s+(\d+)", m.group(1))
+        start = m.end()
+        if lm:
+            n = int(lm.group(1))
+            if raw[start + n : start + n + 11].lstrip(b"\r\n").startswith(b"endstream"):
+                found = True
+                yield raw[start : start + n]
+                continue
+        em = _STREAM_RE.match(raw, m.start() + m.group(0).find(b"stream"))
+        if em:
+            found = True
+            yield em.group(1)
+    if not found:
+        for m in _STREAM_RE.finditer(raw):
+            yield m.group(1)
+
+
+_PDF_PIECES = [
+    b"<<", b">>", b">", b"<", b"stream", b"endstream", b"\n", b"\r", b"\r\n", b" ",
+    b"/Length ", b"0", b"3", b"12", b"x", b"BT (a) Tj ET", b"obj",
+    b"<< /Length 3 >>\nstream\n", b"\nendstream",
+]
+
+
+@given(st.lists(st.sampled_from(_PDF_PIECES), max_size=60))
+@settings(max_examples=2000, deadline=None)
+def test_stream_scans_match_frozen_regex_form(pieces):
+    raw = b"%PDF-1.4\n" + b"".join(pieces)
+    assert list(iter_streams(raw)) == list(_iter_streams_frozen_form(raw))
+
+
+def test_stream_scans_on_generated_pdfs_match_frozen_regex_form():
+    pages = [[(72, 700 - 20 * k, f"line {k} (x) \\ y") for k in range(5)]] * 3
+    for compress in (False, True):
+        raw = build_pdf(pages, compress=compress)
+        assert list(iter_streams(raw)) == list(_iter_streams_frozen_form(raw))
+        assert len(list(iter_streams(raw))) == 3

@@ -105,7 +105,7 @@ def test_extract_pipeline_is_narrow(spark, tmp_path):
     pages = spark.read.parquet(path)
     p = plan_of(extract_pages(pages))
     assert "Exchange" not in p
-    assert "MapInPandas" in p
+    assert "MapInArrow" in p
 
 
 def test_resume_filter_never_shuffles_pages(spark, tmp_path):
