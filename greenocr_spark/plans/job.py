@@ -63,11 +63,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
-from greenocr_spark.functions.sqlfns import (
-    adaptive_salted_part_id,
-    hot_salted_part_id,
-    salted_part_id,
-)
+from greenocr_spark.functions.sqlfns import hot_hosts, hot_salted_part_id, salted_part_id
 from greenocr_spark.operators.extract import PartTally, extract_pages, extract_schema
 from greenocr_spark.sources.pages import (
     append_parquet_file,
@@ -195,7 +191,7 @@ def run_extract_job(
         # first data write
         layout = dict(params)
         if salting == "adaptive":
-            layout["hot"] = adaptive_salted_part_id(pages, "url", n_parts, n_salts)[1]
+            layout["hot"] = hot_hosts(pages, "url", n_parts)
         write_params(spark, out_dir, layout)
     df = _with_part_id(pages, layout)
     if resume:

@@ -10,13 +10,22 @@ hdfs alike), driver-side and with no Spark job. A plan lists
 keeps its one params record (check_params, write_params), and adds and
 reads back small parquet files of driver-side rows, like the manifests
 (append_parquet_file, read_parquet_rows).
+
+Every file a plan puts there is written under a hidden tmp name, then
+renamed into place (_put_file): one create and one FileSystem.rename for
+a new name, as every manifest file and a fresh params record are; only
+a rename onto an existing file, which that call refuses, falls back to
+FileContext's atomic OVERWRITE rename. Readers skip hidden names, so a
+put that died before its rename leaves nothing they read.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import uuid
+from types import SimpleNamespace
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -43,10 +52,19 @@ def limit_pages(pages: DataFrame, n: int) -> DataFrame:
     return pages.limit(n).repartition(cores, "url")
 
 
+@functools.lru_cache(maxsize=1)
+def _fs_classes(jvm):
+    """The Hadoop fs classes this module calls, looked up once per JVM
+    gateway: each dotted step of a lookup through `spark._jvm` is a JVM
+    round trip of its own."""
+    fs = jvm.org.apache.hadoop.fs
+    return SimpleNamespace(Path=fs.Path, FileContext=fs.FileContext, Rename=fs.Options.Rename)
+
+
 def _hadoop_path(spark: SparkSession, path: str):
     """(FileSystem, Path) of `path` on the file system its scheme names
     (local, s3a, hdfs), as Spark's own reads resolve it."""
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    hpath = _fs_classes(spark._jvm).Path(path)
     conf = spark._jsparkSession.sessionState().newHadoopConf()
     return hpath.getFileSystem(conf), hpath
 
@@ -75,19 +93,28 @@ def glob_paths(spark: SparkSession, pattern: str) -> list[str]:
 def _put_file(spark: SparkSession, path: str, data: bytes) -> None:
     """Write `data` under a hidden name beside `path` (readers of the dir
     skip names starting with '.'), then rename it to `path`, replacing
-    any file there: a reader sees the old file or the whole new one (an
-    atomic rename on local and hdfs file systems)."""
+    any file there: a reader sees the old file or the whole new one.
+
+    A new name (every manifest file, a fresh params record) takes one
+    create and one FileSystem.rename. That rename returns false when
+    `path` already exists (local, hdfs and s3a file systems alike), and
+    only then does the put replace it, through FileContext's OVERWRITE
+    rename: atomic on local and hdfs file systems, but a call several
+    times dearer (on a local file system without native Hadoop code it
+    forks readlink processes)."""
     fs, hpath = _hadoop_path(spark, path)
-    fs_api = spark._jvm.org.apache.hadoop.fs
-    tmp = fs_api.Path(hpath.getParent(), f".{hpath.getName()}.tmp")
+    cls = _fs_classes(spark._jvm)
+    head, name = os.path.split(path)
+    tmp = cls.Path(head, f".{name}.tmp")
     stream = fs.create(tmp, True)
     try:
         stream.write(bytearray(data))
     finally:
         stream.close()
-    overwrite = spark.sparkContext._gateway.new_array(fs_api.Options.Rename, 1)
-    overwrite[0] = fs_api.Options.Rename.OVERWRITE
-    fs_api.FileContext.getFileContext(hpath.toUri(), fs.getConf()).rename(tmp, hpath, overwrite)
+    if not fs.rename(tmp, hpath):
+        overwrite = spark.sparkContext._gateway.new_array(cls.Rename, 1)
+        overwrite[0] = cls.Rename.OVERWRITE
+        cls.FileContext.getFileContext(hpath.toUri(), fs.getConf()).rename(tmp, hpath, overwrite)
 
 
 def _get_file(fs, hpath) -> bytes:

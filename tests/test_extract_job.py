@@ -20,17 +20,21 @@ import pyarrow.parquet as pq
 import pytest
 
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
+import greenocr_spark.functions.sqlfns as sqlfns
 import greenocr_spark.plans.job as job_module
 from greenocr_spark.fixtures import ROW_GROUP_BYTES, pages_arrow_table, write_pages_parquet
 from greenocr_spark.functions.sqlfns import (
     adaptive_salted_part_id,
+    host_expr,
     hot_salted_part_id,
     salted_part_id,
 )
 from greenocr_spark.operators.extract import PartTally, extract_pages
 from greenocr_spark.plans.job import run_extract_job
 from greenocr_spark.sources.pages import limit_pages, write_extracted
+from tests.conftest import called_methods, gateway_commands
 
 N_PAGES = 400
 N_PARTS = 16
@@ -141,6 +145,35 @@ def test_extract_job_spark_job_counts(spark, pages_path, tmp_path):
     over = {k: (n, ceilings[k]) for k, n in counts.items() if n > ceilings[k]}
     assert not over, f"jobs over their ceiling: {over}"
     assert _table(resumed) == _table(fresh)
+
+
+def test_fresh_job_driver_round_trips(spark, pages_path, tmp_path, monkeypatch):
+    """A fresh adaptive job's driver path costs a fixed number of JVM round
+    trips, whatever the size of its hot map: the host stats return the map
+    alone, the job builds the part_id expression once, from one literal,
+    and the params record and the manifest file each take one create and
+    one rename. Counted after a warm-up job, so first-use class lookups do
+    not count. The ceiling is this plan's count; the plan before it sent
+    634 here (one hot host), building the expression twice at ~16 round
+    trips per hot host, and put each file with a FileContext rename."""
+    build, builds = job_module.hot_salted_part_id, []
+
+    def counted_build(*args):
+        builds.append(args)
+        return build(*args)
+
+    monkeypatch.setattr(job_module, "hot_salted_part_id", counted_build)
+    monkeypatch.setattr(sqlfns, "hot_salted_part_id", counted_build)
+    pages = spark.read.parquet(pages_path)
+    run_extract_job(spark, pages, str(tmp_path / "warm"), n_parts=N_PARTS, salting="adaptive")
+    builds.clear()
+    out = str(tmp_path / "a")
+    with gateway_commands(spark) as sent:
+        run_extract_job(spark, pages, out, n_parts=N_PARTS, salting="adaptive")
+    assert _record(out)["hot"] and len(builds) == 1
+    methods = called_methods(sent)
+    assert (methods.count("create"), methods.count("rename")) == (2, 2)
+    assert len(sent) <= 410, len(sent)
 
 
 def test_extract_job_manifest_rows(spark, pages_path, tmp_path):
@@ -698,6 +731,82 @@ def test_adaptive_host_stats_one_action_no_cache(spark):
             assert len(sc._jsc.getPersistentRDDs()) == cached
     # an empty input has no rollup groups, not even the total
     assert adaptive_salted_part_id(df.limit(0), "url", 8)[1] == {}
+
+
+def _create_map_frozen_form(url_col, hot, n_parts):
+    # the create_map form of hot_salted_part_id (two literal maps, one
+    # literal per host and per value), the reference its one-literal
+    # lookup keeps
+    host = host_expr(url_col)
+    if hot:
+        items = sorted(hot.items())
+        offsets, acc = {}, 0
+        for h, s in items:
+            offsets[h] = acc
+            acc += int(s)
+        salts_map = F.create_map(*[x for h, s in items for x in (F.lit(h), F.lit(int(s)))])
+        off_map = F.create_map(*[x for h, _ in items for x in (F.lit(h), F.lit(offsets[h]))])
+        salts = salts_map[host]
+        return F.when(
+            salts.isNotNull(),
+            F.pmod(off_map[host] + F.pmod(F.xxhash64(F.col(url_col)), salts), F.lit(n_parts)),
+        ).otherwise(F.pmod(F.xxhash64(host), F.lit(n_parts)))
+    return F.pmod(F.xxhash64(host), F.lit(n_parts))
+
+
+# NULL, unparseable, IPv6 and mixed-case urls
+_EDGE_URLS = [
+    None, "not a url", "'", "\\", "http://[x/", "http://[::1]/x",
+    "https://[2001:db8::1]:8080/x", "HTTPS://Big.Example.COM/x", "http://a'b.example/x",
+    'http://a"b.example/x', "http://a\\b.example/x", "http://b\u00fccher.example/x",
+]
+# keys try_parse_url never returns (quotes, backslashes, non-ASCII) among
+# the hosts it does: a literal they broke would turn every hot host cold,
+# and their sort order moves the real hosts' offsets
+_ODD_HOSTS = {
+    "a'b.example": 2, 'a"b.example': 3, "a\\b.example": 2, "b\u00fccher.example": 4,
+    "\u65e5\u672c.example": 1, "[::1]": 3, "Big.Example.COM": 2,
+}
+
+
+def test_hot_salted_part_id_keeps_the_create_map_rule(spark, pages_path):
+    """The one-literal lookup keys every url as the create_map form did,
+    with the same type, over the fixture urls, edge urls and a 2,000-host
+    map; the optimizer folds the JSON literal into a map literal, so no
+    row parses JSON; and building the expression costs the same JVM round
+    trips for 1 and for 2,000 hot hosts."""
+    fixture = [r["url"] for r in spark.read.parquet(pages_path).select("url").collect()]
+    big = {f"h{i}.example.com": 1 + i % 7 for i in range(2000)}
+    big_urls = [f"https://h{i}.example.com/p{j}" for i in range(2000) for j in range(3)]
+    fixture_hot = _reference_hot(fixture, N_PARTS)
+    assert fixture_hot
+    for urls, hot, n_parts in [
+        (fixture + _EDGE_URLS, {**fixture_hot, **_ODD_HOSTS}, N_PARTS),
+        (fixture + _EDGE_URLS, {}, N_PARTS),
+        (big_urls + _EDGE_URLS, big, 64),
+    ]:
+        df = spark.createDataFrame([(u,) for u in urls], "url string")
+        part_id = hot_salted_part_id("url", hot, n_parts)
+        keyed = df.select(
+            part_id.alias("p"),
+            _create_map_frozen_form("url", hot, n_parts).alias("frozen"),
+            F.pmod(F.xxhash64(host_expr("url")), F.lit(n_parts)).alias("cold"),
+        )
+        assert keyed.schema["p"].dataType == keyed.schema["frozen"].dataType == LongType()
+        rows = keyed.collect()
+        assert [r["p"] for r in rows] == [r["frozen"] for r in rows]
+        # the hot branch ran wherever there are hot hosts
+        assert any(r["p"] != r["cold"] for r in rows) == bool(hot)
+        plan = df.select(part_id)._jdf.queryExecution().optimizedPlan().toString()
+        assert "from_json" not in plan and ("map(keys:" in plan) == bool(hot)
+
+    hot_salted_part_id("url", {"warm.example.com": 2}, 64)
+    counts = []
+    for hot in ({"h0.example.com": 1}, big):
+        with gateway_commands(spark) as sent:
+            hot_salted_part_id("url", hot, 64)
+        counts.append(len(sent))
+    assert counts[0] == counts[1], counts
 
 
 @pytest.mark.parametrize("entry", ["extract", "pipeline"])

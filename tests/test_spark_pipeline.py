@@ -359,6 +359,42 @@ def test_read_parquet_rows(spark, tmp_path):
         read_parquet_rows(spark, d, ddl)
 
 
+def test_put_takes_one_rename_and_replaces_whole(spark, tmp_path):
+    # sources/pages puts a file under a hidden tmp name, then renames it:
+    # a new name (a manifest file, a fresh params record) takes one create
+    # and one rename; a second params record replaces the first whole,
+    # through the FileContext rename the plain one falls back to; no tmp
+    # file stays behind, and one a crash left before its rename is never
+    # read as a manifest row
+    from greenocr_spark.sources.pages import append_parquet_file, read_parquet_rows, write_params
+    from tests.conftest import called_methods, gateway_commands
+
+    ddl = "part_id long, url string"
+    d, out = str(tmp_path / "m"), str(tmp_path / "o")
+    for put in (
+        lambda: append_parquet_file(spark, d, [(1, "a")], ddl),
+        lambda: write_params(spark, out, {"n_parts": 8}),
+    ):
+        with gateway_commands(spark) as sent:
+            put()
+        methods = called_methods(sent)
+        assert (methods.count("create"), methods.count("rename")) == (1, 1)
+        assert "getFileContext" not in methods
+    record = {"hot": {"a'b\\c\u00fc": 3}, "n_parts": 8}
+    with gateway_commands(spark) as sent:
+        write_params(spark, out, record)
+    methods = called_methods(sent)
+    assert (methods.count("create"), methods.count("rename")) == (1, 2)
+    assert "getFileContext" in methods
+    with open(f"{out}/_params.json", "rb") as f:
+        assert f.read() == json.dumps(record, sort_keys=True).encode()
+    leftovers = [n for _, _, names in os.walk(tmp_path) for n in names if ".tmp" in n]
+    assert leftovers == []
+
+    pd.DataFrame({"part_id": [2], "url": ["b"]}).to_parquet(f"{d}/.part-crashed.parquet.tmp")
+    assert read_parquet_rows(spark, d, ddl) == [{"part_id": 1, "url": "a"}]
+
+
 def test_adaptive_salting(spark, pages_path):
     # hot hosts (>5% of rows) get salted across many partitions; cold hosts
     # stay on a single partition (locality preserved)
