@@ -13,9 +13,10 @@ reads back small parquet files of driver-side rows, like the manifests
 
 Every file a plan puts there is written under a hidden tmp name, then
 renamed into place (_put_file): one create and one FileSystem.rename for
-a new name, as every manifest file and a fresh params record are; only
-a rename onto an existing file, which that call refuses, falls back to
-FileContext's atomic OVERWRITE rename. Readers skip hidden names, so a
+a new name, as every manifest file and a fresh params record are; a
+rename onto an existing file, which that call refuses (by returning
+false, or by raising, as the Hadoop FileSystem spec also allows), falls
+back to FileContext's OVERWRITE rename. Readers skip hidden names, so a
 put that died before its rename leaves nothing they read.
 """
 
@@ -90,28 +91,44 @@ def glob_paths(spark: SparkSession, pattern: str) -> list[str]:
     return [st.getPath().toString() for st in fs.globStatus(hpath) or []]
 
 
+def _tmp_path(path: str) -> str:
+    """The hidden name beside `path` that _put_file writes first. Cut from
+    the string, keeping the '/' before the last name, so a file at a file
+    system or bucket root (`file:/x`, `s3a://bucket/x`) gets its tmp
+    there too: Hadoop's Path(parent, child) would resolve a child against
+    a root head without a '/' (`s3a://bucket` + `.x.tmp`) to a wrong path."""
+    head, slash, name = path.rpartition("/")
+    return f"{head}{slash}.{name}.tmp"
+
+
 def _put_file(spark: SparkSession, path: str, data: bytes) -> None:
     """Write `data` under a hidden name beside `path` (readers of the dir
     skip names starting with '.'), then rename it to `path`, replacing
     any file there: a reader sees the old file or the whole new one.
 
     A new name (every manifest file, a fresh params record) takes one
-    create and one FileSystem.rename. That rename returns false when
-    `path` already exists (local, hdfs and s3a file systems alike), and
-    only then does the put replace it, through FileContext's OVERWRITE
-    rename: atomic on local and hdfs file systems, but a call several
-    times dearer (on a local file system without native Hadoop code it
-    forks readlink processes)."""
+    create and one FileSystem.rename. When `path` already exists that
+    rename refuses: the Hadoop FileSystem spec lets it return false (the
+    local file system does, as measured; hdfs and s3a were not measured)
+    or raise (s3a's FileAlreadyExistsException). Either way the put then
+    replaces the file through FileContext's OVERWRITE rename: atomic on
+    local and hdfs file systems, but a call several times dearer (on a
+    local file system without native Hadoop code it forks readlink
+    processes). A rename that failed for any other cause fails there
+    again, and that error is raised."""
     fs, hpath = _hadoop_path(spark, path)
     cls = _fs_classes(spark._jvm)
-    head, name = os.path.split(path)
-    tmp = cls.Path(head, f".{name}.tmp")
+    tmp = cls.Path(_tmp_path(path))
     stream = fs.create(tmp, True)
     try:
         stream.write(bytearray(data))
     finally:
         stream.close()
-    if not fs.rename(tmp, hpath):
+    try:
+        renamed = fs.rename(tmp, hpath)
+    except Py4JJavaError:
+        renamed = False
+    if not renamed:
         overwrite = spark.sparkContext._gateway.new_array(cls.Rename, 1)
         overwrite[0] = cls.Rename.OVERWRITE
         cls.FileContext.getFileContext(hpath.toUri(), fs.getConf()).rename(tmp, hpath, overwrite)

@@ -395,6 +395,60 @@ def test_put_takes_one_rename_and_replaces_whole(spark, tmp_path):
     assert read_parquet_rows(spark, d, ddl) == [{"part_id": 1, "url": "a"}]
 
 
+def test_put_replaces_when_rename_raises(spark, tmp_path, monkeypatch):
+    # the Hadoop FileSystem spec lets a rename onto an existing file raise
+    # (s3a throws FileAlreadyExistsException) instead of returning false:
+    # the put then replaces the file the same way, through FileContext
+    from greenocr_spark.sources import pages
+    from py4j.protocol import Py4JJavaError
+
+    class RaisingRename:
+        def __init__(self, fs):
+            self.fs = fs
+
+        def rename(self, src, dst):
+            if self.fs.exists(dst):
+                exc = spark._jvm.org.apache.hadoop.fs.FileAlreadyExistsException(dst.toString())
+                raise Py4JJavaError("An error occurred while calling o.rename", exc)
+            return self.fs.rename(src, dst)
+
+        def __getattr__(self, name):
+            return getattr(self.fs, name)
+
+    hadoop_path = pages._hadoop_path
+    monkeypatch.setattr(
+        pages, "_hadoop_path",
+        lambda s, p: (lambda fs, hpath: (RaisingRename(fs), hpath))(*hadoop_path(s, p)),
+    )
+    out = str(tmp_path / "o")
+    pages.write_params(spark, out, {"n_parts": 8})
+    record = {"hot": {"h": 2}, "n_parts": 8}
+    pages.write_params(spark, out, record)
+    with open(f"{out}/_params.json", "rb") as f:
+        assert f.read() == json.dumps(record, sort_keys=True).encode()
+    assert sorted(os.listdir(out)) == sorted(n for n in os.listdir(out) if ".tmp" not in n)
+
+
+@pytest.mark.parametrize("path", [
+    "file:/_params.json",
+    "/_params.json",
+    "s3a://bucket/_params.json",
+    "hdfs://nn:8020/_params.json",
+    "s3a://bucket/out/part-1.parquet",
+    "/tmp/out dir/_params.json",
+])
+def test_put_tmp_sits_beside_its_file(spark, path):
+    # a put's hidden tmp name is its file's, in the same dir, also for a
+    # file at a file system or bucket root (no file is written here)
+    from greenocr_spark.sources.pages import _tmp_path
+
+    jpath = spark._jvm.org.apache.hadoop.fs.Path
+    tmp, dst = jpath(_tmp_path(path)), jpath(path)
+    assert tmp.getName() == f".{dst.getName()}.tmp"
+    assert tmp.getParent().equals(dst.getParent())
+    assert tmp.toUri().getAuthority() == dst.toUri().getAuthority()
+
+
 def test_adaptive_salting(spark, pages_path):
     # hot hosts (>5% of rows) get salted across many partitions; cold hosts
     # stay on a single partition (locality preserved)
