@@ -67,12 +67,13 @@ def main() -> int:
 
         from greenocr_spark.plans.calibrate import calibrate
         from greenocr_spark.session import build_session
+        from greenocr_spark.sources.pages import limit_pages
 
         spark = build_session(app_name="calibrate")
         spark.sparkContext.setLogLevel("WARN")
         labeled = spark.read.parquet(a.input).filter(F.col("text").isNotNull())
         if a.sample:
-            labeled = labeled.limit(a.sample)
+            labeled = limit_pages(labeled, a.sample)
         cfg, acc, _ = calibrate(labeled)
         print(json.dumps({"threshold": cfg.threshold, "neargood_chars": cfg.neargood_chars,
                           "accuracy": round(acc, 4)}))

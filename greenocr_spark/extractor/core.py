@@ -5,7 +5,10 @@ The Spark pipeline (greenocr_spark.operators.extract) runs *these exact
 functions* as one PageBatch per Arrow batch, and the pytest golden fixtures
 are produced by extract_document, the one-page PageBatch — one code path,
 so per-url byte identity between Spark output and the reference extractor
-holds by construction (BASELINE.json input_hint).
+holds by construction (BASELINE.json input_hint). The ExtractorConfig is
+applied only when a PageBatch is finished (score, classify, decode), so
+calibration (plans/calibrate.py) tokenizes a batch once and finishes it
+once per grid config.
 
 Semantic lineage (grafted from the reference, see SURVEY.md §2):
 - decode_bytes        ~ grayscale decode        (reference exe_t.py:482,509)
@@ -211,23 +214,9 @@ def _drop(s: str, opener: re.Pattern, closer: re.Pattern) -> str:
     return "".join(out)
 
 
-class Block:
-    """One flat-DOM block (a CTC timestep)."""
-
-    __slots__ = ("pos", "tag", "text", "n_chars", "link_density")
-
-    def __init__(self, pos: int, tag: str, text: str, link_chars: int):
-        self.pos = pos
-        self.tag = tag
-        self.text = text
-        self.n_chars = len(text)
-        self.link_density = min(1.0, link_chars / self.n_chars) if self.n_chars else 0.0
-
-
 class Blocks:
     """The flat DOM array, as parallel columns: each block's context tag,
-    cleaned text and link chars. Indexing and iteration give Block views;
-    the stage functions read the columns."""
+    cleaned text and link chars."""
 
     __slots__ = ("tags", "texts", "link_chars")
 
@@ -238,13 +227,6 @@ class Blocks:
 
     def __len__(self) -> int:
         return len(self.texts)
-
-    def __getitem__(self, i: int) -> Block:
-        pos = range(len(self.texts))[i]
-        return Block(pos, self.tags[pos], self.texts[pos], self.link_chars[pos])
-
-    def __iter__(self):
-        return map(Block, range(len(self.texts)), self.tags, self.texts, self.link_chars)
 
 
 def tokenize_blocks(markup: str) -> Blocks:
@@ -354,8 +336,8 @@ def score_pages(blocks: Blocks, bounds, cfg: ExtractorConfig = DEFAULT_CONFIG) -
     sharp       = clip(norm + 1.5*(norm - smooth), 0, 1)      (exe_t.py:299-300)
 
     Returns dict of equal-length float64 arrays {raw, norm, smooth, sharp},
-    plus the n_chars and link_density columns (Block's values) that
-    classify_blocks gates on. The numpy calls are per batch, not per page:
+    plus the n_chars and link_density columns that classify_blocks gates
+    on. The numpy calls are per batch, not per page:
     one sort keyed by page, and each page's percentiles, degenerate test
     and smoothing edges come from its offsets."""
     n = len(blocks)
@@ -450,12 +432,13 @@ def decode_blocks(blocks: Blocks, cls: np.ndarray):
 class PageBatch:
     """Pages extracted together. add() runs one page's own stages (route;
     decode → repair → tokenize, or the PDF branch) and keeps only its
-    block columns, not the decoded page; finish() scores, classifies and
-    decodes every page's blocks at once (score_pages → classify_blocks →
-    decode_pages). extract_document is the one-page batch."""
+    block columns, not the decoded page; none of them reads the config.
+    finish(cfg) scores, classifies and decodes every page's blocks at once
+    under cfg (score_pages → classify_blocks → decode_pages) into fresh
+    columns, so one batch can be finished under several configs.
+    extract_document is the one-page batch."""
 
-    def __init__(self, cfg: ExtractorConfig = DEFAULT_CONFIG):
-        self.cfg = cfg
+    def __init__(self):
         self.tags: list = []
         self.texts: list = []
         self.link_chars: list = []
@@ -481,23 +464,18 @@ class PageBatch:
             self._add_page(r["kind"])
             return None
         markup = decode_bytes(raw)
-        self.add_markup(markup)
-        return markup
-
-    def add_markup(self, s: str) -> None:
-        """Add one decoded HTML page."""
-        blocks = tokenize_blocks(repair_markup(s))
+        blocks = tokenize_blocks(repair_markup(markup))
         self.tags += blocks.tags
         self.texts += blocks.texts
         self.link_chars += blocks.link_chars
         self._add_page("html")
+        return markup
 
     def _add_page(self, kind: str) -> None:
         self.kinds.append(kind)
         self.bounds.append(len(self.texts))
 
-    def finish(self) -> "Extracted":
-        cfg = self.cfg
+    def finish(self, cfg: ExtractorConfig = DEFAULT_CONFIG) -> "Extracted":
         blocks = Blocks(self.tags, self.texts, self.link_chars)
         cls = classify_blocks(blocks, score_pages(blocks, self.bounds, cfg), cfg)
         texts, span_bounds, block_idx, start, end = decode_pages(self.texts, cls, self.bounds)
@@ -559,15 +537,8 @@ class Extracted(NamedTuple):
         }
 
 
-def extract_html(raw: bytes, cfg: ExtractorConfig = DEFAULT_CONFIG):
-    """Full HTML path: decode → repair → tokenize → score → classify → decode."""
-    batch = PageBatch(cfg)
-    batch.add_markup(decode_bytes(raw))
-    return batch.finish().row(0)
-
-
 def extract_document(raw, cfg: ExtractorConfig = DEFAULT_CONFIG):
     """The extracted result of one document payload: a one-page PageBatch."""
-    batch = PageBatch(cfg)
+    batch = PageBatch()
     batch.add(raw)
-    return batch.finish().row(0)
+    return batch.finish(cfg).row(0)

@@ -5,10 +5,11 @@ stage (one JVM↔Python boundary crossing per batch, never per row). The
 per-document math is greenocr_spark.extractor.core — the byte-identity
 spec — run as one core.PageBatch per Arrow batch: each page is decoded,
 repaired and tokenized on its own, then the whole batch is scored,
-classified and decoded in one numpy pass, so Spark output ≡ reference
-extractor output. The output batch is built column by column in Arrow,
-against the Arrow form of extract_schema: the batch pass's columns and
-the link faces' lists go straight to Arrow arrays; no pandas.
+classified and decoded in one numpy pass under the frozen DEFAULT_CONFIG
+(PageBatch.finish()), so Spark output ≡ reference extractor output. The
+output batch is built column by column in Arrow, against the Arrow form
+of extract_schema: the batch pass's columns and the link faces' lists go
+straight to Arrow arrays; no pandas.
 
 The stage can also count the job's manifest sums where it runs (PartTally):
 the job then needs no second pass over what it wrote.
@@ -35,7 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from greenocr_spark.extractor.core import DEFAULT_CONFIG, Extracted, ExtractorConfig, PageBatch
+from greenocr_spark.extractor.core import Extracted, PageBatch
 from greenocr_spark.worker import trim_import_caches
 
 SPAN_TYPE = ArrayType(
@@ -129,7 +130,6 @@ def extract_schema(
 
 def extract_pages(
     df: DataFrame,
-    cfg: ExtractorConfig = DEFAULT_CONFIG,
     passthrough: tuple = (),
     with_links: bool = False,
     with_anchors: bool = False,
@@ -170,7 +170,7 @@ def extract_pages(
             if batch.num_rows == 0:
                 continue
             urls = batch.column("url").to_pylist()
-            pages = PageBatch(cfg)
+            pages = PageBatch()
             links, anchors = [], []
             for url, raw in zip(urls, batch.column("html").to_pylist()):
                 # markup: the decoded page, which the link faces read too

@@ -9,40 +9,30 @@ main-content text) and picks the best by exact-match accuracy:
 
     epochs → config grid        loss → 1 - exact-match rate
     best-state capture → argmax with deterministic tie-break
-    per-bucket partials → per-partition (config, hits, n) partial aggs
+    per-bucket partials → per-partition (grp, config, hits, n) partial aggs
 
-One Arrow-batched pass evaluates EVERY config on every sample page
-(G × docs extractions, executed where the data lives); the driver sees
-only G aggregate rows.
+One Arrow-batched stage runs where the pages are read: each batch's pages
+go into one core.PageBatch once (decode, repair, tokenize), which is
+finished once per grid config, since only scoring reads the config. The
+JVM sums the stage's partial rows, so no page is shuffled and the driver
+sees one row per group and config.
 """
 
 from __future__ import annotations
 
 from dataclasses import replace
+from operator import eq
 from typing import Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
-from greenocr_spark.extractor.core import DEFAULT_CONFIG, canon_ws, extract_document
+from greenocr_spark.extractor.core import DEFAULT_CONFIG, PageBatch, canon_ws
 from greenocr_spark.worker import trim_import_caches
-
-EVAL_SCHEMA = StructType(
-    [
-        StructField("cfg_id", IntegerType()),
-        StructField("hits", LongType()),
-        StructField("n", LongType()),
-    ]
-)
 
 
 def default_grid() -> list:
@@ -54,40 +44,75 @@ def default_grid() -> list:
     return grid
 
 
-def evaluate_configs(labeled: DataFrame, grid: list | None = None) -> DataFrame:
-    """(html:binary, text:string ground truth) → per-config accuracy rows.
+def _partials(labeled: DataFrame, grp: Column, grid: list) -> DataFrame:
+    """(grp, cfg_id, hits, n) summed over labeled's (html:binary,
+    text:string ground truth) rows per value of grp: n counts the rows
+    with a label, hits those whose extracted text under grid[cfg_id] is
+    the label's canonical form. A group whose rows have no label keeps
+    n = 0. Narrow up to the Python stage; only its partial rows (one per
+    group, config and batch) are shuffled."""
+    src = labeled.select(grp.alias("grp"), "html", "text")
+    schema = StructType(
+        [
+            src.schema["grp"],
+            StructField("cfg_id", IntegerType()),
+            StructField("hits", LongType()),
+            StructField("n", LongType()),
+        ]
+    )
+    n_cfg = len(grid)
 
-    Partial (cfg_id, hits, n) counts are produced map-side per Arrow batch,
-    so the shuffle moves G×partitions tiny rows, never documents."""
-    grid = grid or default_grid()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         trim_import_caches()
-        for pdf in batches:
-            hits = [0] * len(grid)
-            n = 0
-            for raw, want in zip(pdf["html"].tolist(), pdf["text"].tolist()):
-                if want is None:
-                    continue
-                n += 1
-                want_c = canon_ws(want)
-                for gi, cfg in enumerate(grid):
-                    if extract_document(raw, cfg)["text"] == want_c:
-                        hits[gi] += 1
-            yield pd.DataFrame(
-                {"cfg_id": range(len(grid)), "hits": hits, "n": [n] * len(grid)}
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            index: dict = {}  # group value -> its index in the batch
+            first: list = []  # each group's first row
+            pages, page_grp, wants = PageBatch(), [], []
+            cols = (batch.column(c).to_pylist() for c in ("grp", "html", "text"))
+            for row, (g, raw, want) in enumerate(zip(*cols)):
+                k = index.get(g)
+                if k is None:
+                    k = index[g] = len(first)
+                    first.append(row)
+                if want is not None:
+                    pages.add(raw)
+                    page_grp.append(k)
+                    wants.append(canon_ws(want))
+            n_grp = len(first)
+            page_grp = np.asarray(page_grp, dtype=np.int64)
+            hits = np.zeros((n_grp, n_cfg), dtype=np.int64)
+            for cfg_id, cfg in enumerate(grid):
+                hit = np.fromiter(map(eq, pages.finish(cfg).text, wants), dtype=bool, count=len(wants))
+                hits[:, cfg_id] = np.bincount(page_grp[hit], minlength=n_grp)
+            n = np.bincount(page_grp, minlength=n_grp)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("grp").take(np.repeat(first, n_cfg)),
+                    pa.array(np.tile(np.arange(n_cfg, dtype=np.int32), n_grp)),
+                    pa.array(hits.ravel()),
+                    pa.array(np.repeat(n, n_cfg)),
+                ],
+                names=schema.names,
             )
 
-    partials = labeled.select("html", "text").mapInPandas(run, EVAL_SCHEMA)
     return (
-        partials.groupBy("cfg_id")
+        src.mapInArrow(run, schema=schema)
+        .groupBy("grp", "cfg_id")
         .agg(F.sum("hits").alias("hits"), F.sum("n").alias("n"))
-        .select(
-            "cfg_id",
-            "hits",
-            "n",
-            (F.col("hits") / F.col("n")).cast(DoubleType()).alias("accuracy"),
-        )
+    )
+
+
+def evaluate_configs(labeled: DataFrame, grid: list | None = None) -> DataFrame:
+    """(html:binary, text:string ground truth) → per-config accuracy rows
+    (cfg_id, hits, n, accuracy)."""
+    grid = grid or default_grid()
+    return _partials(labeled, F.lit(0), grid).select(
+        "cfg_id",
+        "hits",
+        "n",
+        (F.col("hits") / F.col("n")).cast(DoubleType()).alias("accuracy"),
     )
 
 
@@ -101,39 +126,7 @@ def calibrate_grouped(labeled: DataFrame, group_col: str, grid: list | None = No
     field of the per-group winners weighted by group size — exactly
     Σ wᵢ·stateᵢ / Σ wᵢ over the 'parameter tensors' (here: thresholds)."""
     grid = grid or default_grid()
-    gfield = labeled.schema[group_col]
-    schema = StructType(
-        [
-            StructField("grp", gfield.dataType),
-            StructField("cfg_id", IntegerType()),
-            StructField("hits", LongType()),
-            StructField("n", LongType()),
-        ]
-    )
-
-    def run(key, pdf):
-        trim_import_caches()
-        hits = [0] * len(grid)
-        n = 0
-        for raw, want in zip(pdf["html"].tolist(), pdf["text"].tolist()):
-            if want is None:
-                continue
-            n += 1
-            want_c = canon_ws(want)
-            for gi, cfg in enumerate(grid):
-                if extract_document(raw, cfg)["text"] == want_c:
-                    hits[gi] += 1
-        return pd.DataFrame(
-            {"grp": [key[0]] * len(grid), "cfg_id": range(len(grid)),
-             "hits": hits, "n": [n] * len(grid)}
-        )
-
-    rows = (
-        labeled.select(F.col(group_col).alias("grp"), "html", "text")
-        .groupBy("grp")
-        .applyInPandas(run, schema)
-        .collect()
-    )
+    rows = _partials(labeled, F.col(group_col), grid).collect()
     per_group = {}
     by_grp: dict = {}
     for r in rows:

@@ -12,7 +12,6 @@ from greenocr_spark.extractor.core import (
     decode_blocks,
     decode_bytes,
     extract_document,
-    extract_html,
     repair_markup,
     score_blocks,
     tokenize_blocks,
@@ -101,34 +100,35 @@ def test_repair_matches_frozen_regex_form(pieces):
 # ---- tokenize_blocks -------------------------------------------------------
 
 
+def _page_scores(blocks):
+    return core.score_pages(blocks, (0, len(blocks)))
+
+
 def test_tokenize_basic_blocks():
     blocks = tokenize_blocks("<p>one</p><p>two two</p><div>three</div>")
-    assert [b.text for b in blocks] == ["one", "two two", "three"]
-    assert [b.tag for b in blocks] == ["p", "p", "div"]
+    assert blocks.texts == ["one", "two two", "three"]
+    assert blocks.tags == ["p", "p", "div"]
 
 
 def test_tokenize_unbalanced_tags_tolerated():
-    blocks = tokenize_blocks("<div><p>alpha<p>beta</b></div></p>junk")
-    texts = [b.text for b in blocks]
+    texts = tokenize_blocks("<div><p>alpha<p>beta</b></div></p>junk").texts
     assert "alpha" in texts and "beta" in texts
 
 
 def test_tokenize_link_density():
     blocks = tokenize_blocks("<p><a href='/'>click here</a></p><p>plain text body</p>")
-    assert blocks[0].link_density == 1.0
-    assert blocks[1].link_density == 0.0
+    assert _page_scores(blocks)["link_density"].tolist() == [1.0, 0.0]
 
 
 def test_tokenize_entities_single_pass():
     blocks = tokenize_blocks("<p>&amp;amp; &#97;b</p>")
     # double-encoded decodes one level (frozen spec)
-    assert blocks[0].text == "&amp; ab"
+    assert blocks.texts[0] == "&amp; ab"
 
 
 def test_tokenize_inline_tags_do_not_split():
     blocks = tokenize_blocks("<p>a <b>bold</b> and <span>span</span> text</p>")
-    assert len(blocks) == 1
-    assert blocks[0].text == "a bold and span text"
+    assert blocks.texts == ["a bold and span text"]
 
 
 # Frozen (pos, tag, text, n_chars, link_density) of shapes the fixture
@@ -163,7 +163,14 @@ TOKENIZE_FROZEN = {
 
 @pytest.mark.parametrize("markup", list(TOKENIZE_FROZEN))
 def test_tokenize_frozen_shapes(markup):
-    got = [(b.pos, b.tag, b.text, b.n_chars, b.link_density) for b in tokenize_blocks(markup)]
+    blocks = tokenize_blocks(markup)
+    scores = _page_scores(blocks)
+    got = list(
+        zip(
+            range(len(blocks)), blocks.tags, blocks.texts,
+            scores["n_chars"].astype(int).tolist(), scores["link_density"].tolist(),
+        )
+    )
     assert got == TOKENIZE_FROZEN[markup]
 
 

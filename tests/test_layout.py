@@ -2,8 +2,9 @@
 engine modules do not import the test battery, every greenocr_spark
 import in the repository resolves, each kernel the plans share with
 the battery has one definition, every engine Python stage trims the
-worker's import caches, no plan reaches the file system through os or
-shutil, and no plan reads a manifest with Spark."""
+worker's import caches and runs the text spec as a PageBatch, no plan
+reaches the file system through os or shutil, and no plan reads a
+manifest with Spark."""
 
 from __future__ import annotations
 
@@ -209,7 +210,7 @@ def test_engine_python_stages_trim_import_caches():
             continue
         n, b = _untrimmed_stages(path.relative_to(ROOT), path.read_text())
         found, bad = found + n, bad + b
-    assert found >= 9  # the stage calls in the engine today
+    assert found >= 8  # the stage calls in the engine today
     assert not bad, "\n".join(bad)
 
 
@@ -247,6 +248,49 @@ def arrow_stage(df):
     assert found == 5
     assert bad == [
         "m.py:6 mapInPandas", "m.py:20 mapInPandas", "m.py:23 mapInPandas", "m.py:28 mapInArrow",
+    ]
+
+
+# extract_document is the spec's one-page case. An engine stage runs the
+# spec as a core.PageBatch: its pages are tokenized once per batch and
+# finished together, under whichever configs the stage needs.
+def _one_page_extractions(path: Path, source: str) -> list[str]:
+    """Each call of extract_document, by name or as an attribute."""
+    bad = []
+    for node in ast.walk(ast.parse(source, str(path))):
+        if isinstance(node, ast.Call):
+            func = node.func
+            name = func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+            if name == "extract_document":
+                bad.append((node.lineno, node.col_offset, ast.unparse(func)))
+    return [f"{path}:{line} {name}" for line, _, name in sorted(bad)]
+
+
+def test_engine_stages_extract_through_page_batches():
+    bad = []
+    for path in _py_files(PKG):
+        rel = path.relative_to(ROOT)
+        if path.name.startswith("battery") or rel.parts[1] == "extractor":
+            continue
+        bad += _one_page_extractions(rel, path.read_text())
+    assert not bad, "\n".join(bad)
+
+
+def test_one_page_extraction_is_reported():
+    src = '''
+from greenocr_spark.extractor import core
+from greenocr_spark.extractor.core import PageBatch, extract_document
+
+def f(raw, cfg):
+    a = extract_document(raw)["text"]
+    b = core.extract_document(raw, cfg)
+    pages = PageBatch()
+    pages.add(raw)
+    return a, b, pages.finish(cfg), extract_document
+'''
+    assert _one_page_extractions(Path("m.py"), src) == [
+        "m.py:6 extract_document",
+        "m.py:7 core.extract_document",
     ]
 
 

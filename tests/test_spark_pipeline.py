@@ -560,6 +560,84 @@ def test_grouped_calibration_weighted_merge(spark, tmp_path):
         assert cfg.threshold in grid_thrs and n > 0 and acc > 0.5
 
 
+def test_calibration_counts_match_the_one_page_spec(spark, monkeypatch):
+    """evaluate_configs and calibrate_grouped count what extract_document
+    (raw, cfg) gives page by page, under a grid whose configs score the
+    fixture pages (PDFs too) differently. The inputs hold a NULL group
+    value and a group with no label, which keeps n = 0. The grouped job
+    shuffles only partial rows: no Exchange below its Python stage."""
+    from dataclasses import replace
+
+    from greenocr_spark.extractor.core import DEFAULT_CONFIG, canon_ws
+    from greenocr_spark.plans.calibrate import calibrate_grouped, evaluate_configs
+
+    grid = [
+        replace(DEFAULT_CONFIG, threshold=thr, neargood_chars=ng, min_chars=mc)
+        for thr in (0.05, 0.3, 0.7)
+        for ng in (5.0, 30.0, 200.0)
+        for mc in (1, 15, 80)
+    ]
+    rows = []
+    for i, p in enumerate(make_pages(300)):
+        lang, text = p["lang"], p["text"]
+        if i % 7 == 0:
+            lang = None
+        elif i % 11 == 0:
+            lang, text = "unlabeled", None
+        rows.append((p["url"], p["html"], text, lang))
+    assert any(raw.startswith(b"%PDF-") and text for _, raw, text, _ in rows)
+
+    # the pure-Python count: group -> (hits per cfg_id, n)
+    want: dict = {}
+    for _, raw, text, lang in rows:
+        hits, n = want.setdefault(lang, ([0] * len(grid), [0]))
+        if text is None:
+            continue
+        n[0] += 1
+        for cfg_id, cfg in enumerate(grid):
+            hits[cfg_id] += extract_document(raw, cfg)["text"] == canon_ws(text)
+    total_hits = [sum(h[i] for h, _ in want.values()) for i in range(len(grid))]
+    total_n = sum(n for _, (n,) in want.values())
+    assert len(set(total_hits)) >= 4  # the configs score differently
+
+    labeled = spark.createDataFrame(rows, "url string, html binary, text string, lang string")
+    got = {r["cfg_id"]: (r["hits"], r["n"]) for r in evaluate_configs(labeled, grid).collect()}
+    assert got == {i: (h, total_n) for i, h in enumerate(total_hits)}
+
+    plans = []
+    frame = type(labeled)
+    collect = frame.collect
+
+    def recording_collect(df):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return collect(df)
+
+    monkeypatch.setattr(frame, "collect", recording_collect)
+    merged, per_group = calibrate_grouped(labeled, "lang", grid)
+    monkeypatch.undo()
+
+    expected = {}
+    for g, (hits, (n,)) in want.items():
+        best = max(range(len(grid)), key=lambda i: (hits[i], -i))
+        expected[g] = (grid[best], hits[best] / n if n else 0.0, n)
+    assert per_group == expected
+    assert None in per_group and per_group["unlabeled"] == (grid[0], 0.0, 0)
+    total = sum(n for _, _, n in expected.values())
+    assert merged.threshold == pytest.approx(sum(c.threshold * n for c, _, n in expected.values()) / total)
+    assert merged.neargood_chars == pytest.approx(
+        sum(c.neargood_chars * n for c, _, n in expected.values()) / total
+    )
+    assert replace(merged, threshold=0.0, neargood_chars=0.0) == replace(
+        DEFAULT_CONFIG, threshold=0.0, neargood_chars=0.0
+    )
+
+    (plan,) = plans
+    lines = plan.splitlines()
+    stage = next(i for i, line in enumerate(lines) if "MapInArrow" in line)
+    assert any("Exchange" in line for line in lines[:stage])
+    assert not any("Exchange" in line for line in lines[stage:]), plan
+
+
 def test_pages_io_roundtrip(spark, tmp_path):
     from greenocr_spark.sources.pages import read_pages
 
