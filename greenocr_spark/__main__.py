@@ -35,8 +35,78 @@ Commands:
 
 from __future__ import annotations
 
+import argparse
+import json
 import os
 import sys
+import time
+
+
+def _session(app_name: str):
+    """The command's session. Under spark-submit one already exists and is
+    configured by the submitter; getOrCreate picks it up, and standalone
+    runs get our defaults."""
+    from greenocr_spark.session import build_session
+
+    spark = build_session(app_name=app_name)
+    spark.sparkContext.setLogLevel("WARN")
+    return spark
+
+
+def _fixture_parquet(n: int, prefix: str) -> str:
+    """A fresh temp parquet of n fixture pages."""
+    import tempfile
+
+    from greenocr_spark.fixtures import write_pages_parquet
+
+    path = os.path.join(tempfile.mkdtemp(prefix=prefix), "pages.parquet")
+    write_pages_parquet(path, n)
+    return path
+
+
+def extract(argv: list) -> int:
+    """The flagship extraction job (jobs/extract_job.py is its
+    spark-submit entry point); prints its summary as JSON."""
+    ap = argparse.ArgumentParser(prog="greenocr_spark extract")
+    src = ap.add_mutually_exclusive_group(required=True)
+    src.add_argument("--input", help="pages parquet path / table (url, html, ...)")
+    src.add_argument("--fixture-pages", type=int, help="generate N fixture pages instead")
+    ap.add_argument("--output", required=True)
+    ap.add_argument("--n-parts", type=int, default=256)
+    ap.add_argument("--n-salts", type=int, default=8)
+    ap.add_argument("--salting", choices=["uniform", "adaptive"], default="uniform")
+    ap.add_argument("--no-resume", action="store_true")
+    ap.add_argument("--with-links", action="store_true",
+                    help="harvest outlinks in the same extraction pass")
+    ap.add_argument("--with-anchors", action="store_true",
+                    help="harvest (dst, anchor-text) pairs in the same pass")
+    ap.add_argument("--limit", type=int, default=0)
+    a = ap.parse_args(argv)
+
+    from greenocr_spark.plans.job import run_extract_job
+    from greenocr_spark.sources.pages import limit_pages, read_pages
+
+    spark = _session("greenocr-extract")
+    if a.fixture_pages:
+        pages = spark.read.parquet(_fixture_parquet(a.fixture_pages, "greenocr_fixture_"))
+    else:
+        # shared path-vs-table routing (ADVICE r01: an s3a:// input must not
+        # be misrouted to spark.read.table)
+        pages = read_pages(spark, a.input)
+    if a.limit:
+        pages = limit_pages(pages, a.limit)
+
+    t0 = time.perf_counter()
+    result = run_extract_job(
+        spark, pages, a.output, n_parts=a.n_parts, n_salts=a.n_salts, resume=not a.no_resume,
+        salting=a.salting, with_links=a.with_links, with_anchors=a.with_anchors,
+    )
+    n = result.count()
+    secs = time.perf_counter() - t0
+    print(json.dumps({"rows_out": n, "secs": round(secs, 2),
+                      "docs_per_sec": round(n / secs, 1), "output": a.output}))
+    spark.stop()
+    return 0
 
 
 def main() -> int:
@@ -44,21 +114,9 @@ def main() -> int:
         print(__doc__)
         return 0
     cmd, rest = sys.argv[1], sys.argv[2:]
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     if cmd == "extract":
-        sys.argv = ["extract_job", *rest]
-        path = os.path.join(repo, "jobs", "extract_job.py")
-        import importlib.util
-
-        spec = importlib.util.spec_from_file_location("extract_job", path)
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        mod.main()
-        return 0
+        return extract(rest)
     if cmd == "calibrate":
-        import argparse
-        import json
-
         ap = argparse.ArgumentParser(prog="greenocr_spark calibrate")
         ap.add_argument("--input", required=True)
         ap.add_argument("--sample", type=int, default=0)
@@ -66,11 +124,9 @@ def main() -> int:
         from pyspark.sql import functions as F
 
         from greenocr_spark.plans.calibrate import calibrate
-        from greenocr_spark.session import build_session
         from greenocr_spark.sources.pages import limit_pages
 
-        spark = build_session(app_name="calibrate")
-        spark.sparkContext.setLogLevel("WARN")
+        spark = _session("calibrate")
         labeled = spark.read.parquet(a.input).filter(F.col("text").isNotNull())
         if a.sample:
             labeled = limit_pages(labeled, a.sample)
@@ -80,9 +136,6 @@ def main() -> int:
         spark.stop()
         return 0
     if cmd == "curate":
-        import argparse
-        import json
-
         ap = argparse.ArgumentParser(prog="greenocr_spark curate")
         ap.add_argument("--input", required=True)
         ap.add_argument("--output", required=True)
@@ -98,10 +151,8 @@ def main() -> int:
         ap.add_argument("--no-resume", action="store_true")
         a = ap.parse_args(rest)
         from greenocr_spark.plans.curate import read_curate_manifest, run_curate_job
-        from greenocr_spark.session import build_session
 
-        spark = build_session(app_name="curate")
-        spark.sparkContext.setLogLevel("WARN")
+        spark = _session("curate")
         curated = run_curate_job(
             spark,
             spark.read.parquet(a.input),
@@ -121,9 +172,6 @@ def main() -> int:
         spark.stop()
         return 0
     if cmd == "export":
-        import argparse
-        import json
-
         ap = argparse.ArgumentParser(prog="greenocr_spark export")
         ap.add_argument("--input", required=True)
         ap.add_argument("--output", required=True)
@@ -133,10 +181,8 @@ def main() -> int:
         ap.add_argument("--no-resume", action="store_true")
         a = ap.parse_args(rest)
         from greenocr_spark.plans.export import run_export_job
-        from greenocr_spark.session import build_session
 
-        spark = build_session(app_name="export")
-        spark.sparkContext.setLogLevel("WARN")
+        spark = _session("export")
         stats = run_export_job(
             spark,
             spark.read.parquet(a.input),
@@ -150,9 +196,6 @@ def main() -> int:
         spark.stop()
         return 0
     if cmd == "pipeline":
-        import argparse
-        import json
-
         ap = argparse.ArgumentParser(prog="greenocr_spark pipeline")
         ap.add_argument("--input", default=None)
         ap.add_argument("--fixture-pages", type=int, default=0)
@@ -178,21 +221,9 @@ def main() -> int:
         if bool(a.input) == bool(a.fixture_pages):
             ap.error("exactly one of --input / --fixture-pages required")
         from greenocr_spark.plans.pipeline import run_pipeline_job
-        from greenocr_spark.session import build_session
 
-        spark = build_session(app_name="pipeline")
-        spark.sparkContext.setLogLevel("WARN")
-        if a.fixture_pages:
-            import tempfile
-
-            from greenocr_spark.fixtures import write_pages_parquet
-
-            src = os.path.join(
-                tempfile.mkdtemp(prefix="pipeline_fixture_"), "pages.parquet"
-            )
-            write_pages_parquet(src, a.fixture_pages)
-        else:
-            src = a.input
+        spark = _session("pipeline")
+        src = _fixture_parquet(a.fixture_pages, "pipeline_fixture_") if a.fixture_pages else a.input
         stats = run_pipeline_job(
             spark,
             spark.read.parquet(src),
@@ -219,9 +250,6 @@ def main() -> int:
         spark.stop()
         return 0
     if cmd == "kmeans":
-        import argparse
-        import json
-
         ap = argparse.ArgumentParser(prog="greenocr_spark kmeans")
         ap.add_argument("--input", required=True)
         ap.add_argument("--output", required=True)
@@ -231,10 +259,8 @@ def main() -> int:
         ap.add_argument("--no-resume", action="store_true")
         a = ap.parse_args(rest)
         from greenocr_spark.plans.cluster import run_kmeans_job
-        from greenocr_spark.session import build_session
 
-        spark = build_session(app_name="kmeans")
-        spark.sparkContext.setLogLevel("WARN")
+        spark = _session("kmeans")
         stats = run_kmeans_job(
             spark,
             spark.read.parquet(a.input),
@@ -248,9 +274,6 @@ def main() -> int:
         spark.stop()
         return 0
     if cmd == "frontier":
-        import argparse
-        import json
-
         ap = argparse.ArgumentParser(prog="greenocr_spark frontier")
         ap.add_argument("--extracted", required=True,
                         help="extracted table written with --with-links")
@@ -262,10 +285,8 @@ def main() -> int:
         ap.add_argument("--no-resume", action="store_true")
         a = ap.parse_args(rest)
         from greenocr_spark.plans.frontier import run_frontier_job
-        from greenocr_spark.session import build_session
 
-        spark = build_session(app_name="frontier")
-        spark.sparkContext.setLogLevel("WARN")
+        spark = _session("frontier")
         fr = run_frontier_job(
             spark,
             spark.read.parquet(a.extracted),

@@ -8,7 +8,9 @@ so per-url byte identity between Spark output and the reference extractor
 holds by construction (BASELINE.json input_hint). The ExtractorConfig is
 applied only when a PageBatch is finished (score, classify, decode), so
 calibration (plans/calibrate.py) tokenizes a batch once and finishes it
-once per grid config.
+once per grid config. A PDF payload's span texts (extractor/pdf.py) enter
+the batch as blocks too, all of them content, so one decode pass serves
+every payload.
 
 Semantic lineage (grafted from the reference, see SURVEY.md §2):
 - decode_bytes        ~ grayscale decode        (reference exe_t.py:482,509)
@@ -74,7 +76,7 @@ DROP_ELEMENTS = ("script", "style", "noscript", "template")
 # Tag contexts carrying a strong boilerplate prior.
 BOILER_TAGS = frozenset({"nav", "header", "footer", "aside", "form", "title", "figcaption", "option", "select", "button", "head"})
 
-PDF_MAGIC = b"%PDF-"
+PDF_MAGIC = b"%PDF-"  # the payload router: functions/sqlfns.pdf_magic_expr is its JVM form
 # the class of every span: only content blocks are decoded
 CONTENT = "content"
 
@@ -431,11 +433,12 @@ def decode_blocks(blocks: Blocks, cls: np.ndarray):
 
 class PageBatch:
     """Pages extracted together. add() runs one page's own stages (route;
-    decode → repair → tokenize, or the PDF branch) and keeps only its
-    block columns, not the decoded page; none of them reads the config.
-    finish(cfg) scores, classifies and decodes every page's blocks at once
-    under cfg (score_pages → classify_blocks → decode_pages) into fresh
-    columns, so one batch can be finished under several configs.
+    decode → repair → tokenize, or the PDF layout parse) and keeps only
+    its block columns, not the decoded page; none of them reads the
+    config. finish(cfg) scores, classifies and decodes every page's blocks
+    at once under cfg (score_pages → classify_blocks → decode_pages) into
+    fresh columns, so one batch can be finished under several configs.
+    Every block of a PDF page is content, under any config.
     extract_document is the one-page batch."""
 
     def __init__(self):
@@ -444,7 +447,7 @@ class PageBatch:
         self.link_chars: list = []
         self.bounds = [0]  # page p's blocks are [bounds[p], bounds[p + 1])
         self.kinds: list = []
-        self.pdfs: dict = {}  # page index -> extract_pdf's result
+        self.pdf_pages: list = []  # the PDF pages' indices
 
     def add(self, raw) -> str | None:
         """Route one document payload: PDF magic → layout-parse branch
@@ -457,18 +460,20 @@ class PageBatch:
             return None
         raw = bytes(raw)
         if raw.startswith(PDF_MAGIC):
-            from greenocr_spark.extractor import pdf as _pdf
+            from greenocr_spark.extractor.pdf import pdf_blocks
 
-            r = _pdf.extract_pdf(raw)
-            self.pdfs[len(self.kinds)] = r
-            self._add_page(r["kind"])
-            return None
-        markup = decode_bytes(raw)
-        blocks = tokenize_blocks(repair_markup(markup))
+            # finish() keeps every block of a PDF page, so its tags and link
+            # chars, which only feed the scores, are placeholders
+            texts = pdf_blocks(raw)
+            blocks, kind, markup = Blocks(["body"] * len(texts), texts, [0] * len(texts)), "pdf", None
+            self.pdf_pages.append(len(self.kinds))
+        else:
+            markup = decode_bytes(raw)
+            blocks, kind = tokenize_blocks(repair_markup(markup)), "html"
         self.tags += blocks.tags
         self.texts += blocks.texts
         self.link_chars += blocks.link_chars
-        self._add_page("html")
+        self._add_page(kind)
         return markup
 
     def _add_page(self, kind: str) -> None:
@@ -478,37 +483,17 @@ class PageBatch:
     def finish(self, cfg: ExtractorConfig = DEFAULT_CONFIG) -> "Extracted":
         blocks = Blocks(self.tags, self.texts, self.link_chars)
         cls = classify_blocks(blocks, score_pages(blocks, self.bounds, cfg), cfg)
+        for p in self.pdf_pages:
+            cls[self.bounds[p] : self.bounds[p + 1]] = 1
         texts, span_bounds, block_idx, start, end = decode_pages(self.texts, cls, self.bounds)
-        n_blocks = np.diff(self.bounds)
-        n_content = np.diff(span_bounds)
-        span_cls = [CONTENT] * len(block_idx)
-        if self.pdfs:
-            # a PDF page has no blocks in the pass: its result goes in as
-            # extract_pdf made it, its spans before the next page's
-            at, spans = [], []
-            for i, r in self.pdfs.items():
-                texts[i] = r["text"]
-                n_blocks[i] = r["n_blocks"]
-                n_content[i] = r["n_content"]
-                at += [span_bounds[i]] * len(r["spans"])
-                spans += r["spans"]
-            if spans:
-                counts = np.diff(span_bounds)
-                counts[list(self.pdfs)] = [len(r["spans"]) for r in self.pdfs.values()]
-                span_bounds = np.concatenate(([0], np.cumsum(counts)))
-                b, s, e, c = zip(*spans)
-                block_idx = np.insert(block_idx, at, b)
-                start = np.insert(start, at, s)
-                end = np.insert(end, at, e)
-                span_cls = np.insert(np.array(span_cls, dtype=object), at, c).tolist()
-        return Extracted(texts, self.kinds, n_blocks, n_content, span_bounds, block_idx, start, end, span_cls)
+        return Extracted(texts, self.kinds, np.diff(self.bounds), np.diff(span_bounds), span_bounds, block_idx, start, end)
 
 
 class Extracted(NamedTuple):
     """A finished PageBatch as columns, one entry per page: text, kind,
     n_blocks, n_content (n_boilerplate is n_blocks - n_content). Page p's
     spans are rows span_bounds[p] to span_bounds[p + 1] of the span
-    columns block_idx, start, end and cls."""
+    columns block_idx, start and end; every span's class is CONTENT."""
 
     text: list
     kind: list
@@ -518,13 +503,12 @@ class Extracted(NamedTuple):
     block_idx: np.ndarray
     start: np.ndarray
     end: np.ndarray
-    cls: list
 
     def row(self, i: int) -> dict:
         """Page i's result, as extract_document returns it."""
         a, b = self.span_bounds[i : i + 2].tolist()
         spans = list(
-            zip(self.block_idx[a:b].tolist(), self.start[a:b].tolist(), self.end[a:b].tolist(), self.cls[a:b])
+            zip(self.block_idx[a:b].tolist(), self.start[a:b].tolist(), self.end[a:b].tolist(), repeat(CONTENT))
         )
         n_blocks, n_content = int(self.n_blocks[i]), int(self.n_content[i])
         return {

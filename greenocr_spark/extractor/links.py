@@ -53,9 +53,7 @@ from bisect import bisect_left
 from html import unescape
 from urllib.parse import urljoin, urlsplit
 
-from greenocr_spark.extractor.core import decode_bytes
-
-_PDF_MAGIC = b"%PDF-"  # same router predicate as functions/sqlfns.pdf_magic_expr
+from greenocr_spark.extractor.core import PDF_MAGIC, decode_bytes
 
 _SKIP_SCHEMES = ("javascript:", "mailto:", "tel:", "data:", "about:")
 
@@ -86,7 +84,7 @@ def _markup(raw) -> str | None:
         return None
     if isinstance(raw, (bytes, bytearray, memoryview)):
         b = bytes(raw)
-        if b[: len(_PDF_MAGIC)] == _PDF_MAGIC:
+        if b.startswith(PDF_MAGIC):
             return None
         return decode_bytes(b)
     return raw

@@ -16,9 +16,7 @@ import re
 from html import unescape
 from urllib.parse import urljoin
 
-from greenocr_spark.extractor.core import canon_ws, decode_bytes
-
-_PDF_MAGIC = b"%PDF-"
+from greenocr_spark.extractor.core import PDF_MAGIC, canon_ws, decode_bytes
 
 _TITLE_RE = re.compile(r"<title[^>]*>(.*?)</title\s*>", re.IGNORECASE | re.DOTALL)
 _META_RE = re.compile(r"<meta\b[^>]*>", re.IGNORECASE | re.DOTALL)
@@ -58,7 +56,7 @@ def extract_meta(raw, base_url: str | None = None) -> dict:
         return none
     if isinstance(raw, (bytes, bytearray, memoryview)):
         b = bytes(raw)
-        if not b or b[: len(_PDF_MAGIC)] == _PDF_MAGIC:
+        if not b or b.startswith(PDF_MAGIC):
             return none
         s = decode_bytes(b)
     else:

@@ -1,4 +1,4 @@
-"""Minimal from-scratch PDF text extractor + matching generator.
+"""Minimal from-scratch PDF layout parser + matching generator.
 
 The layout-parse branch for binary payloads (the Real-ESRGAN raw-binary
 branch analog, reference ENHANCMENT24.py:93-107). Scope is frozen to the
@@ -6,6 +6,10 @@ subset our generator emits — uncompressed or Flate content streams with
 BT/ET, Tf, Td, TD, Tm, Tj, TJ text operators — which also covers a useful
 slice of real-world simple PDFs. Reading order: spans sorted by
 (page, -y, x), per SURVEY.md §7.2 milestone 7.
+
+The parse ends at blocks (pdf_blocks): core.PageBatch routes a payload
+with PDF magic here, adds its span texts as blocks that are all content,
+and decodes them in the one pass it runs over the HTML pages' blocks.
 
 Deterministic: no randomness, float64 positions, stable sort.
 """
@@ -15,7 +19,7 @@ from __future__ import annotations
 import re
 import zlib
 
-from greenocr_spark.extractor.core import canon_ws
+from greenocr_spark.extractor.core import canon_ws, extract_document
 
 # The frozen forms of the two stream scans (tests/test_pdf.py keeps them
 # as the reference): a stream body, and a dictionary followed by a stream.
@@ -327,15 +331,14 @@ def _inflate(body: bytes, room: int) -> bytes | None:
     return None  # truncated: zlib.decompress would raise
 
 
-def extract_pdf(raw: bytes):
-    """Extract reading-order text spans from a minimal PDF byte stream.
+def pdf_blocks(raw: bytes) -> list[str]:
+    """The blocks of a minimal PDF byte stream: its whitespace-canonical
+    span texts in reading order, empty ones dropped.
 
-    Each content stream is one page (generator invariant). Spans sort by
-    (page, -y, x); output text is the whitespace-canonical join."""
-    parts = []
-    spans_out = []
-    off = 0
-    idx = 0
+    Each content stream is one page (generator invariant), and spans sort
+    by (page, -y, x). Every block is content: core.PageBatch decodes them
+    with the HTML pages' blocks."""
+    texts = []
     room = MAX_INFLATE_BYTES
     for body in iter_streams(raw):
         inflated = _inflate(body, room)
@@ -344,23 +347,11 @@ def extract_pdf(raw: bytes):
             room -= len(body)
         page_spans = _parse_stream(body)
         page_spans.sort(key=lambda s: (-s[1], s[0]))
-        for _x, _y, text in page_spans:
-            text = canon_ws(text)
-            if not text:
-                continue
-            if parts:
-                off += 1
-            start = off
-            parts.append(text)
-            off += len(text)
-            spans_out.append((idx, start, off, "content"))
-            idx += 1
-    text = " ".join(parts)
-    return {
-        "text": text,
-        "spans": spans_out,
-        "n_blocks": idx,
-        "n_content": idx,
-        "n_boilerplate": 0,
-        "kind": "pdf",
-    }
+        texts += filter(None, (canon_ws(text) for _x, _y, text in page_spans))
+    return texts
+
+
+def extract_pdf(raw: bytes) -> dict:
+    """The extracted result of a PDF payload (raw starts with
+    core.PDF_MAGIC): core.extract_document's one-page batch."""
+    return extract_document(raw)

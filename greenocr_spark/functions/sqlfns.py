@@ -10,6 +10,8 @@ import json
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from greenocr_spark.extractor.core import PDF_MAGIC
+
 
 def host_expr(url_col) -> Column:
     """Extract the host from a url (F20) — feeds skew salting.
@@ -159,7 +161,8 @@ def hot_salted_part_id(url_col: str, hot, n_parts: int) -> Column:
 
 
 def pdf_magic_expr(html_col) -> Column:
-    """Router predicate: binary payload starts with %PDF- (the RealESRGAN
-    raw-binary branch analog, ENHANCMENT24.py:93-107)."""
+    """Router predicate: binary payload starts with PDF_MAGIC, as in
+    core.PageBatch.add (the RealESRGAN raw-binary branch analog,
+    ENHANCMENT24.py:93-107)."""
     col = F.col(html_col) if isinstance(html_col, str) else html_col
-    return F.startswith(col, F.lit(b"%PDF-"))
+    return F.startswith(col, F.lit(PDF_MAGIC))

@@ -4,12 +4,13 @@ This is UD1+UD3+UD5+UD6 of SURVEY.md §2.9 fused into one Arrow-batched
 stage (one JVM↔Python boundary crossing per batch, never per row). The
 per-document math is greenocr_spark.extractor.core — the byte-identity
 spec — run as one core.PageBatch per Arrow batch: each page is decoded,
-repaired and tokenized on its own, then the whole batch is scored,
-classified and decoded in one numpy pass under the frozen DEFAULT_CONFIG
-(PageBatch.finish()), so Spark output ≡ reference extractor output. The
-output batch is built column by column in Arrow, against the Arrow form
-of extract_schema: the batch pass's columns and the link faces' lists go
-straight to Arrow arrays; no pandas.
+repaired and tokenized on its own (a PDF payload is layout-parsed into
+blocks instead), then the whole batch is scored, classified and decoded in
+one numpy pass under the frozen DEFAULT_CONFIG (PageBatch.finish()), so
+Spark output ≡ reference extractor output. The output batch is built
+column by column in Arrow, against the Arrow form of extract_schema: the
+batch pass's columns and the link faces' lists go straight to Arrow
+arrays; no pandas.
 
 The stage can also count the job's manifest sums where it runs (PartTally):
 the job then needs no second pass over what it wrote.
@@ -36,7 +37,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from greenocr_spark.extractor.core import Extracted, PageBatch
+from greenocr_spark.extractor.core import CONTENT, Extracted, PageBatch
 from greenocr_spark.worker import trim_import_caches
 
 SPAN_TYPE = ArrayType(
@@ -229,12 +230,12 @@ def extract_pages(
 
 
 def _spans(ex: Extracted, list_type: pa.ListType) -> pa.ListArray:
-    """The spans column of a finished PageBatch, from its span columns."""
+    """The spans column of a finished PageBatch, from its span columns;
+    every span's class is CONTENT."""
     fields = list(list_type.value_type)
-    children = [ex.block_idx, ex.start, ex.end, ex.cls]
-    values = pa.StructArray.from_arrays(
-        [pa.array(c, f.type) for c, f in zip(children, fields)], fields=fields
-    )
+    children = [pa.array(c, f.type) for c, f in zip((ex.block_idx, ex.start, ex.end), fields)]
+    cls = pa.repeat(pa.scalar(CONTENT, fields[3].type), len(ex.block_idx))
+    values = pa.StructArray.from_arrays([*children, cls], fields=fields)
     return pa.ListArray.from_arrays(pa.array(ex.span_bounds, pa.int32()), values, type=list_type)
 
 

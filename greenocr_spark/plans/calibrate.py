@@ -106,13 +106,15 @@ def _partials(labeled: DataFrame, grp: Column, grid: list) -> DataFrame:
 
 def evaluate_configs(labeled: DataFrame, grid: list | None = None) -> DataFrame:
     """(html:binary, text:string ground truth) → per-config accuracy rows
-    (cfg_id, hits, n, accuracy)."""
+    (cfg_id, hits, n, accuracy). With no label (n = 0) the accuracy is
+    0.0, as in calibrate_grouped."""
     grid = grid or default_grid()
+    hits, n = F.col("hits"), F.col("n")
     return _partials(labeled, F.lit(0), grid).select(
         "cfg_id",
         "hits",
         "n",
-        (F.col("hits") / F.col("n")).cast(DoubleType()).alias("accuracy"),
+        F.when(n > 0, hits / n).otherwise(0.0).cast(DoubleType()).alias("accuracy"),
     )
 
 

@@ -209,3 +209,144 @@ def test_stream_scans_on_generated_pdfs_match_frozen_regex_form():
         raw = build_pdf(pages, compress=compress)
         assert list(iter_streams(raw)) == list(_iter_streams_frozen_form(raw))
         assert len(list(iter_streams(raw))) == 3
+
+
+# extract_pdf as it was before PDF pages became blocks of the PageBatch,
+# frozen as the PDF route's reference: its own span offsets and join
+def _extract_pdf_frozen_form(raw):
+    from greenocr_spark.extractor.core import canon_ws
+    from greenocr_spark.extractor.pdf import MAX_INFLATE_BYTES, _inflate, _parse_stream
+
+    parts = []
+    spans_out = []
+    off = 0
+    idx = 0
+    room = MAX_INFLATE_BYTES
+    for body in iter_streams(raw):
+        inflated = _inflate(body, room)
+        if inflated is not None:
+            body = inflated
+            room -= len(body)
+        page_spans = _parse_stream(body)
+        page_spans.sort(key=lambda s: (-s[1], s[0]))
+        for _x, _y, text in page_spans:
+            text = canon_ws(text)
+            if not text:
+                continue
+            if parts:
+                off += 1
+            start = off
+            parts.append(text)
+            off += len(text)
+            spans_out.append((idx, start, off, "content"))
+            idx += 1
+    return {
+        "text": " ".join(parts),
+        "spans": spans_out,
+        "n_blocks": idx,
+        "n_content": idx,
+        "n_boilerplate": 0,
+        "kind": "pdf",
+    }
+
+
+def _one_stream_pdf(body, length=None, filt=b""):
+    n = len(body) if length is None else length
+    return (
+        b"%PDF-1.4\n4 0 obj\n<< /Length " + str(n).encode() + filt + b" >>\nstream\n"
+        + body + b"\nendstream\nendobj\n%%EOF\n"
+    )
+
+
+_SHORT_SPANS_PDF = build_pdf([[(72, 700 - 14 * k, w) for k, w in enumerate("a bb ccc dd e".split())]])
+
+_HAND_ROLLED_PDFS = [
+    # TJ arrays: kerning numbers between strings, an empty array, nesting
+    _one_stream_pdf(b"BT 72 700 Td [(hel) -20 (lo) 10 ( world)] TJ ET"),
+    _one_stream_pdf(b"BT 72 700 Td [] TJ 0 -14 Td [([a]) [(b)] (c)] TJ ET"),
+    # hex strings: spaced, odd length, not hex at all
+    _one_stream_pdf(b"BT /F1 12 Tf 72 700 Td <48656C6C 6F20776F726C64> Tj ET"),
+    _one_stream_pdf(b"BT /F1 12 Tf 72 700 Td <48656C6C6F2> Tj ET"),
+    _one_stream_pdf(b"BT 72 700 Td <zz> Tj 0 -14 Td (after) Tj ET"),
+    # a /Length decoy: the body holds "\nendstream", the length is honest
+    _one_stream_pdf(
+        b"BT /F1 12 Tf 72 700 Td (first span) Tj ET\n%\nendstream decoy comment\n"
+        b"BT /F1 12 Tf 72 680 Td (second span) Tj ET"
+    ),
+    # a /Length that points past the body: the delimiter scan takes over
+    _one_stream_pdf(b"BT 72 700 Td (lying length) Tj ET", length=9999),
+    # corrupt and truncated Flate, a complete one, whitespace-only spans
+    b"%PDF-1.4\nstream\n" + zlib.compress(b"BT (x) Tj ET")[:5] + b"\nendstream\n%%EOF",
+    _one_stream_pdf(zlib.compress(b"BT 72 700 Td (inflated) Tj ET"), filt=b" /Filter /FlateDecode"),
+    _one_stream_pdf(zlib.compress(b"BT 72 700 Td (cut) Tj ET")[:-4], filt=b" /Filter /FlateDecode"),
+    _one_stream_pdf(b"BT 72 700 Td (  ) Tj 72 690 Td (\\t\\n) Tj 72 680 Td ( two  words ) Tj ET"),
+    # next-line shorthands and no stream at all
+    _one_stream_pdf(b"BT 72 700 Td (one) ' (two) \" ET"),
+    b"%PDF-1.4\n%%EOF\n",
+]
+
+
+def _generated_pdfs():
+    from greenocr_spark.fixtures import make_pages
+
+    pages = [[(72, 700 - 20 * k, f"line {k} (x) \\ y") for k in range(5)]] * 3
+    out = [build_pdf(pages, compress=c) for c in (False, True)]
+    out += [
+        build_pdf([[(72, 700, "first line"), (72, 680, "second line")]]),
+        build_pdf([[(300, 650, "gamma"), (72, 700, "alpha"), (200, 700, "beta")]]),
+        build_pdf([[(72, 700, "page one")], [(72, 700, "page two")]], compress=True),
+        build_pdf([[(72, 700, r"parens (nested) and \ backslash")]]),
+        build_pdf([[]]),
+    ]
+    out += [p["html"] for p in make_pages(300) if p["html"] and p["html"].startswith(b"%PDF-")]
+    return out
+
+
+def test_pdf_route_keeps_the_frozen_bytes():
+    from greenocr_spark.extractor.core import DEFAULT_CONFIG, extract_document
+
+    pdfs = [*_generated_pdfs(), *_HAND_ROLLED_PDFS, _SHORT_SPANS_PDF]
+    assert sum(p.startswith(b"%PDF-") for p in pdfs) == len(pdfs) > 20
+    for raw in pdfs:
+        want = _extract_pdf_frozen_form(raw)
+        assert extract_document(raw) == want, raw[:200]
+        assert extract_pdf(raw) == want
+    # every span is under min_chars, and every one is still content
+    short = extract_document(_SHORT_SPANS_PDF)
+    assert short["n_content"] == 5 and short["text"] == "a bb ccc dd e"
+    assert all(e - s < DEFAULT_CONFIG.min_chars for _, s, e, _ in short["spans"])
+
+
+def test_mixed_batches_equal_each_page_alone():
+    """A PDF page's blocks share the batch's columns and decode pass: a
+    page's result is the same at every position of a batch that holds
+    HTML, PDF, empty, None and text-less PDF pages, under any config."""
+    from dataclasses import replace
+
+    from greenocr_spark.extractor.core import DEFAULT_CONFIG, PageBatch, extract_document
+    from greenocr_spark.fixtures import make_pages
+
+    html = [p["html"] for p in make_pages(40) if p["html"] and not p["html"].startswith(b"%PDF-")]
+    pages = [
+        html[0],
+        build_pdf([[(72, 700, "a pdf page with enough text to be content"), (72, 680, "tiny")]]),
+        b"",
+        html[1],
+        None,
+        build_pdf([[]]),
+        _SHORT_SPANS_PDF,
+        b"<html><body><p>one short html block</p></body></html>",
+        html[2],
+        _HAND_ROLLED_PDFS[0],
+    ]
+    for cfg in (DEFAULT_CONFIG, replace(DEFAULT_CONFIG, min_chars=80, threshold=0.7)):
+        alone = [extract_document(raw, cfg) for raw in pages]
+        assert {r["kind"] for r in alone} == {"html", "pdf", "empty"}
+        for shift in range(len(pages)):
+            order = pages[shift:] + pages[:shift]
+            batch = PageBatch()
+            for raw in order:
+                batch.add(raw)
+            ex = batch.finish(cfg)
+            for i in range(len(order)):
+                assert ex.row(i) == alone[(i + shift) % len(pages)], (shift, i)

@@ -638,6 +638,24 @@ def test_calibration_counts_match_the_one_page_spec(spark, monkeypatch):
     assert not any("Exchange" in line for line in lines[stage:]), plan
 
 
+def test_calibration_without_a_label_scores_zero(spark):
+    """A labeled input whose one page has a NULL label counts n = 0. Every
+    config's accuracy is then 0.0, the rule calibrate_grouped keeps, not a
+    division by zero; calibrate picks the first config."""
+    from greenocr_spark.plans.calibrate import calibrate, default_grid, evaluate_configs
+
+    page = make_pages(1)[0]
+    labeled = spark.createDataFrame(
+        [(page["url"], page["html"], None)], "url string, html binary, text string"
+    )
+    rows = evaluate_configs(labeled).collect()
+    assert sorted((r["cfg_id"], r["hits"], r["n"], r["accuracy"]) for r in rows) == [
+        (i, 0, 0, 0.0) for i in range(len(default_grid()))
+    ]
+    cfg, acc, _ = calibrate(labeled)
+    assert (cfg, acc) == (default_grid()[0], 0.0)
+
+
 def test_pages_io_roundtrip(spark, tmp_path):
     from greenocr_spark.sources.pages import read_pages
 

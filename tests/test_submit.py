@@ -29,6 +29,23 @@ def test_spark_submit_pyfiles(tmp_path):
     assert res["rows_out"] == 300
 
 
+def test_cli_extract_runs_from_the_zip_alone(tmp_path):
+    """`python -m greenocr_spark extract` needs no file of the checkout
+    but the package: with only the zip on the path, from a cwd outside
+    the checkout, it parses its options."""
+    subprocess.run(["bash", "scripts/package.sh"], cwd=REPO, check=True,
+                   capture_output=True)
+    env = {**os.environ, "PYTHONPATH": os.path.join(REPO, "dist", "greenocr_spark.zip")}
+    out = subprocess.run(
+        [sys.executable, "-m", "greenocr_spark", "extract", "--help"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=60,
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.startswith("usage: greenocr_spark extract")
+    for option in ("--input", "--fixture-pages", "--output", "--n-parts", "--limit"):
+        assert option in out.stdout
+
+
 def _dispatched_commands():
     """The command names main() compares `cmd` against."""
     with open(os.path.join(REPO, "greenocr_spark", "__main__.py")) as f:
