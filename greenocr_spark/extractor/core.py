@@ -90,15 +90,26 @@ _DROP_RES = [
     (re.compile(rf"<{name}\b", re.IGNORECASE), re.compile(rf"</{name}\s*>", re.IGNORECASE))
     for name in DROP_ELEMENTS
 ]
+# Every opener of repair's passes in one scan: the comment's (group 1), then
+# each drop element's (group 2 + its index in DROP_ELEMENTS), with the same
+# IGNORECASE folds as the passes' own patterns (ſ for s, İ and ı for i, the
+# Kelvin sign for k). The lookahead on the openers' first chars only lets
+# the scan pass over every other '<' at half the cost of trying each opener.
+_OPENERS_RE = re.compile(
+    "<(?=[!%s])(?:(!--)|%s)"
+    % ("".join(sorted({name[0] for name in DROP_ELEMENTS})), "|".join(f"({name})" for name in DROP_ELEMENTS)),
+    re.IGNORECASE,
+)
 _CTRL_RE = re.compile(r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]")
 # the 30 chars _CTRL_RE matches: one `in` test each scans a page far faster
 # than _CTRL_RE.search does
 _CTRL_CHARS = "".join(map(chr, [*range(0x00, 0x09), 0x0B, 0x0C, *range(0x0E, 0x20), 0x7F]))
-# One pass captures span + closing-slash + tag name. The prefix
-# `\s*(/?)\s*(name)?` only ever consumes non-'>' characters, so the matched
-# spans are exactly those of the plain `<[^>]*>` form (byte-identical
-# segmentation); group(2) is None for <!DOCTYPE ...>, <?xml ...>, stray junk.
-_TAG_RE = re.compile(r"<\s*(/?)\s*([a-zA-Z][a-zA-Z0-9\-]*)?[^>]*>")
+# One pass captures each tag's span and, in one group, its slash and name:
+# "p", "/p", "/ P" (group None for <!DOCTYPE ...>, <?xml ...>, stray junk).
+# The prefix `\s*(/?\s*name)?` only ever consumes non-'>' characters, so
+# the matched spans are exactly those of the plain `<[^>]*>` form
+# (byte-identical segmentation).
+_TAG_RE = re.compile(r"<\s*(/?\s*[a-zA-Z][a-zA-Z0-9\-]*)?[^>]*>")
 
 
 def canon_ws(s: str) -> str:
@@ -121,26 +132,29 @@ _CLEAN_CACHE_MAX = 1 << 16
 _CLEAN_KEY_MAX = 512
 
 
+def _canonical(raw: str) -> bool:
+    """Whether canon_ws(raw) is raw, for a run with no control char: such
+    an ASCII run's only whitespace chars are ' ', '\\t', '\\n' and '\\r', so
+    without the last three, a space at either end or a double space,
+    canon_ws returns it unchanged."""
+    return raw.isascii() and not (
+        raw[:1] == " " or raw[-1:] == " " or "  " in raw or "\n" in raw or "\t" in raw or "\r" in raw
+    )
+
+
 def _clean_run(raw: str, ctrl: bool) -> str:
     """clean(raw): unescape, strip control chars, canon_ws. ctrl=False
     promises that raw holds no control char (its page has none).
 
-    Pure fast paths, byte-identical:
-    - unescape is the identity without '&'. It can make a control char
-      (html.unescape("&#12;") == "\\x0c"), so the strip is skipped only
-      for a run with no '&' on a page with no control char;
-    - with no control char left, an ASCII run's only whitespace chars are
-      ' ', '\\t', '\\n' and '\\r'. Without the last three, a space at
-      either end or a double space, canon_ws returns the run unchanged."""
+    Pure fast paths, byte-identical: unescape is the identity without '&'.
+    It can make a control char (html.unescape("&#12;") == "\\x0c"), so the
+    strip is skipped only for a run with no '&' on a page with no control
+    char; a canonical run skips canon_ws."""
     if "&" in raw:
         raw = _CTRL_RE.sub("", _htmlmod.unescape(raw))
     elif ctrl:
         raw = _CTRL_RE.sub("", raw)
-    if raw.isascii() and not (
-        raw[:1] == " " or raw[-1:] == " " or "  " in raw or "\n" in raw or "\t" in raw or "\r" in raw
-    ):
-        return raw
-    return canon_ws(raw)
+    return raw if _canonical(raw) else canon_ws(raw)
 
 
 def _clean_cached(raw: str, ctrl: bool) -> str:
@@ -185,10 +199,18 @@ def decode_bytes(raw: bytes) -> str:
 def repair_markup(s: str) -> str:
     """Signal restoration for degraded markup (Real-ESRGAN analog):
     drop comments and script/style/noscript/template elements wholesale
-    (tolerating a missing close tag — 'unclosed' degradation case)."""
-    s = _COMMENT_RE.sub(" ", s)
-    for opener, closer in _DROP_RES:
-        s = _drop(s, opener, closer)
+    (tolerating a missing close tag — 'unclosed' degradation case).
+
+    One scan finds which passes' openers occur in the page, and only those
+    passes run. That is exact: a pass only replaces text that starts with
+    '<' by one space, so it never makes an opener that was not in the
+    page, and a pass whose opener is absent returns the page unchanged."""
+    found = {m.lastindex for m in _OPENERS_RE.finditer(s)}
+    if 1 in found:
+        s = _COMMENT_RE.sub(" ", s)
+    for group, (opener, closer) in enumerate(_DROP_RES, 2):
+        if group in found:
+            s = _drop(s, opener, closer)
     return s
 
 
@@ -231,6 +253,34 @@ class Blocks:
         return len(self.texts)
 
 
+# What a tag does to tokenize's state, by its kind in _tag_action
+_OTHER, _A_OPEN, _A_CLOSE, _BLOCK_OPEN, _BLOCK_CLOSE, _VOID = range(6)
+# Memo from a tag's raw slash-and-name group ("P", "/p", "/ Div") to
+# _tag_action of it. Pages reuse a few spellings, so a tag costs one
+# lookup; a page of made-up names cannot grow it past its cap.
+_TAG_ACTIONS: dict = {}
+_TAG_ACTIONS_MAX = 1 << 12
+
+
+def _tag_action(raw: str) -> tuple:
+    """(kind, lower-case name) of a tag from its raw slash-and-name group,
+    memoized in _TAG_ACTIONS."""
+    name = raw.lstrip("/").lstrip().lower()
+    closing = raw[0] == "/"
+    if name == "a":
+        action = (_A_CLOSE if closing else _A_OPEN, name)
+    elif name in VOID_TAGS:
+        action = (_VOID, name)
+    elif name in BLOCK_TAGS:
+        action = (_BLOCK_CLOSE if closing else _BLOCK_OPEN, name)
+    else:
+        action = (_OTHER, name)
+    if len(_TAG_ACTIONS) >= _TAG_ACTIONS_MAX:
+        _TAG_ACTIONS.clear()
+    _TAG_ACTIONS[raw] = action
+    return action
+
+
 def tokenize_blocks(markup: str) -> Blocks:
     """Tokenize repaired markup into the flat DOM array of blocks.
 
@@ -242,69 +292,82 @@ def tokenize_blocks(markup: str) -> Blocks:
     Hot path, byte-identical by tests/test_core.py and the fixture-corpus
     hash gates:
     - one _TAG_RE.split() does the whole segmentation in C; the list
-      alternates [text, slash, name, text, ...] and is walked three parts
+      alternates [text, slash-and-name, text, ...] and is walked two parts
       at a time;
+    - each tag's kind and name come from one _TAG_ACTIONS lookup of its
+      raw slash-and-name group;
     - text runs and link-text runs accumulate in two flat string lists,
       and blocks go straight into three column lists (no per-block
       objects, no flush call);
-    - the page is tested for control chars once; without one, a run with
-      no '&' skips the control-char strip, and an ASCII run already in
-      canonical form skips canon_ws (see _clean_run)."""
+    - a closing block tag pops the open-tag stack down to its name only
+      when the name is open, which a count per name answers in O(1), so
+      unmatched closers under a deep stack cost linear time;
+    - the page is tested for control chars once; on a page with none, a
+      run with no '&' in canonical form (_canonical) is its own text and
+      skips the memo, whose hashing and storing would cost more than the
+      test."""
     tags: list = []
     texts: list = []
     link_chars: list = []
     seg_texts: list = []  # all text accumulated since the last block tag
     seg_links: list = []  # the subset that was inside <a> context
     stack: list = []  # open block-tag context
+    open_count: dict = {}  # how often each name is on the stack
     link_depth = 0
 
     ctrl = any(c in markup for c in _CTRL_CHARS)
-    clean = _clean_cached
+    plain = not ctrl
+    clean, canonical = _clean_cached, _canonical
+    actions = _TAG_ACTIONS
     seg_append = seg_texts.append
     link_append = seg_links.append
-    block_tags, void_tags = BLOCK_TAGS, VOID_TAGS
     # no tag can start after the last '>', but each '<' there would rescan
     # to the end: split up to it and give the tail to the last text run
     # (the same parts, in linear time)
     k = markup.rfind(">") + 1
     parts = _TAG_RE.split(markup[:k])
     parts[-1] += markup[k:]
-    parts += ("", "br", "")  # a closing void block tag flushes the last run
+    parts += ("/br", "")  # a closing void block tag flushes the last run
     it = iter(parts)
     first = next(it)
     if first:
         seg_append(first)
-    for slash, name, trailing in zip(it, it, it):
-        # name is None for <!DOCTYPE ...>, <?xml ...>, stray junk: the tag
+    for tag, trailing in zip(it, it):
+        # tag is None for <!DOCTYPE ...>, <?xml ...>, stray junk: the tag
         # is a pure separator, only its trailing text matters
-        if name is not None:
-            name = name.lower()
-            if name == "a":
-                if slash:
-                    if link_depth:
-                        link_depth -= 1
-                else:
-                    link_depth += 1
-            elif name in block_tags:
+        if tag is not None:
+            kind, name = actions.get(tag) or _tag_action(tag)
+            if kind >= _BLOCK_OPEN:
                 if seg_texts:
                     raw = "".join(seg_texts)
-                    # a whitespace-only run cleans to '' (and holds no '&')
-                    if not raw.isspace():
-                        text = clean(raw, ctrl)
-                        if text:
-                            tags.append(stack[-1] if stack else "body")
-                            texts.append(text)
-                            link_chars.append(len(clean(" ".join(seg_links), ctrl)) if seg_links else 0)
+                    # a run with nothing to clean is its own text, without
+                    # the memo; a whitespace-only run cleans to ''
+                    if plain and "&" not in raw and canonical(raw):
+                        text = raw
+                    else:
+                        text = "" if raw.isspace() else clean(raw, ctrl)
+                    if text:
+                        tags.append(stack[-1] if stack else "body")
+                        texts.append(text)
+                        if seg_links:
+                            raw = " ".join(seg_links)
+                            link_chars.append(len(raw if plain and "&" not in raw and canonical(raw) else clean(raw, ctrl)))
+                        else:
+                            link_chars.append(0)
                     seg_texts.clear()
                     seg_links.clear()
                 link_depth = 0
-                if name not in void_tags:
-                    if slash:
-                        if name in stack:
-                            while stack and stack.pop() != name:
-                                pass
-                    else:
-                        stack.append(name)
+                if kind == _BLOCK_OPEN:
+                    stack.append(name)
+                    open_count[name] = open_count.get(name, 0) + 1
+                elif kind == _BLOCK_CLOSE and open_count.get(name):
+                    while (top := stack.pop()) != name:
+                        open_count[top] -= 1
+                    open_count[name] -= 1
+            elif kind == _A_OPEN:
+                link_depth += 1
+            elif kind == _A_CLOSE and link_depth:
+                link_depth -= 1
         if trailing:
             seg_append(trailing)
             if link_depth:

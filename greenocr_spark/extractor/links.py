@@ -58,10 +58,14 @@ from greenocr_spark.extractor.core import PDF_MAGIC, decode_bytes
 _SKIP_SCHEMES = ("javascript:", "mailto:", "tel:", "data:", "about:")
 
 # One scan finds every token the pass needs, in document order: `<a`
-# openers (group 1: the href name, when it is the tag's first attribute),
-# `</a\s*>` closers (group 2) and `<base` openers (group 3). Tokens cannot
-# overlap (none holds a second '<'), so the scan misses none.
-_TOKEN_RE = re.compile(r"<(?:a\b(\s+href\s*=\s*)?|(/a\s*>)|(base)\b)", re.IGNORECASE)
+# openers, `</a\s*>` closers (group 3) and `<base` openers (group 4). An
+# `<a` opener whose first attribute is href captures the name (group 1)
+# and, when its value is quoted and holds neither '<', '>' nor its closing
+# quote, the value with its quotes (group 2). Tokens cannot overlap (none
+# holds a second '<'), so the scan misses none.
+_TOKEN_RE = re.compile(
+    r"""<(?:a\b(?:(\s+href\s*=\s*)("[^"<>]*"|'[^'<>]*')?)?|(/a\s*>)|(base)\b)""", re.IGNORECASE
+)
 _HREF_NAME_RE = re.compile(r"\bhref\s*=\s*", re.IGNORECASE)
 _BARE_VALUE_RE = re.compile(r"[^\s>]+")
 _TAG_RE = re.compile(r"<[^>]*>")
@@ -213,7 +217,9 @@ def _join(base: _Base, href: str) -> str | None:
 def _resolve(href: str, base: _Base | None) -> str | None:
     """The href→url rule (decode/skip/resolve/scheme-filter) against the
     page's effective base. Returns None for dropped hrefs."""
-    href = unescape(href).strip()
+    if "&" in href:
+        href = unescape(href)
+    href = href.strip()
     if not href or href[0] == "#":
         return None
     if href.lower().startswith(_SKIP_SCHEMES):
@@ -227,62 +233,74 @@ def _resolve(href: str, base: _Base | None) -> str | None:
 def _link_pass(s: str, base_url: str | None):
     """(outlinks, elements): the page's unique outlinks in first-seen
     order, and (url, body start, body end) of every closed <a> element
-    whose href resolves."""
-    openers: list[tuple[int, int]] = []  # (tag start, value start or 0)
+    whose href resolves.
+
+    An opener whose token holds its quoted href value takes it from the
+    scan; any other asks _StartTags, which would find the same one."""
+    # (tag start, where the href value starts or 0, where a quoted value
+    # taken by the scan ends or 0) per opener
+    openers: list[tuple[int, int, int]] = []
     closers: list[int] = []
     closer_ends: list[int] = []
     bases: list[int] = []
     for m in _TOKEN_RE.finditer(s):
         k = m.lastindex
-        if k == 2:
+        if k == 3:
             closers.append(m.start())
             closer_ends.append(m.end())
-        elif k == 3:
+        elif k == 4:
             bases.append(m.end())
         else:
-            openers.append((m.start(), m.end() if k else 0))
+            openers.append((m.start(), m.end(1) if k else 0, m.end(2) if k == 2 else 0))
     if bases:
         base_url = _page_base(s, base_url, bases)
     base = _Base(base_url) if base_url else None
     resolved: dict[str, str | None] = {}
     tags = _StartTags(s)
+    tag_end, value_at, href_of = tags.end, tags.value, tags.href
     n = len(s)
+    n_closers = len(closers)
     outlinks: list[str] = []
     seen: set[str] = set()
     elements: list[tuple[str, int, int]] = []
     out_pos = anchor_pos = 0
-    for p, v in openers:
-        body = None
-        if p >= anchor_pos and closers:
-            g = tags.end(p + 2)
+    for p, v, e in openers:
+        body = 0  # where the element's body starts, if it has one
+        if p >= anchor_pos and n_closers:
+            g = tag_end(p + 2)
             if g < n:
-                k = bisect_left(closers, g + 1)
-                if k < len(closers):
-                    body = (g + 1, closers[k])
-                    anchor_pos = closer_ends[k]
+                c = bisect_left(closers, g + 1)
+                if c < n_closers:
+                    body, body_end = g + 1, closers[c]
+                    anchor_pos = closer_ends[c]
         want_out = p >= out_pos
-        if not want_out and body is None:
+        if not (want_out or body):
             continue
-        h = tags.value(v) if v else tags.href(p + 2)
-        if h is None:
-            continue
-        value, end = h
-        try:
-            url = resolved[value]
-        except KeyError:
+        if e:
+            value, end = s[v + 1 : e - 1], e
+        else:
+            h = value_at(v) if v else href_of(p + 2)
+            if h is None:
+                continue
+            value, end = h
+        url = resolved.get(value, resolved)  # the dict itself: not resolved yet
+        if url is resolved:
             url = resolved[value] = _resolve(value, base)
         if want_out:
             out_pos = end
             if url is not None and url not in seen:
                 seen.add(url)
                 outlinks.append(url)
-        if body is not None and url is not None:
-            elements.append((url, *body))
+        if body and url is not None:
+            elements.append((url, body, body_end))
     return outlinks, elements
 
 
 def _anchors(s: str, elements, valid) -> list[tuple[str, str]]:
+    """(url, anchor text) of the elements whose url is in valid: the body
+    with its tags as spaces, entities decoded once, whitespace canonical."""
     out = []
+    append = out.append
     for url, i, j in elements:
         if url not in valid:
             continue
@@ -292,7 +310,9 @@ def _anchors(s: str, elements, valid) -> list[tuple[str, str]]:
         k = inner.rfind(">") + 1
         if k:
             inner = _TAG_RE.sub(" ", inner[:k]) + inner[k:]
-        out.append((url, " ".join(unescape(inner).split())))
+        if "&" in inner:
+            inner = unescape(inner)
+        append((url, " ".join(inner.split())))
     return out
 
 

@@ -87,6 +87,15 @@ _REPAIR_PIECES = [
     "<script", "<SCRIPT", "<scripts", "<script-x", "</script", "</script >", "</ScRiPt\n>", ">",
     "<style>", "</style>", "<noscript ", "</noscript>", "<template>", "</template\t>", "<!--", "-->",
     "x", "\n", " ", "<p>", "<\u017fcript>", "<", "/",
+    # folds of the openers' letters: ſ for s, İ and ı for i (K folds k)
+    "<scr\u0130pt>", "<noscr\u0131pt>", "<\u017ftyle>", "\u212a", "<!-", "<scr", "ipt>",
+    # pages holding only some of the five openers, so that repair runs
+    # only some of its passes
+    "<p>a comment only <!-- c --> here</p>",
+    "<div>style only<style>p{}</style></div>",
+    "<p>template <TEMPLATE>t</template> and noscript <noscript>n</noscript></p>",
+    "<p>none of them: <scripted> <stylesheet> <templates> <! -- x --></p>",
+    "<p>unclosed <noscript>tail",
 ]
 
 
@@ -159,6 +168,96 @@ TOKENIZE_FROZEN = {
         (5, "p", "abc", 3, 0.0),
     ],
 }
+
+
+def _tokenize_frozen_form(markup):
+    # tokenize_blocks before each tag was decided by one table lookup and
+    # the open stack was counted per name, with clean() in its plain form
+    import html
+    import re
+
+    tag_re = re.compile(r"<\s*(/?)\s*([a-zA-Z][a-zA-Z0-9\-]*)?[^>]*>")
+
+    def clean(raw):
+        return canon_ws(core._CTRL_RE.sub("", html.unescape(raw)))
+
+    tags, texts, link_chars = [], [], []
+    seg_texts, seg_links, stack = [], [], []
+    link_depth = 0
+    k = markup.rfind(">") + 1
+    parts = tag_re.split(markup[:k])
+    parts[-1] += markup[k:]
+    parts += ("", "br", "")
+    it = iter(parts)
+    first = next(it)
+    if first:
+        seg_texts.append(first)
+    for slash, name, trailing in zip(it, it, it):
+        if name is not None:
+            name = name.lower()
+            if name == "a":
+                if slash:
+                    if link_depth:
+                        link_depth -= 1
+                else:
+                    link_depth += 1
+            elif name in core.BLOCK_TAGS:
+                if seg_texts:
+                    raw = "".join(seg_texts)
+                    if not raw.isspace():
+                        text = clean(raw)
+                        if text:
+                            tags.append(stack[-1] if stack else "body")
+                            texts.append(text)
+                            link_chars.append(len(clean(" ".join(seg_links))) if seg_links else 0)
+                    seg_texts.clear()
+                    seg_links.clear()
+                link_depth = 0
+                if name not in core.VOID_TAGS:
+                    if slash:
+                        if name in stack:
+                            while stack and stack.pop() != name:
+                                pass
+                    else:
+                        stack.append(name)
+        if trailing:
+            seg_texts.append(trailing)
+            if link_depth:
+                seg_links.append(trailing)
+    return tags, texts, link_chars
+
+
+_TOKENIZE_PIECES = [
+    # mixed-case, spaced and junk tags; void and inline tags
+    "<p>", "</p>", "<P>", "</P >", "< p>", "</ p>", "< /P>", "<Div class=x>", "</dIV>", "<li>", "</LI>",
+    "<ul>", "</ul>", "<td>", "<title>", "</title>", "<nav>", "</nav>", "<h1>", "</H1>", "<br>", "<BR/>",
+    "</br>", "<hr>", "<b>", "</b>", "<span>", "<p1>", "<a-b>", "<!DOCTYPE html>", "<?xml x?>", "</>",
+    "<", ">", "< a", "<p", "/",
+    # links, nested and unclosed
+    "<a>", "</a>", "<A HREF='/x'>", "</A >", "<a href=x>", "< a href=y>", "</ a>", "<a",
+    # entities and control chars
+    "&amp;", "&amp;amp;", "&#12;", "&#x41;", "&am", "p;", "&", "\x01", "\x0b", "\x1c", "\x7f",
+    # whitespace and text, ASCII or not, with the IGNORECASE folds' chars
+    " ", "  ", "\n", "\t", "\r", "\xa0", "x", "word", "two words", "caf\xe9",
+    "\u017f", "\u0130", "\u0131", "\u212a",
+]
+
+
+@given(st.lists(st.sampled_from(_TOKENIZE_PIECES), max_size=30))
+@settings(max_examples=1000, deadline=None)
+def test_tokenize_matches_frozen_form(pieces):
+    s = "".join(pieces)
+    blocks = tokenize_blocks(s)
+    assert (blocks.tags, blocks.texts, blocks.link_chars) == _tokenize_frozen_form(s)
+
+
+def test_tokenize_tag_table_stays_bounded():
+    # a page of more distinct tag spellings than the table holds: the
+    # table empties and refills, and the blocks equal the frozen form's
+    s = "".join(f"<x{i}>t{i}<P>p{i}</p>" for i in range(core._TAG_ACTIONS_MAX + 500))
+    blocks = tokenize_blocks(s)
+    assert (blocks.tags, blocks.texts, blocks.link_chars) == _tokenize_frozen_form(s)
+    assert len(core._TAG_ACTIONS) <= core._TAG_ACTIONS_MAX
 
 
 @pytest.mark.parametrize("markup", list(TOKENIZE_FROZEN))

@@ -13,6 +13,8 @@ import time
 from html import unescape
 from urllib.parse import urljoin
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from greenocr_spark.extractor.core import decode_bytes
@@ -636,6 +638,120 @@ FUZZ_BASES = [
 ]
 
 
+# The link pass before the scan took quoted href values and the tag's '>'
+# with each opener, kept verbatim (names prefixed): the reference for the
+# pass and _anchors. _StartTags, _page_base, _Base and _join are shared.
+_FROZEN_TOKEN_RE = re.compile(r"<(?:a\b(\s+href\s*=\s*)?|(/a\s*>)|(base)\b)", re.IGNORECASE)
+
+
+def _frozen_resolve(href, base):
+    from greenocr_spark.extractor import links
+
+    href = unescape(href).strip()
+    if not href or href[0] == "#":
+        return None
+    if href.lower().startswith(_REF_SKIP_SCHEMES):
+        return None
+    url = href if base is None else links._join(base, href)
+    if url is None or not url.lower().startswith(("http://", "https://")):
+        return None
+    return url
+
+
+def _link_pass_frozen_form(s, base_url):
+    from bisect import bisect_left
+
+    from greenocr_spark.extractor import links
+
+    openers, closers, closer_ends, bases = [], [], [], []
+    for m in _FROZEN_TOKEN_RE.finditer(s):
+        k = m.lastindex
+        if k == 2:
+            closers.append(m.start())
+            closer_ends.append(m.end())
+        elif k == 3:
+            bases.append(m.end())
+        else:
+            openers.append((m.start(), m.end() if k else 0))
+    if bases:
+        base_url = links._page_base(s, base_url, bases)
+    base = links._Base(base_url) if base_url else None
+    resolved = {}
+    tags = links._StartTags(s)
+    n = len(s)
+    outlinks, seen, elements = [], set(), []
+    out_pos = anchor_pos = 0
+    for p, v in openers:
+        body = None
+        if p >= anchor_pos and closers:
+            g = tags.end(p + 2)
+            if g < n:
+                k = bisect_left(closers, g + 1)
+                if k < len(closers):
+                    body = (g + 1, closers[k])
+                    anchor_pos = closer_ends[k]
+        want_out = p >= out_pos
+        if not want_out and body is None:
+            continue
+        h = tags.value(v) if v else tags.href(p + 2)
+        if h is None:
+            continue
+        value, end = h
+        try:
+            url = resolved[value]
+        except KeyError:
+            url = resolved[value] = _frozen_resolve(value, base)
+        if want_out:
+            out_pos = end
+            if url is not None and url not in seen:
+                seen.add(url)
+                outlinks.append(url)
+        if body is not None and url is not None:
+            elements.append((url, *body))
+    return outlinks, elements
+
+
+def _anchors_frozen_form(s, elements, valid):
+    out = []
+    for url, i, j in elements:
+        if url not in valid:
+            continue
+        inner = s[i:j]
+        k = inner.rfind(">") + 1
+        if k:
+            inner = _REF_TAG_RE.sub(" ", inner[:k]) + inner[k:]
+        out.append((url, " ".join(unescape(inner).split())))
+    return out
+
+
+_LINK_PIECES = [
+    # openers and closers in any case, spaced, nested and unclosed
+    "<a", "<A", "<a ", "< a", "<a>", "</a>", "</A >", "</a\t>", "</ a>", "<a\nhref='/nl'>",
+    " href", " HREF", "href", "=", " = ", '"', "'", ">", "<", "/", "<b>", "</b>", "</ p>", "<p>",
+    "<!DOCTYPE html>", "<br>", "<br/>", "<img src=x>", "<abbr href=/no>", "<a data-href=/d x>",
+    "<a href='/x'>", '<a href="https://h.ex/p">', "<a href=/bare>", "<A HREF=\"/Q\">", "<a title='>' href=/t>",
+    '<a href="/p>', "<a href='a\"b'>", '<a href="">', "<base href='/b/'>", "<ba\u017fe href=/s/>",
+    # values: entities, control chars, schemes, unresolvable
+    "&amp;", "&#x41;", "&quot;", "&#12;", "\x01", "\x0b", "\x1c", "\x7f", "#frag", "javascript:x",
+    "JavaScript:y", "mailto:a@b", "https://[x/", "?q=1", "//h.ex/q", "/a/../b", "/.x", "http://Q.ex/Up",
+    # text, with the IGNORECASE folds' chars
+    "text", "two words", " ", "  ", "\n", "\u017f", "\u0130", "\u0131", "\u212a", "caf\xe9",
+]
+
+
+@given(st.lists(st.sampled_from(_LINK_PIECES), max_size=30), st.sampled_from(FUZZ_BASES))
+@settings(max_examples=1000, deadline=None)
+def test_link_pass_matches_frozen_form(pieces, base):
+    from greenocr_spark.extractor.links import extract_anchors, extract_link_faces
+
+    s = "".join(pieces)
+    outlinks, elements = _link_pass_frozen_form(s, base)
+    anchors = _anchors_frozen_form(s, elements, set(outlinks))
+    assert extract_link_faces(s, base) == (outlinks, anchors)
+    assert extract_outlinks(s, base) == outlinks
+    assert extract_anchors(s, base, valid=outlinks[::2]) == _anchors_frozen_form(s, elements, set(outlinks[::2]))
+
+
 def test_link_pass_fuzz_matches_reference():
     rng = random.Random(11)
     frags = ANCHOR_FUZZ_FRAGMENTS + [
@@ -736,6 +852,7 @@ ADVERSARIAL_SHAPES = {
     "script-no-gt": (b"<script ", 13_000),
     "pdf-dict-no-close": (b"%PDF-<<", 8_000),
     "pdf-stream-no-end": (b"%PDF-stream\n", 13_000),
+    "div-unmatched-close": (b"<div></p>", 36_000),
 }
 
 
@@ -806,6 +923,65 @@ def test_link_faces_linear_time():
                 assert min(r[2] for r in rounds) < 0.25, (name, run, rounds)
     finally:
         gc.enable()
+
+
+# ROADMAP item 10's shapes, beside ADVERSARIAL_SHAPES
+MEMORY_SHAPES = {
+    "p-x": b"<p>x",
+    "a-href-y": b'<a href="/x">y</a>',
+    "word": b"word ",
+    "i-tag": b"<i>",
+    **{name: unit for name, (unit, _) in ADVERSARIAL_SHAPES.items()},
+}
+# Peak RSS growth per input byte, bounded at 1.25x the most that the
+# extraction before the one-lookup tokenize and the scan-fed link pass took
+# at either size (256 KB and 1 MB pages, measured the same way on a 4-core
+# x86-64 Linux box), and at 4 for the PDF shapes, whose few bytes per byte
+# are allocator noise.
+MEMORY_BOUNDS = {
+    "p-x": 67, "a-href-y": 26, "word": 21, "i-tag": 12, "a-hre-no-gt": 29, "unclosed-a": 17,
+    "unterminated-quote": 16, "script-no-gt": 14, "pdf-dict-no-close": 4, "pdf-stream-no-end": 4,
+    "div-unmatched-close": 27,
+}
+_MEMORY_CHILD = """
+import resource, sys
+from greenocr_spark.extractor.core import PageBatch
+from greenocr_spark.extractor.links import extract_link_faces
+unit = bytes.fromhex(sys.argv[1])
+raw = unit * (int(sys.argv[2]) // len(unit))
+PageBatch().add(b"<p>warm</p>")
+before = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+batch = PageBatch()
+markup = batch.add(raw)
+ex = batch.finish()
+faces = extract_link_faces(markup, "https://h.ex/d/p")
+after = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+print((after - before) * 1024 / len(raw))
+"""
+
+
+def test_page_memory_per_input_byte():
+    # each shape extracts (text path and both link faces) as one page in
+    # its own child process, at two sizes; ru_maxrss growth per input byte
+    # must stay under the shape's bound
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "PYTHONPATH": root}
+    assert set(MEMORY_BOUNDS) == set(MEMORY_SHAPES)
+    over = {}
+    for name, unit in MEMORY_SHAPES.items():
+        for size in (1 << 18, 1 << 20):
+            out = subprocess.run(
+                [sys.executable, "-c", _MEMORY_CHILD, unit.hex(), str(size)],
+                env=env, capture_output=True, text=True, check=True, timeout=120,
+            )
+            per_byte = float(out.stdout)
+            if per_byte > MEMORY_BOUNDS[name]:
+                over[(name, size)] = per_byte
+    assert over == {}
 
 
 def test_extract_pages_survives_hostile_pages(spark):
